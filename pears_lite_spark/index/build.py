@@ -10,6 +10,8 @@ shuffle of packed bytes:
              serialized as a few binary-blob rows per target slot
            --repartition(bijective slot key)-->
            --mapInArrow (phase B) merge + delta/varint/block-max encode
+           --sortWithinPartitions + partitionBy(term_bucket) write
+             (same stage as phase B: no second exchange)
 
 Why not posexplode + repartition + sortWithinPartitions? Measured on
 this corpus shape, the JVM->Python row->Arrow conversion costs ~0.5-1M
@@ -19,15 +21,23 @@ collapses occurrences to runs IN THE SAME python pass that already
 holds the tokens, and the shuffle moves ~7x fewer bytes (packed int
 arrays, LZ4-friendly), none of which are ever converted row-by-row.
 
+The slot key is bucket-major (`_slot_of`): each phase-B partition
+holds whole term_buckets (or one bucket's share, with more slots than
+buckets), so the write reuses phase B's partitioning as it stands —
+one file per bucket per task, one exchange per build.
+
 Skew strategy (SURVEY.md §4): hot terms (stopword-like pieces) would
-overload a single reducer in a naive groupBy(term). The slot key is
-(term_id, doc_range) where doc_range = shiftright(doc_id, range_shift)
-— an ORDER-PRESERVING, TERM-ALIGNED salt: a hot term's postings split
-across bounded ~MAX_RANGE_DOCS-doc groups, doc_id order (and hence
-delta encoding) survives because shiftright is monotone, and every term
-is cut at the same doc boundaries so the WAND scorer can group by
-doc_range. This is the explicit salting the north rule demands, with
-AQE skew-join as a second line of defense.
+overload a single reducer in a naive groupBy(term). Inside a bucket's
+slot group the slot is picked by mixing (term_id, doc_range) where
+doc_range = shiftright(doc_id, range_shift) — an ORDER-PRESERVING,
+TERM-ALIGNED salt: a hot term's postings split across bounded
+~MAX_RANGE_DOCS-doc groups, doc_id order (and hence delta encoding)
+survives because shiftright is monotone, and every term is cut at the
+same doc boundaries so the WAND scorer can group by doc_range. With
+fewer slots than buckets a term's groups share its bucket's slot, and
+buckets spread over slots at most ceil(n_buckets / n_slots) :
+floor(n_buckets / n_slots). AQE skew-join stays on as a second line of
+defense.
 
 The physical layout is one row per posting BLOCK:
 (term_id, doc_range, block_id, first_doc, last_doc, n, max_impact,
@@ -313,6 +323,23 @@ _PARTIAL_SCHEMA = T.StructType([
 
 _MIX = np.uint64(0x9E3779B97F4A7C15)
 
+
+def _slot_of(term_ids: np.ndarray, doc_ranges: np.ndarray, n_slots: int,
+             n_buckets: int) -> np.ndarray:
+    """Bucket-major merge slot of each (term_id, doc_range) group.
+
+    The write's term_bucket, pmod(term_id, n_buckets), picks a group of
+    g = ceil(n_slots / n_buckets) slots; the (term_id, doc_range) mix
+    picks one slot inside it. With n_slots <= n_buckets every slot owns
+    whole buckets, so phase B's output is already clustered by bucket
+    and write_index needs no exchange; with more slots than buckets a
+    bucket spreads over g slots and the doc_range salt still splits a
+    hot term's groups across them."""
+    g = -(-n_slots // n_buckets)
+    mix = (term_ids.astype(np.uint64) * _MIX ^ doc_ranges.astype(np.uint64)
+           ) % np.uint64(g)
+    return ((term_ids % n_buckets) * g + mix.astype(np.int64)) % n_slots
+
 # partial rows with this p value carry per-flush doc stats
 # (docs blob = doc_ids int64, dls blob = doc lengths int32)
 _DOC_STATS_P = -(1 << 62)
@@ -325,11 +352,12 @@ class _PartialBuilder:
     fused corpus-input kernels."""
 
     def __init__(self, range_shift: int, slot_values: list[int],
-                 with_positions: bool):
+                 with_positions: bool, n_buckets: int = DEFAULT_N_BUCKETS):
         from ..xxh64 import xxh64_signed
         self._hash = xxh64_signed
         self.range_shift = range_shift
         self.with_positions = with_positions
+        self.n_buckets = n_buckets
         self.n_slots = len(slot_values)
         self.slot_vals = np.asarray(slot_values, dtype=np.int64)
         self._cache: dict[str, int] = {}
@@ -337,14 +365,15 @@ class _PartialBuilder:
         self.docs: list[np.ndarray] = []
         self.dls: list[np.ndarray] = []
         self.poss: list[np.ndarray] = []
-        # deferred-hash path: (doc_id, tokens, n0) tuples whose term
-        # hashing happens vectorized at flush (pd.factorize + hash of
-        # the flush's UNIQUE terms only) instead of one Python
+        # deferred-hash path: (doc_id, tokens, dl, positions) tuples
+        # whose term hashing happens vectorized at flush (pd.factorize +
+        # hash of the flush's UNIQUE terms only) instead of one Python
         # dict-lookup per token — the per-token map() loop measured
-        # ~65% of the non-extract phase-A cost. Holding the raw token
+        # ~65% of the non-extract phase-A cost. positions is None when
+        # every token is kept (offsets 0..len-1). Holding the raw token
         # lists until flush costs ~80 MB peak per worker at the 1M-row
         # flush threshold.
-        self.pend: list[tuple[int, object, int]] = []
+        self.pend: list[tuple[int, object, int, "np.ndarray | None"]] = []
         self.acc = 0
 
     def tid_of(self, t: str) -> int:
@@ -366,52 +395,51 @@ class _PartialBuilder:
 
     def add_tokens(self, doc_id: int, toks, n0: int,
                    vocab_set: "frozenset[str] | None" = None) -> None:
+        """Queue one document for the deferred-hash drain. With a
+        vocab_set, only in-vocabulary tokens are kept; they keep their
+        original token offsets as positions and the doc length stays
+        the unfiltered n0."""
+        pos = None
         if vocab_set is not None:
-            kept = [(i, tk) for i, tk in enumerate(toks) if tk in vocab_set]
+            kept = [i for i, tk in enumerate(toks) if tk in vocab_set]
             if not kept:
                 return
-            ids = np.fromiter((self.tid_of(tk) for _, tk in kept),
-                              np.int64, len(kept))
-            idxs = np.fromiter((i for i, _ in kept), np.int32, len(kept))
-        else:
-            self.pend.append((doc_id, toks, n0))
-            self.acc += n0
+            toks = [toks[i] for i in kept]
+            pos = np.asarray(kept, np.int32)
+        self.pend.append((doc_id, toks, n0, pos))
+        self.acc += len(toks)
 
     def _drain_pend(self) -> None:
         """Materialize the deferred-hash docs: factorize the flush's
-        token stream in one C pass, xxh64 only the unique terms (dict
-        cache shared with tid_of), and gather. Produces the exact same
+        token stream in one C pass, xxh64 only the unique terms (through
+        tid_of's dict cache), and gather. Produces the exact same
         (tids, docs, dls, poss) arrays — in the same insertion order —
-        as per-token add_tokens, so index bytes are unchanged (the
+        as per-token add(), so index bytes are unchanged (the
         byte-parity pytest pins this)."""
         if not self.pend:
             return
         import itertools
         flat = list(itertools.chain.from_iterable(
-            tk for _, tk, _ in self.pend))
+            tk for _, tk, _, _ in self.pend))
         codes, uniq = pd.factorize(np.asarray(flat, dtype=object),
                                    use_na_sentinel=False)
         del flat
-        cache, h = self._cache, self._hash
-        uh = np.empty(len(uniq), np.int64)
-        for i, tk in enumerate(uniq):
-            v = cache.get(tk)
-            if v is None:
-                v = h(tk)
-                if len(cache) < (1 << 22):
-                    cache[tk] = v
-            uh[i] = v
-        n0s = np.asarray([n for _, _, n in self.pend], np.int64)
+        uh = np.fromiter(map(self.tid_of, uniq), np.int64, len(uniq))
+        lens = np.asarray([len(tk) for _, tk, _, _ in self.pend], np.int64)
         self.tids.append(uh[codes])
         self.docs.append(np.repeat(
-            np.asarray([d for d, _, _ in self.pend], np.int64), n0s))
-        self.dls.append(np.repeat(n0s.astype(np.int32), n0s))
+            np.asarray([d for d, _, _, _ in self.pend], np.int64), lens))
+        self.dls.append(np.repeat(
+            np.asarray([n for _, _, n, _ in self.pend], np.int32), lens))
         if self.with_positions:
-            tot = int(n0s.sum())
-            starts = np.zeros(n0s.size, np.int64)
-            np.cumsum(n0s[:-1], out=starts[1:])
-            self.poss.append((np.arange(tot, dtype=np.int64)
-                              - np.repeat(starts, n0s)).astype(np.int32))
+            starts = np.zeros(lens.size, np.int64)
+            np.cumsum(lens[:-1], out=starts[1:])
+            pos = (np.arange(int(lens.sum()), dtype=np.int64)
+                   - np.repeat(starts, lens)).astype(np.int32)
+            for i, (_, _, _, p) in enumerate(self.pend):
+                if p is not None:
+                    pos[starts[i]:starts[i] + p.size] = p
+            self.poss.append(pos)
         self.pend = []
 
     def flush(self) -> pd.DataFrame:
@@ -445,8 +473,7 @@ class _PartialBuilder:
         r_t, r_d = t[r_start], d[r_start]
         r_dl = dl[r_start].astype(np.int32)
         rng = (r_d >> self.range_shift).astype(np.int64)
-        slot = ((r_t.astype(np.uint64) * _MIX ^ rng.astype(np.uint64))
-                % np.uint64(self.n_slots)).astype(np.int64)
+        slot = _slot_of(r_t, rng, self.n_slots, self.n_buckets)
         order2 = np.argsort(slot, kind="stable")
         s2 = slot[order2]
         t2, d2 = r_t[order2], r_d[order2]
@@ -480,7 +507,7 @@ class _PartialBuilder:
 
 def _partial_factory(range_shift: int, slot_values: list[int],
                      with_positions: bool,
-                     vocab_set: "frozenset[str] | None"):
+                     vocab_set: "frozenset[str] | None", n_buckets: int):
     """Phase A (map side): tokens -> sorted partial posting runs,
     serialized as a handful of binary-blob rows per (input split,
     target slot). This is the classic MapReduce combiner form: the
@@ -491,7 +518,8 @@ def _partial_factory(range_shift: int, slot_values: list[int],
     rows per token."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b = _PartialBuilder(range_shift, slot_values, with_positions)
+        b = _PartialBuilder(range_shift, slot_values, with_positions,
+                            n_buckets)
         for pdf in batches:
             for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
                 n0 = len(toks)
@@ -507,7 +535,8 @@ def _partial_factory(range_shift: int, slot_values: list[int],
 
 
 def _corpus_partial_factory(range_shift: int, slot_values: list[int],
-                            with_positions: bool, tokenizer: str):
+                            with_positions: bool, tokenizer: str,
+                            n_buckets: int):
     """Fused phase A: (url, html) -> extraction -> tokenize -> partial
     posting runs in ONE python pass — token arrays never cross the
     Arrow bridge at all (build_postings over pre-tokenized input pays
@@ -519,7 +548,8 @@ def _corpus_partial_factory(range_shift: int, slot_values: list[int],
         from ..functions.extract import extract_html
         from ..vocab import get_vocab
         v = get_vocab() if tokenizer == "spm" else None
-        b = _PartialBuilder(range_shift, slot_values, with_positions)
+        b = _PartialBuilder(range_shift, slot_values, with_positions,
+                            n_buckets)
         sdocs: list[int] = []
         sdls: list[int] = []
 
@@ -682,7 +712,8 @@ def build_postings(tokens_df: DataFrame,
                    range_shift: int | None = None,
                    with_positions: bool = True,
                    vocab_filter: DataFrame | None = None,
-                   n_partitions: int | None = None) -> tuple[DataFrame, CorpusStats]:
+                   n_partitions: int | None = None,
+                   n_buckets: int = DEFAULT_N_BUCKETS) -> tuple[DataFrame, CorpusStats]:
     """tokens_df(doc_id, tokens) -> posting-block DataFrame + stats.
 
     Map-side-partial build (the MapReduce combiner form), ONE shuffle
@@ -692,15 +723,20 @@ def build_postings(tokens_df: DataFrame,
          the split's occurrences, collapse to runs (tf, positions), and
          emit ONE binary-blob row per (split, target slot) — the
          occurrence stream never crosses the Arrow bridge as rows;
-      2. shuffle the partial rows with a bijective slot key (see
-         _slot_values) — bytes move, not rows; hot-term skew is bounded
-         because the slot key is (term_id, doc_range) where doc_range =
+      2. shuffle the partial rows with a bijective, bucket-major slot
+         key (_slot_values, _slot_of) — bytes move, not rows; slots
+         hold whole term_buckets, so write_index with the same
+         n_buckets needs no second exchange, and doc_range =
          shiftright(doc_id, range_shift) splits any term's postings
          into <= ~MAX_RANGE_DOCS-doc groups (see range_shift_for);
       3. Phase B mapInArrow per slot: concat partial runs, ONE lexsort
          merge, vectorized delta+varint+block-max encode
          (_runs_to_blocks). Output blocks are byte-identical to a
          global sort-based build.
+
+    vocab_filter: a DataFrame with a `term` column; tokens outside it
+    are dropped, keeping their original offsets as positions and the
+    unfiltered token count as the doc length.
     """
     spark = tokens_df.sparkSession
     if stats is None:
@@ -721,7 +757,8 @@ def build_postings(tokens_df: DataFrame,
             r["term"] for r in vocab_filter.select("term").collect())
     slots = _slot_values(spark, n_partitions)
     partials = tokens_df.select("doc_id", "tokens").mapInPandas(
-        _partial_factory(range_shift, slots, with_positions, vocab_set),
+        _partial_factory(range_shift, slots, with_positions, vocab_set,
+                         n_buckets),
         schema=_PARTIAL_SCHEMA)
     postings = (partials.repartition(n_partitions, "p")
                 .mapInArrow(_merge_factory(stats.avgdl, block_size,
@@ -735,7 +772,8 @@ def build_from_corpus(corpus_df: DataFrame, tokenizer: str = "spm",
                       range_shift: int | None = None,
                       with_positions: bool = True,
                       n_partitions: int | None = None,
-                      est_avgdl: float = 350.0) -> tuple[DataFrame, CorpusStats]:
+                      est_avgdl: float = 350.0,
+                      n_buckets: int = DEFAULT_N_BUCKETS) -> tuple[DataFrame, CorpusStats]:
     """Fused build: (url, html) corpus -> posting blocks in ONE python
     pass plus the bytes shuffle — extraction, tokenization, doc_id
     hashing and partial-run construction all happen in the same
@@ -763,7 +801,7 @@ def build_from_corpus(corpus_df: DataFrame, tokenizer: str = "spm",
     slots = _slot_values(spark, n_partitions)
     partials = corpus_df.select("url", "html").mapInPandas(
         _corpus_partial_factory(range_shift, slots, with_positions,
-                                tokenizer),
+                                tokenizer, n_buckets),
         schema=_PARTIAL_SCHEMA).persist()
 
     def stats_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -821,23 +859,33 @@ def term_dictionary(tokens_df: DataFrame) -> DataFrame:
             .withColumn("term_id", F.xxhash64("term")))
 
 
+def write_plan(postings: DataFrame,
+               n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
+    """The rows write_index persists: postings plus term_bucket, each
+    partition sorted by (term_bucket, term_id, doc_range, block_id)
+    so every output file is term-ordered."""
+    return (postings
+            .withColumn("term_bucket",
+                        F.pmod("term_id", F.lit(n_buckets)).cast("int"))
+            .sortWithinPartitions("term_bucket", "term_id", "doc_range",
+                                  "block_id"))
+
+
 def write_index(postings: DataFrame, path: str,
                 n_buckets: int = DEFAULT_N_BUCKETS,
                 stats: CorpusStats | None = None) -> None:
     """Persist postings partitioned by term_bucket for query-time
     partition pruning; stats sidecar as JSON.
 
-    The exchange keys on (term_bucket, term_id) into >= slot-count
-    partitions — repartition("term_bucket") alone would cap write
-    parallelism at n_buckets tasks and inherit per-bucket skew; the
-    partitionBy writer still routes every row to its bucket directory,
-    and sortWithinPartitions keeps each output file term-ordered."""
-    spark = postings.sparkSession
-    n_out = max(n_buckets, spark.sparkContext.defaultParallelism)
-    (postings
-     .withColumn("term_bucket", F.pmod("term_id", F.lit(n_buckets)).cast("int"))
-     .repartition(n_out, "term_bucket", "term_id")
-     .sortWithinPartitions("term_bucket", "term_id", "doc_range", "block_id")
+    No exchange: each input partition is sorted in place and written
+    as it stands (write_plan), so phase B and the write run as one
+    stage. A build with the same n_buckets hands over partitions that
+    hold whole buckets (see _slot_of), so every task writes one file
+    per bucket it owns. Any other input — a different n_buckets,
+    compact_index output — is still written correctly, because the
+    partitionBy writer routes every row to its bucket directory; it
+    only costs more files."""
+    (write_plan(postings, n_buckets)
      .write.mode("overwrite").partitionBy("term_bucket").parquet(path))
     release_build(postings)
     if stats is not None:

@@ -92,10 +92,12 @@ def cmd_build(args) -> int:
         if tokens is None:  # html corpus: fused single-pass build
             postings, stats = build_from_corpus(
                 _read_corpus(spark, args.input), tokenizer=args.tokenizer,
-                with_positions=not args.no_positions)
+                with_positions=not args.no_positions,
+                n_buckets=args.n_buckets)
         else:
             postings, stats = build_postings(
-                tokens, with_positions=not args.no_positions)
+                tokens, with_positions=not args.no_positions,
+                n_buckets=args.n_buckets)
         write_index(postings, args.output, stats=stats,
                     n_buckets=args.n_buckets)
         n_blocks = payload = None
@@ -425,7 +427,7 @@ def cmd_pipeline(args) -> int:
         else tokenize_whitespace
     toks = tokenizer(clean.select("doc_id", "text")) \
         .select("doc_id", "tokens")
-    postings, stats = build_postings(toks)
+    postings, stats = build_postings(toks, n_buckets=args.n_buckets)
     write_index(postings, args.output, stats=stats,
                 n_buckets=args.n_buckets)
     # write_index's release_build frees the build partials; the two

@@ -388,7 +388,8 @@ def collect_term_dfs(postings: DataFrame) -> dict[int, int]:
 class Searcher:
     """Serving-optimized index handle: scatter-gather top-k.
 
-    Build-time layout is term_bucket-partitioned (good for bulk scans);
+    Build-time layout is term_bucket-partitioned, one file per bucket
+    per build task (good for bulk scans);
     serving re-partitions the cached postings by doc_range so every
     partition holds whole doc ranges. Two physical paths:
 

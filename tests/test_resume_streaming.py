@@ -395,3 +395,144 @@ def test_build_output_independent_of_input_partitioning(spark, tokens):
 
     a, b = blocks(3), blocks(11)
     assert a.equals(b)
+
+
+def _block_frame(postings, cols):
+    df = (postings.select(*cols).toPandas()
+          .sort_values(["term_id", "doc_range", "block_id"])
+          .reset_index(drop=True))
+    for c in ("docs", "tfs", "dls", "positions"):
+        if c in df.columns:
+            df[c] = df[c].map(lambda v: None if v is None else bytes(v))
+    return df
+
+
+@pytest.mark.parametrize("n_buckets,n_partitions", [(64, 8), (4, 8)])
+def test_write_index_layout_one_file_per_bucket(spark, tmp_path, n_buckets,
+                                                n_partitions):
+    """The fused build hands write_index partitions that hold whole
+    term_buckets (or, with more slots than buckets, whole shares of
+    one), so the write needs no exchange: at most one file per bucket
+    per task, every bucket file holds only its own terms in sorted
+    order, and the rows equal a tokens-path build's."""
+    import pyarrow.parquet as pq
+    from pears_lite_spark.corpus import gen_corpus
+    from pears_lite_spark.index.build import (build_from_corpus,
+                                              ingest_tokens, range_shift_for,
+                                              read_index, write_index)
+    cdf = spark.createDataFrame(gen_corpus(200)).select("url", "html")
+    toks = ingest_tokens(cdf).select("doc_id", "tokens").persist()
+    ref_stats = corpus_stats(toks)
+    shift = range_shift_for(ref_stats.n_docs)
+    ref, _ = build_postings(toks, stats=ref_stats, range_shift=shift,
+                            n_partitions=n_partitions, n_buckets=n_buckets)
+    new, stats = build_from_corpus(cdf, range_shift=shift,
+                                   n_partitions=n_partitions,
+                                   n_buckets=n_buckets)
+    path = str(tmp_path / "idx")
+    write_index(new, path, n_buckets=n_buckets, stats=stats)
+    files = glob.glob(os.path.join(path, "term_bucket=*", "*.parquet"))
+    assert 0 < len(files) <= max(n_buckets, n_partitions)
+    for f in files:
+        b = int(f.split("term_bucket=")[1].split(os.sep)[0])
+        t = pq.read_table(f, columns=["term_id", "doc_range",
+                                      "block_id"]).to_pandas()
+        assert (t["term_id"] % n_buckets == b).all()
+        assert t.equals(t.sort_values(["term_id", "doc_range", "block_id"])
+                        .reset_index(drop=True))
+    cols = ["term_id", "doc_range", "block_id", "first_doc", "last_doc",
+            "n", "max_impact", "docs", "tfs", "dls", "positions"]
+    written, _ = read_index(spark, path)
+    assert _block_frame(written, cols).equals(_block_frame(ref, cols))
+    toks.unpersist()
+
+
+def test_slot_of_is_bucket_major():
+    """Each term_bucket maps to at most ceil(n_slots / n_buckets) slots
+    (exactly one when n_slots <= n_buckets), and a hot term's doc
+    ranges still spread over several slots when n_slots > n_buckets."""
+    import math
+    import numpy as np
+    from pears_lite_spark.index.build import _slot_of
+    n_buckets = 64
+    rng = np.random.default_rng(0)
+    tids = rng.integers(-2**63, 2**63 - 1, 20_000, dtype=np.int64)
+    ranges = rng.integers(0, 16, tids.size, dtype=np.int64)
+    hot = np.full(16, tids[0])
+    for n_slots in (4, 12, 64, 256):
+        g = math.ceil(n_slots / n_buckets)
+        slot = _slot_of(tids, ranges, n_slots, n_buckets)
+        assert ((slot >= 0) & (slot < n_slots)).all()
+        assert len(set(slot.tolist())) == n_slots
+        per_bucket: dict[int, set] = {}
+        for b, s in zip((tids % n_buckets).tolist(), slot.tolist()):
+            per_bucket.setdefault(b, set()).add(s)
+        assert max(len(v) for v in per_bucket.values()) <= g
+        hot_slots = set(_slot_of(hot, np.arange(16), n_slots,
+                                 n_buckets).tolist())
+        assert (len(hot_slots) > 1) == (n_slots > n_buckets)
+
+
+def test_mismatched_write_buckets_roundtrip(spark, tokens, tmp_path):
+    """write_index with an n_buckets the build was not clustered for
+    still routes every block to its bucket: identical top-k to a
+    matched build, only (possibly) more files."""
+    from pears_lite_spark.index.build import read_index, write_index
+
+    def build_and_write(build_buckets, name):
+        postings, stats = build_postings(tokens, n_buckets=build_buckets)
+        path = str(tmp_path / name)
+        write_index(postings, path, n_buckets=12, stats=stats)
+        idx, st = read_index(spark, path)
+        df = search_blocks(idx, st, QUERIES, k=10, n_buckets=12).toPandas()
+        hits = [(int(r.query_id), int(r.doc_id), round(float(r.score), 9))
+                for r in df.sort_values(["query_id", "rank"]).itertuples()]
+        return hits, len(glob.glob(os.path.join(path, "term_bucket=*",
+                                                "*.parquet")))
+
+    matched, n_matched = build_and_write(12, "matched")
+    mismatched, n_mismatched = build_and_write(64, "mismatched")
+    assert matched and mismatched == matched
+    assert n_matched <= 12 <= n_mismatched
+
+
+def test_vocab_filter_build_matches_prefiltered_oracle(spark, tokens):
+    """build_postings(vocab_filter=...) keeps only in-vocabulary tokens:
+    its docs/tfs blocks equal a tokens-path build over pre-filtered
+    tokens, while positions stay the original token offsets and dl the
+    unfiltered document length."""
+    import numpy as np
+    from pears_lite_spark.index import codec
+    from pears_lite_spark.xxh64 import xxh64_signed
+    pdf = tokens.toPandas()
+    vocab = sorted({t for ts in pdf["tokens"] for t in ts
+                    if xxh64_signed(t) % 3 == 0})
+    vocab_set = set(vocab)
+    vocab_df = spark.createDataFrame([(t,) for t in vocab], "term string")
+    stats = corpus_stats(tokens)
+    got, _ = build_postings(tokens, stats=stats, vocab_filter=vocab_df)
+    pre = spark.createDataFrame(
+        [(int(d), [t for t in ts if t in vocab_set])
+         for d, ts in zip(pdf["doc_id"], pdf["tokens"])],
+        "doc_id long, tokens array<string>")
+    ref, _ = build_postings(pre, stats=stats)
+    cols = ["term_id", "doc_range", "block_id", "first_doc", "last_doc",
+            "n", "docs", "tfs"]
+    g = _block_frame(got, cols + ["dls", "positions"])
+    assert len(g) > 0
+    assert g[cols].equals(_block_frame(ref, cols))
+    # per-(term, doc) oracle: original offsets and unfiltered length
+    exp = {}
+    for d, ts in zip(pdf["doc_id"], pdf["tokens"]):
+        for i, t in enumerate(ts):
+            if t in vocab_set:
+                exp.setdefault((xxh64_signed(t), int(d)),
+                               (len(ts), []))[1].append(i)
+    seen = {}
+    for r in g.itertuples():
+        docs = codec.decode_block_docs(r.docs, r.n)
+        dls = codec.varint_decode(r.dls, r.n)
+        poss = codec.decode_block_positions(r.positions, r.n)
+        for d, dl, p in zip(docs.tolist(), dls.tolist(), poss):
+            seen[(int(r.term_id), d)] = (dl, np.asarray(p).tolist())
+    assert seen == {k: (dl, p) for k, (dl, p) in exp.items()}
