@@ -576,13 +576,16 @@ def main():
                 lo14.append(timed_build(1, cpath, f"low1_{r}"))
                 g14.append(round(_regate(wait_used), 2))
                 hi14.append(timed_build(4, cpath, f"sc4_{r}"))
-            t14_lo = min(t[0] for t in lo14)
-            t14_hi = min(t[0] for t in hi14)
+            # cpu-sec from the same rep as each min-wall leg (as the
+            # 2->8 block does): min(cpu) could pair a fast leg's wall
+            # with a different leg's cpu
+            best_lo = min(lo14, key=lambda t: t[0])
+            best_hi = min(hi14, key=lambda t: t[0])
+            t14_lo, cpu14_lo = best_lo[0], best_lo[2]
+            t14_hi, cpu14_hi = best_hi[0], best_hi[2]
             thr14_lo = built_docs / t14_lo
             thr14_hi = built_docs / t14_hi
             eff14 = thr14_hi / (4.0 * thr14_lo)
-            cpu14_lo = min(t[2] for t in lo14)
-            cpu14_hi = min(t[2] for t in hi14)
             scaling_1v4 = {
                 "cores_low": 1, "cores_high": 4,
                 "leg_times_low": [round(t[0], 2) for t in lo14],

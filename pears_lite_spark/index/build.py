@@ -6,8 +6,10 @@ the whole 16k-entry positional index for every inserted doc;
 `mk_page_vector.py:49,63` rewrites the whole pod matrix) with ONE
 shuffle of packed bytes:
 
-    tokens --mapInPandas (phase A)--> per-split sorted partial runs,
-             serialized as a few binary-blob rows per target slot
+    (doc_id, tokens) or (url, html)
+           --mapInPandas (phase A, one kernel for both inputs)-->
+             per-split sorted partial runs, serialized as a few
+             binary-blob rows per target slot, plus per-flush doc stats
            --repartition(bijective slot key)-->
            --mapInArrow (phase B) merge + delta/varint/block-max encode
            --sortWithinPartitions + partitionBy(term_bucket) write
@@ -20,6 +22,11 @@ occurrence rows outnumber documents ~350:1. Phase A therefore
 collapses occurrences to runs IN THE SAME python pass that already
 holds the tokens, and the shuffle moves ~7x fewer bytes (packed int
 arrays, LZ4-friendly), none of which are ever converted row-by-row.
+The tokens path (build_postings) and the fused corpus path
+(build_from_corpus) run the same phase-A kernel (_phase_a_factory);
+they differ only in how a batch yields its (doc_id, tokens) pairs —
+as given, or through the extract/hash/tokenize loop (_extracted) that
+ingest_tokens also runs.
 
 The slot key is bucket-major (`_slot_of`): each phase-B partition
 holds whole term_buckets (or one bucket's share, with more slots than
@@ -130,15 +137,27 @@ def tokenize_spm(df: DataFrame, id_cols: tuple[str, ...] = ("doc_id",)) -> DataF
     return df.select(*id_cols, "text").mapInPandas(kernel, schema=out_schema)
 
 
+def _extracted(pdf: pd.DataFrame, tokenizer: str):
+    """(doc_id, url, lang, tokens) for each extractable page of one
+    (url, html) batch: extraction, doc_id = xxh64(url) (identical to
+    Spark's xxhash64) and tokenization in one pass. Pages with no
+    detectable language are skipped (the reference rejects them)."""
+    from ..functions.extract import extract_html
+    from ..xxh64 import xxh64_signed
+    v = get_vocab() if tokenizer == "spm" else None
+    for url, html in zip(pdf["url"], pdf["html"]):
+        _, text, _, lang = extract_html(html)
+        if text:
+            yield (xxh64_signed(url), url, lang,
+                   v.encode_as_pieces(text) if v else text.split())
+
+
 def ingest_tokens(corpus_df: DataFrame, tokenizer: str = "spm") -> DataFrame:
     """Fused ingest: (url, warc_ts, html) -> (doc_id, url, lang, tokens)
     in ONE Arrow crossing — extraction, doc_id (xxh64(url), identical to
     Spark's xxhash64), and tokenization run in the same Python worker
     pass, so the html payload crosses the JVM<->Python boundary once
     instead of four times (extract UDF, hash column, tokenize UDF)."""
-    from ..functions.extract import extract_html
-    from ..xxh64 import xxh64_signed
-
     out_schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("url", T.StringType()),
@@ -147,19 +166,9 @@ def ingest_tokens(corpus_df: DataFrame, tokenizer: str = "spm") -> DataFrame:
     ])
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        v = get_vocab() if tokenizer == "spm" else None
         for pdf in batches:
-            ids, urls, langs, toks = [], [], [], []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                title, text, snippet, lang = extract_html(html)
-                if not text:
-                    continue  # undetectable-language page (reference rejects)
-                ids.append(xxh64_signed(url))
-                urls.append(url)
-                langs.append(lang)
-                toks.append(v.encode_as_pieces(text) if v else text.split())
-            yield pd.DataFrame({"doc_id": ids, "url": urls, "lang": langs,
-                                "tokens": toks})
+            yield pd.DataFrame(list(_extracted(pdf, tokenizer)),
+                               columns=out_schema.names)
 
     return corpus_df.select("url", "html").mapInPandas(kernel, schema=out_schema)
 
@@ -341,15 +350,21 @@ def _slot_of(term_ids: np.ndarray, doc_ranges: np.ndarray, n_slots: int,
     return ((term_ids % n_buckets) * g + mix.astype(np.int64)) % n_slots
 
 # partial rows with this p value carry per-flush doc stats
-# (docs blob = doc_ids int64, dls blob = doc lengths int32)
+# (dls blob = the flushed docs' lengths, int32; other blobs empty)
 _DOC_STATS_P = -(1 << 62)
 
 
 class _PartialBuilder:
-    """Shared phase-A accumulator: docs stream in via add(), sorted
-    partial posting runs stream out as binary-blob DataFrames (one row
-    per target slot per flush). Used by both the tokens-input and the
-    fused corpus-input kernels."""
+    """Phase-A accumulator of the one phase-A kernel (_phase_a_factory):
+    docs queue via add_tokens() (or add(), the per-token reference),
+    and each flush emits the docs' sorted partial posting runs as
+    binary-blob rows, one per target slot.
+
+    A run is one source doc's occurrences of one term: runs are keyed
+    on (term_id, per-flush source-doc ordinal), not on doc_id, so a
+    doc_id that arrives twice yields two runs whether the copies share
+    a flush or not, and phase B merges them (_merge_factory) the same
+    way in every case."""
 
     def __init__(self, range_shift: int, slot_values: list[int],
                  with_positions: bool, n_buckets: int = DEFAULT_N_BUCKETS):
@@ -365,6 +380,8 @@ class _PartialBuilder:
         self.docs: list[np.ndarray] = []
         self.dls: list[np.ndarray] = []
         self.poss: list[np.ndarray] = []
+        self.srcs: list[np.ndarray] = []    # source-doc ordinal per token
+        self.n_src = 0
         # deferred-hash path: (doc_id, tokens, dl, positions) tuples
         # whose term hashing happens vectorized at flush (pd.factorize +
         # hash of the flush's UNIQUE terms only) instead of one Python
@@ -391,6 +408,8 @@ class _PartialBuilder:
         self.docs.append(np.full(ids.size, doc_id, np.int64))
         self.dls.append(np.full(ids.size, dl, np.int32))
         self.poss.append(idxs)
+        self.srcs.append(np.full(ids.size, self.n_src, np.int32))
+        self.n_src += 1
         self.acc += ids.size
 
     def add_tokens(self, doc_id: int, toks, n0: int,
@@ -431,6 +450,9 @@ class _PartialBuilder:
             np.asarray([d for d, _, _, _ in self.pend], np.int64), lens))
         self.dls.append(np.repeat(
             np.asarray([n for _, _, n, _ in self.pend], np.int32), lens))
+        self.srcs.append(np.repeat(np.arange(
+            self.n_src, self.n_src + lens.size, dtype=np.int32), lens))
+        self.n_src += lens.size
         if self.with_positions:
             starts = np.zeros(lens.size, np.int64)
             np.cumsum(lens[:-1], out=starts[1:])
@@ -447,13 +469,15 @@ class _PartialBuilder:
         t = np.concatenate(self.tids)
         d = np.concatenate(self.docs)
         dl = np.concatenate(self.dls)
+        src = np.concatenate(self.srcs)
         pp = np.concatenate(self.poss) if self.with_positions else None
         self.tids, self.docs, self.dls, self.poss = [], [], [], []
+        self.srcs, self.n_src = [], 0
         self.acc = 0
         # Single-key STABLE sort instead of a (pos, doc, term) lexsort:
         # docs stream in whole, so for equal terms the insertion order
-        # is already doc-contiguous with ascending positions — exactly
-        # what run collapse needs. Runs within a term leave here in
+        # is already source-doc-contiguous with ascending positions —
+        # exactly what run collapse needs. Runs within a term leave here in
         # insertion order rather than doc order; phase B re-lexsorts
         # (d, t) over the concatenated slot anyway (it never assumes
         # per-partial doc order), so the final index bytes are
@@ -463,11 +487,11 @@ class _PartialBuilder:
         order = np.argsort(t, kind="stable")
         if self.with_positions:
             pp = pp[order]
-        t, d, dl = t[order], d[order], dl[order]
+        t, d, dl, src = t[order], d[order], dl[order], src[order]
         n = t.size
         newr = np.empty(n, dtype=bool)
         newr[0] = True
-        newr[1:] = (t[1:] != t[:-1]) | (d[1:] != d[:-1])
+        newr[1:] = (t[1:] != t[:-1]) | (src[1:] != src[:-1])
         r_start = np.flatnonzero(newr)
         r_tf = (np.append(r_start[1:], n) - r_start).astype(np.int32)
         r_t, r_d = t[r_start], d[r_start]
@@ -505,85 +529,49 @@ class _PartialBuilder:
         return pd.DataFrame(rows)
 
 
-def _partial_factory(range_shift: int, slot_values: list[int],
-                     with_positions: bool,
-                     vocab_set: "frozenset[str] | None", n_buckets: int):
-    """Phase A (map side): tokens -> sorted partial posting runs,
+def _phase_a_factory(docs_of, range_shift: int, slot_values: list[int],
+                     with_positions: bool, n_buckets: int,
+                     vocab_set: "frozenset[str] | None" = None):
+    """Phase A (map side), the one kernel every build runs: docs_of(pdf)
+    yields each input batch's (doc_id, tokens) — the tokens columns as
+    they stand, or the extract/hash/tokenize loop (_extracted) over
+    (url, html) — and the docs become sorted partial posting runs,
     serialized as a handful of binary-blob rows per (input split,
     target slot). This is the classic MapReduce combiner form: the
     expensive occurrence stream never crosses the JVM<->Python bridge
     as rows (measured ~0.5M rows/s/core for post-shuffle row->Arrow
     conversion — the bytes are cheap, the per-row conversion is not),
     and the shuffle moves delta-friendly packed arrays instead of 35
-    rows per token."""
+    rows per token. Each flush also emits one doc-stats row
+    (p = _DOC_STATS_P, dls blob = the flushed docs' lengths) so corpus
+    statistics can come from the same pass."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         b = _PartialBuilder(range_shift, slot_values, with_positions,
                             n_buckets)
+        dls: list[int] = []
+
+        def flush() -> pd.DataFrame:
+            stats = pd.DataFrame({
+                "p": [_DOC_STATS_P], "terms": [b""], "docs": [b""],
+                "tfs": [b""], "dls": [np.asarray(dls, np.int32).tobytes()],
+                "poss": [b""]})
+            dls.clear()
+            # a vocab_set can leave every doc of a split without tokens
+            return (pd.concat([b.flush(), stats], ignore_index=True)
+                    if b.acc else stats)
+
         for pdf in batches:
-            for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
+            for doc_id, toks in docs_of(pdf):
                 n0 = len(toks)
                 if n0 == 0:
                     continue
+                dls.append(n0)
                 b.add_tokens(doc_id, toks, n0, vocab_set)
                 if b.acc >= FLUSH_ROWS:
-                    yield b.flush()
-        if b.acc:
-            yield b.flush()
-
-    return kernel
-
-
-def _corpus_partial_factory(range_shift: int, slot_values: list[int],
-                            with_positions: bool, tokenizer: str,
-                            n_buckets: int):
-    """Fused phase A: (url, html) -> extraction -> tokenize -> partial
-    posting runs in ONE python pass — token arrays never cross the
-    Arrow bridge at all (build_postings over pre-tokenized input pays
-    that crossing once). Also emits one doc-stats row per flush
-    (p = _DOC_STATS_P; docs/dls blobs hold each flushed doc's id and
-    length) so corpus statistics come from the same pass."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.extract import extract_html
-        from ..vocab import get_vocab
-        v = get_vocab() if tokenizer == "spm" else None
-        b = _PartialBuilder(range_shift, slot_values, with_positions,
-                            n_buckets)
-        sdocs: list[int] = []
-        sdls: list[int] = []
-
-        def stat_row() -> pd.DataFrame:
-            nonlocal sdocs, sdls
-            out = pd.DataFrame({
-                "p": [_DOC_STATS_P],
-                "terms": [b""],
-                "docs": [np.asarray(sdocs, np.int64).tobytes()],
-                "tfs": [b""],
-                "dls": [np.asarray(sdls, np.int32).tobytes()],
-                "poss": [b""],
-            })
-            sdocs, sdls = [], []
-            return out
-
-        for pdf in batches:
-            for url, html in zip(pdf["url"], pdf["html"]):
-                title, text, snippet, lang = extract_html(html)
-                if not text:
-                    continue  # unextractable page (reference rejects)
-                toks = v.encode_as_pieces(text) if v else text.split()
-                n0 = len(toks)
-                if n0 == 0:
-                    continue
-                doc_id = b._hash(url)
-                sdocs.append(doc_id)
-                sdls.append(n0)
-                b.add_tokens(doc_id, toks, n0)
-                if b.acc >= FLUSH_ROWS:
-                    yield pd.concat([b.flush(), stat_row()],
-                                    ignore_index=True)
-        if b.acc:
-            yield pd.concat([b.flush(), stat_row()], ignore_index=True)
+                    yield flush()
+        if dls:
+            yield flush()
 
     return kernel
 
@@ -597,11 +585,12 @@ def _merge_factory(avgdl: float, block_size: int, with_positions: bool,
     slot, so blocks come out identical to a global sort-based build.
 
     Duplicate (term_id, doc_id) runs — duplicate URLs in a corpus, or
-    duplicate doc_id rows in a tokens input, landing in different phase-A
-    splits — are merged here (tf summed, position multisets unioned in
-    sorted order), matching what phase A already does when the duplicates
-    share a split; without this the WAND scorer could emit one doc twice
-    in a top-k while the exhaustive scorer summed them."""
+    duplicate doc_id rows in a tokens input — are merged here and only
+    here (tf and dl summed, position multisets unioned in sorted
+    order): phase A keeps each source doc's runs apart, so the result
+    is the same whether the copies share a flush, a split, or neither.
+    Without the merge the WAND scorer could emit one doc twice in a
+    top-k while the exhaustive scorer summed them."""
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         Ts, Ds, TFs, DLs, Ps = [], [], [], [], []
@@ -706,6 +695,29 @@ def _slot_values(spark: SparkSession, n: int) -> list[int]:
     return out
 
 
+def _n_partitions(spark: SparkSession, est_occ: float) -> int:
+    """Phase-B slot count: at least spark.sql.shuffle.partitions and
+    enough slots to keep each near TARGET_PART_ROWS occurrences, rounded
+    up to a multiple of the executor slot count (9 tasks on 8 slots is
+    a 2-wave schedule with 7 idle slots in wave 2)."""
+    base = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
+               math.ceil(est_occ / TARGET_PART_ROWS))
+    par = max(1, spark.sparkContext.defaultParallelism)
+    return math.ceil(base / par) * par
+
+
+def _phase_b(partials: DataFrame, n_partitions: int, avgdl: float,
+             block_size: int, with_positions: bool,
+             range_shift: int) -> DataFrame:
+    """Drop the doc-stats rows, shuffle the partial runs to their slots
+    (the build's one exchange) and merge+encode each slot."""
+    return (partials.filter(F.col("p") != _DOC_STATS_P)
+            .repartition(n_partitions, "p")
+            .mapInArrow(_merge_factory(avgdl, block_size, with_positions,
+                                       range_shift),
+                        schema=POSTING_SCHEMA))
+
+
 def build_postings(tokens_df: DataFrame,
                    stats: CorpusStats | None = None,
                    block_size: int = codec.BLOCK_SIZE,
@@ -718,10 +730,11 @@ def build_postings(tokens_df: DataFrame,
 
     Map-side-partial build (the MapReduce combiner form), ONE shuffle
     of packed bytes:
-      1. Phase A mapInPandas over (doc_id, tokens): per input split,
-         hash terms (xxh64 == Spark xxhash64, per-word cached), lexsort
-         the split's occurrences, collapse to runs (tf, positions), and
-         emit ONE binary-blob row per (split, target slot) — the
+      1. Phase A mapInPandas over (doc_id, tokens) (_phase_a_factory):
+         per input split, hash terms (xxh64 == Spark xxhash64, once per
+         unique term of a flush), stable-argsort each flush's
+         occurrences on term_id, collapse to runs (tf, positions), and
+         emit ONE binary-blob row per (flush, target slot) — the
          occurrence stream never crosses the Arrow bridge as rows;
       2. shuffle the partial rows with a bijective, bucket-major slot
          key (_slot_values, _slot_of) — bytes move, not rows; slots
@@ -744,26 +757,20 @@ def build_postings(tokens_df: DataFrame,
     if range_shift is None:
         range_shift = range_shift_for(stats.n_docs)
     if n_partitions is None:
-        est_occ = int(stats.n_docs * max(stats.avgdl, 1.0))
-        base = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-                   math.ceil(est_occ / TARGET_PART_ROWS))
-        # round up to a multiple of the executor slot count: 9 tasks on
-        # 8 slots is a 2-wave schedule with 7 idle slots in wave 2
-        par = max(1, spark.sparkContext.defaultParallelism)
-        n_partitions = math.ceil(base / par) * par
+        n_partitions = _n_partitions(
+            spark, int(stats.n_docs * max(stats.avgdl, 1.0)))
     vocab_set = None
     if vocab_filter is not None:
         vocab_set = frozenset(
             r["term"] for r in vocab_filter.select("term").collect())
     slots = _slot_values(spark, n_partitions)
     partials = tokens_df.select("doc_id", "tokens").mapInPandas(
-        _partial_factory(range_shift, slots, with_positions, vocab_set,
-                         n_buckets),
+        _phase_a_factory(lambda pdf: zip(pdf["doc_id"], pdf["tokens"]),
+                         range_shift, slots, with_positions, n_buckets,
+                         vocab_set),
         schema=_PARTIAL_SCHEMA)
-    postings = (partials.repartition(n_partitions, "p")
-                .mapInArrow(_merge_factory(stats.avgdl, block_size,
-                                           with_positions, range_shift),
-                            schema=POSTING_SCHEMA))
+    postings = _phase_b(partials, n_partitions, stats.avgdl, block_size,
+                        with_positions, range_shift)
     return postings, stats
 
 
@@ -775,11 +782,11 @@ def build_from_corpus(corpus_df: DataFrame, tokenizer: str = "spm",
                       est_avgdl: float = 350.0,
                       n_buckets: int = DEFAULT_N_BUCKETS) -> tuple[DataFrame, CorpusStats]:
     """Fused build: (url, html) corpus -> posting blocks in ONE python
-    pass plus the bytes shuffle — extraction, tokenization, doc_id
-    hashing and partial-run construction all happen in the same
-    mapInPandas, so neither the html nor the token arrays ever make a
-    second trip across the Arrow bridge (build_postings over
-    pre-tokenized input pays one token-array crossing).
+    pass plus the bytes shuffle — the phase-A kernel of build_postings
+    reads its docs through the extract/hash/tokenize loop (_extracted),
+    so neither the html nor the token arrays ever make a second trip
+    across the Arrow bridge (build_postings over pre-tokenized input
+    pays one token-array crossing).
 
     Corpus statistics (n_docs, avgdl for the phase-B BM25 impacts)
     come from per-flush doc-stats side rows in the partials — no
@@ -794,14 +801,12 @@ def build_from_corpus(corpus_df: DataFrame, tokenizer: str = "spm",
     if range_shift is None:
         range_shift = range_shift_for(est_docs)
     if n_partitions is None:
-        base = max(int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-                   math.ceil(est_docs * est_avgdl / TARGET_PART_ROWS))
-        par = max(1, spark.sparkContext.defaultParallelism)
-        n_partitions = math.ceil(base / par) * par
+        n_partitions = _n_partitions(spark, est_docs * est_avgdl)
     slots = _slot_values(spark, n_partitions)
     partials = corpus_df.select("url", "html").mapInPandas(
-        _corpus_partial_factory(range_shift, slots, with_positions,
-                                tokenizer, n_buckets),
+        _phase_a_factory(
+            lambda pdf: ((d, t) for d, _, _, t in _extracted(pdf, tokenizer)),
+            range_shift, slots, with_positions, n_buckets),
         schema=_PARTIAL_SCHEMA).persist()
 
     def stats_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -825,11 +830,8 @@ def build_from_corpus(corpus_df: DataFrame, tokenizer: str = "spm",
     n_docs = int(row["n"] or 0)
     stats = CorpusStats(n_docs=n_docs,
                         avgdl=float(row["tot"] or 0) / max(n_docs, 1))
-    postings = (partials.filter(F.col("p") != _DOC_STATS_P)
-                .repartition(n_partitions, "p")
-                .mapInArrow(_merge_factory(stats.avgdl, block_size,
-                                           with_positions, range_shift),
-                            schema=POSTING_SCHEMA))
+    postings = _phase_b(partials, n_partitions, stats.avgdl, block_size,
+                        with_positions, range_shift)
     # caller contract: the partials cache must be released once the
     # postings are materialized — write_index does it automatically;
     # other callers use release_build(postings)

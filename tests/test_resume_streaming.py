@@ -228,6 +228,65 @@ def test_duplicate_doc_id_runs_merge_in_phase_b(spark):
     assert pos[5].tolist() == [0, 0, 2]             # union, sorted
 
 
+def test_duplicate_doc_id_in_one_partition_merges_in_phase_b(spark):
+    """Both copies of doc 5 in ONE input partition (so one phase-A
+    flush) index exactly as when they span two partitions: one run,
+    tf 3, dl 3 + 2 = 5, positions union-sorted."""
+    from pears_lite_spark.index import codec
+    from pears_lite_spark.xxh64 import xxh64_signed
+    toks = spark.createDataFrame(
+        [(5, ["apple", "pear", "apple"]), (5, ["apple", "cherry"]),
+         (7, ["apple"])], "doc_id long, tokens array<string>").coalesce(1)
+    assert toks.rdd.getNumPartitions() == 1
+    postings, _ = build_postings(toks)
+    got = {}
+    for r in postings.filter(F.col("term_id") == xxh64_signed("apple")) \
+            .collect():
+        for d, tf, dl, p in zip(
+                codec.decode_block_docs(bytes(r["docs"]), r["n"]).tolist(),
+                codec.decode_block_tfs(bytes(r["tfs"]), r["n"]).tolist(),
+                codec.varint_decode(bytes(r["dls"]), r["n"]).tolist(),
+                codec.decode_block_positions(bytes(r["positions"]), r["n"])):
+            assert d not in got                      # no duplicate runs
+            got[d] = (tf, dl, list(p))
+    assert got == {5: (3, 5, [0, 0, 2]), 7: (1, 1, [0])}
+
+
+def test_edge_corpus_fused_matches_tokens_path(spark):
+    """Duplicate URLs (as exact copies and with other html),
+    unextractable ('xx') and empty-html pages, and more input
+    partitions than docs: the fused build equals ingest_tokens +
+    build_postings byte for byte, with equal stats, under any input
+    partitioning."""
+    import pandas as pd
+    from pears_lite_spark.corpus import gen_corpus
+    from pears_lite_spark.index.build import (build_from_corpus,
+                                              ingest_tokens, range_shift_for,
+                                              release_build)
+    pages = gen_corpus(100).iloc[90:][["url", "html"]]   # en, de, fr, xx
+    other = pages.iloc[:3].assign(html=pages["html"].iloc[3:6].values)
+    empty = pd.DataFrame({"url": ["https://empty.example/"], "html": [b""]})
+    edge = pd.concat([pages, other, pages.iloc[:2], empty], ignore_index=True)
+    cdf = spark.createDataFrame(edge).repartition(len(edge) + 8)
+    toks = ingest_tokens(cdf).select("doc_id", "tokens").persist()
+    ref_stats = corpus_stats(toks)
+    assert ref_stats.n_docs == len(edge) - 2              # 'xx' + empty
+    assert toks.select("doc_id").distinct().count() == len(pages) - 1
+    shift = range_shift_for(ref_stats.n_docs)
+    ref, _ = build_postings(toks, stats=ref_stats, range_shift=shift)
+    cols = ["term_id", "doc_range", "block_id", "first_doc", "last_doc",
+            "n", "max_impact", "docs", "tfs", "dls", "positions"]
+    want = _block_frame(ref, cols)
+    assert len(want) > 0
+    for df in (cdf, cdf.coalesce(1), cdf.repartition(8)):
+        got, stats = build_from_corpus(df, range_shift=shift)
+        assert stats.n_docs == ref_stats.n_docs
+        assert abs(stats.avgdl - ref_stats.avgdl) < 1e-9
+        assert _block_frame(got, cols).equals(want)
+        release_build(got)
+    toks.unpersist()
+
+
 def test_stream_refresh_compact_equals_fresh_build(spark, tmp_path):
     """Drain with a WRONG frozen seed (N, avgdl) -> refresh_stats ->
     compact must equal a fresh batch build byte-for-byte: long-running

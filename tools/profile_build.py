@@ -4,9 +4,12 @@ level, same protocol as bench.timed_build).
     python tools/profile_build.py <cores> [corpus_path]
 
 Phases: ingest (extract+tokenize, materialized via persist+count),
-stats (agg over persisted tokens), encode (posexplode -> shuffle ->
-sort -> mapInArrow, materialized via count), write (bucket repartition
-+ partitioned parquet).
+stats (agg over persisted tokens), encode (phase-A mapInPandas ->
+partial runs -> the one slot shuffle -> phase-B mapInArrow merge +
+block encode, materialized via persist+count), write (per-partition
+sort + term_bucket-partitioned parquet, no exchange). Phase A is the
+same kernel the fused build_from_corpus runs; only its input differs
+(tokens here, html there).
 """
 import os
 import sys
