@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 `entry(spark)` runs the flagship pipeline (whitespace tokenize ->
-block-compressed inverted index -> block-max WAND BM25 top-10 -> doc
+block-compressed inverted index -> block-index BM25 top-10 -> doc
 metadata join) on sf0.001. `queries()` / `oracle_sql()` expose the
 operator inventory (SURVEY.md §2 + training-data ops) with DuckDB
 oracles; implementations live in pears_lite_spark.contract.

@@ -288,8 +288,9 @@ def q_bm25_top10(spark, sf_dir):
 
 
 def q_bm25_wand_top10(spark, sf_dir):
-    """C10 via the block-compressed index + block-max WAND (same oracle
-    as q_bm25_top10 — rank/score identity is the point)."""
+    """C10 via the block-compressed index and its top-k kernel (same
+    oracle as q_bm25_top10 — rank/score identity is the point; the
+    query name is part of the driver interface and stays)."""
     from .search.bm25 import search_blocks
     postings, stats = _index_for(spark, sf_dir)
     out = search_blocks(postings, stats, [BM25_QUERY], k=10)

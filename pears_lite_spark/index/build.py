@@ -40,7 +40,7 @@ doc_range = shiftright(doc_id, range_shift) — an ORDER-PRESERVING,
 TERM-ALIGNED salt: a hot term's postings split across bounded
 ~MAX_RANGE_DOCS-doc groups, doc_id order (and hence delta encoding)
 survives because shiftright is monotone, and every term is cut at the
-same doc boundaries so the WAND scorer can group by doc_range. With
+same doc boundaries so the block scorer can partition by doc_range. With
 fewer slots than buckets a term's groups share its bucket's slot, and
 buckets spread over slots at most ceil(n_buckets / n_slots) :
 floor(n_buckets / n_slots). AQE skew-join stays on as a second line of
@@ -198,10 +198,10 @@ def range_shift_for(n_docs: int, max_group: int = MAX_RANGE_DOCS) -> int:
     ~max_group docs. doc_ids are xxhash64 (uniform over 2^64), so
     shiftright(doc_id, shift) splits the id space into 2^(64-shift)
     equal-probability, ORDERED, TERM-ALIGNED ranges (every term is cut
-    at the same doc boundaries, which is what lets the scorer run WAND
-    per doc_range group). Small corpora get ONE range (no rare-term
-    fragmentation); at web scale every 16k-vocab piece is frequent, so
-    per-term fragmentation is negligible there too."""
+    at the same doc boundaries, which is what lets the scorer take a
+    local top-k per doc_range partition). Small corpora get ONE range
+    (no rare-term fragmentation); at web scale every 16k-vocab piece is
+    frequent, so per-term fragmentation is negligible there too."""
     n_ranges = max(1, math.ceil(max(n_docs, 1) / max_group))
     bits = max(0, math.ceil(math.log2(n_ranges)))
     return max(1, min(63, 64 - bits))
@@ -589,8 +589,9 @@ def _merge_factory(avgdl: float, block_size: int, with_positions: bool,
     here (tf and dl summed, position multisets unioned in sorted
     order): phase A keeps each source doc's runs apart, so the result
     is the same whether the copies share a flush, a split, or neither.
-    Without the merge the WAND scorer could emit one doc twice in a
-    top-k while the exhaustive scorer summed them."""
+    Without the merge the block scorer would add up impacts taken
+    from each copy's partial tf and dl, while the exhaustive scorer
+    sums tf and dl first."""
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         Ts, Ds, TFs, DLs, Ps = [], [], [], [], []

@@ -18,10 +18,10 @@ full-index rewrite per doc — `/root/reference/app/indexer/posix.py:
 - `build_resumable` skips partitions whose manifest matches the input
   fingerprint — kill + re-run touches only unfinished partitions and
   produces byte-identical output (deterministic encoding);
-- queries run directly on the union (the WAND scorer treats each part
-  as its own sorted cursor per term); `compact_index` optionally merges
-  parts into one canonical segment (LSM/Lucene-style merge expressed as
-  a decode -> merge -> re-encode applyInPandas).
+- queries run directly on the union (the block scorer sums a doc's
+  postings from every part in one per-doc accumulate); `compact_index`
+  optionally merges parts into one canonical segment (LSM/Lucene-style
+  merge expressed as a decode -> merge -> re-encode applyInPandas).
 """
 
 from __future__ import annotations

@@ -135,7 +135,7 @@ def cmd_query(args) -> int:
     else:
         queries = [q.split() for q in raw]
     # the decoded flat projection only pays off for interactive (few-
-    # query) serving; batch query files go through the WAND kernel
+    # query) serving; batch query files go through the top-k kernel
     searcher = Searcher(postings, stats,
                         flat_cache=len(raw) <= Searcher.FLAT_BATCH_MAX)
     t1 = time.time()

@@ -1,4 +1,4 @@
-"""BM25 top-k scoring: exhaustive DataFrame path + block-max WAND path.
+"""BM25 top-k scoring: exhaustive DataFrame path + block-index path.
 
 The reference has no BM25 (its scoring is cosine+completeness+snippet+
 positional — `/root/reference/app/search/score_pages.py:96-114`); the
@@ -15,43 +15,37 @@ doc_id ascending:
    broadcast join. SQL-expressible, so it is DuckDB-oracle-checked by
    the driver and doubles as the pytest ground truth.
 
-2. `search_blocks` / `BlockMaxWand`: the scale path over the
-   block-compressed posting table (index/build.py). Queries prune the
-   scan to their terms' buckets, then a per-(query, doc_range)
-   applyInPandas runs document-at-a-time WAND (Broder et al. 2003) with
-   block-max skipping (Ding & Suel 2011): blocks whose [first,last]
-   window lies below the pivot are skipped WITHOUT decoding; a pivot is
-   only scored when the sum of current term upper bounds beats the
-   running local top-k threshold. Per-range local top-k then a global
-   TakeOrderedAndProject(k). Because every doc lives in exactly one
-   range, the union of local top-ks contains the global top-k; pruning
-   uses a 1e-9 safety epsilon so rank-identity vs the exhaustive path
-   holds exactly.
+2. `search_blocks` / `Searcher`: the scale path over the
+   block-compressed posting table (index/build.py). A query set prunes
+   the scan to its terms (term_id filter, plus the term_bucket
+   partition filter), and one mapInArrow kernel (`_topk_factory`) runs
+   over doc_range-partitioned blocks: it decodes each block once,
+   weights the impacts by idf, sums them per doc and keeps a local
+   top-k per query. A window rank (`search_blocks`) or a driver merge
+   (`Searcher`) then takes the global top-k. Every doc lives in exactly
+   one doc_range, so the union of the local top-ks holds the global
+   top-k, and scores equal the exhaustive path's up to float summation
+   order. Multi-part indexes need no special case: a doc's postings
+   from several parts sum in the same per-doc accumulate.
 
-Within a range, `score_topk` picks the physical strategy: ranges under
-WAND_MIN_POSTINGS are scored by `exhaustive_range_topk` (decode every
-block, one bincount accumulate — ~10x faster than the python cursor
-loop on salt-bounded ranges); WAND takes over where skipping can
-actually pay. Verified rank/score-identical between the two branches.
+The per-block `max_impact` metadata stays in the index format as the
+block-max upper bound (Ding & Suel 2011); no scorer prunes with it yet.
 """
 
 from __future__ import annotations
 
-import heapq
 import math
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F
 
 from ..index import codec
 from ..index.build import CorpusStats
 
 K1 = codec.K1
 B = codec.B
-EPS = 1e-9
-_SENTINEL = 1 << 63  # > any signed-64 doc_id
 
 
 def idf(n_docs: int, df: float) -> float:
@@ -94,260 +88,125 @@ def bm25_topk(tokens_df: DataFrame, query_terms: list[str], k: int = 10,
             .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 
-# ----------------------------------------------------------------- WAND path
+# ---------------------------------------------------------- block-index path
 
-class _Cursor:
-    """Posting iterator for one term within one doc_range, with lazy
-    block decoding and metadata-only block skipping."""
-
-    __slots__ = ("idf", "blocks", "ub", "bi", "pi", "docs", "imps",
-                 "exhausted", "_avg")
-
-    def __init__(self, idf_: float, blocks: list, avgdl: float,
-                 k1: float, b: float):
-        # blocks: list of (first, last, n, max_impact, docs_b, tfs_b, dls_b)
-        self.idf = idf_
-        self.blocks = blocks
-        self.ub = idf_ * max(bl[3] for bl in blocks)
-        self.bi = -1
-        self.pi = 0
-        self.docs: np.ndarray | None = None
-        self.imps: np.ndarray | None = None
-        self.exhausted = False
-        self._avg = (avgdl, k1, b)
-        self._next_block()
-
-    def _decode(self):
-        first, last, n, mx, docs_b, tfs_b, dls_b = self.blocks[self.bi]
-        self.docs = codec.decode_block_docs(docs_b, n)
-        tfs = codec.decode_block_tfs(tfs_b, n)
-        dls = codec.varint_decode(dls_b, n).astype(np.int64)
-        avgdl, k1, b = self._avg
-        self.imps = self.idf * codec.bm25_impact(tfs, dls, avgdl, k1, b)
-
-    def _next_block(self):
-        self.bi += 1
-        self.pi = 0
-        if self.bi >= len(self.blocks):
-            self.exhausted = True
-            self.docs = None
-        else:
-            self._decode()
-
-    @property
-    def doc(self) -> int:
-        return _SENTINEL if self.exhausted else int(self.docs[self.pi])
-
-    @property
-    def contribution(self) -> float:
-        return float(self.imps[self.pi])
-
-    def advance(self):
-        self.pi += 1
-        if not self.exhausted and self.pi >= len(self.docs):
-            self._next_block()
-
-    def seek(self, target: int):
-        """Advance to first doc >= target; skips whole blocks by their
-        [first_doc, last_doc] metadata without decoding."""
-        while self.blocks[self.bi][1] < target:
-            # metadata-only skip: jump block pointer, decode lazily
-            self.bi += 1
-            self.pi = 0
-            self.docs = None
-            if self.bi >= len(self.blocks):
-                self.exhausted = True
-                return
-        if self.docs is None:
-            self._decode()
-        self.pi = int(np.searchsorted(self.docs, target, side="left"))
-        if self.pi >= len(self.docs):
-            self._next_block()
+# the block columns the scorer reads (positions and block metadata stay
+# on disk)
+_BLOCK_COLS = ["term_id", "doc_range", "n", "docs", "tfs", "dls"]
+_SCORE_SCHEMA = "query_id int, doc_id long, score double"
 
 
-def wand_topk(term_lists: list[dict], k: int, avgdl: float,
-              k1: float = K1, b: float = B) -> list[tuple[int, float]]:
-    """Document-at-a-time WAND over one doc_range's cursors.
+def _blob(col: pa.Array) -> np.ndarray:
+    """The bytes of a binary Arrow column, its values back to back."""
+    offs_t = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    _, offs, data = col.buffers()
+    if data is None or not len(col):
+        return np.empty(0, np.uint8)
+    off = np.frombuffer(offs, offs_t)[col.offset:col.offset + len(col) + 1]
+    return np.frombuffer(data, np.uint8)[off[0]:off[-1]]
 
-    term_lists: [{'idf': float, 'blocks': [(first,last,n,max_imp,docs,
-    tfs,dls), ...sorted by first_doc]}]. Returns [(doc_id, score)].
-    """
-    cursors = [_Cursor(t["idf"], t["blocks"], avgdl, k1, b)
-               for t in term_lists if t["blocks"]]
-    heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap, size k
-    while True:
-        cursors = [c for c in cursors if not c.exhausted]
-        if not cursors:
-            break
-        cursors.sort(key=lambda c: c.doc)
-        threshold = heap[0][0] if len(heap) >= k else float("-inf")
-        acc = 0.0
-        pivot = -1
-        for i, c in enumerate(cursors):
-            acc += c.ub
-            if acc > threshold + EPS:
-                pivot = i
-                break
-        if pivot < 0:
-            break  # not even the sum of all UBs beats the threshold
-        pivot_doc = cursors[pivot].doc
-        if pivot_doc >= _SENTINEL:
-            break
-        if cursors[0].doc == pivot_doc:
-            # fully aligned: score pivot_doc exactly
-            score = 0.0
-            for c in cursors:
-                if c.doc == pivot_doc:
-                    score += c.contribution
-                    c.advance()
-                elif c.doc > pivot_doc:
-                    break
-            item = (score, -pivot_doc)
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-        else:
-            # advance the highest-UB cursor strictly below the pivot doc
-            c = max((c for c in cursors[:pivot] if c.doc < pivot_doc),
-                    key=lambda c: c.ub)
-            c.seek(pivot_doc)
-    out = [(-nd, s) for s, nd in heap]
-    out.sort(key=lambda t: (-t[1], t[0]))
+
+def _decode_impacts(rb: pa.RecordBatch, avgdl: float):
+    """One Arrow batch of blocks -> flat (term_id, doc_range, doc_id,
+    impact) arrays, one entry per posting. A column's varint streams lie
+    back to back in its data buffer, so each column decodes in one
+    vectorized pass over the whole batch; doc gaps are summed per block
+    by one cumsum minus each block's base (int64 wraparound keeps that
+    exact for hashed doc_ids)."""
+    n = rb.column("n").to_numpy().astype(np.int64)
+    total = int(n.sum())
+    starts = np.cumsum(n) - n
+    gaps = codec.varint_decode(_blob(rb.column("docs")), total).astype(np.int64)
+    gaps += 1
+    gaps[starts] -= 1  # a block's first value is its raw first doc_id
+    cs = np.cumsum(gaps)
+    docs = cs - np.repeat(cs[starts] - gaps[starts], n)
+    tfs = codec.varint_decode(_blob(rb.column("tfs")), total).astype(np.int64) + 1
+    dls = codec.varint_decode(_blob(rb.column("dls")), total).astype(np.int64)
+    return (np.repeat(rb.column("term_id").to_numpy(), n),
+            np.repeat(rb.column("doc_range").to_numpy(), n),
+            docs, codec.bm25_impact(tfs, dls, avgdl))
+
+
+def _topk_factory(qmaps: list[dict[int, float]], k: int, avgdl: float):
+    """The top-k kernel for mapInArrow over blocks whose doc_ranges lie
+    wholly in one partition: decode every block once, stable-sort the
+    postings by term_id, then per query slice each term out with
+    searchsorted, weight it by idf, sum per doc (unique + bincount) and
+    keep the k best, doc_id ascending on ties."""
+    def kernel(batches):
+        flat = [_decode_impacts(rb, avgdl) for rb in batches]
+        tid, _, doc, imp = (np.concatenate(c) for c in zip(*flat)) if flat \
+            else (np.empty(0, np.int64),) * 4
+        order = np.argsort(tid, kind="stable")
+        tid, doc, imp = tid[order], doc[order], imp[order]
+        qids = [np.empty(0, np.int32)]
+        dids, scores = [np.empty(0, np.int64)], [np.empty(0)]
+        for qid, qmap in enumerate(qmaps):
+            terms = np.fromiter(qmap, np.int64, len(qmap))
+            lo = np.searchsorted(tid, terms, "left")
+            hi = np.searchsorted(tid, terms, "right")
+            spans = [(a, z, w) for a, z, w in zip(lo, hi, qmap.values())
+                     if z > a]
+            if not spans:
+                continue
+            ud, inv = np.unique(np.concatenate([doc[a:z] for a, z, _ in spans]),
+                                return_inverse=True)
+            agg = np.bincount(inv, minlength=ud.size, weights=np.concatenate(
+                [w * imp[a:z] for a, z, w in spans]))
+            top = np.lexsort((ud, -agg))[:k]
+            qids.append(np.full(top.size, qid, np.int32))
+            dids.append(ud[top])
+            scores.append(agg[top])
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(np.concatenate(c)) for c in (qids, dids, scores)],
+            names=["query_id", "doc_id", "score"])
+    return kernel
+
+
+def _qmaps(queries: list[list[str]], term_dfs: dict[int, int],
+           n_docs: int) -> list[dict[int, float]]:
+    """Per query: term_id -> idf over its distinct terms in the index."""
+    from ..xxh64 import xxh64_signed
+    out = []
+    for terms in queries:
+        tids = {xxh64_signed(t) for t in terms}
+        out.append({t: idf(n_docs, term_dfs[t]) for t in tids
+                    if term_dfs.get(t, 0) > 0})
     return out
 
 
-def exhaustive_range_topk(term_lists: list[dict], k: int, avgdl: float,
-                          k1: float = K1, b: float = B) -> list[tuple[int, float]]:
-    """Vectorized decode-everything scorer for one doc_range: decode
-    every block of every query term, one bincount accumulate, one
-    lexsort top-k. For ranges bounded by the build's doc_range salt
-    (<= ~16k docs) this beats document-at-a-time WAND by ~10x — the
-    python cursor loop costs more than decoding the whole range.
-    Multi-part indexes need no cursor merging: equal doc_ids across
-    parts sum naturally through the unique/bincount accumulate.
-    Scores are identical to WAND's modulo float summation order."""
-    docs_l, score_l = [], []
-    for t in term_lists:
-        idf_ = t["idf"]
-        for first, last, n, mx, db, tb, lb in t["blocks"]:
-            docs_l.append(codec.decode_block_docs(db, n))
-            tfs = codec.decode_block_tfs(tb, n)
-            dls = codec.varint_decode(lb, n).astype(np.int64)
-            score_l.append(idf_ * codec.bm25_impact(tfs, dls, avgdl, k1, b))
-    if not docs_l:
-        return []
-    d = np.concatenate(docs_l)
-    s = np.concatenate(score_l)
-    ud, inv = np.unique(d, return_inverse=True)
-    agg = np.bincount(inv, weights=s, minlength=ud.size)
-    order = np.lexsort((ud, -agg))[:k]
-    return [(int(ud[i]), float(agg[i])) for i in order]
-
-
-# above this many postings in one (query, doc_range) pair, block-max
-# WAND's skipping pays for its python cursor loop; below it, decoding
-# everything vectorized is faster
-WAND_MIN_POSTINGS = 1 << 19
-
-
-def score_topk(term_lists: list[dict], k: int, avgdl: float,
-               k1: float = K1, b: float = B) -> list[tuple[int, float]]:
-    """Hybrid scorer: vectorized exhaustive for bounded ranges, WAND
-    with block-max skipping for oversized ones."""
-    est = sum(bl[2] for t in term_lists for bl in t["blocks"])
-    if est < WAND_MIN_POSTINGS:
-        return exhaustive_range_topk(term_lists, k, avgdl, k1, b)
-    return wand_topk(term_lists, k, avgdl, k1, b)
-
-
-_SCORE_SCHEMA = T.StructType([
-    T.StructField("query_id", T.IntegerType()),
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("score", T.DoubleType()),
-])
-
-
-def _wand_group_factory(avgdl: float, k: int, k1: float, b: float):
-    def score_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        query_id = int(key[0])
-        term_lists = []
-        # a multi-part index (resumed/streaming build) holds several
-        # disjoint sorted posting lists per term — one cursor each;
-        # disjointness keeps WAND's per-doc scoring exact.
-        gcols = ["term_id", "part"] if "part" in pdf.columns else ["term_id"]
-        for _, g in pdf.groupby(gcols, sort=True):
-            g = g.sort_values(["block_id"], kind="mergesort")
-            blocks = list(zip(g["first_doc"], g["last_doc"], g["n"],
-                              g["max_impact"], g["docs"], g["tfs"], g["dls"]))
-            term_lists.append({"idf": float(g["idf"].iloc[0]),
-                               "blocks": blocks})
-        hits = score_topk(term_lists, k, avgdl, k1, b)
-        return pd.DataFrame({
-            "query_id": query_id,
-            "doc_id": [d for d, _ in hits],
-            "score": [s for _, s in hits],
-        })
-    return score_group
+def _local_topk(blocks_df: DataFrame, qmaps: list[dict[int, float]],
+                k: int, avgdl: float) -> DataFrame:
+    """(query_id, doc_id, score): each query's top k in each partition of
+    `blocks_df`, which must hold every doc_range whole."""
+    tids = sorted({t for m in qmaps for t in m})
+    return (blocks_df.filter(F.col("term_id").isin(tids))
+            .select(*_BLOCK_COLS)
+            .mapInArrow(_topk_factory(qmaps, k, avgdl), _SCORE_SCHEMA))
 
 
 def search_blocks(postings: DataFrame, stats: CorpusStats,
                   queries: list[list[str]], k: int = 10,
-                  k1: float = K1, b: float = B,
-                  n_buckets: int | None = None,
-                  term_dfs: dict[int, int] | None = None) -> DataFrame:
-    """Batch top-k over the block index for many queries in ONE job.
+                  n_buckets: int | None = None) -> DataFrame:
+    """Batch top-k over the block index for many queries in one scoring
+    job.
 
-    Returns (query_id, doc_id, score, rank). The posting scan is pruned
-    to the query terms (term_bucket partition filter + term_id filter);
-    df/idf stats come from `term_dfs` (the precollected term dictionary
-    — pass it for serving so each query is a single scan+score job) or,
-    when absent, from the block metadata itself (sum of n per term) via
-    an extra aggregate; WAND runs per (query, doc_range).
+    Returns a lazy (query_id, doc_id, score, rank) DataFrame. The
+    posting scan is pruned to the query terms (term_id filter, plus the
+    term_bucket partition filter when `n_buckets` is given); query-term
+    dfs come from the block metadata (sum of n per term) in one small
+    collect; the scan is repartitioned by doc_range into the top-k
+    kernel and a window rank keeps each query's global top k.
     """
     from ..xxh64 import xxh64_signed
-    spark = postings.sparkSession
-    qrows = []
-    for qid, terms in enumerate(queries):
-        for t in sorted(set(terms)):
-            qrows.append((qid, t, xxh64_signed(t)))
-    if not qrows:
-        return spark.createDataFrame([], schema=_SCORE_SCHEMA)
-    term_ids = sorted({r[2] for r in qrows})
-
-    scan = postings.filter(F.col("term_id").isin(term_ids))
+    tids = sorted({xxh64_signed(t) for terms in queries for t in terms})
+    scan = postings.filter(F.col("term_id").isin(tids))
     if "term_bucket" in postings.columns and n_buckets:
-        buckets = sorted({tid % n_buckets for tid in term_ids})
+        buckets = sorted({tid % n_buckets for tid in tids})
         scan = scan.filter(F.col("term_bucket").isin(buckets))
-    # column pruning: positions are not needed for BM25 scoring
-    cols = ["term_id", "doc_range", "block_id", "first_doc",
-            "last_doc", "n", "max_impact", "docs", "tfs", "dls"]
-    if "part" in postings.columns:
-        cols.append("part")
-    scan = scan.select(*cols)
-
-    n_docs = stats.n_docs
-    if term_dfs is not None:
-        qstats = spark.createDataFrame(
-            [(qid, tid, idf(n_docs, term_dfs.get(tid, 0)))
-             for qid, _, tid in qrows],
-            schema="query_id int, term_id long, idf double")
-    else:
-        # df per term from block metadata (no second pass over the corpus)
-        qdf = spark.createDataFrame(
-            qrows, schema="query_id int, term string, term_id long")
-        dft = scan.groupBy("term_id").agg(F.sum("n").alias("df"))
-        qstats = (qdf.join(dft, "term_id", "left")
-                  .withColumn("df", F.coalesce("df", F.lit(0)))
-                  .withColumn("idf", F.log(
-                      (F.lit(float(n_docs)) - F.col("df") + 0.5)
-                      / (F.col("df") + 0.5) + 1.0))
-                  .select("query_id", "term_id", "idf"))
-
-    joined = scan.join(F.broadcast(qstats), "term_id")
-    local = (joined.groupBy("query_id", "doc_range")
-             .applyInPandas(_wand_group_factory(stats.avgdl, k, k1, b),
-                            schema=_SCORE_SCHEMA))
+    qmaps = _qmaps(queries, collect_term_dfs(scan), stats.n_docs)
+    local = _local_topk(scan.repartition("doc_range"), qmaps, k, stats.avgdl)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (local.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
@@ -385,18 +244,28 @@ def collect_term_dfs(postings: DataFrame) -> dict[int, int]:
             postings.groupBy("term_id").agg(F.sum("n").alias("df")).collect()}
 
 
+# cached-batch granularity of the flat projection: batch min/max term_id
+# stats prune scans, so SMALLER batches prune finer at the cost of more
+# header checks. Measured sweep (BASELINE.md round 3, sf0.1): 65536 ->
+# 137 ms p50, 8192 -> ~100 ms, 2048 regresses; at 5x corpus the fixed
+# job cost dominates and the size is flat. 8192 is the knee.
+_FLAT_BATCH_SIZE = 8192
+
+
 class Searcher:
     """Serving-optimized index handle: scatter-gather top-k.
 
     Build-time layout is term_bucket-partitioned, one file per bucket
     per build task (good for bulk scans);
-    serving re-partitions the cached postings by doc_range so every
-    partition holds whole doc ranges. Two physical paths:
+    serving caches the scored block columns re-partitioned by doc_range
+    (one partition per core, at most one per range), so every partition
+    holds whole doc ranges. Two physical paths:
 
-    - **batch** (many queries): one mapInArrow job runs WAND/exhaustive
-      per (query, doc_range) locally and the driver merges the tiny
-      per-range top-k lists — amortizes the ~150 ms Python-runner setup
-      across the whole query batch.
+    - **batch** (many queries): one mapInArrow job runs the top-k
+      kernel (`_topk_factory`, shared with `search_blocks`) per
+      partition and the driver merges the tiny per-partition top-k
+      lists — amortizes the ~150 ms Python-runner setup across the
+      whole query batch.
     - **single-query flat path**: a decoded JVM-side projection
       (term_id, doc_range, doc_id, impact) cached sorted-by-term per
       doc_range partition. A query is then PURE DataFrame algebra — an
@@ -426,45 +295,24 @@ class Searcher:
     """
 
     def __init__(self, postings: DataFrame, stats: CorpusStats,
-                 term_dfs: dict[int, int] | None = None,
-                 n_partitions: int | None = None,
-                 k1: float = K1, b: float = B,
-                 flat_cache: bool = True, flat_batch_size: int = 8192):
+                 flat_cache: bool = True):
         self.stats = stats
-        self.k1, self.b = k1, b
-        # cached-batch granularity of the flat projection: batch min/max
-        # term_id stats prune scans, so SMALLER batches prune finer at
-        # the cost of more header checks. Measured sweep (BASELINE.md
-        # round 3, sf0.1): 65536 -> 137 ms p50, 8192 -> ~100 ms, 2048
-        # regresses; at 5x corpus the fixed job cost dominates and the
-        # knob is flat. 8192 is the knee.
-        self._flat_batch_size = flat_batch_size
-        self._has_part = "part" in postings.columns
-        cols = ["term_id", "doc_range", "block_id", "first_doc",
-                "last_doc", "n", "max_impact", "docs", "tfs", "dls"]
-        if self._has_part:
-            cols.append("part")
         spark = postings.sparkSession
-        base = postings.select(*cols)
-        if n_partitions is None:
-            # one task per doc_range shard (scatter width); more tasks
-            # than ranges only adds scheduling + worker roundtrips.
-            # Materialize the base FIRST so a freshly-built (lazy)
-            # postings plan executes once, then derive the range count
-            # from the cache instead of re-running the whole build.
-            base = base.persist()
-            base.count()
-            n_rng = base.select("doc_range").distinct().count()
-            n_partitions = max(1, min(
-                spark.sparkContext.defaultParallelism, n_rng))
+        # one task per doc_range shard (scatter width); more tasks than
+        # ranges only adds scheduling + worker roundtrips. Materialize
+        # the base FIRST so a freshly-built (lazy) postings plan executes
+        # once, then derive the range count from the cache instead of
+        # re-running the whole build.
+        base = postings.select(*_BLOCK_COLS).persist()
+        base.count()
+        n_rng = base.select("doc_range").distinct().count()
+        n_partitions = max(1, min(spark.sparkContext.defaultParallelism, n_rng))
         self.df = base.repartition(n_partitions, "doc_range").persist()
         self.df.count()
-        if base is not self.df:
-            base.unpersist()
+        base.unpersist()
         from ..index.build import release_build
         release_build(postings)
-        self.term_dfs = term_dfs if term_dfs is not None else \
-            collect_term_dfs(self.df)
+        self.term_dfs = collect_term_dfs(self.df)
         self.flat: DataFrame | None = None
         if flat_cache:
             self._build_flat_cache()
@@ -472,30 +320,13 @@ class Searcher:
     def _build_flat_cache(self) -> None:
         """Decode the block cache into the JVM-side flat serving
         projection (one Python pass at init, never again)."""
-        import pyarrow as pa
-        avgdl, k1, b = self.stats.avgdl, self.k1, self.b
+        avgdl = self.stats.avgdl
 
         def decode(batches):
             for rb in batches:
-                d = rb.to_pydict()
-                ts, rs, ds, imps = [], [], [], []
-                for tid, rng, docs_b, tfs_b, dls_b, n in zip(
-                        d["term_id"], d["doc_range"], d["docs"],
-                        d["tfs"], d["dls"], d["n"]):
-                    dd = codec.decode_block_docs(docs_b, n)
-                    tf = codec.decode_block_tfs(tfs_b, n)
-                    dl = codec.varint_decode(dls_b, n).astype(np.int64)
-                    ts.append(np.full(dd.size, tid, np.int64))
-                    rs.append(np.full(dd.size, rng, np.int64))
-                    ds.append(dd)
-                    imps.append(codec.bm25_impact(tf, dl, avgdl, k1, b))
-                if ts:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(np.concatenate(ts)),
-                         pa.array(np.concatenate(rs)),
-                         pa.array(np.concatenate(ds)),
-                         pa.array(np.concatenate(imps))],
-                        names=["term_id", "doc_range", "doc_id", "impact"])
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(c) for c in _decode_impacts(rb, avgdl)],
+                    names=["term_id", "doc_range", "doc_id", "impact"])
 
         spark = self.df.sparkSession
         n_parts = self.df.rdd.getNumPartitions()
@@ -508,9 +339,9 @@ class Searcher:
                 .sortWithinPartitions("term_id", "doc_id"))
         with _scoped_conf(spark, {
                 # batch sizing: the sort makes term_id min/max stats
-                # prune scans (see _flat_batch_size comment in __init__)
+                # prune scans (see _FLAT_BATCH_SIZE)
                 "spark.sql.inMemoryColumnarStorage.batchSize":
-                    str(self._flat_batch_size)}):
+                    str(_FLAT_BATCH_SIZE)}):
             self.flat = flat.persist()
             self.flat.count()
         # serve through a DEDICATED cloned session (same SparkContext +
@@ -531,25 +362,17 @@ class Searcher:
                 "spark.sql.adaptive.enabled": "false"}.items():
             self._serving.conf.set(key, val)
 
-    def _search_flat(self, terms: list[str], k: int) -> list[tuple[int, float]]:
+    def _search_flat(self, qmap: dict[int, float], k: int) -> list[tuple[int, float]]:
         """Single-query top-k through the pure-JVM flat path. One
         spark.sql() string (a single py4j roundtrip; the DataFrame API
         costs ~30 driver calls per query at this latency scale): an IN
         filter the cached-batch stats prune, a CASE idf weighting, the
         no-shuffle aggregate, and a TakeOrdered merge."""
-        from ..xxh64 import xxh64_signed
-        n_docs = self.stats.n_docs
-        qidf = {}
-        for t in set(terms):
-            tid = xxh64_signed(t)
-            df_ = self.term_dfs.get(tid, 0)
-            if df_ > 0:
-                qidf[tid] = idf(n_docs, df_)
-        if not qidf:
+        if not qmap:
             return []
-        tids = ",".join(str(t) for t in sorted(qidf))
+        tids = ",".join(str(t) for t in sorted(qmap))
         case = " ".join(f"WHEN {t} THEN {w!r}"
-                        for t, w in sorted(qidf.items()))
+                        for t, w in sorted(qmap.items()))
         sql = f"""SELECT doc_id, score FROM (
   SELECT doc_range, doc_id,
          sum(impact * CASE term_id {case} END) AS score
@@ -580,65 +403,12 @@ ORDER BY score DESC, doc_id LIMIT {k}"""
 
     def search(self, queries: list[list[str]], k: int = 10) -> list[list[tuple[int, float]]]:
         """Top-k per query: [(doc_id, score) ranked] per input query."""
-        import pyarrow as pa
-        from ..xxh64 import xxh64_signed
+        qmaps = _qmaps(queries, self.term_dfs, self.stats.n_docs)
         if self.flat is not None and 0 < len(queries) <= self.FLAT_BATCH_MAX:
-            return [self._search_flat(terms, k) for terms in queries]
-        n_docs = self.stats.n_docs
-        qmaps: list[dict[int, float]] = []
-        for terms in queries:
-            tids = {xxh64_signed(t) for t in set(terms)}
-            qmaps.append({tid: idf(n_docs, self.term_dfs.get(tid, 0))
-                          for tid in tids if self.term_dfs.get(tid, 0) > 0})
-        all_tids = sorted({t for m in qmaps for t in m})
-        if not all_tids:
+            return [self._search_flat(qmap, k) for qmap in qmaps]
+        if not any(qmaps):
             return [[] for _ in queries]
-        avgdl, k1, b, has_part = self.stats.avgdl, self.k1, self.b, self._has_part
-        out_schema = "query_id int, doc_id long, score double"
-
-        def kernel(batches):
-            rows: dict = {}  # (range, term_id, part) -> list[block tuple]
-            for rb in batches:
-                d = rb.to_pydict()
-                parts = d["part"] if has_part else [0] * rb.num_rows
-                for i in range(rb.num_rows):
-                    key = (d["doc_range"][i], d["term_id"][i], parts[i])
-                    rows.setdefault(key, []).append(
-                        (d["block_id"][i], d["first_doc"][i],
-                         d["last_doc"][i], d["n"][i], d["max_impact"][i],
-                         d["docs"][i], d["tfs"][i], d["dls"][i]))
-            by_range: dict = {}
-            for (rng, tid, part), blocks in rows.items():
-                blocks.sort(key=lambda t: t[0])
-                by_range.setdefault(rng, {}).setdefault(tid, []).append(
-                    [(f, l, n_, mx, db, tb, lb)
-                     for _, f, l, n_, mx, db, tb, lb in blocks])
-            qids, dids, scores = [], [], []
-            for rng, terms_here in by_range.items():
-                for qid, qmap in enumerate(qmaps):
-                    term_lists = []
-                    for tid, idf_ in qmap.items():
-                        for lst in terms_here.get(tid, []):
-                            term_lists.append({"idf": idf_, "blocks": lst})
-                    if not term_lists:
-                        continue
-                    for did, sc in score_topk(term_lists, k, avgdl,
-                                                 k1, b):
-                        qids.append(qid)
-                        dids.append(did)
-                        scores.append(sc)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(qids, pa.int32()), pa.array(dids, pa.int64()),
-                 pa.array(scores, pa.float64())],
-                names=["query_id", "doc_id", "score"])
-
-        local = (self.df.filter(F.col("term_id").isin(all_tids))
-                 .mapInArrow(kernel, schema=out_schema).collect())
         merged: list[list[tuple[int, float]]] = [[] for _ in queries]
-        for r in local:
+        for r in _local_topk(self.df, qmaps, k, self.stats.avgdl).collect():
             merged[r["query_id"]].append((r["doc_id"], r["score"]))
-        out = []
-        for cand in merged:
-            cand.sort(key=lambda t: (-t[1], t[0]))
-            out.append(cand[:k])
-        return out
+        return [sorted(c, key=lambda t: (-t[1], t[0]))[:k] for c in merged]

@@ -70,6 +70,10 @@ def test_zero_hit_query(index):
     postings, stats = index
     res = search_blocks(postings, stats, [["▁zzzznothere"]], k=10).toPandas()
     assert len(res) == 0
+    # a query with no terms at all still yields the full ranked schema
+    empty = search_blocks(postings, stats, [[]])
+    assert empty.columns == ["query_id", "doc_id", "score", "rank"]
+    assert empty.count() == 0
 
 
 def test_hot_term_salting_equivalence(spm_tokens_df, oracle_docs,
@@ -87,6 +91,15 @@ def test_hot_term_salting_equivalence(spm_tokens_df, oracle_docs,
         exp = bm25_topk_oracle(oracle_docs, pieces, 10)
         sub = res[res.query_id == qid].sort_values("rank")
         assert [int(d) for d in sub["doc_id"]] == [d for d, _ in exp], q
+    # the Searcher over the salted index: batch kernel and flat path
+    from pears_lite_spark.search.bm25 import Searcher
+    s = Searcher(postings, stats)
+    batch = s.search(queries, k=10)
+    for (q, pieces), via_batch in zip(query_pieces[:8], batch):
+        exp = [d for d, _ in bm25_topk_oracle(oracle_docs, pieces, 10)]
+        assert [d for d, _ in via_batch] == exp, q
+        assert [d for d, _ in s.search([pieces], k=10)[0]] == exp, q
+    s.close()
 
 
 def test_searcher_scatter_gather_rank_identity(index, oracle_docs,

@@ -41,7 +41,16 @@ def test_resume_after_injected_failure(spark, tokens, tmp_path):
     # resumed index answers queries identically to the clean build
     p1, s1 = read_resumable(spark, full)
     p2, s2 = read_resumable(spark, partial)
-    assert _results(p1, s1) == _results(p2, s2)
+    resumed = _results(p2, s2)
+    assert _results(p1, s1) == resumed
+    # the Searcher over the multi-part index, flat path and batch kernel
+    from pears_lite_spark.search.bm25 import Searcher
+    for flat_cache in (True, False):
+        s = Searcher(p2, s2, flat_cache=flat_cache)
+        got = [(qid, d, round(sc, 9)) for qid, hits in
+               enumerate(s.search(QUERIES, k=10)) for d, sc in hits]
+        s.close()
+        assert got == resumed, flat_cache
     # byte-identical partition content (deterministic encoding)
     cols = ["term_id", "doc_range", "block_id", "first_doc", "last_doc",
             "n", "docs", "tfs", "dls"]

@@ -72,7 +72,8 @@ def main(sf_dir: str):
           f"WholeStageCodegen subtrees: {n_wsc}\n"
           f"TakeOrderedAndProject: {'yes' if 'TakeOrderedAndProject' in t else 'no'}\n```\n")
 
-    # 3. block-index scan: term_bucket partition pruning
+    # 3. block-index scan: term_bucket partition pruning, and the plan
+    # runs the one top-k kernel (a single MapInArrow)
     idx_path = "/tmp/pears_plan_idx"
     if not os.path.exists(idx_path):
         postings, stats = build_postings(toks)
@@ -89,10 +90,17 @@ def main(sf_dir: str):
     print("```")
     pruned = "term_bucket" in t
     print(f"\nterm_bucket pruning present: {'OK' if pruned else 'NO'}\n")
+    import re
+    n_arrow = len(re.findall(r"^\(\d+\) MapInArrow", t, re.M))
+    n_groups = len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas", t, re.M))
+    print(f"```\nMapInArrow count: {n_arrow}, "
+          f"FlatMapGroupsInPandas count: {n_groups}\n```\n")
+    ok3 = n_arrow == 1 and n_groups == 0
+    print(f"one top-k kernel (the Searcher's mapInArrow), no grouped "
+          f"pandas UDF: {'OK' if ok3 else 'CHECK'}\n")
 
     # 4. index build, both entry points: shuffle count, what moves
     # through it, and the one phase-A kernel (a single MapInPandas)
-    import re
     from pears_lite_spark.corpus import gen_corpus
     from pears_lite_spark.index.build import build_from_corpus, release_build
     postings_df, _ = build_postings(toks)
