@@ -134,8 +134,9 @@ def cmd_query(args) -> int:
         queries = [v.encode_as_pieces(q) for q in raw]
     else:
         queries = [q.split() for q in raw]
-    # the decoded flat projection only pays off for interactive (few-
-    # query) serving; batch query files go through the top-k kernel
+    # the driver replica (one decode job, 24 B per posting of driver
+    # memory) only pays off for interactive (few-query) serving; batch
+    # query files go through the top-k kernel
     searcher = Searcher(postings, stats,
                         flat_cache=len(raw) <= Searcher.FLAT_BATCH_MAX)
     t1 = time.time()

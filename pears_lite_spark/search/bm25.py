@@ -26,7 +26,11 @@ doc_id ascending:
    one doc_range, so the union of the local top-ks holds the global
    top-k, and scores equal the exhaustive path's up to float summation
    order. Multi-part indexes need no special case: a doc's postings
-   from several parts sum in the same per-doc accumulate.
+   from several parts sum in the same per-doc accumulate. The
+   per-query loop of that kernel (`_score_topk`) also serves
+   `Searcher`'s single queries, over a driver-resident replica of the
+   decoded postings (24 B per posting), so a single query launches no
+   Spark job.
 
 The per-block `max_impact` metadata stays in the index format as the
 block-max upper bound (Ding & Suel 2011); no scorer prunes with it yet.
@@ -107,12 +111,12 @@ def _blob(col: pa.Array) -> np.ndarray:
 
 
 def _decode_impacts(rb: pa.RecordBatch, avgdl: float):
-    """One Arrow batch of blocks -> flat (term_id, doc_range, doc_id,
-    impact) arrays, one entry per posting. A column's varint streams lie
-    back to back in its data buffer, so each column decodes in one
-    vectorized pass over the whole batch; doc gaps are summed per block
-    by one cumsum minus each block's base (int64 wraparound keeps that
-    exact for hashed doc_ids)."""
+    """One Arrow batch of blocks -> flat (term_id, doc_id, impact)
+    arrays, one entry per posting. A column's varint streams lie back to
+    back in its data buffer, so each column decodes in one vectorized
+    pass over the whole batch; doc gaps are summed per block by one
+    cumsum minus each block's base (int64 wraparound keeps that exact
+    for hashed doc_ids)."""
     n = rb.column("n").to_numpy().astype(np.int64)
     total = int(n.sum())
     starts = np.cumsum(n) - n
@@ -123,41 +127,52 @@ def _decode_impacts(rb: pa.RecordBatch, avgdl: float):
     docs = cs - np.repeat(cs[starts] - gaps[starts], n)
     tfs = codec.varint_decode(_blob(rb.column("tfs")), total).astype(np.int64) + 1
     dls = codec.varint_decode(_blob(rb.column("dls")), total).astype(np.int64)
-    return (np.repeat(rb.column("term_id").to_numpy(), n),
-            np.repeat(rb.column("doc_range").to_numpy(), n),
-            docs, codec.bm25_impact(tfs, dls, avgdl))
+    return (np.repeat(rb.column("term_id").to_numpy(), n), docs,
+            codec.bm25_impact(tfs, dls, avgdl))
+
+
+def _by_term(tid: np.ndarray, doc: np.ndarray, imp: np.ndarray):
+    """The postings stable-sorted by term_id, the order `_score_topk`
+    slices."""
+    order = np.argsort(tid, kind="stable")
+    return tid[order], doc[order], imp[order]
+
+
+def _score_topk(tid: np.ndarray, doc: np.ndarray, imp: np.ndarray,
+                qmaps: list[dict[int, float]], k: int):
+    """Top-k over term-sorted postings: per query slice each term out
+    with searchsorted, weight it by idf, sum per doc (unique + bincount)
+    and keep the k best, doc_id ascending on ties. Yields (query index,
+    doc_ids, scores) for every query with a hit."""
+    for qid, qmap in enumerate(qmaps):
+        terms = np.fromiter(qmap, np.int64, len(qmap))
+        lo = np.searchsorted(tid, terms, "left")
+        hi = np.searchsorted(tid, terms, "right")
+        spans = [(a, z, w) for a, z, w in zip(lo, hi, qmap.values()) if z > a]
+        if not spans:
+            continue
+        ud, inv = np.unique(np.concatenate([doc[a:z] for a, z, _ in spans]),
+                            return_inverse=True)
+        agg = np.bincount(inv, minlength=ud.size, weights=np.concatenate(
+            [w * imp[a:z] for a, z, w in spans]))
+        top = np.lexsort((ud, -agg))[:k]
+        yield qid, ud[top], agg[top]
 
 
 def _topk_factory(qmaps: list[dict[int, float]], k: int, avgdl: float):
     """The top-k kernel for mapInArrow over blocks whose doc_ranges lie
-    wholly in one partition: decode every block once, stable-sort the
-    postings by term_id, then per query slice each term out with
-    searchsorted, weight it by idf, sum per doc (unique + bincount) and
-    keep the k best, doc_id ascending on ties."""
+    wholly in one partition: decode every block once, sort the postings
+    by term and score them with `_score_topk`."""
     def kernel(batches):
         flat = [_decode_impacts(rb, avgdl) for rb in batches]
-        tid, _, doc, imp = (np.concatenate(c) for c in zip(*flat)) if flat \
-            else (np.empty(0, np.int64),) * 4
-        order = np.argsort(tid, kind="stable")
-        tid, doc, imp = tid[order], doc[order], imp[order]
+        cols = (np.concatenate(c) for c in zip(*flat)) if flat \
+            else (np.empty(0, np.int64),) * 3
         qids = [np.empty(0, np.int32)]
         dids, scores = [np.empty(0, np.int64)], [np.empty(0)]
-        for qid, qmap in enumerate(qmaps):
-            terms = np.fromiter(qmap, np.int64, len(qmap))
-            lo = np.searchsorted(tid, terms, "left")
-            hi = np.searchsorted(tid, terms, "right")
-            spans = [(a, z, w) for a, z, w in zip(lo, hi, qmap.values())
-                     if z > a]
-            if not spans:
-                continue
-            ud, inv = np.unique(np.concatenate([doc[a:z] for a, z, _ in spans]),
-                                return_inverse=True)
-            agg = np.bincount(inv, minlength=ud.size, weights=np.concatenate(
-                [w * imp[a:z] for a, z, w in spans]))
-            top = np.lexsort((ud, -agg))[:k]
-            qids.append(np.full(top.size, qid, np.int32))
-            dids.append(ud[top])
-            scores.append(agg[top])
+        for qid, d, sc in _score_topk(*_by_term(*cols), qmaps, k):
+            qids.append(np.full(d.size, qid, np.int32))
+            dids.append(d)
+            scores.append(sc)
         yield pa.RecordBatch.from_arrays(
             [pa.array(np.concatenate(c)) for c in (qids, dids, scores)],
             names=["query_id", "doc_id", "score"])
@@ -212,44 +227,12 @@ def search_blocks(postings: DataFrame, stats: CorpusStats,
             .filter(F.col("rank") <= k))
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _scoped_conf(spark, kv: dict):
-    """Set session confs for one action, restoring previous values —
-    serving tweaks must not leak into batch jobs on the same session."""
-    old: dict = {}
-    for key, val in kv.items():
-        try:
-            old[key] = spark.conf.get(key)
-        except Exception:
-            old[key] = None
-        spark.conf.set(key, val)
-    try:
-        yield
-    finally:
-        for key, val in old.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
-
-
 def collect_term_dfs(postings: DataFrame) -> dict[int, int]:
     """Precollect the term dictionary (term_id -> df) for serving —
     16k terms is a few hundred KB, the broadcast-stats pattern of
     SURVEY.md §3.1."""
     return {int(r["term_id"]): int(r["df"]) for r in
             postings.groupBy("term_id").agg(F.sum("n").alias("df")).collect()}
-
-
-# cached-batch granularity of the flat projection: batch min/max term_id
-# stats prune scans, so SMALLER batches prune finer at the cost of more
-# header checks. Measured sweep (BASELINE.md round 3, sf0.1): 65536 ->
-# 137 ms p50, 8192 -> ~100 ms, 2048 regresses; at 5x corpus the fixed
-# job cost dominates and the size is flat. 8192 is the knee.
-_FLAT_BATCH_SIZE = 8192
 
 
 class Searcher:
@@ -259,39 +242,27 @@ class Searcher:
     per build task (good for bulk scans);
     serving caches the scored block columns re-partitioned by doc_range
     (one partition per core, at most one per range), so every partition
-    holds whole doc ranges. Two physical paths:
+    holds whole doc ranges. Two physical paths, one scoring loop
+    (`_score_topk`):
 
     - **batch** (many queries): one mapInArrow job runs the top-k
       kernel (`_topk_factory`, shared with `search_blocks`) per
       partition and the driver merges the tiny per-partition top-k
-      lists — amortizes the ~150 ms Python-runner setup across the
-      whole query batch.
-    - **single-query flat path**: a decoded JVM-side projection
-      (term_id, doc_range, doc_id, impact) cached sorted-by-term per
-      doc_range partition. A query is then PURE DataFrame algebra — an
-      isin filter (pruned against cached-batch term_id min/max stats),
-      a no-shuffle partial+final aggregate (hashpartitioning(doc_range)
-      satisfies the (doc_range, doc_id) clustering, and ranges are
-      disjoint), and a driver-side TakeOrdered merge. No Python worker
-      in the loop. Executed interpreted (codegen off, scoped): the
-      embedded query-term literals would force a fresh ~150-200 ms
-      Janino compile per query, which dwarfs interpreted evaluation
-      over the stat-pruned batches. Measured p50 ~115 ms vs ~300 ms
-      through the Python path at sf0.1 (100k docs).
+      lists, amortizing the job's fixed cost over the query batch.
+    - **single-query flat path**: a driver-resident impact replica, the
+      (term_id, doc_id, impact) postings as numpy arrays sorted by
+      term. Executors decode the block cache once at init (one
+      mapInArrow job); a query is then `_score_topk` over the replica
+      in-process: no Spark job, no py4j call. A job's fixed cost
+      dominates a single query (a pruned Spark SQL top-k over cached
+      impacts: p50 49 ms at 25k docs on 4 CPUs); the replica answers
+      in 2.0 ms. The arrays are read-only, so concurrent callers need
+      no lock.
 
-    The flat cache holds one row per posting (~3x the encoded blocks);
-    at cluster scale each executor caches only its own doc ranges
-    (MEMORY_AND_DISK), the standard price of a serving replica.
-
-    The flat path executes on a DEDICATED cloned session (same
-    SparkContext, shared cache, separate SQLConf with codegen/AQE
-    permanently off) — no session-conf mutation ever, so concurrent
-    batch jobs on the caller's session keep codegen+AQE, and concurrent
-    flat callers run LOCK-FREE with overlapping jobs (measured 29 QPS
-    with 4 threads at sf0.1 vs 7.4 when serialized — bench.py
-    `bm25_concurrent_qps`). For still-higher throughput use the batch
-    path (one job amortized over the query set) or one Searcher per
-    serving replica. `close()` releases both caches.
+    The replica costs 24 B per posting of driver memory (3.26M postings
+    at 25k docs: 75 MB), the price of a serving replica;
+    `flat_cache=False` skips it and serves every query through the
+    batch kernel. `close()` releases the block cache and the replica.
     """
 
     def __init__(self, postings: DataFrame, stats: CorpusStats,
@@ -313,93 +284,44 @@ class Searcher:
         from ..index.build import release_build
         release_build(postings)
         self.term_dfs = collect_term_dfs(self.df)
-        self.flat: DataFrame | None = None
+        self.flat: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
         if flat_cache:
             self._build_flat_cache()
 
     def _build_flat_cache(self) -> None:
-        """Decode the block cache into the JVM-side flat serving
-        projection (one Python pass at init, never again)."""
+        """Decode the block cache on the executors (one mapInArrow job)
+        and hold the postings on the driver, sorted by term."""
         avgdl = self.stats.avgdl
 
         def decode(batches):
             for rb in batches:
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(c) for c in _decode_impacts(rb, avgdl)],
-                    names=["term_id", "doc_range", "doc_id", "impact"])
+                    names=["term_id", "doc_id", "impact"])
 
-        spark = self.df.sparkSession
-        n_parts = self.df.rdd.getNumPartitions()
-        # duplicate (term, doc) rows from multi-part segments sum
-        # correctly through the aggregate — no part column needed
-        flat = (self.df
-                .mapInArrow(decode, "term_id long, doc_range long, "
-                                    "doc_id long, impact double")
-                .repartition(n_parts, "doc_range")
-                .sortWithinPartitions("term_id", "doc_id"))
-        with _scoped_conf(spark, {
-                # batch sizing: the sort makes term_id min/max stats
-                # prune scans (see _FLAT_BATCH_SIZE)
-                "spark.sql.inMemoryColumnarStorage.batchSize":
-                    str(_FLAT_BATCH_SIZE)}):
-            self.flat = flat.persist()
-            self.flat.count()
-        # serve through a DEDICATED cloned session (same SparkContext +
-        # shared cache, separate SQLConf): codegen/AQE are turned off
-        # ONCE there and never touch the caller's session, so batch
-        # jobs planned concurrently with flat queries keep codegen+AQE
-        # (the scoped-conf mutation this replaces leaked to them), and
-        # flat queries no longer need conf-swap serialization at all.
-        self._view = f"pears_flat_{id(self)}"
-        self.flat.createOrReplaceGlobalTempView(self._view)
-        self._serving = spark.newSession()
-        for key, val in {
-                # embedded query-term literals would trigger a fresh
-                # Janino compile per query (~150-200 ms); interpreted
-                # evaluation over the pruned batches is faster
-                "spark.sql.codegen.wholeStage": "false",
-                "spark.sql.codegen.factoryMode": "NO_CODEGEN",
-                "spark.sql.adaptive.enabled": "false"}.items():
-            self._serving.conf.set(key, val)
+        t = self.df.mapInArrow(
+            decode, "term_id long, doc_id long, impact double").toArrow()
+        self.flat = _by_term(*(t.column(c).to_numpy()
+                               for c in ("term_id", "doc_id", "impact")))
+        for a in self.flat:
+            a.flags.writeable = False
 
     def _search_flat(self, qmap: dict[int, float], k: int) -> list[tuple[int, float]]:
-        """Single-query top-k through the pure-JVM flat path. One
-        spark.sql() string (a single py4j roundtrip; the DataFrame API
-        costs ~30 driver calls per query at this latency scale): an IN
-        filter the cached-batch stats prune, a CASE idf weighting, the
-        no-shuffle aggregate, and a TakeOrdered merge."""
-        if not qmap:
-            return []
-        tids = ",".join(str(t) for t in sorted(qmap))
-        case = " ".join(f"WHEN {t} THEN {w!r}"
-                        for t, w in sorted(qmap.items()))
-        sql = f"""SELECT doc_id, score FROM (
-  SELECT doc_range, doc_id,
-         sum(impact * CASE term_id {case} END) AS score
-  FROM global_temp.{self._view} WHERE term_id IN ({tids})
-  GROUP BY doc_range, doc_id)
-ORDER BY score DESC, doc_id LIMIT {k}"""
-        # no session-conf mutation (the serving session is permanently
-        # interpreted/non-adaptive) and no shared mutable state, so
-        # concurrent callers are safe WITHOUT a lock and their jobs
-        # overlap in the scheduler: measured 29 QPS with 4 threads vs
-        # 7.4 through the round-3 lock (BASELINE.md)
-        rows = self._serving.sql(sql).collect()
-        return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+        """Single-query top-k over the driver replica: no Spark job."""
+        for _, docs, scores in _score_topk(*self.flat, [qmap], k):
+            return list(zip(docs.tolist(), scores.tolist()))
+        return []
 
-    # below this many queries, per-query flat-path jobs beat one
-    # Python-runner batch job (~115 ms each vs ~300 ms + 40 ms/query)
+    # up to this many queries, the replica scores them in-process
+    # (~2 ms each at 25k docs); more go to the batch kernel, one Spark
+    # job whose ~0.18 s (4 CPUs, 4 to 60 queries, 2k-25k docs) the
+    # whole query set shares
     FLAT_BATCH_MAX = 3
 
     def close(self) -> None:
-        """Release the serving caches (block + flat) and the temp view."""
+        """Release the block cache and the driver replica."""
         self.df.unpersist()
-        if self.flat is not None:
-            spark = self.flat.sparkSession
-            self.flat.unpersist()
-            spark.catalog.dropGlobalTempView(self._view)
-            self.flat = None
-            self._serving = None
+        self.flat = None
 
     def search(self, queries: list[list[str]], k: int = 10) -> list[list[tuple[int, float]]]:
         """Top-k per query: [(doc_id, score) ranked] per input query."""

@@ -119,9 +119,9 @@ def test_searcher_scatter_gather_rank_identity(index, oracle_docs,
 
 
 def test_flat_jvm_path_rank_identity(index, oracle_docs, query_pieces):
-    """The single-query pure-JVM flat path (decoded impact projection,
-    no Python worker in the loop) must rank identically to the numpy
-    oracle AND to the batch mapInArrow path, scores equal to summation
+    """The single-query flat path (the driver-resident impact replica,
+    no Spark job in the loop) must rank identically to the numpy oracle
+    AND to the batch mapInArrow path, scores equal to summation
     order."""
     from pears_lite_spark.search.bm25 import Searcher
     postings, stats = index
@@ -148,16 +148,15 @@ def test_flat_path_disabled_falls_back(index, query_pieces):
 
 def test_concurrent_flat_queries_rank_identical(index, oracle_docs,
                                                 query_pieces):
-    """4 threads hammering the flat path concurrently (ADVICE r02: the
-    path mutates session confs around its action — the Searcher lock
-    must make that safe, not just documented). Every result must equal
-    the sequential answer AND the numpy oracle; afterwards the scoped
-    confs must be restored."""
+    """4 threads hammering the flat path concurrently: the replica is
+    read-only and shared without a lock. Every result must equal the
+    sequential answer AND the numpy oracle; afterwards the caller's
+    session confs must be unchanged."""
     import threading
     from pears_lite_spark.search.bm25 import Searcher
     postings, stats = index
     s = Searcher(postings, stats)
-    spark = s.flat.sparkSession
+    spark = postings.sparkSession
     codegen_before = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     work = [(qid, pieces) for qid, (q, pieces)
             in enumerate(query_pieces[:8])] * 3     # 24 queries, 4 threads
@@ -185,3 +184,66 @@ def test_concurrent_flat_queries_rank_identical(index, oracle_docs,
         assert [d for d, _ in results[qid]] == [d for d, _ in exp], q
     assert spark.conf.get("spark.sql.codegen.wholeStage",
                           "true") == codegen_before
+
+
+def test_flat_path_launches_no_spark_job(index, query_pieces):
+    """Single queries score on the driver replica without a Spark job,
+    while the same call without the replica runs the batch kernel; the
+    flat path equals the batch kernel for every query, a zero-hit (no
+    terms) and an OOV query included."""
+    from pears_lite_spark.search.bm25 import Searcher
+    postings, stats = index
+    sc = postings.sparkSession.sparkContext
+    s = Searcher(postings, stats)
+    no_flat = Searcher(postings, stats, flat_cache=False)
+    queries = [p for _, p in query_pieces] + [[], ["▁zzzznothere"]]
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("flat-single", "flat-single")
+        s.search(queries[:3], k=10)
+        sc.setJobGroup("batch-single", "batch-single")
+        no_flat.search(queries[:3], k=10)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job events reach the tracker in order: once the batch call's job
+    # shows up, any flat-path job would have too
+    import time
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup("batch-single") \
+            and time.time() < deadline:
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup("batch-single")
+    assert tracker.getJobIdsForGroup("flat-single") == []
+    batch = s.search(queries, k=10)           # > FLAT_BATCH_MAX -> kernel
+    assert batch[-2:] == [[], []]
+    for pieces, via_batch in zip(queries, batch):
+        one = s.search([pieces], k=10)[0]
+        assert [d for d, _ in one] == [d for d, _ in via_batch], pieces
+        for (_, gs), (_, es) in zip(one, via_batch):
+            assert gs == pytest.approx(es, abs=1e-9), pieces
+    s.close()
+    no_flat.close()
+
+
+@pytest.mark.parametrize("case", ["vocab_filter_drops_all", "no_docs"])
+def test_searcher_over_empty_index(spark, spm_tokens_df, query_pieces, case):
+    """An index without postings serves [] per query on the flat path
+    (an empty replica) and on the batch kernel."""
+    from pears_lite_spark.search.bm25 import Searcher
+    if case == "no_docs":
+        postings, stats = build_postings(spark.createDataFrame(
+            [], "doc_id long, tokens array<string>"))
+    else:
+        postings, stats = build_postings(
+            spm_tokens_df, vocab_filter=spark.createDataFrame(
+                [("▁zzzznothere",)], "term string"))
+    queries = [p for _, p in query_pieces[:5]]
+    s = Searcher(postings, stats)
+    assert s.flat is not None
+    assert s.search(queries[:1], k=10) == [[]]                # flat
+    assert s.search(queries, k=10) == [[] for _ in queries]   # batch
+    s.close()
+    b = Searcher(postings, stats, flat_cache=False)
+    assert b.search(queries[:1], k=10) == [[]]
+    b.close()

@@ -130,30 +130,38 @@ def main(sf_dir: str):
     print(f"one exchange and one phase-A MapInPandas per build: "
           f"{'OK' if ok4 else 'CHECK'}\n")
 
-    # 5. flat serving path: single stage, no exchange, pruned cache scan
+    # 5. flat serving path: single queries score on the driver replica
+    # and launch no Spark job (a batch call afterwards is the barrier:
+    # job events reach the tracker in order)
+    import time
     from pears_lite_spark.search.bm25 import Searcher
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     s = Searcher(postings, stats)
-    q5 = (s.flat.filter(F.col("term_id").isin([1, 2]))
-          .groupBy("doc_range", "doc_id")
-          .agg(F.sum("impact").alias("sc"))
-          .orderBy(F.desc("sc")).limit(10))
-    t = q5._jdf.queryExecution().executedPlan().toString()
-    query_part = t.split("InMemoryRelation")[0]  # cache FILL plan excluded
-    print("## 5. Single-query flat serving path: one stage, no shuffle\n")
+    sc = spark.sparkContext
+    queries = [["spark", "join"], ["index"], ["query", "plan"]]
+    sc.setJobGroup("audit-flat", "audit-flat")
+    for q in queries:
+        s.search([q], k=10)
+    sc.setJobGroup("audit-batch", "audit-batch")
+    s.search(queries * 2, k=10)  # > FLAT_BATCH_MAX: the batch kernel
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup("audit-batch") \
+            and time.time() < deadline:
+        time.sleep(0.1)
+    n_flat = len(tracker.getJobIdsForGroup("audit-flat"))
+    n_batch = len(tracker.getJobIdsForGroup("audit-batch"))
+    print("## 5. Single-query flat serving path: no Spark job\n")
     print("```")
-    for ln in query_part.splitlines():
-        print(ln.rstrip()[:100])
+    print(f"driver replica: {s.flat[0].size} postings, "
+          f"{sum(a.nbytes for a in s.flat) / 2**20:.2f} MB")
+    print(f"Spark jobs for {len(queries)} single queries: {n_flat}")
+    print(f"Spark jobs for one {2 * len(queries)}-query batch call: "
+          f"{n_batch}")
     print("```")
-    no_exch = "Exchange" not in query_part
-    pruned5 = "InMemoryTableScan" in t and "IN (1,2)" in t
-    print(f"\nno exchange in the query (partial+final agg in one stage, "
-          f"hashpartitioning(doc_range) satisfies the clustering): "
-          f"{'OK' if no_exch else 'NO'}")
-    print(f"filter pushed into the cached-batch scan (min/max batch "
-          f"pruning over the term-sorted cache): "
-          f"{'OK' if pruned5 else 'NO'}\n")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    print(f"\nsingle queries score on the driver replica, zero jobs per "
+          f"query: {'OK' if n_flat == 0 and n_batch else 'NO'}\n")
+    s.close()
 
     # 6. write_index: no exchange above phase B — the bucket-major slot
     # key already clusters phase B's output by term_bucket
