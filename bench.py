@@ -12,7 +12,8 @@ Prints ONE JSON line:
                    whose high leg fits under the host quota...}}
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32; the scaling run uses CPUS/4 vs CPUS),
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on; the
+     scaling run uses CPUS/4 vs CPUS),
      PEARS_BENCH_DOCS (override corpus size), PEARS_BENCH_SKIP_SCALING.
 """
 
@@ -442,7 +443,8 @@ def _regate(used: dict) -> float:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from pears_lite_spark.session import default_cpus
+    cpus = default_cpus()
     sf = sf_dir.rstrip("/").split("sf")[-1]
     import duckdb
     sf_docs = duckdb.connect().execute(

@@ -320,16 +320,6 @@ def _revise(paras: list[_Para]) -> None:
             j += 1
 
 
-def classify_paragraph(raw_html_segment: str) -> tuple[str, bool]:
-    """Return (clean_text, keep?) for one standalone block-level segment
-    (single-paragraph document: context-free class + boundary revision)."""
-    paras = _segment_paragraphs(raw_html_segment)
-    if not paras:
-        return _strip_tags(raw_html_segment), False
-    _revise(paras)
-    return paras[0].text, paras[0].cls == "good"
-
-
 def extract_html(html: bytes | str) -> tuple[str, str, str, str]:
     """(title, body_text, snippet, lang) — mirrors
     `/root/reference/app/indexer/htmlparser.py:78-110` semantics with

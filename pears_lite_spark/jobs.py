@@ -134,11 +134,7 @@ def cmd_query(args) -> int:
         queries = [v.encode_as_pieces(q) for q in raw]
     else:
         queries = [q.split() for q in raw]
-    # the driver replica (one decode job, 24 B per posting of driver
-    # memory) only pays off for interactive (few-query) serving; batch
-    # query files go through the top-k kernel
-    searcher = Searcher(postings, stats,
-                        flat_cache=len(raw) <= Searcher.FLAT_BATCH_MAX)
+    searcher = Searcher(postings, stats)
     t1 = time.time()
     results = searcher.search(queries, k=args.k)
     t2 = time.time()

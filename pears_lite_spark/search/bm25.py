@@ -16,21 +16,28 @@ doc_id ascending:
    the driver and doubles as the pytest ground truth.
 
 2. `search_blocks` / `Searcher`: the scale path over the
-   block-compressed posting table (index/build.py). A query set prunes
-   the scan to its terms (term_id filter, plus the term_bucket
+   block-compressed posting table (index/build.py).
+
+   `search_blocks` (and `Searcher(..., flat_cache=False)`) prunes the
+   scan to the query terms (term_id filter, plus the term_bucket
    partition filter), and one mapInArrow kernel (`_topk_factory`) runs
    over doc_range-partitioned blocks: it decodes each block once,
    weights the impacts by idf, sums them per doc and keeps a local
    top-k per query. A window rank (`search_blocks`) or a driver merge
    (`Searcher`) then takes the global top-k. Every doc lives in exactly
    one doc_range, so the union of the local top-ks holds the global
-   top-k, and scores equal the exhaustive path's up to float summation
-   order. Multi-part indexes need no special case: a doc's postings
-   from several parts sum in the same per-doc accumulate. The
-   per-query loop of that kernel (`_score_topk`) also serves
-   `Searcher`'s single queries, over a driver-resident replica of the
-   decoded postings (24 B per posting), so a single query launches no
-   Spark job.
+   top-k. Multi-part indexes need no special case: a doc's postings
+   from several parts sum in the same per-doc accumulate.
+
+   `Searcher` by default opens a driver replica instead, in one Spark
+   job (the same block decode, then `toArrow()`): per posting a dense
+   int32 doc ordinal and the float64 contribution idf_t * impact, 12 B,
+   plus per-term offsets and an ordinal -> doc_id array. Every `search`
+   call, whatever its query count, runs in-process: gather the query
+   terms' slices, sum per doc with one `np.bincount` over the ordinals,
+   take the top-k. Ordinals follow doc_id order, so ties still break
+   doc_id ascending, and each doc's contributions sum in the kernel's
+   term order, so the scores equal the kernel's.
 
 The per-block `max_impact` metadata stays in the index format as the
 block-max upper bound (Ding & Suel 2011); no scorer prunes with it yet.
@@ -39,6 +46,8 @@ block-max upper bound (Ding & Suel 2011); no scorer prunes with it yet.
 from __future__ import annotations
 
 import math
+from collections import namedtuple
+from functools import lru_cache
 
 import numpy as np
 import pyarrow as pa
@@ -46,10 +55,15 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..index import codec
-from ..index.build import CorpusStats
+from ..index.build import CorpusStats, release_build
+from ..xxh64 import xxh64_signed
 
 K1 = codec.K1
 B = codec.B
+
+# query term -> term_id, each distinct string hashed once per process
+# (lru_cache is thread-safe)
+_term_id = lru_cache(maxsize=1 << 16)(xxh64_signed)
 
 
 def idf(n_docs: int, df: float) -> float:
@@ -179,16 +193,17 @@ def _topk_factory(qmaps: list[dict[int, float]], k: int, avgdl: float):
     return kernel
 
 
+def _qterms(terms: list[str], term_dfs: dict[int, int]) -> list[int]:
+    """A query's distinct term_ids that the index holds, in the one
+    (set) order both serving paths sum a doc's contributions in."""
+    return [t for t in {_term_id(s) for s in terms} if term_dfs.get(t, 0) > 0]
+
+
 def _qmaps(queries: list[list[str]], term_dfs: dict[int, int],
            n_docs: int) -> list[dict[int, float]]:
     """Per query: term_id -> idf over its distinct terms in the index."""
-    from ..xxh64 import xxh64_signed
-    out = []
-    for terms in queries:
-        tids = {xxh64_signed(t) for t in terms}
-        out.append({t: idf(n_docs, term_dfs[t]) for t in tids
-                    if term_dfs.get(t, 0) > 0})
-    return out
+    return [{t: idf(n_docs, term_dfs[t]) for t in _qterms(terms, term_dfs)}
+            for terms in queries]
 
 
 def _local_topk(blocks_df: DataFrame, qmaps: list[dict[int, float]],
@@ -214,8 +229,7 @@ def search_blocks(postings: DataFrame, stats: CorpusStats,
     collect; the scan is repartitioned by doc_range into the top-k
     kernel and a window rank keeps each query's global top k.
     """
-    from ..xxh64 import xxh64_signed
-    tids = sorted({xxh64_signed(t) for terms in queries for t in terms})
+    tids = sorted({_term_id(t) for terms in queries for t in terms})
     scan = postings.filter(F.col("term_id").isin(tids))
     if "term_bucket" in postings.columns and n_buckets:
         buckets = sorted({tid % n_buckets for tid in tids})
@@ -235,99 +249,125 @@ def collect_term_dfs(postings: DataFrame) -> dict[int, int]:
             postings.groupBy("term_id").agg(F.sum("n").alias("df")).collect()}
 
 
+class Replica(namedtuple("Replica", "terms offs ords contrib doc_ids")):
+    """The driver-resident postings, sorted by term, as read-only numpy
+    arrays: `terms` (int64 term_ids, ascending), `offs` (int64; term i's
+    postings are [offs[i], offs[i+1])), per posting `ords` (int32 doc
+    ordinal) and `contrib` (float64 idf_t * impact), 12 B together, and
+    `doc_ids` (int64 doc_id per ordinal, ascending)."""
+
+    def topk(self, tids: list[int], k: int) -> list[tuple[int, float]]:
+        """Top-k over the terms' slices, (score desc, doc_id asc): one
+        bincount sums every doc's contributions in `tids` order. A doc
+        is a candidate iff it has a posting for some term. The others
+        score exactly 0.0, so when the k-th best score is positive the
+        docs at or above it are all candidates and hold the top-k with
+        every tie at the k-th score; otherwise the candidates come from
+        the postings. Few whole-array calls: each one that releases the
+        GIL can hand it to a concurrent caller."""
+        if not tids:
+            return []
+        n = self.doc_ids.size
+        i = np.searchsorted(self.terms, tids)
+        spans = [slice(a, z) for a, z in zip(self.offs[i].tolist(),
+                                             self.offs[i + 1].tolist())]
+        o = np.concatenate([self.ords[sl] for sl in spans])
+        agg = np.bincount(o, weights=np.concatenate(
+            [self.contrib[sl] for sl in spans]), minlength=n)
+        thr = np.partition(agg, n - k)[n - k] if 0 < k < n else 0.0
+        cand = np.flatnonzero(agg >= thr if thr > 0 else np.bincount(o, minlength=n))
+        sc = agg[cand]
+        top = np.lexsort((cand, -sc))[:k]
+        return list(zip(self.doc_ids[cand[top]].tolist(), sc[top].tolist()))
+
+
+def _open_replica(postings: DataFrame, stats: CorpusStats):
+    """The replica and its term dfs (postings per term, what
+    `collect_term_dfs` sums) from one Spark job: executors decode the
+    blocks, the driver collects the postings with `toArrow()`, sorts
+    them by term, numbers the docs in doc_id order and folds each
+    term's idf into its impacts."""
+    avgdl = stats.avgdl
+
+    def decode(batches):
+        for rb in batches:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c) for c in _decode_impacts(rb, avgdl)],
+                names=["term_id", "doc_id", "impact"])
+
+    t = postings.select(*_BLOCK_COLS).mapInArrow(
+        decode, "term_id long, doc_id long, impact double").toArrow()
+    tid, doc, imp = _by_term(*(t.column(c).to_numpy()
+                               for c in ("term_id", "doc_id", "impact")))
+    terms, dfs = np.unique(tid, return_counts=True)
+    doc_ids, ords = np.unique(doc, return_inverse=True)
+    w = np.repeat([idf(stats.n_docs, df) for df in dfs.tolist()], dfs)
+    rep = Replica(terms, np.concatenate(([0], np.cumsum(dfs))),
+                  ords.astype(np.int32), w * imp, doc_ids)
+    for a in rep:
+        a.flags.writeable = False
+    return rep, dict(zip(terms.tolist(), dfs.tolist()))
+
+
 class Searcher:
-    """Serving-optimized index handle: scatter-gather top-k.
+    """Serving-optimized index handle.
 
-    Build-time layout is term_bucket-partitioned, one file per bucket
-    per build task (good for bulk scans);
-    serving caches the scored block columns re-partitioned by doc_range
-    (one partition per core, at most one per range), so every partition
-    holds whole doc ranges. Two physical paths, one scoring loop
-    (`_score_topk`):
+    Default: a driver-resident `Replica` opened in one Spark job (the
+    blocks decoded on the executors, collected with `toArrow()`); no
+    block cache, no term-df job. Every `search` call, one query or a
+    thousand, then runs in-process over it: no Spark job, no py4j call,
+    no lock. The replica costs 12 B per posting of driver memory plus
+    per-term offsets and one doc_id per doc (2.6M postings at 20k docs:
+    about 30 MB). Per query the work is whole-array numpy: gather the
+    terms' slices, one `np.bincount` over all `n_docs` ordinals, a
+    partition-based top-k; a very sparse query over a very large index
+    would pay the O(n_docs) bincount, which no workload here does.
 
-    - **batch** (many queries): one mapInArrow job runs the top-k
-      kernel (`_topk_factory`, shared with `search_blocks`) per
-      partition and the driver merges the tiny per-partition top-k
-      lists, amortizing the job's fixed cost over the query batch.
-    - **single-query flat path**: a driver-resident impact replica, the
-      (term_id, doc_id, impact) postings as numpy arrays sorted by
-      term. Executors decode the block cache once at init (one
-      mapInArrow job); a query is then `_score_topk` over the replica
-      in-process: no Spark job, no py4j call. A job's fixed cost
-      dominates a single query (a pruned Spark SQL top-k over cached
-      impacts: p50 49 ms at 25k docs on 4 CPUs); the replica answers
-      in 2.0 ms. The arrays are read-only, so concurrent callers need
-      no lock.
-
-    The replica costs 24 B per posting of driver memory (3.26M postings
-    at 25k docs: 75 MB), the price of a serving replica;
-    `flat_cache=False` skips it and serves every query through the
-    batch kernel. `close()` releases the block cache and the replica.
+    `flat_cache=False` keeps the distributed path: the scored block
+    columns cached re-partitioned by doc_range (one partition per core,
+    at most one per range, so every partition holds whole doc ranges),
+    the term dfs collected from them, and every query set scored by one
+    mapInArrow job of the top-k kernel (`_topk_factory`, shared with
+    `search_blocks`) whose tiny per-partition top-k lists the driver
+    merges. Both paths rank identically and give equal scores.
+    `close()` releases the block cache or the replica.
     """
 
     def __init__(self, postings: DataFrame, stats: CorpusStats,
                  flat_cache: bool = True):
         self.stats = stats
-        spark = postings.sparkSession
-        # one task per doc_range shard (scatter width); more tasks than
-        # ranges only adds scheduling + worker roundtrips. Materialize
-        # the base FIRST so a freshly-built (lazy) postings plan executes
-        # once, then derive the range count from the cache instead of
-        # re-running the whole build.
-        base = postings.select(*_BLOCK_COLS).persist()
-        base.count()
-        n_rng = base.select("doc_range").distinct().count()
-        n_partitions = max(1, min(spark.sparkContext.defaultParallelism, n_rng))
-        self.df = base.repartition(n_partitions, "doc_range").persist()
-        self.df.count()
-        base.unpersist()
-        from ..index.build import release_build
-        release_build(postings)
-        self.term_dfs = collect_term_dfs(self.df)
-        self.flat: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None
+        self.df: DataFrame | None = None
+        self.flat: Replica | None = None
         if flat_cache:
-            self._build_flat_cache()
-
-    def _build_flat_cache(self) -> None:
-        """Decode the block cache on the executors (one mapInArrow job)
-        and hold the postings on the driver, sorted by term."""
-        avgdl = self.stats.avgdl
-
-        def decode(batches):
-            for rb in batches:
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(c) for c in _decode_impacts(rb, avgdl)],
-                    names=["term_id", "doc_id", "impact"])
-
-        t = self.df.mapInArrow(
-            decode, "term_id long, doc_id long, impact double").toArrow()
-        self.flat = _by_term(*(t.column(c).to_numpy()
-                               for c in ("term_id", "doc_id", "impact")))
-        for a in self.flat:
-            a.flags.writeable = False
-
-    def _search_flat(self, qmap: dict[int, float], k: int) -> list[tuple[int, float]]:
-        """Single-query top-k over the driver replica: no Spark job."""
-        for _, docs, scores in _score_topk(*self.flat, [qmap], k):
-            return list(zip(docs.tolist(), scores.tolist()))
-        return []
-
-    # up to this many queries, the replica scores them in-process
-    # (~2 ms each at 25k docs); more go to the batch kernel, one Spark
-    # job whose ~0.18 s (4 CPUs, 4 to 60 queries, 2k-25k docs) the
-    # whole query set shares
-    FLAT_BATCH_MAX = 3
+            self.flat, self.term_dfs = _open_replica(postings, stats)
+        else:
+            # one task per doc_range shard (scatter width); more tasks
+            # than ranges only adds scheduling + worker roundtrips.
+            # Materialize the base FIRST so a freshly-built (lazy)
+            # postings plan executes once, then derive the range count
+            # from the cache instead of re-running the whole build.
+            base = postings.select(*_BLOCK_COLS).persist()
+            base.count()
+            n_rng = base.select("doc_range").distinct().count()
+            n_partitions = max(1, min(
+                postings.sparkSession.sparkContext.defaultParallelism, n_rng))
+            self.df = base.repartition(n_partitions, "doc_range").persist()
+            self.df.count()
+            base.unpersist()
+            self.term_dfs = collect_term_dfs(self.df)
+        release_build(postings)
 
     def close(self) -> None:
-        """Release the block cache and the driver replica."""
-        self.df.unpersist()
+        """Release the block cache or the driver replica."""
+        if self.df is not None:
+            self.df.unpersist()
         self.flat = None
 
     def search(self, queries: list[list[str]], k: int = 10) -> list[list[tuple[int, float]]]:
         """Top-k per query: [(doc_id, score) ranked] per input query."""
+        if self.flat is not None:
+            return [self.flat.topk(_qterms(q, self.term_dfs), k) for q in queries]
         qmaps = _qmaps(queries, self.term_dfs, self.stats.n_docs)
-        if self.flat is not None and 0 < len(queries) <= self.FLAT_BATCH_MAX:
-            return [self._search_flat(qmap, k) for qmap in qmaps]
         if not any(qmaps):
             return [[] for _ in queries]
         merged: list[list[tuple[int, float]]] = [[] for _ in queries]

@@ -274,14 +274,7 @@ def cosine_scores(tokens_df: DataFrame, query_terms: list[str]) -> DataFrame:
             .select("doc_id", (F.col("dot") / F.col("dn")).alias("cosine")))
 
 
-# --------------------------------------------- A1-A4/K2: pod operations
-
-def pod_summaries(tokens_df: DataFrame, pod_col: str = "pod") -> DataFrame:
-    """Pod summary = per-pod term-weight sum (`mk_page_vector.py:64`,
-    `utils_db.py:105-133`) — a plain two-key aggregate."""
-    tok = tokens_df.select(pod_col, F.explode("tokens").alias("term"))
-    return tok.groupBy(pod_col, "term").agg(F.count("*").alias("w"))
-
+# ------------------------------------------------- K2: pod pruning
 
 def pod_prune(pod_scores: DataFrame, max_pods: int = 3,
               min_score: float = 0.01) -> DataFrame:
@@ -298,12 +291,6 @@ def pod_prune(pod_scores: DataFrame, max_pods: int = 3,
     return (ranked.crossJoin(F.broadcast(best))
             .filter((F.col("mx") < min_score) | (F.col("rn") <= max_pods))
             .drop("rn", "mx"))
-
-
-def best_urls(scored_df: DataFrame, limit: int = 50) -> DataFrame:
-    """Top-50 with score > 0 (`score_pages.py:117-135`)."""
-    return (scored_df.filter(F.col("score") > 0)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(limit))
 
 
 def min_window_spans(tokens_df: DataFrame,

@@ -14,10 +14,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Cores for `local[N]`: SPARK_GRAFT_CPUS when set, else the CPUs
+    this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(app_name: str = "pears-lite-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(os.environ.get(
         "PEARS_SHUFFLE_PARTITIONS", cpus))

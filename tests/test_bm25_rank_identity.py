@@ -91,14 +91,19 @@ def test_hot_term_salting_equivalence(spm_tokens_df, oracle_docs,
         exp = bm25_topk_oracle(oracle_docs, pieces, 10)
         sub = res[res.query_id == qid].sort_values("rank")
         assert [int(d) for d in sub["doc_id"]] == [d for d, _ in exp], q
-    # the Searcher over the salted index: batch kernel and flat path
+    # the Searcher over the salted index: the replica for a query set
+    # and for single queries, equal to search_blocks' kernel
     from pears_lite_spark.search.bm25 import Searcher
     s = Searcher(postings, stats)
     batch = s.search(queries, k=10)
-    for (q, pieces), via_batch in zip(query_pieces[:8], batch):
+    for qid, ((q, pieces), via_batch) in enumerate(zip(query_pieces[:8],
+                                                       batch)):
         exp = [d for d, _ in bm25_topk_oracle(oracle_docs, pieces, 10)]
         assert [d for d, _ in via_batch] == exp, q
         assert [d for d, _ in s.search([pieces], k=10)[0]] == exp, q
+        sub = res[res.query_id == qid].sort_values("rank")
+        assert via_batch == list(zip(sub["doc_id"].tolist(),
+                                     sub["score"].tolist())), q
     s.close()
 
 
@@ -119,18 +124,19 @@ def test_searcher_scatter_gather_rank_identity(index, oracle_docs,
 
 
 def test_flat_jvm_path_rank_identity(index, oracle_docs, query_pieces):
-    """The single-query flat path (the driver-resident impact replica,
-    no Spark job in the loop) must rank identically to the numpy oracle
-    AND to the batch mapInArrow path, scores equal to summation
-    order."""
+    """Single queries on the driver replica (no Spark job in the loop)
+    must rank identically to the numpy oracle AND to the distributed
+    mapInArrow kernel (`flat_cache=False`)."""
     from pears_lite_spark.search.bm25 import Searcher
     postings, stats = index
     s = Searcher(postings, stats)
     assert s.flat is not None
     queries = [p for _, p in query_pieces]
-    batch = s.search(queries, k=10)           # > FLAT_BATCH_MAX -> kernel
+    kernel = Searcher(postings, stats, flat_cache=False)
+    batch = kernel.search(queries, k=10)
+    kernel.close()
     for (q, pieces), via_batch in zip(query_pieces, batch):
-        one = s.search([pieces], k=10)[0]     # routes through _search_flat
+        one = s.search([pieces], k=10)[0]
         exp = bm25_topk_oracle(oracle_docs, pieces, 10)
         assert [d for d, _ in one] == [d for d, _ in exp], q
         assert [d for d, _ in one] == [d for d, _ in via_batch], q
@@ -187,43 +193,107 @@ def test_concurrent_flat_queries_rank_identical(index, oracle_docs,
 
 
 def test_flat_path_launches_no_spark_job(index, query_pieces):
-    """Single queries score on the driver replica without a Spark job,
-    while the same call without the replica runs the batch kernel; the
-    flat path equals the batch kernel for every query, a zero-hit (no
-    terms) and an OOV query included."""
+    """One call with every query on the driver replica launches no
+    Spark job, while the same call without the replica runs the batch
+    kernel; the replica's results equal the kernel's for every query,
+    a zero-hit (no terms), an OOV and repeated-term queries included,
+    and a single query equals its slot in the all-queries call."""
     from pears_lite_spark.search.bm25 import Searcher
     postings, stats = index
     sc = postings.sparkSession.sparkContext
     s = Searcher(postings, stats)
     no_flat = Searcher(postings, stats, flat_cache=False)
-    queries = [p for _, p in query_pieces] + [[], ["▁zzzznothere"]]
+    pieces0 = query_pieces[0][1]
+    queries = [p for _, p in query_pieces] + [
+        [], ["▁zzzznothere"], ["▁the", "▁the"], pieces0 + pieces0]
     tracker = sc.statusTracker()
     try:
-        sc.setJobGroup("flat-single", "flat-single")
-        s.search(queries[:3], k=10)
-        sc.setJobGroup("batch-single", "batch-single")
-        no_flat.search(queries[:3], k=10)
+        sc.setJobGroup("replica-all", "replica-all")
+        got = s.search(queries, k=10)
+        sc.setJobGroup("kernel-all", "kernel-all")
+        want = no_flat.search(queries, k=10)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    # job events reach the tracker in order: once the batch call's job
-    # shows up, any flat-path job would have too
+    # job events reach the tracker in order: once the kernel call's job
+    # shows up, any replica job would have too
     import time
     deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup("batch-single") \
+    while not tracker.getJobIdsForGroup("kernel-all") \
             and time.time() < deadline:
         time.sleep(0.1)
-    assert tracker.getJobIdsForGroup("batch-single")
-    assert tracker.getJobIdsForGroup("flat-single") == []
-    batch = s.search(queries, k=10)           # > FLAT_BATCH_MAX -> kernel
-    assert batch[-2:] == [[], []]
-    for pieces, via_batch in zip(queries, batch):
-        one = s.search([pieces], k=10)[0]
-        assert [d for d, _ in one] == [d for d, _ in via_batch], pieces
-        for (_, gs), (_, es) in zip(one, via_batch):
-            assert gs == pytest.approx(es, abs=1e-9), pieces
+    assert tracker.getJobIdsForGroup("kernel-all")
+    assert tracker.getJobIdsForGroup("replica-all") == []
+    n = len(query_pieces)
+    assert got[n:n + 2] == [[], []]
+    assert got[n + 2] and got[n + 3] == got[0]
+    assert got == want
+    for pieces, via_all in zip(queries, got):
+        assert s.search([pieces], k=10)[0] == via_all, pieces
     s.close()
     no_flat.close()
+
+
+def test_replica_layout(index):
+    """The replica holds 12 B per posting (int32 ordinal + float64
+    contribution), sorted by term with per-term offsets, its term dfs
+    equal `collect_term_dfs`, and ordinals follow doc_id order."""
+    import numpy as np
+    from pears_lite_spark.search.bm25 import Searcher, collect_term_dfs
+    postings, stats = index
+    s = Searcher(postings, stats)
+    r = s.flat
+    assert s.term_dfs == collect_term_dfs(postings)
+    assert r.ords.dtype == np.int32 and r.contrib.dtype == np.float64
+    assert r.ords.nbytes + r.contrib.nbytes == 12 * r.ords.size
+    assert r.ords.size == sum(s.term_dfs.values()) == r.offs[-1]
+    assert dict(zip(r.terms.tolist(), np.diff(r.offs).tolist())) == s.term_dfs
+    assert (np.diff(r.terms) > 0).all() and (np.diff(r.doc_ids) > 0).all()
+    assert r.doc_ids.size <= stats.n_docs  # docs without tokens have no postings
+    assert not r.contrib.flags.writeable
+    s.close()
+
+
+def test_replica_ties_at_kth_score(spark):
+    """More than k identical docs tie at the k-th score: the replica
+    keeps the k smallest doc_ids (negative hashed ids included). Every
+    query, tied, with fewer than k hits, or scored under stale stats
+    that make idf negative (n_docs below df), equals search_blocks, and
+    under the true stats the exhaustive bm25_topk too."""
+    from pears_lite_spark.index.build import CorpusStats
+    from pears_lite_spark.search.bm25 import Searcher
+    ids = [41, -7, 3, 1 << 40, -(1 << 50), 12, 5, 99, -3, 8, 77, 0, 64, 2]
+    rows = [(d, ["▁alpha", "▁beta"]) for d in ids]
+    rows += [(1000, ["▁alpha", "▁alpha"]), (1001, ["▁gamma"]),
+             (1002, ["▁beta", "▁gamma", "▁gamma"])]
+    toks = spark.createDataFrame(rows, "doc_id long, tokens array<string>")
+    postings, stats = build_postings(toks)
+    postings = postings.persist()
+    tied = [["▁alpha"], ["▁beta"], ["▁alpha", "▁beta"]]
+    queries = tied + [["▁gamma"], ["▁gamma", "▁zzzznothere"]]
+    for st in (stats, CorpusStats(n_docs=1, avgdl=stats.avgdl)):
+        s = Searcher(postings, st)
+        got = s.search(queries, k=10)
+        blocks = search_blocks(postings, st, queries, k=10).toPandas()
+        for qid, q in enumerate(queries):
+            sub = blocks[blocks.query_id == qid].sort_values("rank")
+            assert got[qid] == list(zip(sub["doc_id"].tolist(),
+                                        sub["score"].tolist())), (st, q)
+        s.close()
+    assert [len(g) for g in got] == [10, 10, 10, 2, 2]
+    assert all(sc < 0 for g in got for _, sc in g)     # stale: idf < 0
+    s = Searcher(postings, stats)
+    for q in queries:
+        got = s.search([q], k=10)[0]
+        if q in tied:
+            ties = [d for d, sc in got if sc == got[-1][1]]
+            assert len(got) == 10 and ties == sorted(ids)[:len(ties)], q
+        exh = bm25_topk(toks, q, 10).collect()
+        assert [d for d, _ in got] == [r["doc_id"] for r in exh], q
+        for (_, gs), r in zip(got, exh):
+            assert gs == pytest.approx(r["score"], abs=1e-9), q
+    s.close()
+    postings.unpersist()
 
 
 @pytest.mark.parametrize("case", ["vocab_filter_drops_all", "no_docs"])
@@ -241,8 +311,8 @@ def test_searcher_over_empty_index(spark, spm_tokens_df, query_pieces, case):
     queries = [p for _, p in query_pieces[:5]]
     s = Searcher(postings, stats)
     assert s.flat is not None
-    assert s.search(queries[:1], k=10) == [[]]                # flat
-    assert s.search(queries, k=10) == [[] for _ in queries]   # batch
+    assert s.search(queries[:1], k=10) == [[]]                # replica
+    assert s.search(queries, k=10) == [[] for _ in queries]   # replica
     s.close()
     b = Searcher(postings, stats, flat_cache=False)
     assert b.search(queries[:1], k=10) == [[]]

@@ -130,37 +130,41 @@ def main(sf_dir: str):
     print(f"one exchange and one phase-A MapInPandas per build: "
           f"{'OK' if ok4 else 'CHECK'}\n")
 
-    # 5. flat serving path: single queries score on the driver replica
-    # and launch no Spark job (a batch call afterwards is the barrier:
+    # 5. replica serving: a 60-query call scores on the driver replica
+    # and launches no Spark job (a job in a later group is the barrier:
     # job events reach the tracker in order)
     import time
     from pears_lite_spark.search.bm25 import Searcher
     s = Searcher(postings, stats)
     sc = spark.sparkContext
-    queries = [["spark", "join"], ["index"], ["query", "plan"]]
-    sc.setJobGroup("audit-flat", "audit-flat")
-    for q in queries:
-        s.search([q], k=10)
-    sc.setJobGroup("audit-batch", "audit-batch")
-    s.search(queries * 2, k=10)  # > FLAT_BATCH_MAX: the batch kernel
+    words = ["spark", "join", "index", "query", "plan", "data", "search",
+             "table", "stream", "engine"]
+    queries = [[a, b] for a in words for b in words[:6]]
+    sc.setJobGroup("audit-replica", "audit-replica")
+    s.search(queries, k=10)
+    sc.setJobGroup("audit-barrier", "audit-barrier")
+    spark.range(1).collect()
     sc.setLocalProperty("spark.jobGroup.id", None)
     tracker = sc.statusTracker()
     deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup("audit-batch") \
+    while not tracker.getJobIdsForGroup("audit-barrier") \
             and time.time() < deadline:
         time.sleep(0.1)
-    n_flat = len(tracker.getJobIdsForGroup("audit-flat"))
-    n_batch = len(tracker.getJobIdsForGroup("audit-batch"))
-    print("## 5. Single-query flat serving path: no Spark job\n")
+    n_jobs = len(tracker.getJobIdsForGroup("audit-replica"))
+    r = s.flat
+    per_posting = (r.ords.nbytes + r.contrib.nbytes) / max(1, r.ords.size)
+    print("## 5. Replica serving: no Spark job for any query count\n")
     print("```")
-    print(f"driver replica: {s.flat[0].size} postings, "
-          f"{sum(a.nbytes for a in s.flat) / 2**20:.2f} MB")
-    print(f"Spark jobs for {len(queries)} single queries: {n_flat}")
-    print(f"Spark jobs for one {2 * len(queries)}-query batch call: "
-          f"{n_batch}")
+    print(f"driver replica: {r.ords.size} postings, "
+          f"{sum(a.nbytes for a in r) / 2**20:.2f} MB, "
+          f"{per_posting:.1f} B/posting (+ per-term offsets, "
+          f"ordinal -> doc_id)")
+    print(f"Spark jobs for one {len(queries)}-query call: {n_jobs}")
     print("```")
-    print(f"\nsingle queries score on the driver replica, zero jobs per "
-          f"query: {'OK' if n_flat == 0 and n_batch else 'NO'}\n")
+    ok5 = n_jobs == 0 and per_posting <= 12 \
+        and tracker.getJobIdsForGroup("audit-barrier")
+    print(f"\nevery query scores on the driver replica, zero jobs per "
+          f"call, at most 12 B per posting: {'OK' if ok5 else 'NO'}\n")
     s.close()
 
     # 6. write_index: no exchange above phase B — the bucket-major slot
