@@ -373,7 +373,6 @@ class _PartialBuilder:
         self.range_shift = range_shift
         self.with_positions = with_positions
         self.n_buckets = n_buckets
-        self.n_slots = len(slot_values)
         self.slot_vals = np.asarray(slot_values, dtype=np.int64)
         self._cache: dict[str, int] = {}
         self.tids: list[np.ndarray] = []
@@ -493,40 +492,49 @@ class _PartialBuilder:
         newr[0] = True
         newr[1:] = (t[1:] != t[:-1]) | (src[1:] != src[:-1])
         r_start = np.flatnonzero(newr)
-        r_tf = (np.append(r_start[1:], n) - r_start).astype(np.int32)
-        r_t, r_d = t[r_start], d[r_start]
-        r_dl = dl[r_start].astype(np.int32)
-        rng = (r_d >> self.range_shift).astype(np.int64)
-        slot = _slot_of(r_t, rng, self.n_slots, self.n_buckets)
-        order2 = np.argsort(slot, kind="stable")
-        s2 = slot[order2]
-        t2, d2 = r_t[order2], r_d[order2]
-        tf2, dl2 = r_tf[order2], r_dl[order2]
-        if self.with_positions:
-            starts = np.zeros(r_start.size, dtype=np.int64)
-            np.cumsum(r_tf[:-1].astype(np.int64), out=starts[1:])
-            sel_tf = r_tf[order2].astype(np.int64)
-            out_starts = np.zeros(sel_tf.size, dtype=np.int64)
-            np.cumsum(sel_tf[:-1], out=out_starts[1:])
-            gidx = (np.repeat(starts[order2] - out_starts, sel_tf)
-                    + np.arange(n, dtype=np.int64))
-            p2 = pp[gidx].astype(np.int32)
-            pedge = np.append(out_starts, n)
-        rows = {k: [] for k in ("p", "terms", "docs", "tfs", "dls",
-                                "poss")}
-        seg = np.flatnonzero(np.concatenate(
-            ([True], s2[1:] != s2[:-1])))
-        seg_end = np.append(seg[1:], s2.size)
-        for i0, i1 in zip(seg, seg_end):
-            rows["p"].append(int(self.slot_vals[s2[i0]]))
-            rows["terms"].append(t2[i0:i1].tobytes())
-            rows["docs"].append(d2[i0:i1].tobytes())
-            rows["tfs"].append(tf2[i0:i1].tobytes())
-            rows["dls"].append(dl2[i0:i1].tobytes())
-            rows["poss"].append(
-                p2[pedge[i0]:pedge[i1]].tobytes() if self.with_positions
-                else b"")
-        return pd.DataFrame(rows)
+        r_tf = np.append(r_start[1:], n) - r_start
+        return pd.DataFrame(_slot_rows(
+            t[r_start], d[r_start], r_tf, dl[r_start], pp, self.range_shift,
+            self.slot_vals, self.n_buckets))
+
+
+def _slot_rows(t: np.ndarray, d: np.ndarray, tf: np.ndarray,
+               dl: np.ndarray, pos: "np.ndarray | None", range_shift: int,
+               slot_vals: np.ndarray, n_buckets: int) -> dict[str, list]:
+    """_PARTIAL_SCHEMA columns for posting runs (term_id, doc_id, tf, dl
+    per run, positions flattened run-major or None), one row per target
+    slot: each run goes to the slot of its (term_id, doc_range) group
+    (_slot_of), p is that slot's preimage in slot_vals. Phase A's
+    flush and compaction (checkpoint.compact_index) both end here."""
+    rng = d >> range_shift
+    slot = _slot_of(t, rng, slot_vals.size, n_buckets)
+    order = np.argsort(slot, kind="stable")
+    s2 = slot[order]
+    t2 = t[order].astype(np.int64, copy=False)
+    d2 = d[order].astype(np.int64, copy=False)
+    tf2 = tf[order].astype(np.int32, copy=False)
+    dl2 = dl[order].astype(np.int32, copy=False)
+    if pos is not None:
+        tf64 = tf.astype(np.int64)
+        starts = np.cumsum(tf64) - tf64
+        sel_tf = tf64[order]
+        out_starts = np.cumsum(sel_tf) - sel_tf
+        gidx = (np.repeat(starts[order] - out_starts, sel_tf)
+                + np.arange(pos.size, dtype=np.int64))
+        p2 = pos[gidx].astype(np.int32)
+        pedge = np.append(out_starts, pos.size)
+    rows = {k: [] for k in ("p", "terms", "docs", "tfs", "dls", "poss")}
+    seg = np.flatnonzero(np.concatenate(([True], s2[1:] != s2[:-1])))
+    seg_end = np.append(seg[1:], s2.size)
+    for i0, i1 in zip(seg, seg_end):
+        rows["p"].append(int(slot_vals[s2[i0]]))
+        rows["terms"].append(t2[i0:i1].tobytes())
+        rows["docs"].append(d2[i0:i1].tobytes())
+        rows["tfs"].append(tf2[i0:i1].tobytes())
+        rows["dls"].append(dl2[i0:i1].tobytes())
+        rows["poss"].append(p2[pedge[i0]:pedge[i1]].tobytes()
+                            if pos is not None else b"")
+    return rows
 
 
 def _phase_a_factory(docs_of, range_shift: int, slot_values: list[int],
@@ -596,16 +604,12 @@ def _merge_factory(avgdl: float, block_size: int, with_positions: bool,
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         Ts, Ds, TFs, DLs, Ps = [], [], [], [], []
         for rb in batches:
-            cols = {c: rb.column(c) for c in ("terms", "docs", "tfs",
-                                              "dls", "poss")}
-            for i in range(rb.num_rows):
-                Ts.append(np.frombuffer(cols["terms"][i].as_py(), np.int64))
-                Ds.append(np.frombuffer(cols["docs"][i].as_py(), np.int64))
-                TFs.append(np.frombuffer(cols["tfs"][i].as_py(), np.int32))
-                DLs.append(np.frombuffer(cols["dls"][i].as_py(), np.int32))
-                if with_positions:
-                    Ps.append(np.frombuffer(cols["poss"][i].as_py(),
-                                            np.int32))
+            Ts.append(codec.blob(rb.column("terms")).view(np.int64))
+            Ds.append(codec.blob(rb.column("docs")).view(np.int64))
+            TFs.append(codec.blob(rb.column("tfs")).view(np.int32))
+            DLs.append(codec.blob(rb.column("dls")).view(np.int32))
+            if with_positions:
+                Ps.append(codec.blob(rb.column("poss")).view(np.int32))
         if not Ts:
             return
         t = np.concatenate(Ts)
@@ -814,11 +818,9 @@ def build_from_corpus(corpus_df: DataFrame, tokenizer: str = "spm",
         n = 0
         tot = 0
         for rb in batches:
-            dls_col = rb.column("dls")
-            for i in range(rb.num_rows):
-                arr = np.frombuffer(dls_col[i].as_py(), np.int32)
-                n += arr.size
-                tot += int(arr.sum())
+            dls = codec.blob(rb.column("dls")).view(np.int32)
+            n += dls.size
+            tot += int(dls.sum())
         yield pa.RecordBatch.from_arrays(
             [pa.array([n], pa.int64()), pa.array([tot], pa.int64())],
             names=["n", "tot"])
@@ -884,10 +886,10 @@ def write_index(postings: DataFrame, path: str,
     as it stands (write_plan), so phase B and the write run as one
     stage. A build with the same n_buckets hands over partitions that
     hold whole buckets (see _slot_of), so every task writes one file
-    per bucket it owns. Any other input — a different n_buckets,
-    compact_index output — is still written correctly, because the
-    partitionBy writer routes every row to its bucket directory; it
-    only costs more files."""
+    per bucket it owns, and so does compact_index, which runs the same
+    phase B. Any other input (a different n_buckets) is still written
+    correctly, because the partitionBy writer routes every row to its
+    bucket directory; it only costs more files."""
     (write_plan(postings, n_buckets)
      .write.mode("overwrite").partitionBy("term_bucket").parquet(path))
     release_build(postings)

@@ -20,8 +20,10 @@ full-index rewrite per doc — `/root/reference/app/indexer/posix.py:
   produces byte-identical output (deterministic encoding);
 - queries run directly on the union (the block scorer sums a doc's
   postings from every part in one per-doc accumulate); `compact_index`
-  optionally merges parts into one canonical segment (LSM/Lucene-style
-  merge expressed as a decode -> merge -> re-encode applyInPandas).
+  optionally merges parts into one canonical segment (an LSM/Lucene-
+  style merge): a mapInArrow decodes the blocks back into posting runs
+  and hands them to the build's own phase B, so a compacted index is a
+  fresh build's bytes.
 """
 
 from __future__ import annotations
@@ -30,12 +32,14 @@ import json
 import os
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import codec
-from .build import POSTING_SCHEMA, CorpusStats, build_postings, corpus_stats
+from .build import (_PARTIAL_SCHEMA, DEFAULT_N_BUCKETS, CorpusStats,
+                    _n_partitions, _phase_b, _slot_rows, _slot_values,
+                    build_postings, corpus_stats, range_shift_for)
 
 
 def _manifest_path(path: str, part: int) -> str:
@@ -137,29 +141,30 @@ def manifests(path: str) -> list[dict]:
 
 def stats_from_blocks(postings: DataFrame) -> CorpusStats:
     """Exact corpus stats recovered from the index itself: decode the
-    (doc_id, dl) stream of every block, distinct per doc, aggregate.
-    Per-partition np.unique collapses the posting-level fan-out before
-    the shuffle, so only ~n_docs rows exchange."""
-    import pyarrow as pa
+    (doc_id, dl) stream of every block, distinct per doc and segment
+    (a doc_id in two parts is two source docs, as in the manifests'
+    counts), aggregate. Per-batch dedup collapses the posting-level
+    fan-out before the shuffle, so only ~n_docs rows exchange."""
+    part = (F.col("part").cast("long") if "part" in postings.columns
+            else F.lit(0).cast("long"))
 
     def kernel(batches):
-        Ds, Ls = [], []
         for rb in batches:
-            d = rb.to_pydict()
-            for docs_b, dls_b, n in zip(d["docs"], d["dls"], d["n"]):
-                Ds.append(codec.decode_block_docs(docs_b, n))
-                Ls.append(codec.varint_decode(dls_b, n).astype(np.int64))
-        if Ds:
-            dd = np.concatenate(Ds)
-            ll = np.concatenate(Ls)
-            u, idx = np.unique(dd, return_index=True)
+            _, d, _, dl, _ = codec.decode_blocks(rb)
+            p = np.repeat(rb.column("part").to_numpy(),
+                          rb.column("n").to_numpy())
+            o = np.lexsort((d, p))
+            p, d, dl = p[o], d[o], dl[o]
+            new = np.ones(d.size, bool)
+            new[1:] = (p[1:] != p[:-1]) | (d[1:] != d[:-1])
             yield pa.RecordBatch.from_arrays(
-                [pa.array(u, pa.int64()), pa.array(ll[idx], pa.int64())],
-                names=["doc_id", "dl"])
+                [pa.array(p[new]), pa.array(d[new]), pa.array(dl[new])],
+                names=["part", "doc_id", "dl"])
 
-    pairs = (postings.select("docs", "dls", "n")
-             .mapInArrow(kernel, "doc_id long, dl long")
-             .dropDuplicates(["doc_id"]))
+    pairs = (postings.select(part.alias("part"), "term_id", "n", "docs",
+                             "tfs", "dls")
+             .mapInArrow(kernel, "part long, doc_id long, dl long")
+             .dropDuplicates(["part", "doc_id"]))
     row = pairs.agg(F.count("*").alias("n"),
                     F.sum("dl").alias("s")).collect()[0]
     n = int(row["n"] or 0)
@@ -190,44 +195,40 @@ def refresh_stats(spark: SparkSession, path: str) -> CorpusStats:
 
 def compact_index(postings: DataFrame, stats: CorpusStats,
                   block_size: int = codec.BLOCK_SIZE) -> DataFrame:
-    """Merge a multi-part index into one canonical segment: decode all
-    parts' blocks per (term_id, doc_range), merge-sort postings, and
-    re-encode — the distributed form of an LSM/Lucene segment merge."""
-    has_pos = "positions" in postings.columns
+    """Merge a multi-part index into one canonical segment: a
+    mapInArrow decodes every part's blocks back into posting runs and
+    emits them as phase-A partial rows, which the build's phase B
+    shuffles to their slots, merges and re-encodes. Runs of one doc_id
+    from several parts merge as in a build (tf and dl summed, positions
+    unioned). Positions are kept only if every block has them.
 
-    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        term_id, doc_range = int(key[0]), int(key[1])
-        doc_l, tf_l, dl_l, pos_l = [], [], [], []
-        for _, r in pdf.iterrows():
-            n = int(r["n"])
-            doc_l.append(codec.decode_block_docs(r["docs"], n))
-            tf_l.append(codec.decode_block_tfs(r["tfs"], n))
-            dl_l.append(codec.varint_decode(r["dls"], n).astype(np.int64))
-            if has_pos and r["positions"] is not None:
-                pos_l.extend(codec.decode_block_positions(r["positions"], n))
-            elif has_pos:
-                pos_l.extend([np.empty(0, np.int64)] * n)
-        docs = np.concatenate(doc_l)
-        order = np.argsort(docs, kind="mergesort")
-        docs = docs[order]
-        tfs = np.concatenate(tf_l)[order]
-        dls = np.concatenate(dl_l)[order]
-        poss = [pos_l[i] for i in order] if has_pos else None
-        blocks = codec.encode_postings(docs, tfs, dls, stats.avgdl,
-                                       positions=poss, block_size=block_size)
-        rows, i = [], 0
-        for b in blocks:
-            rows.append((term_id, doc_range, b.block_id, b.first_doc,
-                         b.last_doc, b.n, b.max_impact, b.docs, b.tfs,
-                         codec.varint_encode(dls[i:i + b.n].astype(np.uint64)),
-                         b.positions))
-            i += b.n
-        return pd.DataFrame(rows, columns=[f.name for f in POSTING_SCHEMA.fields])
+    The layout is a fresh build's with the same stats: range_shift from
+    stats.n_docs, the slot count from n_docs * avgdl and
+    DEFAULT_N_BUCKETS, whatever range_shift the parts were cut with. So
+    the output equals build_postings(stats=stats) over the parts' docs
+    byte for byte, and it is bucket-major: write_index writes it with
+    no second exchange."""
+    spark = postings.sparkSession
+    range_shift = range_shift_for(stats.n_docs)
+    n_partitions = _n_partitions(
+        spark, int(stats.n_docs * max(stats.avgdl, 1.0)))
+    slots = np.asarray(_slot_values(spark, n_partitions), np.int64)
+    has_pos = ("positions" in postings.columns and postings.filter(
+        F.col("positions").isNull()).isEmpty())
 
-    cols = [f.name for f in POSTING_SCHEMA.fields if has_pos or f.name != "positions"]
-    return (postings.select(*cols)
-            .groupBy("term_id", "doc_range")
-            .applyInPandas(merge, schema=POSTING_SCHEMA))
+    def runs(batches):
+        for rb in batches:
+            if rb.num_rows:
+                yield pa.RecordBatch.from_pydict(_slot_rows(
+                    *codec.decode_blocks(rb, has_pos), range_shift, slots,
+                    DEFAULT_N_BUCKETS))
+
+    cols = ["term_id", "n", "docs", "tfs", "dls"]
+    if has_pos:
+        cols.append("positions")
+    partials = postings.select(*cols).mapInArrow(runs, _PARTIAL_SCHEMA)
+    return _phase_b(partials, n_partitions, stats.avgdl, block_size,
+                    has_pos, range_shift)
 
 
 # --------------------------------------------- snapshot-table delta builds

@@ -20,7 +20,11 @@ Indexes", SIGIR 2011):
   (the block-max bound used for pruning).
 
 All encode/decode paths are numpy-vectorized (no per-element Python in
-the varint kernels).
+the varint kernels). Every Spark-side reader of the block format goes
+through `decode_blocks` (a whole Arrow batch of blocks at once) and
+every reader of a binary Arrow column through `blob`; the per-block
+`encode_postings` / `decode_block_*` pair is the reference the tests,
+the benchmark and the phrase matcher use.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 
 BLOCK_SIZE = 128
 K1 = 1.2
@@ -200,6 +205,50 @@ def encode_positions(pos_list: list[np.ndarray]) -> bytes:
     flat = (np.concatenate([np.asarray(p, dtype=np.int64) for p in pos_list])
             if lens.sum() else np.empty(0, np.int64))
     return encode_positions_flat(lens, flat)
+
+
+def blob(col: pa.Array) -> np.ndarray:
+    """The bytes of a binary Arrow column, its values back to back
+    (zero-copy; null values hold no bytes)."""
+    offs_t = np.int64 if pa.types.is_large_binary(col.type) else np.int32
+    _, offs, data = col.buffers()
+    if data is None or not len(col):
+        return np.empty(0, np.uint8)
+    off = np.frombuffer(offs, offs_t)[col.offset:col.offset + len(col) + 1]
+    return np.frombuffer(data, np.uint8)[off[0]:off[-1]]
+
+
+def decode_blocks(rb: pa.RecordBatch, positions: bool = False):
+    """One Arrow batch of blocks -> flat (term_id, doc_id, tf, dl) int64
+    arrays, one entry per posting, and the positions flattened
+    run-major (None unless asked for). A column's varint streams lie
+    back to back in its data buffer, so each decodes in one pass over
+    the whole batch; doc gaps are summed per block by one cumsum minus
+    each block's base (int64 wraparound keeps that exact for hashed
+    doc_ids). A positions stream is [tf, first, deltas...] per posting:
+    the count slots sit at known offsets, so one mask drops them and
+    one segmented cumsum restores the positions."""
+    n = rb.column("n").to_numpy().astype(np.int64)
+    total = int(n.sum())
+    starts = np.cumsum(n) - n
+    gaps = varint_decode(blob(rb.column("docs")), total).astype(np.int64)
+    gaps += 1
+    gaps[starts] -= 1  # a block's first value is its raw first doc_id
+    cs = np.cumsum(gaps)
+    docs = cs - np.repeat(cs[starts] - gaps[starts], n)
+    tfs = varint_decode(blob(rb.column("tfs")), total).astype(np.int64) + 1
+    dls = varint_decode(blob(rb.column("dls")), total).astype(np.int64)
+    out = (np.repeat(rb.column("term_id").to_numpy(), n), docs, tfs, dls)
+    if not positions:
+        return out + (None,)
+    r0 = np.cumsum(tfs) - tfs  # each posting's first position, flat
+    vals = varint_decode(blob(rb.column("positions")),
+                         total + int(tfs.sum())).astype(np.int64)
+    keep = np.ones(vals.size, bool)
+    keep[r0 + np.arange(total)] = False  # the count slots
+    d = vals[keep]
+    c = np.cumsum(d)
+    return out + (c - np.repeat(c[r0] - d[r0], tfs),)
 
 
 def decode_block_docs(docs: bytes, n: int) -> np.ndarray:

@@ -16,28 +16,28 @@ doc_id ascending:
    the driver and doubles as the pytest ground truth.
 
 2. `search_blocks` / `Searcher`: the scale path over the
-   block-compressed posting table (index/build.py).
+   block-compressed posting table (index/build.py). Both decode blocks
+   with `codec.decode_blocks`.
 
-   `search_blocks` (and `Searcher(..., flat_cache=False)`) prunes the
-   scan to the query terms (term_id filter, plus the term_bucket
-   partition filter), and one mapInArrow kernel (`_topk_factory`) runs
-   over doc_range-partitioned blocks: it decodes each block once,
-   weights the impacts by idf, sums them per doc and keeps a local
-   top-k per query. A window rank (`search_blocks`) or a driver merge
-   (`Searcher`) then takes the global top-k. Every doc lives in exactly
-   one doc_range, so the union of the local top-ks holds the global
-   top-k. Multi-part indexes need no special case: a doc's postings
-   from several parts sum in the same per-doc accumulate.
+   `search_blocks` prunes the scan to the query terms (term_id filter,
+   plus the term_bucket partition filter), and one mapInArrow kernel
+   (`_topk_factory`) runs over doc_range-partitioned blocks: it decodes
+   each block once, weights the impacts by idf, sums them per doc and
+   keeps a local top-k per query; a window rank then takes the global
+   top-k. Every doc lives in exactly one doc_range, so the union of the
+   local top-ks holds the global top-k. Multi-part indexes need no
+   special case: a doc's postings from several parts sum in the same
+   per-doc accumulate.
 
-   `Searcher` by default opens a driver replica instead, in one Spark
-   job (the same block decode, then `toArrow()`): per posting a dense
-   int32 doc ordinal and the float64 contribution idf_t * impact, 12 B,
-   plus per-term offsets and an ordinal -> doc_id array. Every `search`
+   `Searcher` opens a driver replica instead, in one Spark job (the
+   same block decode, then `toArrow()`): per posting a dense int32 doc
+   ordinal and the float64 contribution idf_t * impact, 12 B, plus
+   per-term offsets and an ordinal -> doc_id array. Every `search`
    call, whatever its query count, runs in-process: gather the query
    terms' slices, sum per doc with one `np.bincount` over the ordinals,
    take the top-k. Ordinals follow doc_id order, so ties still break
    doc_id ascending, and each doc's contributions sum in the kernel's
-   term order, so the scores equal the kernel's.
+   term order, so the scores equal `search_blocks`'.
 
 The per-block `max_impact` metadata stays in the index format as the
 block-max upper bound (Ding & Suel 2011); no scorer prunes with it yet.
@@ -114,35 +114,11 @@ _BLOCK_COLS = ["term_id", "doc_range", "n", "docs", "tfs", "dls"]
 _SCORE_SCHEMA = "query_id int, doc_id long, score double"
 
 
-def _blob(col: pa.Array) -> np.ndarray:
-    """The bytes of a binary Arrow column, its values back to back."""
-    offs_t = np.int64 if pa.types.is_large_binary(col.type) else np.int32
-    _, offs, data = col.buffers()
-    if data is None or not len(col):
-        return np.empty(0, np.uint8)
-    off = np.frombuffer(offs, offs_t)[col.offset:col.offset + len(col) + 1]
-    return np.frombuffer(data, np.uint8)[off[0]:off[-1]]
-
-
 def _decode_impacts(rb: pa.RecordBatch, avgdl: float):
     """One Arrow batch of blocks -> flat (term_id, doc_id, impact)
-    arrays, one entry per posting. A column's varint streams lie back to
-    back in its data buffer, so each column decodes in one vectorized
-    pass over the whole batch; doc gaps are summed per block by one
-    cumsum minus each block's base (int64 wraparound keeps that exact
-    for hashed doc_ids)."""
-    n = rb.column("n").to_numpy().astype(np.int64)
-    total = int(n.sum())
-    starts = np.cumsum(n) - n
-    gaps = codec.varint_decode(_blob(rb.column("docs")), total).astype(np.int64)
-    gaps += 1
-    gaps[starts] -= 1  # a block's first value is its raw first doc_id
-    cs = np.cumsum(gaps)
-    docs = cs - np.repeat(cs[starts] - gaps[starts], n)
-    tfs = codec.varint_decode(_blob(rb.column("tfs")), total).astype(np.int64) + 1
-    dls = codec.varint_decode(_blob(rb.column("dls")), total).astype(np.int64)
-    return (np.repeat(rb.column("term_id").to_numpy(), n), docs,
-            codec.bm25_impact(tfs, dls, avgdl))
+    arrays, one entry per posting."""
+    tid, doc, tf, dl, _ = codec.decode_blocks(rb)
+    return tid, doc, codec.bm25_impact(tf, dl, avgdl)
 
 
 def _by_term(tid: np.ndarray, doc: np.ndarray, imp: np.ndarray):
@@ -206,16 +182,6 @@ def _qmaps(queries: list[list[str]], term_dfs: dict[int, int],
             for terms in queries]
 
 
-def _local_topk(blocks_df: DataFrame, qmaps: list[dict[int, float]],
-                k: int, avgdl: float) -> DataFrame:
-    """(query_id, doc_id, score): each query's top k in each partition of
-    `blocks_df`, which must hold every doc_range whole."""
-    tids = sorted({t for m in qmaps for t in m})
-    return (blocks_df.filter(F.col("term_id").isin(tids))
-            .select(*_BLOCK_COLS)
-            .mapInArrow(_topk_factory(qmaps, k, avgdl), _SCORE_SCHEMA))
-
-
 def search_blocks(postings: DataFrame, stats: CorpusStats,
                   queries: list[list[str]], k: int = 10,
                   n_buckets: int | None = None) -> DataFrame:
@@ -235,7 +201,8 @@ def search_blocks(postings: DataFrame, stats: CorpusStats,
         buckets = sorted({tid % n_buckets for tid in tids})
         scan = scan.filter(F.col("term_bucket").isin(buckets))
     qmaps = _qmaps(queries, collect_term_dfs(scan), stats.n_docs)
-    local = _local_topk(scan.repartition("doc_range"), qmaps, k, stats.avgdl)
+    local = (scan.repartition("doc_range").select(*_BLOCK_COLS)
+             .mapInArrow(_topk_factory(qmaps, k, stats.avgdl), _SCORE_SCHEMA))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (local.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k))
@@ -310,67 +277,29 @@ def _open_replica(postings: DataFrame, stats: CorpusStats):
 
 
 class Searcher:
-    """Serving-optimized index handle.
-
-    Default: a driver-resident `Replica` opened in one Spark job (the
-    blocks decoded on the executors, collected with `toArrow()`); no
-    block cache, no term-df job. Every `search` call, one query or a
-    thousand, then runs in-process over it: no Spark job, no py4j call,
-    no lock. The replica costs 12 B per posting of driver memory plus
-    per-term offsets and one doc_id per doc (2.6M postings at 20k docs:
-    about 30 MB). Per query the work is whole-array numpy: gather the
-    terms' slices, one `np.bincount` over all `n_docs` ordinals, a
-    partition-based top-k; a very sparse query over a very large index
-    would pay the O(n_docs) bincount, which no workload here does.
-
-    `flat_cache=False` keeps the distributed path: the scored block
-    columns cached re-partitioned by doc_range (one partition per core,
-    at most one per range, so every partition holds whole doc ranges),
-    the term dfs collected from them, and every query set scored by one
-    mapInArrow job of the top-k kernel (`_topk_factory`, shared with
-    `search_blocks`) whose tiny per-partition top-k lists the driver
-    merges. Both paths rank identically and give equal scores.
-    `close()` releases the block cache or the replica.
+    """Serving-optimized index handle: a driver-resident `Replica`
+    opened in one Spark job (the blocks decoded on the executors,
+    collected with `toArrow()`); no block cache, no term-df job. Every
+    `search` call, one query or a thousand, then runs in-process over
+    it: no Spark job, no py4j call, no lock. The replica costs 12 B per
+    posting of driver memory plus per-term offsets and one doc_id per
+    doc (2.6M postings at 20k docs: about 30 MB). Per query the work is
+    whole-array numpy: gather the terms' slices, one `np.bincount` over
+    all `n_docs` ordinals, a partition-based top-k; a very sparse query
+    over a very large index would pay the O(n_docs) bincount, which no
+    workload here does. Results rank identically to `search_blocks`,
+    with equal scores. `close()` releases the replica.
     """
 
-    def __init__(self, postings: DataFrame, stats: CorpusStats,
-                 flat_cache: bool = True):
+    def __init__(self, postings: DataFrame, stats: CorpusStats):
         self.stats = stats
-        self.df: DataFrame | None = None
-        self.flat: Replica | None = None
-        if flat_cache:
-            self.flat, self.term_dfs = _open_replica(postings, stats)
-        else:
-            # one task per doc_range shard (scatter width); more tasks
-            # than ranges only adds scheduling + worker roundtrips.
-            # Materialize the base FIRST so a freshly-built (lazy)
-            # postings plan executes once, then derive the range count
-            # from the cache instead of re-running the whole build.
-            base = postings.select(*_BLOCK_COLS).persist()
-            base.count()
-            n_rng = base.select("doc_range").distinct().count()
-            n_partitions = max(1, min(
-                postings.sparkSession.sparkContext.defaultParallelism, n_rng))
-            self.df = base.repartition(n_partitions, "doc_range").persist()
-            self.df.count()
-            base.unpersist()
-            self.term_dfs = collect_term_dfs(self.df)
+        self.flat, self.term_dfs = _open_replica(postings, stats)
         release_build(postings)
 
     def close(self) -> None:
-        """Release the block cache or the driver replica."""
-        if self.df is not None:
-            self.df.unpersist()
+        """Release the driver replica."""
         self.flat = None
 
     def search(self, queries: list[list[str]], k: int = 10) -> list[list[tuple[int, float]]]:
         """Top-k per query: [(doc_id, score) ranked] per input query."""
-        if self.flat is not None:
-            return [self.flat.topk(_qterms(q, self.term_dfs), k) for q in queries]
-        qmaps = _qmaps(queries, self.term_dfs, self.stats.n_docs)
-        if not any(qmaps):
-            return [[] for _ in queries]
-        merged: list[list[tuple[int, float]]] = [[] for _ in queries]
-        for r in _local_topk(self.df, qmaps, k, self.stats.avgdl).collect():
-            merged[r["query_id"]].append((r["doc_id"], r["score"]))
-        return [sorted(c, key=lambda t: (-t[1], t[0]))[:k] for c in merged]
+        return [self.flat.topk(_qterms(q, self.term_dfs), k) for q in queries]

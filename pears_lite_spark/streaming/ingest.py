@@ -6,10 +6,11 @@ matrix + positional index per doc and making it immediately searchable
 The Spark-native equivalent is micro-batch ingestion: Structured
 Streaming over the corpus directory, `foreachBatch` building an index
 SEGMENT per micro-batch (part = batch_id), appended next to earlier
-segments. Queries see the union immediately (the WAND scorer handles
-multi-part segments); `checkpoint.compact_index` merges segments, so
-the steady state is the same LSM-ish segment+merge lifecycle real
-search engines use — but every step is a declarative Spark job.
+segments. Queries see the union immediately (the block scorers sum a
+doc's postings from every segment); `checkpoint.compact_index` merges
+segments, so the steady state is the same LSM-ish segment+merge
+lifecycle real search engines use — but every step is a declarative
+Spark job.
 
 Late data needs no watermark here (an inverted index has no event-time
 aggregation — `warc_ts` rides along for snapshot/dedup ordering), so

@@ -31,6 +31,16 @@ def index(spm_tokens_df):
     return postings.persist(), stats
 
 
+def _blocks_ranked(postings, stats, queries, k=10):
+    """search_blocks' answer in Searcher.search's shape: [(doc_id,
+    score) ranked] per query."""
+    out = [[] for _ in queries]
+    for r in sorted(search_blocks(postings, stats, queries, k=k).collect(),
+                    key=lambda r: (r["query_id"], r["rank"])):
+        out[r["query_id"]].append((r["doc_id"], r["score"]))
+    return out
+
+
 def test_wand_rank_identity_vs_oracle(index, oracle_docs, query_pieces):
     postings, stats = index
     queries = [p for _, p in query_pieces]
@@ -109,8 +119,8 @@ def test_hot_term_salting_equivalence(spm_tokens_df, oracle_docs,
 
 def test_searcher_scatter_gather_rank_identity(index, oracle_docs,
                                                query_pieces):
-    """The serving path (doc_range-partitioned cache, one mapInArrow
-    stage, driver merge) must match the oracle exactly."""
+    """The serving path (the driver replica, every query in one call)
+    must match the oracle exactly."""
     from pears_lite_spark.search.bm25 import Searcher
     postings, stats = index
     s = Searcher(postings, stats)
@@ -126,15 +136,13 @@ def test_searcher_scatter_gather_rank_identity(index, oracle_docs,
 def test_flat_jvm_path_rank_identity(index, oracle_docs, query_pieces):
     """Single queries on the driver replica (no Spark job in the loop)
     must rank identically to the numpy oracle AND to the distributed
-    mapInArrow kernel (`flat_cache=False`)."""
+    mapInArrow kernel (`search_blocks`)."""
     from pears_lite_spark.search.bm25 import Searcher
     postings, stats = index
     s = Searcher(postings, stats)
     assert s.flat is not None
     queries = [p for _, p in query_pieces]
-    kernel = Searcher(postings, stats, flat_cache=False)
-    batch = kernel.search(queries, k=10)
-    kernel.close()
+    batch = _blocks_ranked(postings, stats, queries)
     for (q, pieces), via_batch in zip(query_pieces, batch):
         one = s.search([pieces], k=10)[0]
         exp = bm25_topk_oracle(oracle_docs, pieces, 10)
@@ -142,14 +150,6 @@ def test_flat_jvm_path_rank_identity(index, oracle_docs, query_pieces):
         assert [d for d, _ in one] == [d for d, _ in via_batch], q
         for (gd, gs), (ed, es) in zip(one, exp):
             assert gs == pytest.approx(es, abs=1e-6), q
-
-
-def test_flat_path_disabled_falls_back(index, query_pieces):
-    from pears_lite_spark.search.bm25 import Searcher
-    postings, stats = index
-    s = Searcher(postings, stats, flat_cache=False)
-    assert s.flat is None
-    assert s.search([query_pieces[0][1]], k=3)[0]  # batch kernel serves
 
 
 def test_concurrent_flat_queries_rank_identical(index, oracle_docs,
@@ -194,15 +194,15 @@ def test_concurrent_flat_queries_rank_identical(index, oracle_docs,
 
 def test_flat_path_launches_no_spark_job(index, query_pieces):
     """One call with every query on the driver replica launches no
-    Spark job, while the same call without the replica runs the batch
-    kernel; the replica's results equal the kernel's for every query,
-    a zero-hit (no terms), an OOV and repeated-term queries included,
-    and a single query equals its slot in the all-queries call."""
+    Spark job, while the same queries through `search_blocks` run the
+    batch kernel; the replica's results equal the kernel's for every
+    query, a zero-hit (no terms), an OOV and repeated-term queries
+    included, and a single query equals its slot in the all-queries
+    call."""
     from pears_lite_spark.search.bm25 import Searcher
     postings, stats = index
     sc = postings.sparkSession.sparkContext
     s = Searcher(postings, stats)
-    no_flat = Searcher(postings, stats, flat_cache=False)
     pieces0 = query_pieces[0][1]
     queries = [p for _, p in query_pieces] + [
         [], ["▁zzzznothere"], ["▁the", "▁the"], pieces0 + pieces0]
@@ -211,7 +211,7 @@ def test_flat_path_launches_no_spark_job(index, query_pieces):
         sc.setJobGroup("replica-all", "replica-all")
         got = s.search(queries, k=10)
         sc.setJobGroup("kernel-all", "kernel-all")
-        want = no_flat.search(queries, k=10)
+        want = _blocks_ranked(postings, stats, queries)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -231,7 +231,6 @@ def test_flat_path_launches_no_spark_job(index, query_pieces):
     for pieces, via_all in zip(queries, got):
         assert s.search([pieces], k=10)[0] == via_all, pieces
     s.close()
-    no_flat.close()
 
 
 def test_replica_layout(index):
@@ -298,8 +297,8 @@ def test_replica_ties_at_kth_score(spark):
 
 @pytest.mark.parametrize("case", ["vocab_filter_drops_all", "no_docs"])
 def test_searcher_over_empty_index(spark, spm_tokens_df, query_pieces, case):
-    """An index without postings serves [] per query on the flat path
-    (an empty replica) and on the batch kernel."""
+    """An index without postings serves [] per query on the replica
+    (empty) and on the batch kernel (`search_blocks`)."""
     from pears_lite_spark.search.bm25 import Searcher
     if case == "no_docs":
         postings, stats = build_postings(spark.createDataFrame(
@@ -314,6 +313,4 @@ def test_searcher_over_empty_index(spark, spm_tokens_df, query_pieces, case):
     assert s.search(queries[:1], k=10) == [[]]                # replica
     assert s.search(queries, k=10) == [[] for _ in queries]   # replica
     s.close()
-    b = Searcher(postings, stats, flat_cache=False)
-    assert b.search(queries[:1], k=10) == [[]]
-    b.close()
+    assert _blocks_ranked(postings, stats, queries[:1]) == [[]]

@@ -274,7 +274,9 @@ def test_index_delta_consumes_table_versions(spark, capsys, tmp_path):
     """Snapshot commits in -> index segments out: the delta indexer
     baselines on the current snapshot, then each run indexes only the
     appended rows; re-running is a no-op; refresh_stats recovers exact
-    totals across segments."""
+    totals across segments; `compact --refresh-stats` turns the two
+    segments into a fresh build's index, one file per term bucket."""
+    import glob
     import json as _json
     from pears_lite_spark import jobs
     from pears_lite_spark.corpus import gen_corpus
@@ -318,10 +320,33 @@ def test_index_delta_consumes_table_versions(spark, capsys, tmp_path):
     stats = refresh_stats(spark, idx)
     assert stats.n_docs == 30
     # and it serves: every doc's url token is findable via BM25
-    from pears_lite_spark.search.bm25 import Searcher
-    s = Searcher(postings, stats, flat_cache=False)
-    hits = s.search([["the"]], k=30)[0]
+    from pears_lite_spark.search.bm25 import search_blocks
+    hits = search_blocks(postings, stats, [["the"]], k=30).collect()
     assert len(hits) > 0
+
+    # compaction through the CLI equals a fresh build of the 30 docs
+    from pears_lite_spark.index.build import (build_postings, read_index,
+                                              tokenize_whitespace,
+                                              with_doc_id)
+    out = str(tmp_path / "compacted")
+    r4 = run(["compact", "--index", idx, "--output", out,
+              "--refresh-stats"])
+    assert r4["job"] == "compact" and r4["n_docs"] == 30
+    cp, cstats = read_index(spark, out)
+    fresh, fstats = build_postings(tokenize_whitespace(
+        with_doc_id(spark.createDataFrame(full))).select("doc_id", "tokens"))
+    assert cstats.n_docs == fstats.n_docs
+    assert cstats.avgdl == pytest.approx(fstats.avgdl, abs=1e-12)
+    queries = [["the"], ["page", "example"], ["zzzznothere"]]
+
+    def ranked(p, st):
+        return sorted(search_blocks(p, st, queries, k=30).collect())
+    assert ranked(cp, cstats) == ranked(fresh, fstats) != []
+    # bucket-major: each term_bucket directory holds one file
+    buckets = glob.glob(os.path.join(out, "term_bucket=*"))
+    assert buckets
+    for b in buckets:
+        assert len(glob.glob(os.path.join(b, "*.parquet"))) == 1, b
 
 
 # ------------------------------------------------ model-based random ops

@@ -48,6 +48,37 @@ def test_postings_roundtrip(n, seed):
     assert i == n
 
 
+@pytest.mark.parametrize("seed", [0, 1])
+def test_decode_blocks_matches_reference(seed):
+    """The batch decoder over an Arrow slice of many terms' blocks
+    (hashed-style doc_ids of both signs) gives the reference decoder's
+    postings and positions, flattened in block order."""
+    import pyarrow as pa
+    rng = np.random.default_rng(seed)
+    rows, want = [], []
+    for term in range(-2, 4):
+        n = int(rng.integers(1, 300))
+        docs = np.sort(rng.choice(np.arange(-2**62, 2**62, 2**50,
+                                            dtype=np.int64), n, replace=False))
+        tfs = rng.integers(1, 6, n)
+        dls = rng.integers(5, 50, n)
+        poss = [np.sort(rng.choice(60, t, replace=False)) for t in tfs]
+        for b in codec.encode_postings(docs, tfs, dls, 20.0, positions=poss):
+            lo = b.block_id * codec.BLOCK_SIZE
+            dl = codec.varint_encode(dls[lo:lo + b.n].astype(np.uint64))
+            rows.append((term, b.n, b.docs, b.tfs, dl, b.positions))
+            want.append((np.full(b.n, term), docs[lo:lo + b.n],
+                         tfs[lo:lo + b.n], dls[lo:lo + b.n],
+                         np.concatenate(poss[lo:lo + b.n])))
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array([r[i] for r in rows]) for i in range(6)],
+        names=["term_id", "n", "docs", "tfs", "dls", "positions"]).slice(1)
+    got = codec.decode_blocks(rb, positions=True)
+    for g, w in zip(got, zip(*want[1:])):
+        assert np.array_equal(g, np.concatenate(w))
+    assert codec.decode_blocks(rb)[4] is None
+
+
 def test_blockmax_upper_bounds_scores():
     """block-max must upper-bound every contained posting's impact."""
     rng = np.random.default_rng(7)

@@ -40,8 +40,8 @@ def test_build_then_query_cli(spark, capsys, corpus_path, tmp_path):
     assert built["n_docs"] > 0 and built["avgdl"] > 0
     assert os.path.isdir(idx)
 
-    # query the index it just wrote; hits must be rank-identical to a
-    # directly-constructed Searcher over the same postings
+    # query the index it just wrote; hits must be rank-identical to
+    # search_blocks over the same postings
     qfile = tmp_path / "queries.txt"
     qfile.write_text("the of\nand\n", encoding="utf-8")
     res = _run_cli(capsys, ["query", "--index", idx,
@@ -49,13 +49,15 @@ def test_build_then_query_cli(spark, capsys, corpus_path, tmp_path):
                             "--tokenizer", "ws", "--k", "5"])
     assert res["job"] == "query" and res["n_queries"] == 2
     from pears_lite_spark.index.build import read_index
-    from pears_lite_spark.search.bm25 import Searcher
+    from pears_lite_spark.search.bm25 import search_blocks
     postings, stats = read_index(spark, idx)
-    direct = Searcher(postings, stats, flat_cache=False).search(
-        [["the", "of"], ["and"]], k=5)
-    for cli_q, want in zip(res["results"], direct):
+    direct = search_blocks(postings, stats, [["the", "of"], ["and"]],
+                           k=5).collect()
+    for qid, cli_q in enumerate(res["results"]):
         got = [(h["doc_id"], round(h["score"], 6)) for h in cli_q["hits"]]
-        assert got == [(d, round(s, 6)) for d, s in want]
+        want = sorted((r["rank"], r["doc_id"], round(r["score"], 6))
+                      for r in direct if r["query_id"] == qid)
+        assert got == [(d, s) for _, d, s in want]
 
 
 def test_pipeline_cli_all_gates(spark, capsys, corpus_path, tmp_path):

@@ -43,14 +43,13 @@ def test_resume_after_injected_failure(spark, tokens, tmp_path):
     p2, s2 = read_resumable(spark, partial)
     resumed = _results(p2, s2)
     assert _results(p1, s1) == resumed
-    # the Searcher over the multi-part index, flat path and batch kernel
+    # the Searcher's replica over the multi-part index
     from pears_lite_spark.search.bm25 import Searcher
-    for flat_cache in (True, False):
-        s = Searcher(p2, s2, flat_cache=flat_cache)
-        got = [(qid, d, round(sc, 9)) for qid, hits in
-               enumerate(s.search(QUERIES, k=10)) for d, sc in hits]
-        s.close()
-        assert got == resumed, flat_cache
+    s = Searcher(p2, s2)
+    got = [(qid, d, round(sc, 9)) for qid, hits in
+           enumerate(s.search(QUERIES, k=10)) for d, sc in hits]
+    s.close()
+    assert got == resumed
     # byte-identical partition content (deterministic encoding)
     cols = ["term_id", "doc_range", "block_id", "first_doc", "last_doc",
             "n", "docs", "tfs", "dls"]
@@ -94,6 +93,25 @@ def test_compaction_equivalence(spark, tokens, tmp_path):
     per = (compacted.groupBy("term_id", "doc_range", "block_id").count()
            .filter(F.col("count") > 1).count())
     assert per == 0
+    # a fresh build's bytes, also from parts built without positions
+    # (null positions on both sides) or cut with another range_shift
+    cols = ["term_id", "doc_range", "block_id", "first_doc", "last_doc",
+            "n", "max_impact", "docs", "tfs", "dls", "positions"]
+    fresh, _ = build_postings(tokens, stats=stats)
+    assert _block_frame(compacted, cols).equals(_block_frame(fresh, cols))
+    # (hashed doc_ids, so range_shift 61 cuts 8 ranges, the default 2)
+    hashed = tokens.withColumn("doc_id", F.xxhash64("doc_id"))
+    for name, toks, kw in (("no_positions", tokens, {"with_positions": False}),
+                           ("range_shift_61", hashed, {"range_shift": 61})):
+        path = str(tmp_path / name)
+        build_resumable(toks, path, n_parts=4, **kw)
+        parts, pstats = read_resumable(spark, path)
+        fresh, _ = build_postings(
+            toks, stats=pstats, with_positions=kw.get("with_positions", True))
+        want = _block_frame(fresh, cols)
+        assert len(want) > 0
+        assert _block_frame(compact_index(parts, pstats), cols).equals(want), name
+    assert parts.select("doc_range").distinct().count() == 8
 
 
 def test_streaming_segments_match_batch(spark, tmp_path):
@@ -299,7 +317,10 @@ def test_edge_corpus_fused_matches_tokens_path(spark):
 def test_stream_refresh_compact_equals_fresh_build(spark, tmp_path):
     """Drain with a WRONG frozen seed (N, avgdl) -> refresh_stats ->
     compact must equal a fresh batch build byte-for-byte: long-running
-    ingest no longer drifts BM25 impacts (VERDICT r01 item 9)."""
+    ingest no longer drifts BM25 impacts (VERDICT r01 item 9). In the
+    second round the last file repeats three URLs of the first, so
+    three doc_ids sit in two segments: compaction must merge them as
+    the fresh build does."""
     import shutil
     from pears_lite_spark.corpus import gen_corpus
     from pears_lite_spark.index.build import (CorpusStats, build_postings,
@@ -308,48 +329,50 @@ def test_stream_refresh_compact_equals_fresh_build(spark, tmp_path):
                                                    stats_from_blocks)
     from pears_lite_spark.streaming.ingest import stream_build
 
-    corpus_dir = str(tmp_path / "rc_corpus")
-    os.makedirs(corpus_dir)
-    pdf = gen_corpus(90)
-    for i in range(3):
-        chunk = spark.createDataFrame(pdf.iloc[i * 30:(i + 1) * 30])
-        chunk.coalesce(1).write.mode("overwrite").parquet(
-            str(tmp_path / f"rc{i}"))
-        src = glob.glob(str(tmp_path / f"rc{i}" / "*.parquet"))[0]
-        shutil.move(src, os.path.join(corpus_dir, f"file{i}.parquet"))
+    for n_rep in (0, 3):
+        corpus_dir = str(tmp_path / f"rc_corpus{n_rep}")
+        os.makedirs(corpus_dir)
+        pdf = gen_corpus(90)
+        pdf.loc[60:59 + n_rep, "url"] = pdf["url"][:n_rep].values
+        for i in range(3):
+            chunk = spark.createDataFrame(pdf.iloc[i * 30:(i + 1) * 30])
+            chunk.coalesce(1).write.mode("overwrite").parquet(
+                str(tmp_path / f"rc{n_rep}_{i}"))
+            src = glob.glob(str(tmp_path / f"rc{n_rep}_{i}" / "*.parquet"))[0]
+            shutil.move(src, os.path.join(corpus_dir, f"file{i}.parquet"))
 
-    idx = str(tmp_path / "rc_idx")
-    seed = CorpusStats(n_docs=30, avgdl=10.0)  # deliberately wrong
-    stream_build(spark, corpus_dir, idx, seed,
-                 lambda d: tokenize_whitespace(d))
+        idx = str(tmp_path / f"rc_idx{n_rep}")
+        seed = CorpusStats(n_docs=30, avgdl=10.0)  # deliberately wrong
+        stream_build(spark, corpus_dir, idx, seed,
+                     lambda d: tokenize_whitespace(d))
 
-    stats = refresh_stats(spark, idx)
-    sp, sstats = read_resumable(spark, idx)
-    assert sstats.n_docs == stats.n_docs  # _stats.json rewritten
+        stats = refresh_stats(spark, idx)
+        sp, sstats = read_resumable(spark, idx)
+        assert sstats.n_docs == stats.n_docs  # _stats.json rewritten
 
-    batch_docs = with_doc_id(spark.read.parquet(corpus_dir))
-    toks = tokenize_whitespace(batch_docs).select("doc_id", "tokens").cache()
-    true_stats = corpus_stats(toks)
-    assert stats.n_docs == true_stats.n_docs
-    assert stats.avgdl == pytest.approx(true_stats.avgdl, abs=1e-12)
-    # block-decode recovery path agrees with the manifest path
-    blk = stats_from_blocks(sp)
-    assert (blk.n_docs, blk.avgdl) == (stats.n_docs,
-                                       pytest.approx(stats.avgdl, abs=1e-12))
+        batch_docs = with_doc_id(spark.read.parquet(corpus_dir))
+        toks = tokenize_whitespace(batch_docs).select("doc_id", "tokens").cache()
+        true_stats = corpus_stats(toks)
+        assert stats.n_docs == true_stats.n_docs
+        assert stats.avgdl == pytest.approx(true_stats.avgdl, abs=1e-12)
+        # block-decode recovery path agrees with the manifest path
+        blk = stats_from_blocks(sp)
+        assert (blk.n_docs, blk.avgdl) == (stats.n_docs,
+                                           pytest.approx(stats.avgdl, abs=1e-12))
 
-    compacted = compact_index(sp, stats).persist()
-    fresh, _ = build_postings(toks, stats=true_stats)
-    key = ["term_id", "doc_range", "block_id"]
-    cols = ["first_doc", "last_doc", "n", "max_impact",
-            "docs", "tfs", "dls", "positions"]
-    o = fresh.select(*key, *cols)
-    nw = compacted.select(*key, *[F.col(c).alias(c + "_n") for c in cols])
-    j = o.join(nw, key, "full_outer")
-    cond = F.col("n").isNull() | F.col("n_n").isNull()
-    for c in cols:
-        cond = cond | (F.col(c) != F.col(c + "_n"))
-    assert j.filter(cond).count() == 0
-    assert o.count() == compacted.count() > 0
+        compacted = compact_index(sp, stats).persist()
+        fresh, _ = build_postings(toks, stats=true_stats)
+        key = ["term_id", "doc_range", "block_id"]
+        cols = ["first_doc", "last_doc", "n", "max_impact",
+                "docs", "tfs", "dls", "positions"]
+        o = fresh.select(*key, *cols)
+        nw = compacted.select(*key, *[F.col(c).alias(c + "_n") for c in cols])
+        j = o.join(nw, key, "full_outer")
+        cond = F.col("n").isNull() | F.col("n_n").isNull()
+        for c in cols:
+            cond = cond | (F.col(c) != F.col(c + "_n"))
+        assert j.filter(cond).count() == 0
+        assert o.count() == compacted.count() > 0
 
 
 def test_stateful_sessionize_matches_batch_session_window(spark, tmp_path):

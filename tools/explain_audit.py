@@ -356,6 +356,27 @@ def main(sf_dir: str):
           f"global token cumsum parallelizes O(num_buckets) instead of "
           f"one task, and the offsets branch touches only per-bucket "
           f"totals: {'OK' if ok15 else 'NO'}\n")
+
+    # 21. compaction: blocks decode into runs that the build's phase B
+    # merges (one exchange, no grouped pandas UDF)
+    import shutil
+    from pears_lite_spark.index.checkpoint import (build_resumable,
+                                                   compact_index,
+                                                   read_resumable)
+    res_path = "/tmp/pears_plan_resumable"
+    shutil.rmtree(res_path, ignore_errors=True)
+    build_resumable(toks, res_path, n_parts=2)
+    t = explain(compact_index(*read_resumable(spark, res_path)))
+    n_exch = len(re.findall(r"^\(\d+\) Exchange", t, re.M))
+    n_arrow = len(re.findall(r"^\(\d+\) MapInArrow", t, re.M))
+    n_groups = len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas", t, re.M))
+    print("## 21. Compaction: the build's phase B, one exchange\n")
+    print(f"```\nnon-broadcast Exchange count: {n_exch}, MapInArrow count: "
+          f"{n_arrow}, FlatMapGroupsInPandas count: {n_groups}\n```\n")
+    ok21 = n_exch == 1 and n_groups == 0
+    print(f"compact_index decodes blocks into posting runs (one "
+          f"mapInArrow) and merges them in the build's phase B, with no "
+          f"grouped pandas UDF: {'OK' if ok21 else 'CHECK'}\n")
     spark.stop()
 
 
