@@ -32,32 +32,46 @@ def corpus_path(spark, tmp_path_factory):
     return p
 
 
-def test_build_then_query_cli(spark, capsys, corpus_path, tmp_path):
-    idx = str(tmp_path / "idx")
-    built = _run_cli(capsys, ["build", "--input", corpus_path,
-                              "--output", idx, "--tokenizer", "ws"])
-    assert built["job"] == "build"
-    assert built["n_docs"] > 0 and built["avgdl"] > 0
-    assert os.path.isdir(idx)
-
-    # query the index it just wrote; hits must be rank-identical to
-    # search_blocks over the same postings
+@pytest.mark.parametrize("extra", [[], ["--resume", "--n-parts", "3"]],
+                         ids=["fused", "resumable"])
+def test_build_then_query_cli(spark, capsys, corpus_path, tmp_path, extra):
+    """Build with the given options (and, for a non-default build, the
+    fused build beside it), then query each index through the CLI: the
+    `query` subcommand reads either layout through `_read_any_index`.
+    Its hits must be rank-identical to search_blocks over the same
+    postings, and the resumable build's hits to the fused build's."""
+    from pears_lite_spark import jobs
+    from pears_lite_spark.search.bm25 import search_blocks
     qfile = tmp_path / "queries.txt"
     qfile.write_text("the of\nand\n", encoding="utf-8")
-    res = _run_cli(capsys, ["query", "--index", idx,
-                            "--queries", str(qfile),
-                            "--tokenizer", "ws", "--k", "5"])
-    assert res["job"] == "query" and res["n_queries"] == 2
-    from pears_lite_spark.index.build import read_index
-    from pears_lite_spark.search.bm25 import search_blocks
-    postings, stats = read_index(spark, idx)
-    direct = search_blocks(postings, stats, [["the", "of"], ["and"]],
-                           k=5).collect()
-    for qid, cli_q in enumerate(res["results"]):
-        got = [(h["doc_id"], round(h["score"], 6)) for h in cli_q["hits"]]
-        want = sorted((r["rank"], r["doc_id"], round(r["score"], 6))
-                      for r in direct if r["query_id"] == qid)
-        assert got == [(d, s) for _, d, s in want]
+    builds = {"fused": []}
+    if extra:
+        builds["other"] = extra
+    hits = {}
+    for name, opts in builds.items():
+        idx = str(tmp_path / name)
+        built = _run_cli(capsys, ["build", "--input", corpus_path,
+                                  "--output", idx, "--tokenizer", "ws",
+                                  *opts])
+        assert built["job"] == "build" and built["resume"] == bool(opts)
+        assert built["n_docs"] > 0 and built["avgdl"] > 0
+        assert any(f.startswith("manifest_")
+                   for f in os.listdir(idx)) == bool(opts)
+        res = _run_cli(capsys, ["query", "--index", idx,
+                                "--queries", str(qfile),
+                                "--tokenizer", "ws", "--k", "5"])
+        assert res["job"] == "query" and res["n_queries"] == 2
+        postings, stats = jobs._read_any_index(spark, idx)
+        direct = search_blocks(postings, stats, [["the", "of"], ["and"]],
+                               k=5).collect()
+        hits[name] = [[(h["doc_id"], round(h["score"], 6))
+                       for h in cli_q["hits"]] for cli_q in res["results"]]
+        for qid, got in enumerate(hits[name]):
+            want = sorted((r["rank"], r["doc_id"], round(r["score"], 6))
+                          for r in direct if r["query_id"] == qid)
+            assert got == [(d, s) for _, d, s in want]
+    assert all(h == hits["fused"] for h in hits.values())
+    assert all(hits["fused"])
 
 
 def test_pipeline_cli_all_gates(spark, capsys, corpus_path, tmp_path):

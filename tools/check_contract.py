@@ -91,7 +91,7 @@ def main():
     results: dict = {}
     import __spark_entry__ as entrymod
     from pears_lite_spark.session import get_spark
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

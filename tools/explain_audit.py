@@ -29,13 +29,13 @@ def grab(text: str, *needles: str) -> list[str]:
 
 
 def main(sf_dir: str):
-    from bench import make_session
     from pyspark.sql import functions as F
     from pears_lite_spark.index.build import (build_postings, read_index,
                                               tokenize_whitespace,
                                               write_index, write_plan)
     from pears_lite_spark.search.bm25 import bm25_topk, search_blocks
-    spark = make_session(8)
+    from pears_lite_spark.session import get_spark
+    spark = get_spark(master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
 

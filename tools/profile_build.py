@@ -1,7 +1,10 @@
-"""Per-phase build profiling at one parallelism level (subprocess per
-level, same protocol as bench.timed_build).
+"""Per-phase build profiling at one parallelism level.
 
-    python tools/profile_build.py <cores> [corpus_path]
+    python tools/profile_build.py <cores> <corpus_path>
+
+corpus_path is a parquet corpus with url and html columns, such as one
+`corpus.write_corpus_parquet` writes or the bench corpus
+(.perfbench/cache/d99000_f64_s42/corpus, generated by `python bench.py`).
 
 Phases: ingest (extract+tokenize, materialized via persist+count),
 stats (agg over persisted tokens), encode (phase-A mapInPandas ->
@@ -19,10 +22,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main(cores: int, cpath: str):
-    from bench import make_session
     from pears_lite_spark.index.build import (build_postings, corpus_stats,
                                               ingest_tokens, write_index)
-    spark = make_session(cores)
+    from pears_lite_spark.session import get_spark
+    spark = get_spark(master=f"local[{cores}]", shuffle_partitions=cores)
     spark.sparkContext.setLogLevel("ERROR")
     # warm python workers
     warm = spark.read.parquet(cpath).limit(40 * cores).repartition(2 * cores)
@@ -50,7 +53,6 @@ def main(cores: int, cpath: str):
 
 
 if __name__ == "__main__":
-    cores = int(sys.argv[1])
-    cpath = sys.argv[2] if len(sys.argv) > 2 else \
-        "/tmp/pears_bench_corpus_100000_f64.parquet"
-    main(cores, cpath)
+    if len(sys.argv) != 3:
+        sys.exit(__doc__)
+    main(int(sys.argv[1]), sys.argv[2])
