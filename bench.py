@@ -6,9 +6,10 @@ N-vs-4N strong-scaling efficiency, measured with perfbench's code
 
 Two legs, each a child process `python bench.py --leg <cores>` with its
 own JVM, at `session.default_cpus()` cores and at a quarter of that.
-Each leg warms up with a build over its first `cores` files, then times
-BUILDS fused builds (build_from_corpus + write_index) of the whole
-corpus. The high leg then opens a Searcher on its index and times one
+Each leg warms up with one fused build (build_from_corpus + write_index)
+of the whole corpus, as perfbench's bulk-build does (a smaller warm-up
+left the first timed build every leg's slowest), then times BUILDS such
+builds. The high leg then opens a Searcher on its index and times one
 call over the whole query set (after an untimed one), each query once
 on its own (after a warm pass), and a closed loop of nproc clients.
 
@@ -51,7 +52,9 @@ def leg(cores: int, serve: bool) -> dict:
     out: dict = {"cores": cores}
     try:
         inp = r.open_inputs(CORPUS, cores)
-        r.fused_build(inp.files[:cores], r.path("warmup"), None)
+        t = time.perf_counter()
+        r.fused_build([inp.corpus_dir], r.path("warmup"), None)
+        out["warmup_s"] = time.perf_counter() - t
         idx, walls = r.path("index"), []
         for i in range(BUILDS):
             with host_leg(r.legs, f"build{i}"):

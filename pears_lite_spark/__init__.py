@@ -14,3 +14,9 @@ Python in any hot path.
 """
 
 __version__ = "0.1.0"
+
+# a Python worker imports the package when it unpickles an engine
+# kernel, so its later tasks skip the per-task zip rescans
+from .session import skip_unchanged_zip_rescans
+
+skip_unchanged_zip_rescans()

@@ -12,7 +12,7 @@ shuffle of packed bytes:
              binary-blob rows per target slot, plus per-flush doc stats
            --repartition(bijective slot key)-->
            --mapInArrow (phase B) merge + delta/varint/block-max encode
-           --sortWithinPartitions + partitionBy(term_bucket) write
+           --sortWithinPartitions + write, one file per task
              (same stage as phase B: no second exchange)
 
 Why not posexplode + repartition + sortWithinPartitions? Measured on
@@ -28,34 +28,33 @@ they differ only in how a batch yields its (doc_id, tokens) pairs —
 as given, or through the extract/hash/tokenize loop (_extracted) that
 ingest_tokens also runs.
 
-The slot key is bucket-major (`_slot_of`): each phase-B partition
-holds whole term_buckets (or one bucket's share, with more slots than
-buckets), so the write reuses phase B's partitioning as it stands —
-one file per bucket per task, one exchange per build.
+The slot key (`_slot_of`) mixes (term_id, doc_range), so a group's
+runs meet in one phase-B partition, and the write takes phase B's
+partitioning as it stands: each task sorts its blocks by (term_id,
+doc_range, block_id) and writes one file — one exchange per build.
 
 Skew strategy (SURVEY.md §4): hot terms (stopword-like pieces) would
-overload a single reducer in a naive groupBy(term). Inside a bucket's
-slot group the slot is picked by mixing (term_id, doc_range) where
-doc_range = shiftright(doc_id, range_shift) — an ORDER-PRESERVING,
-TERM-ALIGNED salt: a hot term's postings split across bounded
-~MAX_RANGE_DOCS-doc groups, doc_id order (and hence delta encoding)
-survives because shiftright is monotone, and every term is cut at the
-same doc boundaries so the block scorer can partition by doc_range. With
-fewer slots than buckets a term's groups share its bucket's slot, and
-buckets spread over slots at most ceil(n_buckets / n_slots) :
-floor(n_buckets / n_slots). AQE skew-join stays on as a second line of
-defense.
+overload a single reducer in a naive groupBy(term). The doc_range in
+the slot mix, doc_range = shiftright(doc_id, range_shift), is an
+ORDER-PRESERVING, TERM-ALIGNED salt: a hot term's postings split
+across bounded ~MAX_RANGE_DOCS-doc groups that land on different
+slots, doc_id order (and hence delta encoding) survives because
+shiftright is monotone, and every term is cut at the same doc
+boundaries so the block scorer can partition by doc_range. AQE
+skew-join stays on as a second line of defense.
 
 The physical layout is one row per posting BLOCK:
 (term_id, doc_range, block_id, first_doc, last_doc, n, max_impact,
- docs, tfs, dls, positions) partitioned on term_bucket =
-pmod(term_id, n_buckets) so a query's scan prunes to q_terms buckets.
+ docs, tfs, dls, positions), every file sorted by (term_id,
+doc_range, block_id) so a query's `term_id IN (...)` filter prunes
+row groups by their Parquet min/max statistics.
 The term string lives in a separate (term, term_id, df) dictionary
 (`term_dictionary`), computed JVM-side.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 from collections.abc import Iterator
@@ -69,8 +68,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..vocab import get_vocab
 from . import codec
-
-DEFAULT_N_BUCKETS = 64
 
 POSTING_SCHEMA = T.StructType([
     T.StructField("term_id", T.LongType()),
@@ -333,21 +330,13 @@ _PARTIAL_SCHEMA = T.StructType([
 _MIX = np.uint64(0x9E3779B97F4A7C15)
 
 
-def _slot_of(term_ids: np.ndarray, doc_ranges: np.ndarray, n_slots: int,
-             n_buckets: int) -> np.ndarray:
-    """Bucket-major merge slot of each (term_id, doc_range) group.
-
-    The write's term_bucket, pmod(term_id, n_buckets), picks a group of
-    g = ceil(n_slots / n_buckets) slots; the (term_id, doc_range) mix
-    picks one slot inside it. With n_slots <= n_buckets every slot owns
-    whole buckets, so phase B's output is already clustered by bucket
-    and write_index needs no exchange; with more slots than buckets a
-    bucket spreads over g slots and the doc_range salt still splits a
-    hot term's groups across them."""
-    g = -(-n_slots // n_buckets)
-    mix = (term_ids.astype(np.uint64) * _MIX ^ doc_ranges.astype(np.uint64)
-           ) % np.uint64(g)
-    return ((term_ids % n_buckets) * g + mix.astype(np.int64)) % n_slots
+def _slot_of(term_ids: np.ndarray, doc_ranges: np.ndarray,
+             n_slots: int) -> np.ndarray:
+    """Merge slot of each (term_id, doc_range) group: one group, one
+    slot, so phase B sees all of a group's runs; the doc_range in the
+    mix spreads a hot term's groups over several slots."""
+    mix = term_ids.astype(np.uint64) * _MIX ^ doc_ranges.astype(np.uint64)
+    return (mix % np.uint64(n_slots)).astype(np.int64)
 
 # partial rows with this p value carry per-flush doc stats
 # (dls blob = the flushed docs' lengths, int32; other blobs empty)
@@ -367,12 +356,11 @@ class _PartialBuilder:
     way in every case."""
 
     def __init__(self, range_shift: int, slot_values: list[int],
-                 with_positions: bool, n_buckets: int = DEFAULT_N_BUCKETS):
+                 with_positions: bool):
         from ..xxh64 import xxh64_signed
         self._hash = xxh64_signed
         self.range_shift = range_shift
         self.with_positions = with_positions
-        self.n_buckets = n_buckets
         self.slot_vals = np.asarray(slot_values, dtype=np.int64)
         self._cache: dict[str, int] = {}
         self.tids: list[np.ndarray] = []
@@ -495,19 +483,19 @@ class _PartialBuilder:
         r_tf = np.append(r_start[1:], n) - r_start
         return pd.DataFrame(_slot_rows(
             t[r_start], d[r_start], r_tf, dl[r_start], pp, self.range_shift,
-            self.slot_vals, self.n_buckets))
+            self.slot_vals))
 
 
 def _slot_rows(t: np.ndarray, d: np.ndarray, tf: np.ndarray,
                dl: np.ndarray, pos: "np.ndarray | None", range_shift: int,
-               slot_vals: np.ndarray, n_buckets: int) -> dict[str, list]:
+               slot_vals: np.ndarray) -> dict[str, list]:
     """_PARTIAL_SCHEMA columns for posting runs (term_id, doc_id, tf, dl
     per run, positions flattened run-major or None), one row per target
     slot: each run goes to the slot of its (term_id, doc_range) group
     (_slot_of), p is that slot's preimage in slot_vals. Phase A's
     flush and compaction (checkpoint.compact_index) both end here."""
     rng = d >> range_shift
-    slot = _slot_of(t, rng, slot_vals.size, n_buckets)
+    slot = _slot_of(t, rng, slot_vals.size)
     order = np.argsort(slot, kind="stable")
     s2 = slot[order]
     t2 = t[order].astype(np.int64, copy=False)
@@ -538,7 +526,7 @@ def _slot_rows(t: np.ndarray, d: np.ndarray, tf: np.ndarray,
 
 
 def _phase_a_factory(docs_of, range_shift: int, slot_values: list[int],
-                     with_positions: bool, n_buckets: int,
+                     with_positions: bool,
                      vocab_set: "frozenset[str] | None" = None):
     """Phase A (map side), the one kernel every build runs: docs_of(pdf)
     yields each input batch's (doc_id, tokens) — the tokens columns as
@@ -555,8 +543,7 @@ def _phase_a_factory(docs_of, range_shift: int, slot_values: list[int],
     statistics can come from the same pass."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b = _PartialBuilder(range_shift, slot_values, with_positions,
-                            n_buckets)
+        b = _PartialBuilder(range_shift, slot_values, with_positions)
         dls: list[int] = []
 
         def flush() -> pd.DataFrame:
@@ -729,8 +716,7 @@ def build_postings(tokens_df: DataFrame,
                    range_shift: int | None = None,
                    with_positions: bool = True,
                    vocab_filter: DataFrame | None = None,
-                   n_partitions: int | None = None,
-                   n_buckets: int = DEFAULT_N_BUCKETS) -> tuple[DataFrame, CorpusStats]:
+                   n_partitions: int | None = None) -> tuple[DataFrame, CorpusStats]:
     """tokens_df(doc_id, tokens) -> posting-block DataFrame + stats.
 
     Map-side-partial build (the MapReduce combiner form), ONE shuffle
@@ -741,10 +727,10 @@ def build_postings(tokens_df: DataFrame,
          occurrences on term_id, collapse to runs (tf, positions), and
          emit ONE binary-blob row per (flush, target slot) — the
          occurrence stream never crosses the Arrow bridge as rows;
-      2. shuffle the partial rows with a bijective, bucket-major slot
-         key (_slot_values, _slot_of) — bytes move, not rows; slots
-         hold whole term_buckets, so write_index with the same
-         n_buckets needs no second exchange, and doc_range =
+      2. shuffle the partial rows with a bijective slot key
+         (_slot_values, _slot_of) — bytes move, not rows; a (term_id,
+         doc_range) group lands in one slot, write_index writes each
+         slot as one file with no second exchange, and doc_range =
          shiftright(doc_id, range_shift) splits any term's postings
          into <= ~MAX_RANGE_DOCS-doc groups (see range_shift_for);
       3. Phase B mapInArrow per slot: concat partial runs, ONE lexsort
@@ -771,8 +757,7 @@ def build_postings(tokens_df: DataFrame,
     slots = _slot_values(spark, n_partitions)
     partials = tokens_df.select("doc_id", "tokens").mapInPandas(
         _phase_a_factory(lambda pdf: zip(pdf["doc_id"], pdf["tokens"]),
-                         range_shift, slots, with_positions, n_buckets,
-                         vocab_set),
+                         range_shift, slots, with_positions, vocab_set),
         schema=_PARTIAL_SCHEMA)
     postings = _phase_b(partials, n_partitions, stats.avgdl, block_size,
                         with_positions, range_shift)
@@ -784,8 +769,7 @@ def build_from_corpus(corpus_df: DataFrame, tokenizer: str = "spm",
                       range_shift: int | None = None,
                       with_positions: bool = True,
                       n_partitions: int | None = None,
-                      est_avgdl: float = 350.0,
-                      n_buckets: int = DEFAULT_N_BUCKETS) -> tuple[DataFrame, CorpusStats]:
+                      est_avgdl: float = 350.0) -> tuple[DataFrame, CorpusStats]:
     """Fused build: (url, html) corpus -> posting blocks in ONE python
     pass plus the bytes shuffle — the phase-A kernel of build_postings
     reads its docs through the extract/hash/tokenize loop (_extracted),
@@ -811,7 +795,7 @@ def build_from_corpus(corpus_df: DataFrame, tokenizer: str = "spm",
     partials = corpus_df.select("url", "html").mapInPandas(
         _phase_a_factory(
             lambda pdf: ((d, t) for d, _, _, t in _extracted(pdf, tokenizer)),
-            range_shift, slots, with_positions, n_buckets),
+            range_shift, slots, with_positions),
         schema=_PARTIAL_SCHEMA).persist()
 
     def stats_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -864,44 +848,39 @@ def term_dictionary(tokens_df: DataFrame) -> DataFrame:
             .withColumn("term_id", F.xxhash64("term")))
 
 
-def write_plan(postings: DataFrame,
-               n_buckets: int = DEFAULT_N_BUCKETS) -> DataFrame:
-    """The rows write_index persists: postings plus term_bucket, each
-    partition sorted by (term_bucket, term_id, doc_range, block_id)
-    so every output file is term-ordered."""
-    return (postings
-            .withColumn("term_bucket",
-                        F.pmod("term_id", F.lit(n_buckets)).cast("int"))
-            .sortWithinPartitions("term_bucket", "term_id", "doc_range",
-                                  "block_id"))
+def write_plan(postings: DataFrame) -> DataFrame:
+    """The rows write_index persists: each partition sorted by
+    (term_id, doc_range, block_id), so every output file is
+    term-ordered for Parquet's term_id row-group pruning."""
+    return postings.sortWithinPartitions("term_id", "doc_range", "block_id")
 
 
 def write_index(postings: DataFrame, path: str,
-                n_buckets: int = DEFAULT_N_BUCKETS,
                 stats: CorpusStats | None = None) -> None:
-    """Persist postings partitioned by term_bucket for query-time
-    partition pruning; stats sidecar as JSON.
+    """Persist postings as one term-ordered parquet file per input
+    partition; stats sidecar as JSON.
 
-    No exchange: each input partition is sorted in place and written
-    as it stands (write_plan), so phase B and the write run as one
-    stage. A build with the same n_buckets hands over partitions that
-    hold whole buckets (see _slot_of), so every task writes one file
-    per bucket it owns, and so does compact_index, which runs the same
-    phase B. Any other input (a different n_buckets) is still written
-    correctly, because the partitionBy writer routes every row to its
-    bucket directory; it only costs more files."""
-    (write_plan(postings, n_buckets)
-     .write.mode("overwrite").partitionBy("term_bucket").parquet(path))
+    No exchange: each partition is sorted in place and written as it
+    stands (write_plan), so phase B and the write run as one stage and
+    a build (or compact_index, which runs the same phase B) writes one
+    file per phase-B task. Any other input partitioning is written
+    just as correctly, one file per partition."""
+    write_plan(postings).write.mode("overwrite").parquet(path)
     release_build(postings)
     if stats is not None:
-        import json
-        with open(os.path.join(path, "_stats.json"), "w") as fh:
-            json.dump({"n_docs": stats.n_docs, "avgdl": stats.avgdl}, fh)
+        write_stats(path, stats)
+
+
+def write_stats(path: str, stats: CorpusStats) -> None:
+    """The index's corpus-stats sidecar, `_stats.json`."""
+    with open(os.path.join(path, "_stats.json"), "w") as fh:
+        json.dump({"n_docs": stats.n_docs, "avgdl": stats.avgdl}, fh)
+
+
+def read_stats(path: str) -> CorpusStats:
+    with open(os.path.join(path, "_stats.json")) as fh:
+        return CorpusStats(**json.load(fh))
 
 
 def read_index(spark: SparkSession, path: str) -> tuple[DataFrame, CorpusStats]:
-    import json
-    df = spark.read.parquet(path)
-    with open(os.path.join(path, "_stats.json")) as fh:
-        d = json.load(fh)
-    return df, CorpusStats(n_docs=d["n_docs"], avgdl=d["avgdl"])
+    return spark.read.parquet(path), read_stats(path)

@@ -37,9 +37,9 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import codec
-from .build import (_PARTIAL_SCHEMA, DEFAULT_N_BUCKETS, CorpusStats,
-                    _n_partitions, _phase_b, _slot_rows, _slot_values,
-                    build_postings, corpus_stats, range_shift_for)
+from .build import (_PARTIAL_SCHEMA, CorpusStats, _n_partitions, _phase_b,
+                    _slot_rows, _slot_values, build_postings, corpus_stats,
+                    range_shift_for, read_stats, write_stats)
 
 
 def _manifest_path(path: str, part: int) -> str:
@@ -73,8 +73,7 @@ def build_resumable(tokens_df: DataFrame, path: str, n_parts: int = 8,
         "build_part", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_parts)).cast("int"))
     if stats is None:
         stats = corpus_stats(tokens_df)
-        with open(os.path.join(path, "_stats.json"), "w") as fh:
-            json.dump({"n_docs": stats.n_docs, "avgdl": stats.avgdl}, fh)
+        write_stats(path, stats)
     fingerprints = input_fingerprint(tokens_df)
     done = 0
     for part in range(n_parts):
@@ -125,9 +124,7 @@ def read_resumable(spark: SparkSession, path: str) -> tuple[DataFrame, CorpusSta
     df = spark.read.option("basePath", path).parquet(
         *[os.path.join(path, d) for d in sorted(os.listdir(path))
           if d.startswith("part=")])
-    with open(os.path.join(path, "_stats.json")) as fh:
-        d = json.load(fh)
-    return df, CorpusStats(n_docs=d["n_docs"], avgdl=d["avgdl"])
+    return df, read_stats(path)
 
 
 def manifests(path: str) -> list[dict]:
@@ -188,8 +185,7 @@ def refresh_stats(spark: SparkSession, path: str) -> CorpusStats:
     else:
         postings, _ = read_resumable(spark, path)
         stats = stats_from_blocks(postings)
-    with open(os.path.join(path, "_stats.json"), "w") as fh:
-        json.dump({"n_docs": stats.n_docs, "avgdl": stats.avgdl}, fh)
+    write_stats(path, stats)
     return stats
 
 
@@ -203,10 +199,10 @@ def compact_index(postings: DataFrame, stats: CorpusStats,
     unioned). Positions are kept only if every block has them.
 
     The layout is a fresh build's with the same stats: range_shift from
-    stats.n_docs, the slot count from n_docs * avgdl and
-    DEFAULT_N_BUCKETS, whatever range_shift the parts were cut with. So
-    the output equals build_postings(stats=stats) over the parts' docs
-    byte for byte, and it is bucket-major: write_index writes it with
+    stats.n_docs and the slot count from n_docs * avgdl, whatever
+    range_shift the parts were cut with. So the output equals
+    build_postings(stats=stats) over the parts' docs byte for byte,
+    and write_index writes it as a build's: one file per phase-B task,
     no second exchange."""
     spark = postings.sparkSession
     range_shift = range_shift_for(stats.n_docs)
@@ -220,8 +216,7 @@ def compact_index(postings: DataFrame, stats: CorpusStats,
         for rb in batches:
             if rb.num_rows:
                 yield pa.RecordBatch.from_pydict(_slot_rows(
-                    *codec.decode_blocks(rb, has_pos), range_shift, slots,
-                    DEFAULT_N_BUCKETS))
+                    *codec.decode_blocks(rb, has_pos), range_shift, slots))
 
     cols = ["term_id", "n", "docs", "tfs", "dls"]
     if has_pos:
@@ -295,16 +290,12 @@ def index_table_delta(spark: SparkSession, table_path: str,
                    F.sum(F.size("tokens")).alias("sum_dl")).collect()[0]
     n_delta = int(agg["n"] or 0)
     sum_dl = int(agg["sum_dl"] or 0)
-    stats_path = os.path.join(index_path, "_stats.json")
-    if os.path.exists(stats_path):
-        with open(stats_path) as fh:
-            d = json.load(fh)
-        stats = CorpusStats(n_docs=d["n_docs"], avgdl=d["avgdl"])
+    if os.path.exists(os.path.join(index_path, "_stats.json")):
+        stats = read_stats(index_path)
     else:  # frozen seed = the baseline snapshot's exact stats
         stats = CorpusStats(n_docs=n_delta,
                             avgdl=float(sum_dl) / max(n_delta, 1))
-        with open(stats_path, "w") as fh:
-            json.dump({"n_docs": stats.n_docs, "avgdl": stats.avgdl}, fh)
+        write_stats(index_path, stats)
     if n_delta > 0:
         postings, _ = build_postings(toks, stats=stats,
                                      with_positions=with_positions)

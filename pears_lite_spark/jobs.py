@@ -86,33 +86,48 @@ def cmd_build(args) -> int:
         ms = manifests(args.output)
         n_blocks = sum(m["n_blocks"] for m in ms)
         payload = sum(m["payload_bytes"] for m in ms)
+        n_files = sum(len(m["files"]) for m in ms)
     else:
         from .index.build import (build_from_corpus, build_postings,
                                   write_index)
         if tokens is None:  # html corpus: fused single-pass build
             postings, stats = build_from_corpus(
                 _read_corpus(spark, args.input), tokenizer=args.tokenizer,
-                with_positions=not args.no_positions,
-                n_buckets=args.n_buckets)
+                with_positions=not args.no_positions)
         else:
             postings, stats = build_postings(
-                tokens, with_positions=not args.no_positions,
-                n_buckets=args.n_buckets)
-        write_index(postings, args.output, stats=stats,
-                    n_buckets=args.n_buckets)
-        n_blocks = payload = None
+                tokens, with_positions=not args.no_positions)
+        write_index(postings, args.output, stats=stats)
+        n_blocks, payload, n_files = _footer_facts(args.output)
     dt = time.time() - t0
     _emit({"job": "build", "input": args.input, "output": args.output,
            "resume": bool(args.resume), "n_docs": stats.n_docs,
            "avgdl": round(stats.avgdl, 3), "seconds": round(dt, 2),
            "docs_per_sec": round(stats.n_docs / dt, 1),
-           "n_blocks": n_blocks, "payload_bytes": payload})
+           "n_blocks": n_blocks, "payload_bytes": payload,
+           "files": n_files})
     return 0
+
+
+def _footer_facts(path: str) -> tuple[int, int, int]:
+    """(blocks, payload bytes, files) of a single-segment index, read
+    from its Parquet footers by pyarrow: no Spark job, no data page.
+    Payload bytes are the docs/tfs/dls/positions column chunks'
+    uncompressed sizes as the footers record them (Parquet-encoded,
+    before compression)."""
+    import pyarrow.parquet as pq
+    mds = [pq.read_metadata(os.path.join(path, f))
+           for f in os.listdir(path) if f.endswith(".parquet")]
+    chunks = [md.row_group(g).column(c) for md in mds
+              for g in range(md.num_row_groups) for c in range(md.num_columns)]
+    payload = sum(c.total_uncompressed_size for c in chunks
+                  if c.path_in_schema in ("docs", "tfs", "dls", "positions"))
+    return sum(md.num_rows for md in mds), payload, len(mds)
 
 
 def _read_any_index(spark, path: str):
     """Detect layout: resumable multi-part (manifest_*.json + part=N/)
-    vs single-segment bucketed (term_bucket=N/)."""
+    vs single-segment (one parquet file per phase-B task)."""
     entries = os.listdir(path)
     if any(e.startswith("manifest_") for e in entries):
         from .index.checkpoint import read_resumable
@@ -159,7 +174,7 @@ def cmd_compact(args) -> int:
         # seed (N, avgdl); recompute exact stats and re-encode impacts
         stats = refresh_stats(spark, args.index)
     merged = compact_index(postings, stats)
-    write_index(merged, args.output, stats=stats, n_buckets=args.n_buckets)
+    write_index(merged, args.output, stats=stats)
     _emit({"job": "compact", "index": args.index, "output": args.output,
            "refreshed_stats": bool(args.refresh_stats),
            "n_docs": stats.n_docs, "avgdl": round(stats.avgdl, 3),
@@ -424,9 +439,8 @@ def cmd_pipeline(args) -> int:
         else tokenize_whitespace
     toks = tokenizer(clean.select("doc_id", "text")) \
         .select("doc_id", "tokens")
-    postings, stats = build_postings(toks, n_buckets=args.n_buckets)
-    write_index(postings, args.output, stats=stats,
-                n_buckets=args.n_buckets)
+    postings, stats = build_postings(toks)
+    write_index(postings, args.output, stats=stats)
     # write_index's release_build frees the build partials; the two
     # corpus caches are ours to release (harmless for the exit-after-run
     # CLI, required when this function is reused programmatically)
@@ -455,7 +469,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="per-partition checkpointed build (skips "
                         "partitions whose manifest matches the input)")
     b.add_argument("--n-parts", type=int, default=8)
-    b.add_argument("--n-buckets", type=int, default=64)
     b.add_argument("--no-positions", action="store_true")
     b.set_defaults(fn=cmd_build)
 
@@ -470,7 +483,6 @@ def main(argv: list[str] | None = None) -> int:
     c = sub.add_parser("compact", help="merge a multi-part index")
     c.add_argument("--index", required=True)
     c.add_argument("--output", required=True)
-    c.add_argument("--n-buckets", type=int, default=64)
     c.add_argument("--refresh-stats", action="store_true",
                    help="recompute exact (N, avgdl) from manifests/blocks "
                         "before re-encoding (post-streaming-drain step)")
@@ -501,7 +513,6 @@ def main(argv: list[str] | None = None) -> int:
     pl.add_argument("--jaccard-threshold", type=float, default=0.85)
     pl.add_argument("--minhash-k", type=int, default=16)
     pl.add_argument("--minhash-bands", type=int, default=4)
-    pl.add_argument("--n-buckets", type=int, default=64)
     pl.add_argument("--sample-rate", type=float, default=1.0,
                     help="deterministic md5 hash-threshold sample")
     pl.add_argument("--sample-seed", type=int, default=0)

@@ -19,8 +19,9 @@ doc_id ascending:
    block-compressed posting table (index/build.py). Both decode blocks
    with `codec.decode_blocks`.
 
-   `search_blocks` prunes the scan to the query terms (term_id filter,
-   plus the term_bucket partition filter), and one mapInArrow kernel
+   `search_blocks` prunes the scan to the query terms (a term_id IN
+   filter, pushed to Parquet's row-group statistics; every index file
+   is term-ordered), and one mapInArrow kernel
    (`_topk_factory`) runs over doc_range-partitioned blocks: it decodes
    each block once, weights the impacts by idf, sums them per doc and
    keeps a local top-k per query; a window rank then takes the global
@@ -183,23 +184,19 @@ def _qmaps(queries: list[list[str]], term_dfs: dict[int, int],
 
 
 def search_blocks(postings: DataFrame, stats: CorpusStats,
-                  queries: list[list[str]], k: int = 10,
-                  n_buckets: int | None = None) -> DataFrame:
+                  queries: list[list[str]], k: int = 10) -> DataFrame:
     """Batch top-k over the block index for many queries in one scoring
     job.
 
     Returns a lazy (query_id, doc_id, score, rank) DataFrame. The
-    posting scan is pruned to the query terms (term_id filter, plus the
-    term_bucket partition filter when `n_buckets` is given); query-term
+    posting scan is pruned to the query terms (a term_id IN filter,
+    which Parquet row-group statistics prune on); query-term
     dfs come from the block metadata (sum of n per term) in one small
     collect; the scan is repartitioned by doc_range into the top-k
     kernel and a window rank keeps each query's global top k.
     """
     tids = sorted({_term_id(t) for terms in queries for t in terms})
     scan = postings.filter(F.col("term_id").isin(tids))
-    if "term_bucket" in postings.columns and n_buckets:
-        buckets = sorted({tid % n_buckets for tid in tids})
-        scan = scan.filter(F.col("term_bucket").isin(buckets))
     qmaps = _qmaps(queries, collect_term_dfs(scan), stats.n_docs)
     local = (scan.repartition("doc_range").select(*_BLOCK_COLS)
              .mapInArrow(_topk_factory(qmaps, k, stats.avgdl), _SCORE_SCHEMA))

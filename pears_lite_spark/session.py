@@ -10,8 +10,39 @@ and broadcast-join for the small dimension tables (term stats, vocab).
 from __future__ import annotations
 
 import os
+import sys
 
-from pyspark.sql import SparkSession
+
+def skip_unchanged_zip_rescans() -> None:
+    """CPython < 3.13: make `importlib.invalidate_caches()` re-read a zip
+    archive's directory only when the archive changed.
+
+    pyspark's worker calls it at the start of every task
+    (worker_util.setup_spark_files), and before 3.13 each zipimporter
+    then re-reads its archive's whole central directory: 16 importers
+    on pyspark.zip (1,328 entries) took most of a short task's Python
+    time. 3.13 only drops the cached directory; here an archive whose
+    (st_mtime_ns, st_size) is unchanged keeps it, and a changed one, or
+    one whose stat fails, is re-read as before."""
+    if sys.version_info >= (3, 13):
+        return
+    import zipimport
+    reread, seen = zipimport.zipimporter.invalidate_caches, {}
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            key = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if key is None or files is None or seen.get(self.archive) != key:
+            reread(self)
+            seen[self.archive] = key
+        else:
+            self._files = files
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def default_cpus() -> int:
@@ -23,6 +54,7 @@ def default_cpus() -> int:
 def get_spark(app_name: str = "pears-lite-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    from pyspark.sql import SparkSession
     cpus = default_cpus()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(os.environ.get(

@@ -25,7 +25,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..index.build import build_postings, CorpusStats
+from ..index.build import build_postings, CorpusStats, write_stats
 
 CORPUS_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -80,8 +80,7 @@ def stream_build(spark: SparkSession, corpus_dir: str, index_path: str,
     with refreshed stats when desired).
     """
     os.makedirs(index_path, exist_ok=True)
-    with open(os.path.join(index_path, "_stats.json"), "w") as fh:
-        json.dump({"n_docs": stats.n_docs, "avgdl": stats.avgdl}, fh)
+    write_stats(index_path, stats)
     checkpoint_dir = checkpoint_dir or os.path.join(index_path, "_checkpoint")
     stream = (spark.readStream.schema(CORPUS_SCHEMA)
               .option("maxFilesPerTrigger", max_files_per_trigger)

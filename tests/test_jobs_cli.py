@@ -32,14 +32,18 @@ def corpus_path(spark, tmp_path_factory):
     return p
 
 
-@pytest.mark.parametrize("extra", [[], ["--resume", "--n-parts", "3"]],
-                         ids=["fused", "resumable"])
+@pytest.mark.parametrize("extra", [[], ["--resume", "--n-parts", "3"],
+                                   ["--no-positions"]],
+                         ids=["fused", "resumable", "fused_no_positions"])
 def test_build_then_query_cli(spark, capsys, corpus_path, tmp_path, extra):
     """Build with the given options (and, for a non-default build, the
     fused build beside it), then query each index through the CLI: the
     `query` subcommand reads either layout through `_read_any_index`.
     Its hits must be rank-identical to search_blocks over the same
-    postings, and the resumable build's hits to the fused build's."""
+    postings, and every other build's hits to the fused build's. The
+    build line reports the index's blocks, payload bytes and files; a
+    --no-positions build stores no positions."""
+    import glob
     from pears_lite_spark import jobs
     from pears_lite_spark.search.bm25 import search_blocks
     qfile = tmp_path / "queries.txt"
@@ -47,21 +51,29 @@ def test_build_then_query_cli(spark, capsys, corpus_path, tmp_path, extra):
     builds = {"fused": []}
     if extra:
         builds["other"] = extra
-    hits = {}
+    hits, payload = {}, {}
     for name, opts in builds.items():
         idx = str(tmp_path / name)
         built = _run_cli(capsys, ["build", "--input", corpus_path,
                                   "--output", idx, "--tokenizer", "ws",
                                   *opts])
-        assert built["job"] == "build" and built["resume"] == bool(opts)
+        resume = "--resume" in opts
+        assert built["job"] == "build" and built["resume"] == resume
         assert built["n_docs"] > 0 and built["avgdl"] > 0
         assert any(f.startswith("manifest_")
-                   for f in os.listdir(idx)) == bool(opts)
+                   for f in os.listdir(idx)) == resume
+        postings, stats = jobs._read_any_index(spark, idx)
+        assert built["n_blocks"] == postings.count()
+        assert built["files"] == len(glob.glob(
+            os.path.join(idx, "**", "*.parquet"), recursive=True))
+        assert built["payload_bytes"] > 0
+        payload[name] = built["payload_bytes"]
+        if "--no-positions" in opts:
+            assert postings.filter("positions IS NOT NULL").isEmpty()
         res = _run_cli(capsys, ["query", "--index", idx,
                                 "--queries", str(qfile),
                                 "--tokenizer", "ws", "--k", "5"])
         assert res["job"] == "query" and res["n_queries"] == 2
-        postings, stats = jobs._read_any_index(spark, idx)
         direct = search_blocks(postings, stats, [["the", "of"], ["and"]],
                                k=5).collect()
         hits[name] = [[(h["doc_id"], round(h["score"], 6))
@@ -72,6 +84,8 @@ def test_build_then_query_cli(spark, capsys, corpus_path, tmp_path, extra):
             assert got == [(d, s) for _, d, s in want]
     assert all(h == hits["fused"] for h in hits.values())
     assert all(hits["fused"])
+    if "--no-positions" in extra:
+        assert payload["other"] < payload["fused"]
 
 
 def test_pipeline_cli_all_gates(spark, capsys, corpus_path, tmp_path):

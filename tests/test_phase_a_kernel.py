@@ -80,8 +80,7 @@ def test_per_token_add_keys_runs_per_source_doc():
 
 
 def _run_phase_a(docs_of, pdf, batch_rows=50):
-    kern = build._phase_a_factory(docs_of, SHIFT, SLOTS, True,
-                                  build.DEFAULT_N_BUCKETS)
+    kern = build._phase_a_factory(docs_of, SHIFT, SLOTS, True)
     batches = (pdf.iloc[i:i + batch_rows].reset_index(drop=True)
                for i in range(0, len(pdf), batch_rows))
     frames = list(kern(batches))

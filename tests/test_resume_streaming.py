@@ -498,14 +498,12 @@ def _block_frame(postings, cols):
     return df
 
 
-@pytest.mark.parametrize("n_buckets,n_partitions", [(64, 8), (4, 8)])
-def test_write_index_layout_one_file_per_bucket(spark, tmp_path, n_buckets,
-                                                n_partitions):
-    """The fused build hands write_index partitions that hold whole
-    term_buckets (or, with more slots than buckets, whole shares of
-    one), so the write needs no exchange: at most one file per bucket
-    per task, every bucket file holds only its own terms in sorted
-    order, and the rows equal a tokens-path build's."""
+@pytest.mark.parametrize("n_partitions", [4, 8])
+def test_write_index_one_file_per_phase_b_task(spark, tmp_path, n_partitions):
+    """The fused build hands write_index its phase-B partitions, and the
+    write needs no exchange: at most one file per phase-B task, every
+    file sorted by (term_id, doc_range, block_id), and the rows equal a
+    tokens-path build's."""
     import pyarrow.parquet as pq
     from pears_lite_spark.corpus import gen_corpus
     from pears_lite_spark.index.build import (build_from_corpus,
@@ -516,19 +514,17 @@ def test_write_index_layout_one_file_per_bucket(spark, tmp_path, n_buckets,
     ref_stats = corpus_stats(toks)
     shift = range_shift_for(ref_stats.n_docs)
     ref, _ = build_postings(toks, stats=ref_stats, range_shift=shift,
-                            n_partitions=n_partitions, n_buckets=n_buckets)
+                            n_partitions=n_partitions)
     new, stats = build_from_corpus(cdf, range_shift=shift,
-                                   n_partitions=n_partitions,
-                                   n_buckets=n_buckets)
+                                   n_partitions=n_partitions)
     path = str(tmp_path / "idx")
-    write_index(new, path, n_buckets=n_buckets, stats=stats)
-    files = glob.glob(os.path.join(path, "term_bucket=*", "*.parquet"))
-    assert 0 < len(files) <= max(n_buckets, n_partitions)
+    write_index(new, path, stats=stats)
+    files = glob.glob(os.path.join(path, "*.parquet"))
+    assert 0 < len(files) <= n_partitions
+    assert not glob.glob(os.path.join(path, "*", "*.parquet"))
     for f in files:
-        b = int(f.split("term_bucket=")[1].split(os.sep)[0])
         t = pq.read_table(f, columns=["term_id", "doc_range",
                                       "block_id"]).to_pandas()
-        assert (t["term_id"] % n_buckets == b).all()
         assert t.equals(t.sort_values(["term_id", "doc_range", "block_id"])
                         .reset_index(drop=True))
     cols = ["term_id", "doc_range", "block_id", "first_doc", "last_doc",
@@ -538,53 +534,46 @@ def test_write_index_layout_one_file_per_bucket(spark, tmp_path, n_buckets,
     toks.unpersist()
 
 
-def test_slot_of_is_bucket_major():
-    """Each term_bucket maps to at most ceil(n_slots / n_buckets) slots
-    (exactly one when n_slots <= n_buckets), and a hot term's doc
-    ranges still spread over several slots when n_slots > n_buckets."""
-    import math
+def test_slot_of_keeps_groups_and_spreads_hot_terms():
+    """Every (term_id, doc_range) group maps to one slot, all slots are
+    used, and a hot term's 16 doc ranges land on more than one slot at
+    every slot count from 4 up."""
     import numpy as np
+    import pandas as pd
     from pears_lite_spark.index.build import _slot_of
-    n_buckets = 64
     rng = np.random.default_rng(0)
-    tids = rng.integers(-2**63, 2**63 - 1, 20_000, dtype=np.int64)
+    tids = rng.integers(-2**63, 2**63 - 1, 5_000, dtype=np.int64)
+    tids = np.concatenate([tids, tids[:2_000]])
     ranges = rng.integers(0, 16, tids.size, dtype=np.int64)
+    ranges[5_000:] = ranges[:2_000]
     hot = np.full(16, tids[0])
-    for n_slots in (4, 12, 64, 256):
-        g = math.ceil(n_slots / n_buckets)
-        slot = _slot_of(tids, ranges, n_slots, n_buckets)
+    for n_slots in (4, 5, 12, 64, 256):
+        slot = _slot_of(tids, ranges, n_slots)
         assert ((slot >= 0) & (slot < n_slots)).all()
         assert len(set(slot.tolist())) == n_slots
-        per_bucket: dict[int, set] = {}
-        for b, s in zip((tids % n_buckets).tolist(), slot.tolist()):
-            per_bucket.setdefault(b, set()).add(s)
-        assert max(len(v) for v in per_bucket.values()) <= g
-        hot_slots = set(_slot_of(hot, np.arange(16), n_slots,
-                                 n_buckets).tolist())
-        assert (len(hot_slots) > 1) == (n_slots > n_buckets)
+        groups = pd.DataFrame({"t": tids, "r": ranges, "s": slot})
+        assert (groups.groupby(["t", "r"])["s"].nunique() == 1).all()
+        assert len(set(_slot_of(hot, np.arange(16), n_slots).tolist())) > 1
 
 
-def test_mismatched_write_buckets_roundtrip(spark, tokens, tmp_path):
-    """write_index with an n_buckets the build was not clustered for
-    still routes every block to its bucket: identical top-k to a
-    matched build, only (possibly) more files."""
+def test_repartitioned_write_roundtrip(spark, tokens, tmp_path):
+    """write_index of postings in any partitioning, here a
+    repartition(7), gives the same top-k as the phase-B-partitioned
+    postings it came from, one file per partition."""
     from pears_lite_spark.index.build import read_index, write_index
+    postings, stats = build_postings(tokens)
 
-    def build_and_write(build_buckets, name):
-        postings, stats = build_postings(tokens, n_buckets=build_buckets)
+    def write_and_search(df, name):
         path = str(tmp_path / name)
-        write_index(postings, path, n_buckets=12, stats=stats)
+        write_index(df, path, stats=stats)
         idx, st = read_index(spark, path)
-        df = search_blocks(idx, st, QUERIES, k=10, n_buckets=12).toPandas()
-        hits = [(int(r.query_id), int(r.doc_id), round(float(r.score), 9))
-                for r in df.sort_values(["query_id", "rank"]).itertuples()]
-        return hits, len(glob.glob(os.path.join(path, "term_bucket=*",
-                                                "*.parquet")))
+        hits = _results(idx, st)
+        return hits, len(glob.glob(os.path.join(path, "*.parquet")))
 
-    matched, n_matched = build_and_write(12, "matched")
-    mismatched, n_mismatched = build_and_write(64, "mismatched")
-    assert matched and mismatched == matched
-    assert n_matched <= 12 <= n_mismatched
+    built, _ = write_and_search(postings, "built")
+    moved, n_moved = write_and_search(postings.repartition(7), "moved")
+    assert built and moved == built
+    assert 0 < n_moved <= 7
 
 
 def test_vocab_filter_build_matches_prefiltered_oracle(spark, tokens):

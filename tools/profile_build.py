@@ -10,7 +10,7 @@ Phases: ingest (extract+tokenize, materialized via persist+count),
 stats (agg over persisted tokens), encode (phase-A mapInPandas ->
 partial runs -> the one slot shuffle -> phase-B mapInArrow merge +
 block encode, materialized via persist+count), write (per-partition
-sort + term_bucket-partitioned parquet, no exchange). Phase A is the
+sort, one parquet file per partition, no exchange). Phase A is the
 same kernel the fused build_from_corpus runs; only its input differs
 (tokens here, html there).
 """
