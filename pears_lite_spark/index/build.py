@@ -12,8 +12,8 @@ shuffle of packed bytes:
              binary-blob rows per target slot, plus per-flush doc stats
            --repartition(bijective slot key)-->
            --mapInArrow (phase B) merge + delta/varint/block-max encode
-           --sortWithinPartitions + write, one file per task
-             (same stage as phase B: no second exchange)
+           --sortWithinPartitions + zstd parquet write, one file
+             per task (same stage as phase B: no second exchange)
 
 Why not posexplode + repartition + sortWithinPartitions? Measured on
 this corpus shape, the JVM->Python row->Arrow conversion costs ~0.5-1M
@@ -47,7 +47,8 @@ The physical layout is one row per posting BLOCK:
 (term_id, doc_range, block_id, first_doc, last_doc, n, max_impact,
  docs, tfs, dls, positions), every file sorted by (term_id,
 doc_range, block_id) so a query's `term_id IN (...)` filter prunes
-row groups by their Parquet min/max statistics.
+row groups by their Parquet min/max statistics. write_index is the
+only writer of these files, and it writes them zstd-compressed.
 The term string lives in a separate (term, term_id, df) dictionary
 (`term_dictionary`), computed JVM-side.
 """
@@ -857,15 +858,25 @@ def write_plan(postings: DataFrame) -> DataFrame:
 
 def write_index(postings: DataFrame, path: str,
                 stats: CorpusStats | None = None) -> None:
-    """Persist postings as one term-ordered parquet file per input
-    partition; stats sidecar as JSON.
+    """Persist postings as one term-ordered, zstd-compressed parquet
+    file per input partition; stats sidecar as JSON.
+
+    The one posting writer: fresh builds, compact_index output,
+    resumable parts, table-delta parts and streamed segments all go
+    through it, so every index file has the same sort and codec.
 
     No exchange: each partition is sorted in place and written as it
     stands (write_plan), so phase B and the write run as one stage and
     a build (or compact_index, which runs the same phase B) writes one
     file per phase-B task. Any other input partitioning is written
-    just as correctly, one file per partition."""
-    write_plan(postings).write.mode("overwrite").parquet(path)
+    just as correctly, one file per partition.
+
+    zstd (Spark's default level), not Spark's default snappy: the block
+    bytes are the same, but the `docs` column's hashed doc-id gaps
+    barely compress under snappy, and zstd's window finds the gap runs
+    that frequent terms' lists share (README, "Index layout")."""
+    (write_plan(postings).write.mode("overwrite")
+     .option("compression", "zstd").parquet(path))
     release_build(postings)
     if stats is not None:
         write_stats(path, stats)

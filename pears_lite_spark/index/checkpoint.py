@@ -11,10 +11,13 @@ full-index rewrite per doc — `/root/reference/app/indexer/posix.py:
   `pmod(xxhash64(url), n_parts)` (content-addressed, so a re-run maps
   every doc to the same partition regardless of input file order);
 - each partition builds independently (build_postings on its slice) and
-  commits atomically: postings parquet under `part=<p>/` first, then a
+  commits atomically: postings parquet under `part=<p>/` first (written
+  by build.write_index, like every other index file), then a
   `manifest_<p>.json` with doc/posting/block/byte counts and the input
   fingerprint — a manifest is only written AFTER a successful parquet
   commit, so a killed job leaves either nothing or a complete partition;
+  its counts are read back from the committed files, so the slice's
+  build plan runs once;
 - `build_resumable` skips partitions whose manifest matches the input
   fingerprint — kill + re-run touches only unfinished partitions and
   produces byte-identical output (deterministic encoding);
@@ -39,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from . import codec
 from .build import (_PARTIAL_SCHEMA, CorpusStats, _n_partitions, _phase_b,
                     _slot_rows, _slot_values, build_postings, corpus_stats,
-                    range_shift_for, read_stats, write_stats)
+                    range_shift_for, read_stats, write_index, write_stats)
 
 
 def _manifest_path(path: str, part: int) -> str:
@@ -94,8 +97,10 @@ def build_resumable(tokens_df: DataFrame, path: str, n_parts: int = 8,
                                      range_shift=range_shift,
                                      with_positions=with_positions)
         part_dir = os.path.join(path, f"part={part}")
-        postings.write.mode("overwrite").parquet(part_dir)
-        agg = postings.agg(
+        write_index(postings, part_dir)
+        # the counts come from the committed part: aggregating
+        # `postings` would run the slice's whole build plan again
+        agg = postings.sparkSession.read.parquet(part_dir).agg(
             F.count("*").alias("n_blocks"),
             F.sum("n").alias("n_postings"),
             F.sum(F.octet_length("docs") + F.octet_length("tfs")
@@ -235,11 +240,12 @@ def index_table_delta(spark: SparkSession, table_path: str,
     records the table version it last indexed (`_table_version.json`),
     and each run builds ONLY the rows appended since as a new segment
     part (part=<to_version>), with a lineage manifest recording the
-    consumed version range + doc stats. First run baselines on the
-    full current snapshot. Already-current is a no-op. A compact
-    commit in the range surfaces catalog.incremental_scan's
-    re-baseline error — the operator compacts the INDEX and starts a
-    fresh baseline, the same contract streaming checkpoints have.
+    consumed version range + doc stats; write_index writes the part.
+    First run baselines on the full current snapshot. Already-current
+    is a no-op. A compact commit in the range surfaces
+    catalog.incremental_scan's re-baseline error — the operator
+    compacts the INDEX and starts a fresh baseline, the same contract
+    streaming checkpoints have.
 
     This is the north-star loop closed: Iceberg-style snapshot commits
     in, per-partition checkpointed segments out, resumable at the
@@ -300,7 +306,7 @@ def index_table_delta(spark: SparkSession, table_path: str,
         postings, _ = build_postings(toks, stats=stats,
                                      with_positions=with_positions)
         part_dir = os.path.join(index_path, f"part={cur}")
-        postings.write.mode("overwrite").parquet(part_dir)
+        write_index(postings, part_dir)
         manifest = {
             "partition": cur,
             "table": table_path,

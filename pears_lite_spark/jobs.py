@@ -105,8 +105,16 @@ def cmd_build(args) -> int:
            "avgdl": round(stats.avgdl, 3), "seconds": round(dt, 2),
            "docs_per_sec": round(stats.n_docs / dt, 1),
            "n_blocks": n_blocks, "payload_bytes": payload,
-           "files": n_files})
+           "file_bytes": _file_bytes(args.output), "files": n_files})
     return 0
+
+
+def _file_bytes(path: str) -> int:
+    """On-disk bytes of an index's parquet files, every part included
+    (compressed, footers counted)."""
+    return sum(os.path.getsize(os.path.join(d, f))
+               for d, _, fs in os.walk(path) for f in fs
+               if f.endswith(".parquet"))
 
 
 def _footer_facts(path: str) -> tuple[int, int, int]:

@@ -5,9 +5,10 @@ matrix + positional index per doc and making it immediately searchable
 (`/root/reference/app/indexer/controllers.py:159-184`, SURVEY.md §2.10).
 The Spark-native equivalent is micro-batch ingestion: Structured
 Streaming over the corpus directory, `foreachBatch` building an index
-SEGMENT per micro-batch (part = batch_id), appended next to earlier
-segments. Queries see the union immediately (the block scorers sum a
-doc's postings from every segment); `checkpoint.compact_index` merges
+SEGMENT per micro-batch (part = batch_id), written by build.write_index
+like every other index file, appended next to earlier segments.
+Queries see the union immediately (the block scorers sum a doc's
+postings from every segment); `checkpoint.compact_index` merges
 segments, so the steady state is the same LSM-ish segment+merge
 lifecycle real search engines use — but every step is a declarative
 Spark job.
@@ -25,7 +26,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..index.build import build_postings, CorpusStats, write_stats
+from ..index.build import (build_postings, CorpusStats, write_index,
+                           write_stats)
 
 CORPUS_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -39,7 +41,7 @@ CORPUS_SCHEMA = T.StructType([
 def _segment_writer(index_path: str, stats: CorpusStats,
                     tokenizer, with_positions: bool = True):
     """foreachBatch sink: tokenize the micro-batch, build its posting
-    segment, commit under part=<batch_id> with a manifest."""
+    segment, write_index it under part=<batch_id>, then a manifest."""
 
     def write_batch(batch_df: DataFrame, batch_id: int):
         from ..index.build import with_doc_id
@@ -49,7 +51,7 @@ def _segment_writer(index_path: str, stats: CorpusStats,
         postings, _ = build_postings(toks, stats=stats,
                                      with_positions=with_positions)
         part_dir = os.path.join(index_path, f"part={batch_id}")
-        postings.write.mode("overwrite").parquet(part_dir)
+        write_index(postings, part_dir)
         # per-batch doc stats ride in the manifest so refresh_stats can
         # correct the frozen seed (N, avgdl) after the drain without
         # re-reading the corpus

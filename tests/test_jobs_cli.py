@@ -41,8 +41,8 @@ def test_build_then_query_cli(spark, capsys, corpus_path, tmp_path, extra):
     `query` subcommand reads either layout through `_read_any_index`.
     Its hits must be rank-identical to search_blocks over the same
     postings, and every other build's hits to the fused build's. The
-    build line reports the index's blocks, payload bytes and files; a
-    --no-positions build stores no positions."""
+    build line reports the index's blocks, payload bytes, on-disk file
+    bytes and files; a --no-positions build stores no positions."""
     import glob
     from pears_lite_spark import jobs
     from pears_lite_spark.search.bm25 import search_blocks
@@ -67,6 +67,13 @@ def test_build_then_query_cli(spark, capsys, corpus_path, tmp_path, extra):
         assert built["files"] == len(glob.glob(
             os.path.join(idx, "**", "*.parquet"), recursive=True))
         assert built["payload_bytes"] > 0
+        assert built["file_bytes"] == sum(
+            os.path.getsize(f) for f in glob.glob(
+                os.path.join(idx, "**", "*.parquet"), recursive=True))
+        # compressed below the payload; split into 3 parts, 120 docs
+        # nearly double their blocks, and the per-block key columns and
+        # 12 footers outweigh what zstd saves (README, "Index layout")
+        assert 0 < built["file_bytes"] < built["payload_bytes"] or resume
         payload[name] = built["payload_bytes"]
         if "--no-positions" in opts:
             assert postings.filter("positions IS NOT NULL").isEmpty()

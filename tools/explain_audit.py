@@ -170,7 +170,8 @@ def main(sf_dir: str):
     s.close()
 
     # 6. write_index: no exchange above phase B, so phase B and the
-    # write share one stage and each phase-B task writes one file
+    # write share one stage and each phase-B task writes one file, and
+    # every column chunk it writes is zstd-compressed
     t = write_plan(postings_df)._jdf.queryExecution().executedPlan() \
         .toString()
     above_b = t.split("MapInArrow")[0]
@@ -180,14 +181,20 @@ def main(sf_dir: str):
     w_path = "/tmp/pears_plan_write"
     write_index(postings_df, w_path)
     n_tasks = postings_df.rdd.getNumPartitions()
-    n_files = sum(f.endswith(".parquet") for _, _, fs in os.walk(w_path)
-                  for f in fs)
-    print(f"phase-B tasks: {n_tasks}, index files: {n_files}")
+    import pyarrow.parquet as pq
+    mds = [pq.read_metadata(os.path.join(w_path, f))
+           for f in os.listdir(w_path) if f.endswith(".parquet")]
+    codecs = sorted({md.row_group(g).column(c).compression for md in mds
+                     for g in range(md.num_row_groups)
+                     for c in range(md.num_columns)})
+    print(f"phase-B tasks: {n_tasks}, index files: {len(mds)}")
+    print(f"column-chunk codecs: {', '.join(codecs)}")
     print("```")
     okw = ("MapInArrow" in t and "Exchange" not in above_b
-           and 0 < n_files <= n_tasks)
+           and 0 < len(mds) <= n_tasks and codecs == ["ZSTD"])
     print(f"\nphase B and the write share one stage, one file per "
-          f"phase-B task: {'OK' if okw else 'CHECK'}\n")
+          f"phase-B task, every column chunk ZSTD: "
+          f"{'OK' if okw else 'CHECK'}\n")
 
     # 7. lang_id: zero exchanges (per-row column algebra)
     from pears_lite_spark.functions.textstats import lang_id
