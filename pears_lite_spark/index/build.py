@@ -49,8 +49,6 @@ The physical layout is one row per posting BLOCK:
 doc_range, block_id) so a query's `term_id IN (...)` filter prunes
 row groups by their Parquet min/max statistics. write_index is the
 only writer of these files, and it writes them zstd-compressed.
-The term string lives in a separate (term, term_id, df) dictionary
-(`term_dictionary`), computed JVM-side.
 """
 
 from __future__ import annotations
@@ -658,34 +656,42 @@ def _merge_factory(avgdl: float, block_size: int, with_positions: bool,
     return kernel
 
 
-_SLOT_CACHE: dict = {}
+def _rotl32(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
 
 
-def _slot_values(spark: SparkSession, n: int) -> list[int]:
-    """For each target partition k in [0, n): an int v with
-    pmod(murmur3_hash(v), n) == k, so `repartition(n, col('p'))` maps
-    slot k's rows to exactly partition k — a bijective bytes-exchange
-    instead of hash-collision-lumpy key partitioning."""
-    key = n
-    if key in _SLOT_CACHE:
-        return _SLOT_CACHE[key]
-    # distributed preimage search: the min-id-per-slot aggregate runs
-    # executor-side and the driver collects exactly n rows — NOT the
-    # 64*n candidate rows (at a 100 TB build n reaches 10^5-10^6 and a
-    # 64*n collect would be a multi-hundred-MB driver transfer).
-    # min(id) per slot is precisely what the old sequential-scan
-    # setdefault picked, so the chosen preimages (and the index bytes
-    # downstream) are unchanged.
-    rows = (spark.range(0, 64 * n)
-            .select("id", F.pmod(F.hash("id"), F.lit(n)).alias("slot"))
-            .groupBy("slot").agg(F.min("id").alias("id"))
-            .collect())
-    vals = {int(r["slot"]): int(r["id"]) for r in rows}
-    if len(vals) != n:
-        raise RuntimeError(f"slot preimage search failed for n={n}")
-    out = [vals[k] for k in range(n)]
-    _SLOT_CACHE[key] = out
-    return out
+def _spark_hash_long(v: np.ndarray) -> np.ndarray:
+    """Spark's `hash()` of int64 values (Murmur3_x86_32 over the low,
+    then the high 32-bit word, seed 42), as int32."""
+    u = v.astype(np.uint64)
+    h = np.full(u.size, 42, np.uint32)
+    for word in (u & np.uint64(0xFFFFFFFF), u >> np.uint64(32)):
+        k = _rotl32(word.astype(np.uint32) * np.uint32(0xCC9E2D51), 15)
+        h = _rotl32(h ^ (k * np.uint32(0x1B873593)), 13)
+        h = h * np.uint32(5) + np.uint32(0xE6546B64)
+    h ^= np.uint32(8)
+    for shift, mul in ((16, 0x85EBCA6B), (13, 0xC2B2AE35)):
+        h = (h ^ (h >> np.uint32(shift))) * np.uint32(mul)
+    return (h ^ (h >> np.uint32(16))).view(np.int32)
+
+
+def _slot_values(n: int) -> np.ndarray:
+    """For each target partition k in [0, n): the least id v >= 0 with
+    pmod(hash(v), n) == k, so `repartition(n, col('p'))` maps slot k's
+    rows to exactly partition k — a bijective bytes-exchange instead of
+    hash-collision-lumpy key partitioning. Spark's hash is recomputed
+    on the driver (no Spark job), over ids in chunks of 4n, until
+    every slot has its preimage (the search gives up at 64n)."""
+    out = np.full(n, -1, np.int64)
+    for lo in range(0, 64 * n, 4 * n):
+        ids = np.arange(lo, lo + 4 * n, dtype=np.int64)
+        slot, first = np.unique(np.mod(_spark_hash_long(ids), n),
+                                return_index=True)
+        new = out[slot] < 0
+        out[slot[new]] = ids[first[new]]
+        if (out >= 0).all():
+            return out
+    raise RuntimeError(f"slot preimage search failed for n={n}")
 
 
 def _n_partitions(spark: SparkSession, est_occ: float) -> int:
@@ -700,20 +706,18 @@ def _n_partitions(spark: SparkSession, est_occ: float) -> int:
 
 
 def _phase_b(partials: DataFrame, n_partitions: int, avgdl: float,
-             block_size: int, with_positions: bool,
-             range_shift: int) -> DataFrame:
+             with_positions: bool, range_shift: int) -> DataFrame:
     """Drop the doc-stats rows, shuffle the partial runs to their slots
     (the build's one exchange) and merge+encode each slot."""
     return (partials.filter(F.col("p") != _DOC_STATS_P)
             .repartition(n_partitions, "p")
-            .mapInArrow(_merge_factory(avgdl, block_size, with_positions,
-                                       range_shift),
+            .mapInArrow(_merge_factory(avgdl, codec.BLOCK_SIZE,
+                                       with_positions, range_shift),
                         schema=POSTING_SCHEMA))
 
 
 def build_postings(tokens_df: DataFrame,
                    stats: CorpusStats | None = None,
-                   block_size: int = codec.BLOCK_SIZE,
                    range_shift: int | None = None,
                    with_positions: bool = True,
                    vocab_filter: DataFrame | None = None,
@@ -755,22 +759,20 @@ def build_postings(tokens_df: DataFrame,
     if vocab_filter is not None:
         vocab_set = frozenset(
             r["term"] for r in vocab_filter.select("term").collect())
-    slots = _slot_values(spark, n_partitions)
+    slots = _slot_values(n_partitions)
     partials = tokens_df.select("doc_id", "tokens").mapInPandas(
         _phase_a_factory(lambda pdf: zip(pdf["doc_id"], pdf["tokens"]),
                          range_shift, slots, with_positions, vocab_set),
         schema=_PARTIAL_SCHEMA)
-    postings = _phase_b(partials, n_partitions, stats.avgdl, block_size,
+    postings = _phase_b(partials, n_partitions, stats.avgdl,
                         with_positions, range_shift)
     return postings, stats
 
 
 def build_from_corpus(corpus_df: DataFrame, tokenizer: str = "spm",
-                      block_size: int = codec.BLOCK_SIZE,
                       range_shift: int | None = None,
                       with_positions: bool = True,
-                      n_partitions: int | None = None,
-                      est_avgdl: float = 350.0) -> tuple[DataFrame, CorpusStats]:
+                      n_partitions: int | None = None) -> tuple[DataFrame, CorpusStats]:
     """Fused build: (url, html) corpus -> posting blocks in ONE python
     pass plus the bytes shuffle — the phase-A kernel of build_postings
     reads its docs through the extract/hash/tokenize loop (_extracted),
@@ -790,9 +792,9 @@ def build_from_corpus(corpus_df: DataFrame, tokenizer: str = "spm",
     est_docs = corpus_df.count()
     if range_shift is None:
         range_shift = range_shift_for(est_docs)
-    if n_partitions is None:
-        n_partitions = _n_partitions(spark, est_docs * est_avgdl)
-    slots = _slot_values(spark, n_partitions)
+    if n_partitions is None:  # ~350 tokens per extracted page
+        n_partitions = _n_partitions(spark, est_docs * 350.0)
+    slots = _slot_values(n_partitions)
     partials = corpus_df.select("url", "html").mapInPandas(
         _phase_a_factory(
             lambda pdf: ((d, t) for d, _, _, t in _extracted(pdf, tokenizer)),
@@ -818,7 +820,7 @@ def build_from_corpus(corpus_df: DataFrame, tokenizer: str = "spm",
     n_docs = int(row["n"] or 0)
     stats = CorpusStats(n_docs=n_docs,
                         avgdl=float(row["tot"] or 0) / max(n_docs, 1))
-    postings = _phase_b(partials, n_partitions, stats.avgdl, block_size,
+    postings = _phase_b(partials, n_partitions, stats.avgdl,
                         with_positions, range_shift)
     # caller contract: the partials cache must be released once the
     # postings are materialized — write_index does it automatically;
@@ -835,18 +837,6 @@ def release_build(postings: DataFrame) -> None:
     if src is not None:
         src.unpersist()
         postings._pears_partials = None
-
-
-def term_dictionary(tokens_df: DataFrame) -> DataFrame:
-    """(term, term_id, df) — the broadcastable corpus-statistics table
-    (the analogue of the reference's podsum/vocab side structures),
-    computed JVM-side from the tokens (the postings table itself carries
-    only term_id)."""
-    return (tokens_df
-            .select("doc_id", F.explode(F.array_distinct("tokens"))
-                    .alias("term"))
-            .groupBy("term").agg(F.count("*").alias("df"))
-            .withColumn("term_id", F.xxhash64("term")))
 
 
 def write_plan(postings: DataFrame) -> DataFrame:

@@ -7,20 +7,29 @@ reference has no analogue (its ingest is one-doc-at-a-time with a
 full-index rewrite per doc — `/root/reference/app/indexer/posix.py:
 17-28`); this module adds the missing production story:
 
-- the corpus is split into `n_parts` deterministic logical partitions by
-  `pmod(xxhash64(url), n_parts)` (content-addressed, so a re-run maps
-  every doc to the same partition regardless of input file order);
-- each partition builds independently (build_postings on its slice) and
-  commits atomically: postings parquet under `part=<p>/` first (written
-  by build.write_index, like every other index file), then a
-  `manifest_<p>.json` with doc/posting/block/byte counts and the input
-  fingerprint — a manifest is only written AFTER a successful parquet
-  commit, so a killed job leaves either nothing or a complete partition;
-  its counts are read back from the committed files, so the slice's
-  build plan runs once;
-- `build_resumable` skips partitions whose manifest matches the input
-  fingerprint — kill + re-run touches only unfinished partitions and
+- every index part — a resumable build's partition, a table delta
+  (`index_table_delta`), a streamed micro-batch (streaming/ingest.py) —
+  is committed by `commit_segment`: postings parquet under `part=<p>/`
+  first (written by build.write_index, like every other index file),
+  then `manifest_<p>.json`, one schema for every writer: the part's doc
+  stats (n_docs, sum_dl), its blocks, postings, payload bytes and files
+  as pyarrow reads them from the committed files (`segment_facts`, no
+  Spark job), and the writer's lineage keys. A manifest is only
+  written AFTER a successful parquet commit, so a killed job leaves
+  either nothing or a complete part;
+- `build_resumable` splits the corpus into `n_parts` deterministic
+  logical partitions by `pmod(xxhash64(doc_id), n_parts)` (content-
+  addressed, so a re-run maps every doc to the same partition
+  regardless of input file order). One aggregate over the input
+  (`input_fingerprint`) gives every partition's n_docs, sum_dl and
+  fingerprint; the corpus stats are their sums. Each partition builds
+  independently (build_postings on its slice, phase B sized by the
+  slice's own occurrences), so the input is read 1 + (parts built)
+  times. Partitions whose manifest matches the input fingerprint are
+  skipped — kill + re-run touches only unfinished partitions and
   produces byte-identical output (deterministic encoding);
+- `refresh_stats` re-derives a multi-part index's exact stats by
+  summing its manifests;
 - queries run directly on the union (the block scorer sums a doc's
   postings from every part in one per-doc accumulate); `compact_index`
   optionally merges parts into one canonical segment (an LSM/Lucene-
@@ -34,91 +43,110 @@ from __future__ import annotations
 import json
 import os
 
-import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import codec
 from .build import (_PARTIAL_SCHEMA, CorpusStats, _n_partitions, _phase_b,
-                    _slot_rows, _slot_values, build_postings, corpus_stats,
+                    _slot_rows, _slot_values, build_postings,
                     range_shift_for, read_stats, write_index, write_stats)
+
+_PAYLOAD_COLS = ("docs", "tfs", "dls", "positions")
 
 
 def _manifest_path(path: str, part: int) -> str:
     return os.path.join(path, f"manifest_{part}.json")
 
 
+def segment_facts(path: str) -> dict:
+    """Blocks, postings, payload bytes and files of one index directory,
+    read by pyarrow (no Spark job): row counts and column-chunk sizes
+    from the Parquet footers, postings as the sum of the `n` column.
+    Payload bytes are the docs/tfs/dls/positions column chunks'
+    uncompressed sizes as the footers record them (Parquet-encoded,
+    before compression)."""
+    files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+    facts = {"n_blocks": 0, "n_postings": 0, "payload_bytes": 0}
+    for f in files:
+        pf = pq.ParquetFile(os.path.join(path, f))
+        md = pf.metadata
+        facts["n_blocks"] += md.num_rows
+        facts["n_postings"] += pc.sum(pf.read(columns=["n"])["n"]).as_py() or 0
+        facts["payload_bytes"] += sum(
+            md.row_group(g).column(c).total_uncompressed_size
+            for g in range(md.num_row_groups) for c in range(md.num_columns)
+            if md.row_group(g).column(c).path_in_schema in _PAYLOAD_COLS)
+    return {**facts, "files": files}
+
+
+def commit_segment(postings: DataFrame, path: str, partition: int,
+                   n_docs: int, sum_dl: int, **lineage) -> None:
+    """Commit one index part: write_index the postings under
+    `part=<partition>/`, then write its manifest — {partition, n_docs,
+    sum_dl} from the caller, the part's segment_facts, and the caller's
+    lineage keys (`input`, table versions, `streaming`, ...)."""
+    part_dir = os.path.join(path, f"part={partition}")
+    write_index(postings, part_dir)
+    manifest = {"partition": partition, "n_docs": n_docs, "sum_dl": sum_dl,
+                **segment_facts(part_dir), **lineage}
+    with open(_manifest_path(path, partition), "w") as fh:
+        json.dump(manifest, fh, indent=1)
+
+
 def input_fingerprint(tokens_df: DataFrame, part_col: str = "build_part") -> dict[int, dict]:
-    """Per-partition fingerprint: n_docs + xor of doc_ids (order-free,
-    cheap, content-addressed)."""
+    """Per partition, in one aggregate over the input: n_docs, sum_dl
+    (the doc stats) and the xor of doc_ids (with n_docs and sum_dl, an
+    order-free, content-addressed fingerprint)."""
     rows = (tokens_df.groupBy(part_col)
             .agg(F.count("*").alias("n_docs"),
+                 F.sum(F.size("tokens")).alias("sum_dl"),
                  F.expr("bit_xor(doc_id)").alias("xor_ids"))
             .collect())
-    return {int(r[part_col]): {"n_docs": int(r["n_docs"]),
-                               "xor_ids": int(r["xor_ids"])} for r in rows}
+    return {int(r[part_col]): {k: int(r[k] or 0)
+                               for k in ("n_docs", "sum_dl", "xor_ids")}
+            for r in rows}
 
 
 def build_resumable(tokens_df: DataFrame, path: str, n_parts: int = 8,
                     stats: CorpusStats | None = None,
-                    block_size: int = codec.BLOCK_SIZE,
                     range_shift: int | None = None,
                     with_positions: bool = True,
                     fail_after_parts: int | None = None) -> CorpusStats:
     """Build the index under `path`, one commit per logical partition.
 
     `fail_after_parts` injects a crash after N partitions (tests only).
-    Returns the corpus stats (written as `_stats.json`).
+    Returns the corpus stats (written as `_stats.json` when derived
+    here, i.e. when `stats` is not given).
     """
     os.makedirs(path, exist_ok=True)
     tokens_df = tokens_df.withColumn(
         "build_part", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_parts)).cast("int"))
-    if stats is None:
-        stats = corpus_stats(tokens_df)
-        write_stats(path, stats)
     fingerprints = input_fingerprint(tokens_df)
+    if stats is None:
+        n = sum(fp["n_docs"] for fp in fingerprints.values())
+        sum_dl = sum(fp["sum_dl"] for fp in fingerprints.values())
+        stats = CorpusStats(n_docs=n, avgdl=float(sum_dl) / max(n, 1))
+        write_stats(path, stats)
+    spark = tokens_df.sparkSession
     done = 0
-    for part in range(n_parts):
-        fp = fingerprints.get(part)
-        if fp is None:
-            continue  # empty partition
+    for part, fp in sorted(fingerprints.items()):
         mpath = _manifest_path(path, part)
         if os.path.exists(mpath):
             with open(mpath) as fh:
-                m = json.load(fh)
-            if m.get("input") == fp:
-                continue  # already built for this exact input slice
+                if json.load(fh).get("input") == fp:
+                    continue  # already built for this exact input slice
         if fail_after_parts is not None and done >= fail_after_parts:
             raise RuntimeError(f"injected failure after {done} partitions")
         slice_df = tokens_df.filter(F.col("build_part") == part).drop("build_part")
-        postings, _ = build_postings(slice_df, stats=stats,
-                                     block_size=block_size,
-                                     range_shift=range_shift,
-                                     with_positions=with_positions)
-        part_dir = os.path.join(path, f"part={part}")
-        write_index(postings, part_dir)
-        # the counts come from the committed part: aggregating
-        # `postings` would run the slice's whole build plan again
-        agg = postings.sparkSession.read.parquet(part_dir).agg(
-            F.count("*").alias("n_blocks"),
-            F.sum("n").alias("n_postings"),
-            F.sum(F.octet_length("docs") + F.octet_length("tfs")
-                  + F.octet_length("dls")
-                  + F.coalesce(F.octet_length("positions"), F.lit(0)))
-            .alias("bytes")).collect()[0]
-        manifest = {
-            "partition": part,
-            "input": fp,
-            "n_docs": fp["n_docs"],
-            "n_blocks": int(agg["n_blocks"] or 0),
-            "n_postings": int(agg["n_postings"] or 0),
-            "payload_bytes": int(agg["bytes"] or 0),
-            "files": sorted(f for f in os.listdir(part_dir)
-                            if f.endswith(".parquet")),
-        }
-        with open(mpath, "w") as fh:
-            json.dump(manifest, fh, indent=1)
+        postings, _ = build_postings(
+            slice_df, stats=stats, range_shift=range_shift,
+            with_positions=with_positions,
+            n_partitions=_n_partitions(spark, fp["sum_dl"]))
+        commit_segment(postings, path, part, fp["n_docs"], fp["sum_dl"],
+                       input=fp)
         done += 1
     return stats
 
@@ -141,61 +169,29 @@ def manifests(path: str) -> list[dict]:
     return out
 
 
-def stats_from_blocks(postings: DataFrame) -> CorpusStats:
-    """Exact corpus stats recovered from the index itself: decode the
-    (doc_id, dl) stream of every block, distinct per doc and segment
-    (a doc_id in two parts is two source docs, as in the manifests'
-    counts), aggregate. Per-batch dedup collapses the posting-level
-    fan-out before the shuffle, so only ~n_docs rows exchange."""
-    part = (F.col("part").cast("long") if "part" in postings.columns
-            else F.lit(0).cast("long"))
-
-    def kernel(batches):
-        for rb in batches:
-            _, d, _, dl, _ = codec.decode_blocks(rb)
-            p = np.repeat(rb.column("part").to_numpy(),
-                          rb.column("n").to_numpy())
-            o = np.lexsort((d, p))
-            p, d, dl = p[o], d[o], dl[o]
-            new = np.ones(d.size, bool)
-            new[1:] = (p[1:] != p[:-1]) | (d[1:] != d[:-1])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(p[new]), pa.array(d[new]), pa.array(dl[new])],
-                names=["part", "doc_id", "dl"])
-
-    pairs = (postings.select(part.alias("part"), "term_id", "n", "docs",
-                             "tfs", "dls")
-             .mapInArrow(kernel, "part long, doc_id long, dl long")
-             .dropDuplicates(["part", "doc_id"]))
-    row = pairs.agg(F.count("*").alias("n"),
-                    F.sum("dl").alias("s")).collect()[0]
-    n = int(row["n"] or 0)
-    return CorpusStats(n_docs=n, avgdl=float(row["s"] or 0) / max(n, 1))
-
-
-def refresh_stats(spark: SparkSession, path: str) -> CorpusStats:
-    """Post-drain stats correction for a streamed/resumable index:
-    stream_build freezes the seed (N, avgdl) — BM25 impacts drift as
-    segments accumulate. Re-derive exact stats from the per-batch
-    manifests (n_docs + sum_dl, written by the streaming sink) or, for
-    manifests without doc stats, from the blocks themselves; rewrite
-    `_stats.json`. Pair with compact_index(..., stats=refreshed) to
-    re-encode max_impact metadata so a long-lived streamed index equals
-    a fresh batch build byte-for-byte."""
+def refresh_stats(path: str) -> CorpusStats:
+    """Post-drain stats correction for a multi-part index: stream_build
+    and index_table_delta freeze the seed (N, avgdl), so BM25 impacts
+    drift as segments accumulate. The exact stats are the sums of the
+    manifests' n_docs and sum_dl (a doc_id in two parts counts twice,
+    as two source docs); rewrite `_stats.json`. No Spark job runs.
+    Pair with compact_index(..., stats=refreshed) to re-encode
+    max_impact metadata so a long-lived streamed index equals a fresh
+    batch build byte-for-byte."""
     ms = manifests(path)
-    if ms and all("sum_dl" in m for m in ms):
-        n = sum(m["n_docs"] for m in ms)
-        s = sum(m["sum_dl"] for m in ms)
-        stats = CorpusStats(n_docs=n, avgdl=float(s) / max(n, 1))
-    else:
-        postings, _ = read_resumable(spark, path)
-        stats = stats_from_blocks(postings)
+    if not ms or any("sum_dl" not in m for m in ms):
+        raise ValueError(
+            f"refresh_stats: {path} needs a manifest with n_docs and "
+            f"sum_dl for every part ({len(ms)} manifests found); "
+            "rebuild the index to write them")
+    n = sum(m["n_docs"] for m in ms)
+    stats = CorpusStats(n_docs=n, avgdl=float(sum(m["sum_dl"] for m in ms))
+                        / max(n, 1))
     write_stats(path, stats)
     return stats
 
 
-def compact_index(postings: DataFrame, stats: CorpusStats,
-                  block_size: int = codec.BLOCK_SIZE) -> DataFrame:
+def compact_index(postings: DataFrame, stats: CorpusStats) -> DataFrame:
     """Merge a multi-part index into one canonical segment: a
     mapInArrow decodes every part's blocks back into posting runs and
     emits them as phase-A partial rows, which the build's phase B
@@ -213,7 +209,7 @@ def compact_index(postings: DataFrame, stats: CorpusStats,
     range_shift = range_shift_for(stats.n_docs)
     n_partitions = _n_partitions(
         spark, int(stats.n_docs * max(stats.avgdl, 1.0)))
-    slots = np.asarray(_slot_values(spark, n_partitions), np.int64)
+    slots = _slot_values(n_partitions)
     has_pos = ("positions" in postings.columns and postings.filter(
         F.col("positions").isNull()).isEmpty())
 
@@ -227,8 +223,8 @@ def compact_index(postings: DataFrame, stats: CorpusStats,
     if has_pos:
         cols.append("positions")
     partials = postings.select(*cols).mapInArrow(runs, _PARTIAL_SCHEMA)
-    return _phase_b(partials, n_partitions, stats.avgdl, block_size,
-                    has_pos, range_shift)
+    return _phase_b(partials, n_partitions, stats.avgdl, has_pos,
+                    range_shift)
 
 
 # --------------------------------------------- snapshot-table delta builds
@@ -239,8 +235,8 @@ def index_table_delta(spark: SparkSession, table_path: str,
     """Consume a snapshot table (catalog.py) incrementally: the index
     records the table version it last indexed (`_table_version.json`),
     and each run builds ONLY the rows appended since as a new segment
-    part (part=<to_version>), with a lineage manifest recording the
-    consumed version range + doc stats; write_index writes the part.
+    part (part=<to_version>), committed by commit_segment with the
+    consumed version range as its manifest's lineage.
     First run baselines on the full current snapshot. Already-current
     is a no-op. A compact commit in the range surfaces
     catalog.incremental_scan's re-baseline error — the operator
@@ -305,21 +301,10 @@ def index_table_delta(spark: SparkSession, table_path: str,
     if n_delta > 0:
         postings, _ = build_postings(toks, stats=stats,
                                      with_positions=with_positions)
-        part_dir = os.path.join(index_path, f"part={cur}")
-        write_index(postings, part_dir)
-        manifest = {
-            "partition": cur,
-            "table": table_path,
-            "table_version_from": frm,
-            "table_version_to": cur,
-            "n_docs": n_delta,
-            "sum_dl": sum_dl,
-            "n_delete_commits_in_range": n_deletes,
-            "files": sorted(f for f in os.listdir(part_dir)
-                            if f.endswith(".parquet")),
-        }
-        with open(_manifest_path(index_path, cur), "w") as fh:
-            json.dump(manifest, fh, indent=1)
+        commit_segment(postings, index_path, cur, n_delta, sum_dl,
+                       table=table_path, table_version_from=frm,
+                       table_version_to=cur,
+                       n_delete_commits_in_range=n_deletes)
     toks.unpersist()
     # state flips only AFTER the segment + manifest are durable, so a
     # crash mid-build re-consumes the same delta (idempotent: the part

@@ -79,14 +79,11 @@ def cmd_build(args) -> int:
     has_html = "html" in _read_corpus(spark, args.input).columns
     tokens = None if (has_html and not args.resume) else \
         _load_corpus_tokens(spark, args.input, args.tokenizer)
+    from .index.checkpoint import build_resumable, manifests, segment_facts
     if args.resume:
-        from .index.checkpoint import build_resumable, manifests
         stats = build_resumable(tokens, args.output, n_parts=args.n_parts,
                                 with_positions=not args.no_positions)
-        ms = manifests(args.output)
-        n_blocks = sum(m["n_blocks"] for m in ms)
-        payload = sum(m["payload_bytes"] for m in ms)
-        n_files = sum(len(m["files"]) for m in ms)
+        segments = manifests(args.output)
     else:
         from .index.build import (build_from_corpus, build_postings,
                                   write_index)
@@ -98,14 +95,16 @@ def cmd_build(args) -> int:
             postings, stats = build_postings(
                 tokens, with_positions=not args.no_positions)
         write_index(postings, args.output, stats=stats)
-        n_blocks, payload, n_files = _footer_facts(args.output)
+        segments = [segment_facts(args.output)]
     dt = time.time() - t0
     _emit({"job": "build", "input": args.input, "output": args.output,
            "resume": bool(args.resume), "n_docs": stats.n_docs,
            "avgdl": round(stats.avgdl, 3), "seconds": round(dt, 2),
            "docs_per_sec": round(stats.n_docs / dt, 1),
-           "n_blocks": n_blocks, "payload_bytes": payload,
-           "file_bytes": _file_bytes(args.output), "files": n_files})
+           "n_blocks": sum(m["n_blocks"] for m in segments),
+           "payload_bytes": sum(m["payload_bytes"] for m in segments),
+           "file_bytes": _file_bytes(args.output),
+           "files": sum(len(m["files"]) for m in segments)})
     return 0
 
 
@@ -115,22 +114,6 @@ def _file_bytes(path: str) -> int:
     return sum(os.path.getsize(os.path.join(d, f))
                for d, _, fs in os.walk(path) for f in fs
                if f.endswith(".parquet"))
-
-
-def _footer_facts(path: str) -> tuple[int, int, int]:
-    """(blocks, payload bytes, files) of a single-segment index, read
-    from its Parquet footers by pyarrow: no Spark job, no data page.
-    Payload bytes are the docs/tfs/dls/positions column chunks'
-    uncompressed sizes as the footers record them (Parquet-encoded,
-    before compression)."""
-    import pyarrow.parquet as pq
-    mds = [pq.read_metadata(os.path.join(path, f))
-           for f in os.listdir(path) if f.endswith(".parquet")]
-    chunks = [md.row_group(g).column(c) for md in mds
-              for g in range(md.num_row_groups) for c in range(md.num_columns)]
-    payload = sum(c.total_uncompressed_size for c in chunks
-                  if c.path_in_schema in ("docs", "tfs", "dls", "positions"))
-    return sum(md.num_rows for md in mds), payload, len(mds)
 
 
 def _read_any_index(spark, path: str):
@@ -180,7 +163,7 @@ def cmd_compact(args) -> int:
     if args.refresh_stats:
         # post-drain correction: streamed segments carry the frozen
         # seed (N, avgdl); recompute exact stats and re-encode impacts
-        stats = refresh_stats(spark, args.index)
+        stats = refresh_stats(args.index)
     merged = compact_index(postings, stats)
     write_index(merged, args.output, stats=stats)
     _emit({"job": "compact", "index": args.index, "output": args.output,
@@ -492,7 +475,7 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--index", required=True)
     c.add_argument("--output", required=True)
     c.add_argument("--refresh-stats", action="store_true",
-                   help="recompute exact (N, avgdl) from manifests/blocks "
+                   help="recompute exact (N, avgdl) from the part manifests "
                         "before re-encoding (post-streaming-drain step)")
     c.set_defaults(fn=cmd_compact)
 

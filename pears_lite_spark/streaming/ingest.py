@@ -5,8 +5,9 @@ matrix + positional index per doc and making it immediately searchable
 (`/root/reference/app/indexer/controllers.py:159-184`, SURVEY.md §2.10).
 The Spark-native equivalent is micro-batch ingestion: Structured
 Streaming over the corpus directory, `foreachBatch` building an index
-SEGMENT per micro-batch (part = batch_id), written by build.write_index
-like every other index file, appended next to earlier segments.
+SEGMENT per micro-batch (part = batch_id), committed with its manifest
+by checkpoint.commit_segment like every other index part, appended
+next to earlier segments.
 Queries see the union immediately (the block scorers sum a doc's
 postings from every segment); `checkpoint.compact_index` merges
 segments, so the steady state is the same LSM-ish segment+merge
@@ -21,13 +22,13 @@ drains a backlog batch-by-batch and stops.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..index.build import (build_postings, CorpusStats, write_index,
+from ..index.build import (build_postings, CorpusStats, with_doc_id,
                            write_stats)
+from ..index.checkpoint import commit_segment
 
 CORPUS_SCHEMA = T.StructType([
     T.StructField("url", T.StringType()),
@@ -41,29 +42,21 @@ CORPUS_SCHEMA = T.StructType([
 def _segment_writer(index_path: str, stats: CorpusStats,
                     tokenizer, with_positions: bool = True):
     """foreachBatch sink: tokenize the micro-batch, build its posting
-    segment, write_index it under part=<batch_id>, then a manifest."""
+    segment and commit it (checkpoint.commit_segment) as part=<batch_id>
+    with the batch's doc stats, so refresh_stats can correct the frozen
+    seed (N, avgdl) after the drain without re-reading the corpus."""
 
     def write_batch(batch_df: DataFrame, batch_id: int):
-        from ..index.build import with_doc_id
-        docs = with_doc_id(batch_df)
-        toks = (tokenizer(docs).select("doc_id", "tokens")
+        toks = (tokenizer(with_doc_id(batch_df)).select("doc_id", "tokens")
                 .persist())  # one tokenize pass feeds build + stats agg
-        postings, _ = build_postings(toks, stats=stats,
-                                     with_positions=with_positions)
-        part_dir = os.path.join(index_path, f"part={batch_id}")
-        write_index(postings, part_dir)
-        # per-batch doc stats ride in the manifest so refresh_stats can
-        # correct the frozen seed (N, avgdl) after the drain without
-        # re-reading the corpus
         agg = toks.agg(F.count("*").alias("n"),
                        F.sum(F.size("tokens")).alias("sum_dl")).collect()[0]
+        postings, _ = build_postings(toks, stats=stats,
+                                     with_positions=with_positions)
+        commit_segment(postings, index_path, int(batch_id),
+                       int(agg["n"] or 0), int(agg["sum_dl"] or 0),
+                       streaming=True)
         toks.unpersist()
-        with open(os.path.join(index_path, f"manifest_{batch_id}.json"),
-                  "w") as fh:
-            json.dump({"partition": int(batch_id),
-                       "n_docs": int(agg["n"] or 0),
-                       "sum_dl": int(agg["sum_dl"] or 0),
-                       "streaming": True}, fh)
 
     return write_batch
 

@@ -317,7 +317,7 @@ def test_index_delta_consumes_table_versions(spark, capsys, tmp_path):
 
     # the union index covers all 30 docs; refresh_stats is exact
     postings, _ = read_resumable(spark, idx)
-    stats = refresh_stats(spark, idx)
+    stats = refresh_stats(idx)
     assert stats.n_docs == 30
     # and it serves: every doc's url token is findable via BM25
     from pears_lite_spark.search.bm25 import search_blocks

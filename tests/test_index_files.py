@@ -1,6 +1,7 @@
 """The index's files: every posting writer goes through write_index,
 so every file it leaves is zstd-compressed and holds a fresh build's
-blocks; a resumable build reads its input once per part."""
+blocks; a resumable build reads its input once per part plus once for
+its stats, and sizes each part's phase B by the part."""
 
 import glob
 import os
@@ -106,10 +107,10 @@ def test_every_posting_writer_writes_zstd(spark, capsys, corpus, tokens,
 
 
 def test_resumable_build_reads_input_once_per_part(spark, tokens, tmp_path):
-    """build_resumable reads its tokens input 2 + n_parts times: the
-    corpus stats, the input fingerprint, and one build per part. Each
-    manifest's counts come from the committed part, not from a second
-    run of the part's build."""
+    """build_resumable reads its tokens input 1 + n_parts times: one
+    aggregate for every part's doc stats and fingerprint, and one build
+    per part. Each manifest's counts come from the committed part's
+    files, not from a second run of the part's build."""
     from pears_lite_spark.index.checkpoint import build_resumable, manifests
     log = str(tmp_path / "rows.txt")
 
@@ -125,7 +126,37 @@ def test_resumable_build_reads_input_once_per_part(spark, tokens, tmp_path):
                     str(tmp_path / "idx"), n_parts=n_parts)
     with open(log) as fh:
         rows = sum(int(x) for x in fh)
-    assert rows == (2 + n_parts) * n_docs
+    assert rows == (1 + n_parts) * n_docs
     ms = manifests(str(tmp_path / "idx"))
     assert sum(m["n_docs"] for m in ms) == n_docs
     assert all(m["n_blocks"] > 0 and m["n_postings"] > 0 for m in ms)
+
+
+def test_resumable_parts_size_phase_b_by_their_own_occurrences(
+        spark, tokens, tmp_path, monkeypatch):
+    """Each part's phase B gets slots for its own occurrences: with
+    TARGET_PART_ROWS small enough that the occurrence count sets the
+    slot count, every part writes at most its own slot count, fewer
+    than a whole build's, and its blocks are the slice's build's."""
+    from pears_lite_spark.index import build
+    from pears_lite_spark.index.checkpoint import build_resumable, manifests
+    sum_dl = tokens.agg(F.sum(F.size("tokens"))).first()[0]
+    monkeypatch.setattr(build, "TARGET_PART_ROWS", sum_dl // 40)
+    whole = build._n_partitions(spark, sum_dl)
+    assert whole > int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # one file per slot: no coalescing of small shuffle partitions
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        path = str(tmp_path / "idx")
+        stats = build_resumable(tokens, path, n_parts=3)
+    finally:
+        spark.conf.set(key, before)
+    for m in manifests(path):
+        own = build._n_partitions(spark, m["sum_dl"])
+        assert 0 < len(m["files"]) <= own < whole
+        part = tokens.filter(
+            F.pmod(F.xxhash64("doc_id"), F.lit(3)) == m["partition"])
+        _assert_written(spark, os.path.join(path, f"part={m['partition']}"),
+                        build_postings(part, stats=stats)[0])

@@ -33,8 +33,10 @@ def corpus_path(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("extra", [[], ["--resume", "--n-parts", "3"],
+                                   ["--resume", "--n-parts", "1"],
                                    ["--no-positions"]],
-                         ids=["fused", "resumable", "fused_no_positions"])
+                         ids=["fused", "resumable", "resumable_1part",
+                              "fused_no_positions"])
 def test_build_then_query_cli(spark, capsys, corpus_path, tmp_path, extra):
     """Build with the given options (and, for a non-default build, the
     fused build beside it), then query each index through the CLI: the
@@ -42,7 +44,9 @@ def test_build_then_query_cli(spark, capsys, corpus_path, tmp_path, extra):
     Its hits must be rank-identical to search_blocks over the same
     postings, and every other build's hits to the fused build's. The
     build line reports the index's blocks, payload bytes, on-disk file
-    bytes and files; a --no-positions build stores no positions."""
+    bytes and files; a 1-part --resume build reports the fused build's
+    blocks, payload bytes and file bytes; a --no-positions build
+    stores no positions."""
     import glob
     from pears_lite_spark import jobs
     from pears_lite_spark.search.bm25 import search_blocks
@@ -51,7 +55,7 @@ def test_build_then_query_cli(spark, capsys, corpus_path, tmp_path, extra):
     builds = {"fused": []}
     if extra:
         builds["other"] = extra
-    hits, payload = {}, {}
+    hits, payload, facts = {}, {}, {}
     for name, opts in builds.items():
         idx = str(tmp_path / name)
         built = _run_cli(capsys, ["build", "--input", corpus_path,
@@ -75,6 +79,8 @@ def test_build_then_query_cli(spark, capsys, corpus_path, tmp_path, extra):
         # 12 footers outweigh what zstd saves (README, "Index layout")
         assert 0 < built["file_bytes"] < built["payload_bytes"] or resume
         payload[name] = built["payload_bytes"]
+        facts[name] = [built[k] for k in
+                       ("n_blocks", "payload_bytes", "file_bytes")]
         if "--no-positions" in opts:
             assert postings.filter("positions IS NOT NULL").isEmpty()
         res = _run_cli(capsys, ["query", "--index", idx,
@@ -93,6 +99,8 @@ def test_build_then_query_cli(spark, capsys, corpus_path, tmp_path, extra):
     assert all(hits["fused"])
     if "--no-positions" in extra:
         assert payload["other"] < payload["fused"]
+    if extra[-2:] == ["--n-parts", "1"]:
+        assert facts["other"] == facts["fused"]
 
 
 def test_pipeline_cli_all_gates(spark, capsys, corpus_path, tmp_path):

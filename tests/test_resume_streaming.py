@@ -70,16 +70,133 @@ def test_resume_skips_completed_partitions(spark, tokens, tmp_path):
         assert os.path.getmtime(f) == t  # untouched -> skipped
 
 
-def test_manifest_lineage_fields(spark, tokens, tmp_path):
-    path = str(tmp_path / "m")
-    build_resumable(tokens, path, n_parts=2)
-    ms = manifests(path)
-    assert len(ms) == 2
-    total_docs = sum(m["n_docs"] for m in ms)
-    assert total_docs == tokens.count()
-    for m in ms:
-        assert m["n_postings"] > 0 and m["payload_bytes"] > 0
-        assert m["files"] and m["input"]["n_docs"] == m["n_docs"]
+def _jobs_launched(spark, fn, group):
+    """(fn(), Spark jobs it launched): fn runs in job group `group`; a
+    job in a later group is the barrier (job events reach the status
+    tracker in order)."""
+    import time
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+        sc.setJobGroup(group + "-barrier", group)
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(group + "-barrier"):
+        assert time.time() < deadline, "barrier job never reported"
+        time.sleep(0.1)
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def segment_indexes(spark, tmp_path_factory):
+    """One 60-doc corpus indexed by each of the three segment writers:
+    build_resumable (2 parts), stream_build (2 files, so 2 micro-batches)
+    and index_table_delta (a 40-row baseline, then a 20-row append).
+    Returns the corpus tokens and {writer: index path}."""
+    import shutil
+    from pears_lite_spark import catalog
+    from pears_lite_spark.corpus import gen_corpus
+    from pears_lite_spark.index.build import with_doc_id
+    from pears_lite_spark.index.checkpoint import index_table_delta
+    from pears_lite_spark.streaming.ingest import stream_build
+    root = tmp_path_factory.mktemp("segments")
+    pdf = gen_corpus(60)
+    corpus_dir = str(root / "corpus")
+    os.makedirs(corpus_dir)
+    for i in range(2):
+        tmp = str(root / f"tmp{i}")
+        spark.createDataFrame(pdf.iloc[i * 30:(i + 1) * 30]) \
+            .coalesce(1).write.parquet(tmp)
+        shutil.move(glob.glob(os.path.join(tmp, "*.parquet"))[0],
+                    os.path.join(corpus_dir, f"file{i}.parquet"))
+    toks = tokenize_whitespace(with_doc_id(spark.read.parquet(corpus_dir))) \
+        .select("doc_id", "tokens").cache()
+    paths = {w: str(root / w) for w in ("resumable", "stream", "delta")}
+    stats = build_resumable(toks, paths["resumable"], n_parts=2)
+    stream_build(spark, corpus_dir, paths["stream"], stats,
+                 tokenize_whitespace)
+    table = str(root / "tbl")
+    rows = pdf[["url", "text", "lang"]]
+    catalog.create_table(spark.createDataFrame(rows.iloc[:40]), table,
+                         key_col="url")
+    index_table_delta(spark, table, paths["delta"], tokenize_whitespace)
+    catalog.append(spark.createDataFrame(rows.iloc[40:]), table)
+    index_table_delta(spark, table, paths["delta"], tokenize_whitespace)
+    yield toks, paths
+    toks.unpersist()
+
+
+def test_manifest_lineage_fields(spark, segment_indexes):
+    """Every segment writer commits its parts through commit_segment:
+    each manifest carries the shared keys plus its writer's lineage,
+    and its counts equal what pyarrow reads from the part's files."""
+    import pyarrow.parquet as pq
+    toks, paths = segment_indexes
+    shared = {"partition", "n_docs", "sum_dl", "n_blocks", "n_postings",
+              "payload_bytes", "files"}
+    lineage = {"resumable": {"input"}, "stream": {"streaming"},
+               "delta": {"table", "table_version_from", "table_version_to",
+                         "n_delete_commits_in_range"}}
+    part_of = F.pmod(F.xxhash64("doc_id"), F.lit(2))
+    for writer, path in paths.items():
+        ms = manifests(path)
+        assert len(ms) == 2, writer
+        assert sum(m["n_docs"] for m in ms) == toks.count()
+        assert sum(m["sum_dl"] for m in ms) == \
+            toks.agg(F.sum(F.size("tokens"))).first()[0]
+        for m in ms:
+            assert set(m) == shared | lineage[writer], writer
+            part_dir = os.path.join(path, f"part={m['partition']}")
+            files = sorted(f for f in os.listdir(part_dir)
+                           if f.endswith(".parquet"))
+            assert m["files"] == files and files
+            mds = [pq.read_metadata(os.path.join(part_dir, f)) for f in files]
+            table = pq.read_table(part_dir, columns=["n"])
+            assert m["n_blocks"] == table.num_rows > 0
+            assert m["n_postings"] == sum(table.column("n").to_pylist())
+            assert m["payload_bytes"] == sum(
+                md.row_group(g).column(c).total_uncompressed_size
+                for md in mds for g in range(md.num_row_groups)
+                for c in range(md.num_columns)
+                if md.schema.column(c).name in
+                ("docs", "tfs", "dls", "positions"))
+            if writer == "resumable":
+                part = toks.filter(part_of == m["partition"])
+                assert m["input"]["n_docs"] == m["n_docs"] == part.count()
+                assert m["input"]["sum_dl"] == m["sum_dl"]
+    ms = manifests(paths["delta"])
+    assert [(m["table_version_from"], m["table_version_to"], m["n_docs"])
+            for m in ms] == [(None, 1, 40), (1, 2, 20)]
+    assert all(m["streaming"] for m in manifests(paths["stream"]))
+
+
+def test_refresh_stats_sums_manifests_without_spark(spark, segment_indexes,
+                                                     tmp_path):
+    """refresh_stats on a resumable and on a streamed index launches no
+    Spark job and equals corpus_stats of the tokens; an index without
+    manifests, or with one lacking sum_dl, is a ValueError."""
+    from pears_lite_spark.index.build import read_stats
+    from pears_lite_spark.index.checkpoint import refresh_stats
+    toks, paths = segment_indexes
+    want = corpus_stats(toks)
+    for writer in ("resumable", "stream"):
+        got, n_jobs = _jobs_launched(
+            spark, lambda: refresh_stats(paths[writer]), f"refresh-{writer}")
+        assert n_jobs == 0
+        assert got.n_docs == want.n_docs
+        assert got.avgdl == pytest.approx(want.avgdl, abs=1e-12)
+        assert read_stats(paths[writer]) == got
+    with pytest.raises(ValueError, match="manifest"):
+        refresh_stats(str(tmp_path))
+    m = manifests(paths["resumable"])[0]
+    del m["sum_dl"]
+    (tmp_path / "manifest_0.json").write_text(json.dumps(m))
+    with pytest.raises(ValueError, match="sum_dl"):
+        refresh_stats(str(tmp_path))
 
 
 def test_compaction_equivalence(spark, tokens, tmp_path):
@@ -325,8 +442,7 @@ def test_stream_refresh_compact_equals_fresh_build(spark, tmp_path):
     from pears_lite_spark.corpus import gen_corpus
     from pears_lite_spark.index.build import (CorpusStats, build_postings,
                                               with_doc_id)
-    from pears_lite_spark.index.checkpoint import (refresh_stats,
-                                                   stats_from_blocks)
+    from pears_lite_spark.index.checkpoint import refresh_stats
     from pears_lite_spark.streaming.ingest import stream_build
 
     for n_rep in (0, 3):
@@ -346,7 +462,7 @@ def test_stream_refresh_compact_equals_fresh_build(spark, tmp_path):
         stream_build(spark, corpus_dir, idx, seed,
                      lambda d: tokenize_whitespace(d))
 
-        stats = refresh_stats(spark, idx)
+        stats = refresh_stats(idx)
         sp, sstats = read_resumable(spark, idx)
         assert sstats.n_docs == stats.n_docs  # _stats.json rewritten
 
@@ -355,10 +471,6 @@ def test_stream_refresh_compact_equals_fresh_build(spark, tmp_path):
         true_stats = corpus_stats(toks)
         assert stats.n_docs == true_stats.n_docs
         assert stats.avgdl == pytest.approx(true_stats.avgdl, abs=1e-12)
-        # block-decode recovery path agrees with the manifest path
-        blk = stats_from_blocks(sp)
-        assert (blk.n_docs, blk.avgdl) == (stats.n_docs,
-                                           pytest.approx(stats.avgdl, abs=1e-12))
 
         compacted = compact_index(sp, stats).persist()
         fresh, _ = build_postings(toks, stats=true_stats)
@@ -554,6 +666,23 @@ def test_slot_of_keeps_groups_and_spreads_hot_terms():
         groups = pd.DataFrame({"t": tids, "r": ranges, "s": slot})
         assert (groups.groupby(["t", "r"])["s"].nunique() == 1).all()
         assert len(set(_slot_of(hot, np.arange(16), n_slots).tolist())) > 1
+
+
+def test_slot_values_are_least_spark_hash_preimages(spark):
+    """_slot_values recomputes Spark's hash on the driver: Spark's
+    pmod(hash(v), n) over the returned values is 0..n-1, and each value
+    is the least id of its slot."""
+    from pears_lite_spark.index.build import _slot_values
+    for n in (1, 4, 7, 64, 1000):
+        vals = _slot_values(n).tolist()
+        got = spark.createDataFrame([(v,) for v in vals], "v long").select(
+            F.pmod(F.hash("v"), F.lit(n)).alias("s")).collect()
+        assert [r["s"] for r in got] == list(range(n))
+        least = (spark.range(0, max(vals) + 1)
+                 .groupBy(F.pmod(F.hash("id"), F.lit(n)).alias("s"))
+                 .agg(F.min("id").alias("id")).collect())
+        assert sorted((r["s"], r["id"]) for r in least) == \
+            list(enumerate(vals))
 
 
 def test_repartitioned_write_roundtrip(spark, tokens, tmp_path):

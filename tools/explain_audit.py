@@ -28,6 +28,28 @@ def grab(text: str, *needles: str) -> list[str]:
     return out
 
 
+def jobs_launched(spark, fn, name: str) -> int:
+    """Spark jobs `fn()` launches: it runs in job group `name`, then one
+    job in a later group is the barrier (job events reach the status
+    tracker in order), awaited for up to 30 s."""
+    import time
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        fn()
+        sc.setJobGroup(name + "-barrier", name + "-barrier")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(name + "-barrier"):
+        if time.time() > deadline:
+            raise RuntimeError(f"no barrier job seen for {name}")
+        time.sleep(0.1)
+    return len(tracker.getJobIdsForGroup(name))
+
+
 def main(sf_dir: str):
     from pyspark.sql import functions as F
     from pears_lite_spark.index.build import (build_postings, read_index,
@@ -133,26 +155,14 @@ def main(sf_dir: str):
           f"{'OK' if ok4 else 'CHECK'}\n")
 
     # 5. replica serving: a 60-query call scores on the driver replica
-    # and launches no Spark job (a job in a later group is the barrier:
-    # job events reach the tracker in order)
-    import time
+    # and launches no Spark job
     from pears_lite_spark.search.bm25 import Searcher
     s = Searcher(postings, stats)
-    sc = spark.sparkContext
     words = ["spark", "join", "index", "query", "plan", "data", "search",
              "table", "stream", "engine"]
     queries = [[a, b] for a in words for b in words[:6]]
-    sc.setJobGroup("audit-replica", "audit-replica")
-    s.search(queries, k=10)
-    sc.setJobGroup("audit-barrier", "audit-barrier")
-    spark.range(1).collect()
-    sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    deadline = time.time() + 30
-    while not tracker.getJobIdsForGroup("audit-barrier") \
-            and time.time() < deadline:
-        time.sleep(0.1)
-    n_jobs = len(tracker.getJobIdsForGroup("audit-replica"))
+    n_jobs = jobs_launched(spark, lambda: s.search(queries, k=10),
+                           "audit-replica")
     r = s.flat
     per_posting = (r.ords.nbytes + r.contrib.nbytes) / max(1, r.ords.size)
     print("## 5. Replica serving: no Spark job for any query count\n")
@@ -163,8 +173,7 @@ def main(sf_dir: str):
           f"ordinal -> doc_id)")
     print(f"Spark jobs for one {len(queries)}-query call: {n_jobs}")
     print("```")
-    ok5 = n_jobs == 0 and per_posting <= 12 \
-        and tracker.getJobIdsForGroup("audit-barrier")
+    ok5 = n_jobs == 0 and per_posting <= 12
     print(f"\nevery query scores on the driver replica, zero jobs per "
           f"call, at most 12 B per posting: {'OK' if ok5 else 'NO'}\n")
     s.close()
@@ -373,24 +382,66 @@ def main(sf_dir: str):
           f"one task, and the offsets branch touches only per-bucket "
           f"totals: {'OK' if ok15 else 'NO'}\n")
 
-    # 21. compaction: blocks decode into runs that the build's phase B
-    # merges (one exchange, no grouped pandas UDF)
+    # 19. slot preimages: Spark's hash recomputed on the driver, no job
+    from pears_lite_spark.index.build import _slot_values
+    ns = (8, 64, 1000)
+    slot_vals = {}
+    n_jobs = jobs_launched(
+        spark, lambda: slot_vals.update({n: _slot_values(n) for n in ns}),
+        "audit-slots")
+    hit = {n: sorted(r["s"] for r in spark.createDataFrame(
+        [(int(v),) for v in slot_vals[n]], "v long").select(
+            F.pmod(F.hash("v"), F.lit(n)).alias("s")).collect())
+        for n in ns}
+    print("## 19. Posting-slot preimages: computed on the driver, no "
+          "Spark job\n")
+    print("```")
+    for n in ns:
+        print(f"n={n}: Spark pmod(hash(v), n) over the {n} preimages hits "
+              f"{len(set(hit[n]))} distinct slots, max preimage "
+              f"{int(slot_vals[n].max())}")
+    print(f"Spark jobs for the {len(ns)} searches: {n_jobs}")
+    print("```\n")
+    ok19 = n_jobs == 0 and all(hit[n] == list(range(n)) for n in ns)
+    print(f"`_slot_values` runs Spark's hash (Murmur3_x86_32 of the "
+          f"int64 id, seed 42) in numpy and keeps the least id per "
+          f"slot, so `repartition(n, p)` sends slot k to partition k "
+          f"with no Spark job: {'OK' if ok19 else 'NO'}\n")
+
+    # 21. resumable build + compaction: one commit per part whose
+    # manifest comes from the part's files, stats refreshed from the
+    # manifests with no job, and blocks that decode into runs the
+    # build's phase B merges (one exchange, no grouped pandas UDF)
     import shutil
     from pears_lite_spark.index.checkpoint import (build_resumable,
-                                                   compact_index,
-                                                   read_resumable)
+                                                   compact_index, manifests,
+                                                   read_resumable,
+                                                   refresh_stats)
     res_path = "/tmp/pears_plan_resumable"
     shutil.rmtree(res_path, ignore_errors=True)
     build_resumable(toks, res_path, n_parts=2)
+    ms = manifests(res_path)
+    n_refresh = jobs_launched(spark, lambda: refresh_stats(res_path),
+                              "audit-refresh")
     t = explain(compact_index(*read_resumable(spark, res_path)))
     n_exch = len(re.findall(r"^\(\d+\) Exchange", t, re.M))
     n_arrow = len(re.findall(r"^\(\d+\) MapInArrow", t, re.M))
     n_groups = len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas", t, re.M))
-    print("## 21. Compaction: the build's phase B, one exchange\n")
-    print(f"```\nnon-broadcast Exchange count: {n_exch}, MapInArrow count: "
+    print("## 21. Resumable build and compaction: manifests from the "
+          "part files, the build's phase B, one exchange\n")
+    print("```")
+    print(f"manifest keys: {', '.join(sorted(ms[0]))}")
+    for m in ms:
+        print(f"part {m['partition']}: {m['n_docs']} docs, "
+              f"{m['n_blocks']} blocks, {m['n_postings']} postings, "
+              f"{m['payload_bytes']} payload bytes, {len(m['files'])} files")
+    print(f"Spark jobs for refresh_stats: {n_refresh}")
+    print(f"non-broadcast Exchange count: {n_exch}, MapInArrow count: "
           f"{n_arrow}, FlatMapGroupsInPandas count: {n_groups}\n```\n")
-    ok21 = n_exch == 1 and n_groups == 0
-    print(f"compact_index decodes blocks into posting runs (one "
+    ok21 = n_exch == 1 and n_groups == 0 and n_refresh == 0
+    print(f"each part's manifest counts come from its committed Parquet "
+          f"files, refresh_stats sums the manifests with no Spark job, "
+          f"and compact_index decodes blocks into posting runs (one "
           f"mapInArrow) and merges them in the build's phase B, with no "
           f"grouped pandas UDF: {'OK' if ok21 else 'CHECK'}\n")
     spark.stop()
