@@ -9,7 +9,8 @@ shuffle of packed bytes:
     (doc_id, tokens) or (url, html)
            --mapInPandas (phase A, one kernel for both inputs)-->
              per-split sorted partial runs, serialized as a few
-             binary-blob rows per target slot, plus per-flush doc stats
+             binary-blob rows per target slot, plus each flush's
+             (n_docs, sum_dl) as a stats row to every slot
            --repartition(bijective slot key)-->
            --mapInArrow (phase B) merge + delta/varint/block-max encode
            --sortWithinPartitions + zstd parquet write, one file
@@ -32,6 +33,10 @@ The slot key (`_slot_of`) mixes (term_id, doc_range), so a group's
 runs meet in one phase-B partition, and the write takes phase B's
 partitioning as it stands: each task sorts its blocks by (term_id,
 doc_range, block_id) and writes one file — one exchange per build.
+Every phase-B task also receives every flush's stats row, so a fused
+build's tasks each sum the corpus's n_docs and avgdl themselves: the
+build is one job after the corpus row count, with no persist and no
+stats pass.
 
 Skew strategy (SURVEY.md §4): hot terms (stopword-like pieces) would
 overload a single reducer in a naive groupBy(term). The doc_range in
@@ -62,7 +67,9 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 
+from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..vocab import get_vocab
@@ -101,6 +108,54 @@ _POSTING_PA = pa.schema([
 class CorpusStats:
     n_docs: int
     avgdl: float
+
+
+class _PairUnion(AccumulatorParam):
+    """Set union of (n_docs, sum_dl) pairs: every phase-B task of one
+    fused build adds the same corpus totals, so a retried task or a
+    second run of the plan adds no second count. It never raises: it
+    runs in the driver's accumulator-server thread, where an error
+    would be lost; _BuildStats checks the pairs when they are read."""
+
+    def zero(self, value):
+        return frozenset()
+
+    def addInPlace(self, a, b):
+        return a | b
+
+
+class _BuildStats(CorpusStats):
+    """build_from_corpus's CorpusStats: its phase-B tasks sum them, so
+    they are known once the postings have run (write_index, a collect
+    or a count of them)."""
+
+    def __init__(self, pairs: Accumulator):
+        self._pairs = pairs
+
+    def _pair(self) -> tuple[int, int]:
+        pairs = self._pairs.value
+        if not pairs:
+            raise RuntimeError(
+                "build_from_corpus: stats are known once the postings "
+                "have run (write_index them, or collect them, first)")
+        if len(pairs) > 1:
+            raise RuntimeError(
+                f"build_from_corpus: runs of the postings saw different "
+                f"corpora, (n_docs, sum_dl) = {sorted(pairs)}")
+        return next(iter(pairs))
+
+    @property
+    def n_docs(self) -> int:
+        return self._pair()[0]
+
+    @property
+    def avgdl(self) -> float:
+        n_docs, sum_dl = self._pair()
+        return float(sum_dl) / max(n_docs, 1)
+
+    def __eq__(self, other):
+        return (isinstance(other, CorpusStats)
+                and (self.n_docs, self.avgdl) == (other.n_docs, other.avgdl))
 
 
 def tokenize_whitespace(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -322,7 +377,8 @@ _PARTIAL_SCHEMA = T.StructType([
     T.StructField("terms", T.BinaryType()),   # int64 per run
     T.StructField("docs", T.BinaryType()),    # int64 per run
     T.StructField("tfs", T.BinaryType()),     # int32 per run
-    T.StructField("dls", T.BinaryType()),     # int32 per run
+    T.StructField("dls", T.BinaryType()),     # int32 per run, or a stats
+                                              # row's int64 (n_docs, sum_dl)
     T.StructField("poss", T.BinaryType()),    # int32 flat, run-major
 ])
 
@@ -336,11 +392,6 @@ def _slot_of(term_ids: np.ndarray, doc_ranges: np.ndarray,
     mix spreads a hot term's groups over several slots."""
     mix = term_ids.astype(np.uint64) * _MIX ^ doc_ranges.astype(np.uint64)
     return (mix % np.uint64(n_slots)).astype(np.int64)
-
-# partial rows with this p value carry per-flush doc stats
-# (dls blob = the flushed docs' lengths, int32; other blobs empty)
-_DOC_STATS_P = -(1 << 62)
-
 
 class _PartialBuilder:
     """Phase-A accumulator of the one phase-A kernel (_phase_a_factory):
@@ -537,41 +588,44 @@ def _phase_a_factory(docs_of, range_shift: int, slot_values: list[int],
     as rows (measured ~0.5M rows/s/core for post-shuffle row->Arrow
     conversion — the bytes are cheap, the per-row conversion is not),
     and the shuffle moves delta-friendly packed arrays instead of 35
-    rows per token. Each flush also emits one doc-stats row
-    (p = _DOC_STATS_P, dls blob = the flushed docs' lengths) so corpus
-    statistics can come from the same pass."""
+    rows per token. Each flush also sends its docs' (n_docs, sum_dl)
+    to every slot: one stats row per slot value, its `dls` blob the
+    int64 pair and its run blobs empty, so each phase-B task can sum
+    the corpus's stats itself (_merge_factory)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         b = _PartialBuilder(range_shift, slot_values, with_positions)
-        dls: list[int] = []
 
-        def flush() -> pd.DataFrame:
+        def flush(n_docs: int, sum_dl: int) -> pd.DataFrame:
             stats = pd.DataFrame({
-                "p": [_DOC_STATS_P], "terms": [b""], "docs": [b""],
-                "tfs": [b""], "dls": [np.asarray(dls, np.int32).tobytes()],
-                "poss": [b""]})
-            dls.clear()
+                "p": b.slot_vals, "terms": b"", "docs": b"", "tfs": b"",
+                "dls": np.asarray([n_docs, sum_dl], np.int64).tobytes(),
+                "poss": b""})
             # a vocab_set can leave every doc of a split without tokens
             return (pd.concat([b.flush(), stats], ignore_index=True)
                     if b.acc else stats)
 
+        n_docs = sum_dl = 0
         for pdf in batches:
             for doc_id, toks in docs_of(pdf):
                 n0 = len(toks)
                 if n0 == 0:
                     continue
-                dls.append(n0)
+                n_docs += 1
+                sum_dl += n0
                 b.add_tokens(doc_id, toks, n0, vocab_set)
                 if b.acc >= FLUSH_ROWS:
-                    yield flush()
-        if dls:
-            yield flush()
+                    yield flush(n_docs, sum_dl)
+                    n_docs = sum_dl = 0
+        if n_docs:
+            yield flush(n_docs, sum_dl)
 
     return kernel
 
 
-def _merge_factory(avgdl: float, block_size: int, with_positions: bool,
-                   range_shift: int):
+def _merge_factory(avgdl: float | None, block_size: int,
+                   with_positions: bool, range_shift: int,
+                   stats_acc: Accumulator | None = None):
     """Phase B (reduce side): concatenate this slot's partial runs,
     merge-sort them by (term_id, doc_id) with one lexsort, re-align the
     flattened positions with a vectorized gather, and encode blocks via
@@ -585,18 +639,36 @@ def _merge_factory(avgdl: float, block_size: int, with_positions: bool,
     is the same whether the copies share a flush, a split, or neither.
     Without the merge the block scorer would add up impacts taken
     from each copy's partial tf and dl, while the exhaustive scorer
-    sums tf and dl first."""
+    sums tf and dl first.
+
+    Stats rows (empty `terms` blob, phase A's per-flush (n_docs,
+    sum_dl)) are summed apart. Without an avgdl, their totals give it,
+    as float(sum_dl) / max(n_docs, 1), and go to stats_acc: every slot
+    receives every flush's stats row, so every task sums the same
+    corpus totals."""
 
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         Ts, Ds, TFs, DLs, Ps = [], [], [], [], []
+        totals = np.zeros(2, np.int64)
         for rb in batches:
+            dls = rb.column("dls")
+            is_stats = pc.equal(pc.binary_length(rb.column("terms")), 0)
+            totals += codec.blob(dls.filter(is_stats)).view(
+                np.int64).reshape(-1, 2).sum(axis=0)
             Ts.append(codec.blob(rb.column("terms")).view(np.int64))
             Ds.append(codec.blob(rb.column("docs")).view(np.int64))
             TFs.append(codec.blob(rb.column("tfs")).view(np.int32))
-            DLs.append(codec.blob(rb.column("dls")).view(np.int32))
+            DLs.append(codec.blob(dls.filter(pc.invert(is_stats))).view(
+                np.int32))
             if with_positions:
                 Ps.append(codec.blob(rb.column("poss")).view(np.int32))
-        if not Ts:
+        avg = avgdl
+        if avg is None:
+            n_docs, sum_dl = totals.tolist()
+            if stats_acc is not None:
+                stats_acc.add(frozenset({(n_docs, sum_dl)}))
+            avg = float(sum_dl) / max(n_docs, 1)
+        if not sum(x.size for x in Ts):
             return
         t = np.concatenate(Ts)
         d = np.concatenate(Ds)
@@ -651,7 +723,7 @@ def _merge_factory(avgdl: float, block_size: int, with_positions: bool,
         newg[0] = True
         newg[1:] = (t2[1:] != t2[:-1]) | (rng2[1:] != rng2[:-1])
         yield _runs_to_blocks(t2, rng2, d2, tf2, dl2, newg, p2,
-                              avgdl, block_size)
+                              avg, block_size)
 
     return kernel
 
@@ -705,14 +777,17 @@ def _n_partitions(spark: SparkSession, est_occ: float) -> int:
     return math.ceil(base / par) * par
 
 
-def _phase_b(partials: DataFrame, n_partitions: int, avgdl: float,
-             with_positions: bool, range_shift: int) -> DataFrame:
-    """Drop the doc-stats rows, shuffle the partial runs to their slots
-    (the build's one exchange) and merge+encode each slot."""
-    return (partials.filter(F.col("p") != _DOC_STATS_P)
-            .repartition(n_partitions, "p")
+def _phase_b(partials: DataFrame, n_partitions: int, avgdl: float | None,
+             with_positions: bool, range_shift: int,
+             stats_acc: Accumulator | None = None) -> DataFrame:
+    """Shuffle the partial rows, runs and stats rows alike, to their
+    slots (the build's one exchange) and merge+encode each slot. With
+    avgdl None each task takes it from the stats rows and adds the
+    corpus's (n_docs, sum_dl) to stats_acc (_merge_factory)."""
+    return (partials.repartition(n_partitions, "p")
             .mapInArrow(_merge_factory(avgdl, codec.BLOCK_SIZE,
-                                       with_positions, range_shift),
+                                       with_positions, range_shift,
+                                       stats_acc),
                         schema=POSTING_SCHEMA))
 
 
@@ -781,13 +856,20 @@ def build_from_corpus(corpus_df: DataFrame, tokenizer: str = "spm",
     pays one token-array crossing).
 
     Corpus statistics (n_docs, avgdl for the phase-B BM25 impacts)
-    come from per-flush doc-stats side rows in the partials — no
-    separate pass over the corpus. range_shift is derived from the
-    corpus ROW COUNT (cheap metadata), which can differ from the
-    extractable-doc count build_postings would use only when the two
-    straddle a power-of-2 boundary of MAX_RANGE_DOCS; pass
-    `range_shift` explicitly when byte-parity with a tokens-path build
-    matters."""
+    ride the partial shuffle: each phase-A flush sends its (n_docs,
+    sum_dl) to every slot, and each phase-B task sums them itself. So
+    nothing is persisted and there is no stats pass: the build is the
+    corpus row count plus the one job that runs the postings. The
+    returned stats are known once the postings have run (write_index
+    reads them after its write); read before, they raise RuntimeError.
+    The phase-B tasks report them through a set-union accumulator, so
+    retried tasks and repeated runs of the plan count once.
+
+    range_shift is derived from the corpus ROW COUNT (cheap metadata),
+    which can differ from the extractable-doc count build_postings
+    would use only when the two straddle a power-of-2 boundary of
+    MAX_RANGE_DOCS; pass `range_shift` explicitly when byte-parity
+    with a tokens-path build matters."""
     spark = corpus_df.sparkSession
     est_docs = corpus_df.count()
     if range_shift is None:
@@ -799,44 +881,11 @@ def build_from_corpus(corpus_df: DataFrame, tokenizer: str = "spm",
         _phase_a_factory(
             lambda pdf: ((d, t) for d, _, _, t in _extracted(pdf, tokenizer)),
             range_shift, slots, with_positions),
-        schema=_PARTIAL_SCHEMA).persist()
-
-    def stats_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        n = 0
-        tot = 0
-        for rb in batches:
-            dls = codec.blob(rb.column("dls")).view(np.int32)
-            n += dls.size
-            tot += int(dls.sum())
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([n], pa.int64()), pa.array([tot], pa.int64())],
-            names=["n", "tot"])
-
-    row = (partials.filter(F.col("p") == _DOC_STATS_P)
-           .select("dls")
-           .mapInArrow(stats_kernel, "n long, tot long")
-           .agg(F.sum("n").alias("n"), F.sum("tot").alias("tot"))
-           .collect()[0])
-    n_docs = int(row["n"] or 0)
-    stats = CorpusStats(n_docs=n_docs,
-                        avgdl=float(row["tot"] or 0) / max(n_docs, 1))
-    postings = _phase_b(partials, n_partitions, stats.avgdl,
-                        with_positions, range_shift)
-    # caller contract: the partials cache must be released once the
-    # postings are materialized — write_index does it automatically;
-    # other callers use release_build(postings)
-    postings._pears_partials = partials
-    return postings, stats
-
-
-def release_build(postings: DataFrame) -> None:
-    """Unpersist the cached phase-A partials a build_from_corpus plan
-    pins (call AFTER materializing the postings — re-executing the plan
-    afterwards recomputes phase A). No-op for build_postings outputs."""
-    src = getattr(postings, "_pears_partials", None)
-    if src is not None:
-        src.unpersist()
-        postings._pears_partials = None
+        schema=_PARTIAL_SCHEMA)
+    pairs = spark.sparkContext.accumulator(frozenset(), _PairUnion())
+    postings = _phase_b(partials, n_partitions, None, with_positions,
+                        range_shift, pairs)
+    return postings, _BuildStats(pairs)
 
 
 def write_plan(postings: DataFrame) -> DataFrame:
@@ -867,7 +916,6 @@ def write_index(postings: DataFrame, path: str,
     that frequent terms' lists share (README, "Index layout")."""
     (write_plan(postings).write.mode("overwrite")
      .option("compression", "zstd").parquet(path))
-    release_build(postings)
     if stats is not None:
         write_stats(path, stats)
 

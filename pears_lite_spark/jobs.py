@@ -432,8 +432,7 @@ def cmd_pipeline(args) -> int:
         .select("doc_id", "tokens")
     postings, stats = build_postings(toks)
     write_index(postings, args.output, stats=stats)
-    # write_index's release_build frees the build partials; the two
-    # corpus caches are ours to release (harmless for the exit-after-run
+    # release the two corpus caches (harmless for the exit-after-run
     # CLI, required when this function is reused programmatically)
     docs.unpersist()
     clean.unpersist()

@@ -56,7 +56,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..index import codec
-from ..index.build import CorpusStats, release_build
+from ..index.build import CorpusStats
 from ..xxh64 import xxh64_signed
 
 K1 = codec.K1
@@ -291,7 +291,6 @@ class Searcher:
     def __init__(self, postings: DataFrame, stats: CorpusStats):
         self.stats = stats
         self.flat, self.term_dfs = _open_replica(postings, stats)
-        release_build(postings)
 
     def close(self) -> None:
         """Release the driver replica."""

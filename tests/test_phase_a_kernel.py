@@ -13,10 +13,10 @@ SHIFT = 62  # doc_range = doc_id >> SHIFT: four doc ranges
 
 
 def _merged(frames, avgdl=10.0):
-    """Phase B over partial frames: one _merge_factory call per slot,
-    blocks sorted by (term_id, doc_range, block_id)."""
+    """Phase B over partial frames: one _merge_factory call per slot
+    (stats rows included; avgdl None takes it from them), blocks sorted
+    by (term_id, doc_range, block_id)."""
     parts = pd.concat(frames, ignore_index=True)
-    parts = parts[parts["p"] != build._DOC_STATS_P]
     out = []
     for _, slot in parts.groupby("p", sort=True):
         rb = pa.RecordBatch.from_pandas(slot.reset_index(drop=True),
@@ -80,12 +80,15 @@ def test_per_token_add_keys_runs_per_source_doc():
 
 
 def _run_phase_a(docs_of, pdf, batch_rows=50):
+    """The phase-A frames, and per frame its stats rows' (p, n_docs,
+    sum_dl): the rows with an empty `terms` blob."""
     kern = build._phase_a_factory(docs_of, SHIFT, SLOTS, True)
     batches = (pdf.iloc[i:i + batch_rows].reset_index(drop=True)
                for i in range(0, len(pdf), batch_rows))
     frames = list(kern(batches))
-    stats = [np.frombuffer(b, np.int32) for f in frames
-             for p, b in zip(f["p"], f["dls"]) if p == build._DOC_STATS_P]
+    stats = [[(p, *np.frombuffer(d, np.int64).tolist())
+              for p, t, d in zip(f["p"], f["terms"], f["dls"]) if t == b""]
+             for f in frames]
     return frames, stats
 
 
@@ -93,7 +96,8 @@ def test_flush_boundaries_do_not_change_blocks(monkeypatch):
     """The one phase-A kernel, fed by either docs_of source (tokens as
     given, or extract/hash/tokenize over html), gives the same merged
     blocks and doc stats with a ~100-row flush threshold as with the
-    default one."""
+    default one. Each flush sends its (n_docs, sum_dl) to every slot,
+    and phase B given no avgdl takes total_dl / n_docs from them."""
     from pears_lite_spark.corpus import gen_corpus
     corpus = gen_corpus(300)[["url", "html"]]
     tokens = pd.DataFrame(list(build._extracted(corpus, "spm")),
@@ -111,15 +115,16 @@ def test_flush_boundaries_do_not_change_blocks(monkeypatch):
         monkeypatch.setattr(build, "FLUSH_ROWS", flush_rows)
         for name, (docs_of, pdf) in sources.items():
             frames, stats = _run_phase_a(docs_of, pdf)
-            n_stats = sum(f["p"].eq(build._DOC_STATS_P).sum()
-                          for f in frames)
-            # one doc-stats row per flush: 6 batches -> 1 flush at the
-            # default threshold, ~one per doc at 100 rows
-            assert n_stats == len(frames)
+            # one stats emission per flush, one row per slot: 6 batches
+            # -> 1 flush at the default threshold, ~one per doc at 100
+            for rows in stats:
+                assert sorted(p for p, _, _ in rows) == SLOTS
+                assert len({(n, s) for _, n, s in rows}) == 1
             assert (len(frames) == 1) == (flush_rows == default)
-            assert sum(s.size for s in stats) == n_docs
-            assert sum(int(s.sum()) for s in stats) == total_dl
+            assert sum(rows[0][1] for rows in stats) == n_docs
+            assert sum(rows[0][2] for rows in stats) == total_dl
             blocks = _merged(frames, avgdl=total_dl / n_docs)
             if ref is None:
                 ref = blocks
             assert blocks.equals(ref), (name, flush_rows)
+            assert _merged(frames, avgdl=None).equals(ref), (name, flush_rows)
