@@ -1535,10 +1535,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     oldest go first — round 5 leads with the 32 queries parked outside
     round 4's window plus the 5 never-driver-checked table_* entries —
     then NEW queries (beautify), then queries touched by this round's
-    code changes (64-bit SimHash, ANN trainer sampling, distributed
-    _slot_values, catalog schema validation), then the headline BM25
-    pair; the parked set past position 50 is the r04-driver-green core
-    (each re-verified in the committed full local run)."""
+    code changes (64-bit SimHash, ANN trainer sampling, the posting
+    build's slot shuffle, catalog schema validation), then the headline
+    BM25 pair; the parked set past position 50 is the r04-driver-green
+    core (each re-verified in the committed full local run)."""
     return {
         # -- round-5 window head: the 32 queries whose last driver-green
         #    row is r03 (parked outside round 4's window; re-verified in
@@ -1592,8 +1592,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "beautify": q_beautify,
         # -- touched by round-5 changes: 64-bit SimHash (fingerprint,
         #    band rotation, clusters), ANN trainer sampling (IVF/PQ
-        #    paths + materialized index builds), distributed
-        #    _slot_values in the posting build (phrase_c6 + BM25 heads)
+        #    paths + materialized index builds), the posting build's
+        #    slot shuffle (phrase_c6 + BM25 heads)
         "simhash_near_dups": q_simhash_near_dups,
         "dedup_clusters": q_dedup_clusters,
         "ivf_pq_top10": q_ivf_pq_top10,

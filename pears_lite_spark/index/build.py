@@ -11,7 +11,7 @@ shuffle of packed bytes:
              per-split sorted partial runs, serialized as a few
              binary-blob rows per target slot, plus each flush's
              (n_docs, sum_dl) as a stats row to every slot
-           --repartition(bijective slot key)-->
+           --repartitionById(merge slot)-->
            --mapInArrow (phase B) merge + delta/varint/block-max encode
            --sortWithinPartitions + zstd parquet write, one file
              per task (same stage as phase B: no second exchange)
@@ -29,10 +29,11 @@ they differ only in how a batch yields its (doc_id, tokens) pairs —
 as given, or through the extract/hash/tokenize loop (_extracted) that
 ingest_tokens also runs.
 
-The slot key (`_slot_of`) mixes (term_id, doc_range), so a group's
-runs meet in one phase-B partition, and the write takes phase B's
-partitioning as it stands: each task sorts its blocks by (term_id,
-doc_range, block_id) and writes one file — one exchange per build.
+The merge slot (`_slot_of`) mixes (term_id, doc_range) and the
+shuffle takes it as the partition id, so slot k is phase-B partition k
+and a group's runs meet there. The write takes phase B's partitioning
+as it stands: each task sorts its blocks by (term_id, doc_range,
+block_id) and writes one file — one exchange per build.
 Every phase-B task also receives every flush's stats row, so a fused
 build's tasks each sum the corpus's n_docs and avgdl themselves: the
 build is one job after the corpus row count, with no persist and no
@@ -71,6 +72,7 @@ import pyarrow.compute as pc
 
 from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..vocab import get_vocab
 from . import codec
@@ -89,19 +91,7 @@ POSTING_SCHEMA = T.StructType([
     T.StructField("positions", T.BinaryType()),
 ])
 
-_POSTING_PA = pa.schema([
-    ("term_id", pa.int64()),
-    ("doc_range", pa.int64()),
-    ("block_id", pa.int32()),
-    ("first_doc", pa.int64()),
-    ("last_doc", pa.int64()),
-    ("n", pa.int32()),
-    ("max_impact", pa.float64()),
-    ("docs", pa.binary()),
-    ("tfs", pa.binary()),
-    ("dls", pa.binary()),
-    ("positions", pa.binary()),
-])
+_POSTING_PA = to_arrow_schema(POSTING_SCHEMA)
 
 
 @dataclass
@@ -373,7 +363,7 @@ def _runs_to_blocks(tid_r: np.ndarray, rng_r: np.ndarray,
 
 
 _PARTIAL_SCHEMA = T.StructType([
-    T.StructField("p", T.LongType()),      # shuffle key (slot preimage)
+    T.StructField("p", T.IntegerType()),   # merge slot = partition id
     T.StructField("terms", T.BinaryType()),   # int64 per run
     T.StructField("docs", T.BinaryType()),    # int64 per run
     T.StructField("tfs", T.BinaryType()),     # int32 per run
@@ -405,13 +395,13 @@ class _PartialBuilder:
     a flush or not, and phase B merges them (_merge_factory) the same
     way in every case."""
 
-    def __init__(self, range_shift: int, slot_values: list[int],
+    def __init__(self, range_shift: int, n_slots: int,
                  with_positions: bool):
         from ..xxh64 import xxh64_signed
         self._hash = xxh64_signed
         self.range_shift = range_shift
         self.with_positions = with_positions
-        self.slot_vals = np.asarray(slot_values, dtype=np.int64)
+        self.n_slots = n_slots
         self._cache: dict[str, int] = {}
         self.tids: list[np.ndarray] = []
         self.docs: list[np.ndarray] = []
@@ -533,19 +523,20 @@ class _PartialBuilder:
         r_tf = np.append(r_start[1:], n) - r_start
         return pd.DataFrame(_slot_rows(
             t[r_start], d[r_start], r_tf, dl[r_start], pp, self.range_shift,
-            self.slot_vals))
+            self.n_slots))
 
 
 def _slot_rows(t: np.ndarray, d: np.ndarray, tf: np.ndarray,
                dl: np.ndarray, pos: "np.ndarray | None", range_shift: int,
-               slot_vals: np.ndarray) -> dict[str, list]:
-    """_PARTIAL_SCHEMA columns for posting runs (term_id, doc_id, tf, dl
-    per run, positions flattened run-major or None), one row per target
-    slot: each run goes to the slot of its (term_id, doc_range) group
-    (_slot_of), p is that slot's preimage in slot_vals. Phase A's
-    flush and compaction (checkpoint.compact_index) both end here."""
+               n_slots: int) -> dict[str, object]:
+    """_PARTIAL_SCHEMA columns, in its order, for posting runs (term_id,
+    doc_id, tf, dl per run, positions flattened run-major or None), one
+    row per target slot: each run goes to the slot of its (term_id,
+    doc_range) group (_slot_of), and p, an int32 array, is that slot.
+    Phase A's flush and compaction (checkpoint.compact_index) both end
+    here."""
     rng = d >> range_shift
-    slot = _slot_of(t, rng, slot_vals.size)
+    slot = _slot_of(t, rng, n_slots)
     order = np.argsort(slot, kind="stable")
     s2 = slot[order]
     t2 = t[order].astype(np.int64, copy=False)
@@ -561,11 +552,11 @@ def _slot_rows(t: np.ndarray, d: np.ndarray, tf: np.ndarray,
                 + np.arange(pos.size, dtype=np.int64))
         p2 = pos[gidx].astype(np.int32)
         pedge = np.append(out_starts, pos.size)
-    rows = {k: [] for k in ("p", "terms", "docs", "tfs", "dls", "poss")}
     seg = np.flatnonzero(np.concatenate(([True], s2[1:] != s2[:-1])))
     seg_end = np.append(seg[1:], s2.size)
+    rows = {"p": s2[seg].astype(np.int32),
+            **{k: [] for k in ("terms", "docs", "tfs", "dls", "poss")}}
     for i0, i1 in zip(seg, seg_end):
-        rows["p"].append(int(slot_vals[s2[i0]]))
         rows["terms"].append(t2[i0:i1].tobytes())
         rows["docs"].append(d2[i0:i1].tobytes())
         rows["tfs"].append(tf2[i0:i1].tobytes())
@@ -575,7 +566,7 @@ def _slot_rows(t: np.ndarray, d: np.ndarray, tf: np.ndarray,
     return rows
 
 
-def _phase_a_factory(docs_of, range_shift: int, slot_values: list[int],
+def _phase_a_factory(docs_of, range_shift: int, n_slots: int,
                      with_positions: bool,
                      vocab_set: "frozenset[str] | None" = None):
     """Phase A (map side), the one kernel every build runs: docs_of(pdf)
@@ -589,16 +580,17 @@ def _phase_a_factory(docs_of, range_shift: int, slot_values: list[int],
     conversion — the bytes are cheap, the per-row conversion is not),
     and the shuffle moves delta-friendly packed arrays instead of 35
     rows per token. Each flush also sends its docs' (n_docs, sum_dl)
-    to every slot: one stats row per slot value, its `dls` blob the
+    to every slot: one stats row per slot, its `dls` blob the
     int64 pair and its run blobs empty, so each phase-B task can sum
     the corpus's stats itself (_merge_factory)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b = _PartialBuilder(range_shift, slot_values, with_positions)
+        b = _PartialBuilder(range_shift, n_slots, with_positions)
 
         def flush(n_docs: int, sum_dl: int) -> pd.DataFrame:
             stats = pd.DataFrame({
-                "p": b.slot_vals, "terms": b"", "docs": b"", "tfs": b"",
+                "p": np.arange(n_slots, dtype=np.int32),
+                "terms": b"", "docs": b"", "tfs": b"",
                 "dls": np.asarray([n_docs, sum_dl], np.int64).tobytes(),
                 "poss": b""})
             # a vocab_set can leave every doc of a split without tokens
@@ -728,44 +720,6 @@ def _merge_factory(avgdl: float | None, block_size: int,
     return kernel
 
 
-def _rotl32(x: np.ndarray, r: int) -> np.ndarray:
-    return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
-
-
-def _spark_hash_long(v: np.ndarray) -> np.ndarray:
-    """Spark's `hash()` of int64 values (Murmur3_x86_32 over the low,
-    then the high 32-bit word, seed 42), as int32."""
-    u = v.astype(np.uint64)
-    h = np.full(u.size, 42, np.uint32)
-    for word in (u & np.uint64(0xFFFFFFFF), u >> np.uint64(32)):
-        k = _rotl32(word.astype(np.uint32) * np.uint32(0xCC9E2D51), 15)
-        h = _rotl32(h ^ (k * np.uint32(0x1B873593)), 13)
-        h = h * np.uint32(5) + np.uint32(0xE6546B64)
-    h ^= np.uint32(8)
-    for shift, mul in ((16, 0x85EBCA6B), (13, 0xC2B2AE35)):
-        h = (h ^ (h >> np.uint32(shift))) * np.uint32(mul)
-    return (h ^ (h >> np.uint32(16))).view(np.int32)
-
-
-def _slot_values(n: int) -> np.ndarray:
-    """For each target partition k in [0, n): the least id v >= 0 with
-    pmod(hash(v), n) == k, so `repartition(n, col('p'))` maps slot k's
-    rows to exactly partition k — a bijective bytes-exchange instead of
-    hash-collision-lumpy key partitioning. Spark's hash is recomputed
-    on the driver (no Spark job), over ids in chunks of 4n, until
-    every slot has its preimage (the search gives up at 64n)."""
-    out = np.full(n, -1, np.int64)
-    for lo in range(0, 64 * n, 4 * n):
-        ids = np.arange(lo, lo + 4 * n, dtype=np.int64)
-        slot, first = np.unique(np.mod(_spark_hash_long(ids), n),
-                                return_index=True)
-        new = out[slot] < 0
-        out[slot[new]] = ids[first[new]]
-        if (out >= 0).all():
-            return out
-    raise RuntimeError(f"slot preimage search failed for n={n}")
-
-
 def _n_partitions(spark: SparkSession, est_occ: float) -> int:
     """Phase-B slot count: at least spark.sql.shuffle.partitions and
     enough slots to keep each near TARGET_PART_ROWS occurrences, rounded
@@ -781,10 +735,11 @@ def _phase_b(partials: DataFrame, n_partitions: int, avgdl: float | None,
              with_positions: bool, range_shift: int,
              stats_acc: Accumulator | None = None) -> DataFrame:
     """Shuffle the partial rows, runs and stats rows alike, to their
-    slots (the build's one exchange) and merge+encode each slot. With
+    slots (the build's one exchange: p is the partition id, so slot k
+    is phase-B partition k) and merge+encode each slot. With
     avgdl None each task takes it from the stats rows and adds the
     corpus's (n_docs, sum_dl) to stats_acc (_merge_factory)."""
-    return (partials.repartition(n_partitions, "p")
+    return (partials.repartitionById(n_partitions, "p")
             .mapInArrow(_merge_factory(avgdl, codec.BLOCK_SIZE,
                                        with_positions, range_shift,
                                        stats_acc),
@@ -807,12 +762,13 @@ def build_postings(tokens_df: DataFrame,
          occurrences on term_id, collapse to runs (tf, positions), and
          emit ONE binary-blob row per (flush, target slot) — the
          occurrence stream never crosses the Arrow bridge as rows;
-      2. shuffle the partial rows with a bijective slot key
-         (_slot_values, _slot_of) — bytes move, not rows; a (term_id,
-         doc_range) group lands in one slot, write_index writes each
-         slot as one file with no second exchange, and doc_range =
-         shiftright(doc_id, range_shift) splits any term's postings
-         into <= ~MAX_RANGE_DOCS-doc groups (see range_shift_for);
+      2. shuffle the partial rows with their merge slot (_slot_of) as
+         the partition id (repartitionById) — bytes move, not rows; a
+         (term_id, doc_range) group lands in one slot, write_index
+         writes each slot as one file with no second exchange, and
+         doc_range = shiftright(doc_id, range_shift) splits any term's
+         postings into <= ~MAX_RANGE_DOCS-doc groups (see
+         range_shift_for);
       3. Phase B mapInArrow per slot: concat partial runs, ONE lexsort
          merge, vectorized delta+varint+block-max encode
          (_runs_to_blocks). Output blocks are byte-identical to a
@@ -834,10 +790,10 @@ def build_postings(tokens_df: DataFrame,
     if vocab_filter is not None:
         vocab_set = frozenset(
             r["term"] for r in vocab_filter.select("term").collect())
-    slots = _slot_values(n_partitions)
     partials = tokens_df.select("doc_id", "tokens").mapInPandas(
         _phase_a_factory(lambda pdf: zip(pdf["doc_id"], pdf["tokens"]),
-                         range_shift, slots, with_positions, vocab_set),
+                         range_shift, n_partitions, with_positions,
+                         vocab_set),
         schema=_PARTIAL_SCHEMA)
     postings = _phase_b(partials, n_partitions, stats.avgdl,
                         with_positions, range_shift)
@@ -876,11 +832,10 @@ def build_from_corpus(corpus_df: DataFrame, tokenizer: str = "spm",
         range_shift = range_shift_for(est_docs)
     if n_partitions is None:  # ~350 tokens per extracted page
         n_partitions = _n_partitions(spark, est_docs * 350.0)
-    slots = _slot_values(n_partitions)
     partials = corpus_df.select("url", "html").mapInPandas(
         _phase_a_factory(
             lambda pdf: ((d, t) for d, _, _, t in _extracted(pdf, tokenizer)),
-            range_shift, slots, with_positions),
+            range_shift, n_partitions, with_positions),
         schema=_PARTIAL_SCHEMA)
     pairs = spark.sparkContext.accumulator(frozenset(), _PairUnion())
     postings = _phase_b(partials, n_partitions, None, with_positions,

@@ -51,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import codec
 from .build import (_PARTIAL_SCHEMA, CorpusStats, _n_partitions, _phase_b,
-                    _slot_rows, _slot_values, build_postings,
+                    _slot_rows, build_postings,
                     range_shift_for, read_stats, write_index, write_stats)
 
 _PAYLOAD_COLS = ("docs", "tfs", "dls", "positions")
@@ -209,7 +209,6 @@ def compact_index(postings: DataFrame, stats: CorpusStats) -> DataFrame:
     range_shift = range_shift_for(stats.n_docs)
     n_partitions = _n_partitions(
         spark, int(stats.n_docs * max(stats.avgdl, 1.0)))
-    slots = _slot_values(n_partitions)
     has_pos = ("positions" in postings.columns and postings.filter(
         F.col("positions").isNull()).isEmpty())
 
@@ -217,7 +216,8 @@ def compact_index(postings: DataFrame, stats: CorpusStats) -> DataFrame:
         for rb in batches:
             if rb.num_rows:
                 yield pa.RecordBatch.from_pydict(_slot_rows(
-                    *codec.decode_blocks(rb, has_pos), range_shift, slots))
+                    *codec.decode_blocks(rb, has_pos), range_shift,
+                    n_partitions))
 
     cols = ["term_id", "n", "docs", "tfs", "dls"]
     if has_pos:
@@ -235,8 +235,9 @@ def index_table_delta(spark: SparkSession, table_path: str,
     """Consume a snapshot table (catalog.py) incrementally: the index
     records the table version it last indexed (`_table_version.json`),
     and each run builds ONLY the rows appended since as a new segment
-    part (part=<to_version>), committed by commit_segment with the
-    consumed version range as its manifest's lineage.
+    part (part=<to_version>, phase B sized by the delta's own
+    occurrences), committed by commit_segment with the consumed version
+    range as its manifest's lineage.
     First run baselines on the full current snapshot. Already-current
     is a no-op. A compact commit in the range surfaces
     catalog.incremental_scan's re-baseline error — the operator
@@ -299,8 +300,9 @@ def index_table_delta(spark: SparkSession, table_path: str,
                             avgdl=float(sum_dl) / max(n_delta, 1))
         write_stats(index_path, stats)
     if n_delta > 0:
-        postings, _ = build_postings(toks, stats=stats,
-                                     with_positions=with_positions)
+        postings, _ = build_postings(
+            toks, stats=stats, with_positions=with_positions,
+            n_partitions=_n_partitions(spark, sum_dl))
         commit_segment(postings, index_path, cur, n_delta, sum_dl,
                        table=table_path, table_version_from=frm,
                        table_version_to=cur,

@@ -26,8 +26,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..index.build import (build_postings, CorpusStats, with_doc_id,
-                           write_stats)
+from ..index.build import (_n_partitions, build_postings, CorpusStats,
+                           with_doc_id, write_stats)
 from ..index.checkpoint import commit_segment
 
 CORPUS_SCHEMA = T.StructType([
@@ -42,20 +42,22 @@ CORPUS_SCHEMA = T.StructType([
 def _segment_writer(index_path: str, stats: CorpusStats,
                     tokenizer, with_positions: bool = True):
     """foreachBatch sink: tokenize the micro-batch, build its posting
-    segment and commit it (checkpoint.commit_segment) as part=<batch_id>
-    with the batch's doc stats, so refresh_stats can correct the frozen
-    seed (N, avgdl) after the drain without re-reading the corpus."""
+    segment (phase B sized by the batch's own occurrences) and commit it
+    (checkpoint.commit_segment) as part=<batch_id> with the batch's doc
+    stats, so refresh_stats can correct the frozen seed (N, avgdl)
+    after the drain without re-reading the corpus."""
 
     def write_batch(batch_df: DataFrame, batch_id: int):
         toks = (tokenizer(with_doc_id(batch_df)).select("doc_id", "tokens")
                 .persist())  # one tokenize pass feeds build + stats agg
         agg = toks.agg(F.count("*").alias("n"),
                        F.sum(F.size("tokens")).alias("sum_dl")).collect()[0]
-        postings, _ = build_postings(toks, stats=stats,
-                                     with_positions=with_positions)
+        sum_dl = int(agg["sum_dl"] or 0)
+        postings, _ = build_postings(
+            toks, stats=stats, with_positions=with_positions,
+            n_partitions=_n_partitions(batch_df.sparkSession, sum_dl))
         commit_segment(postings, index_path, int(batch_id),
-                       int(agg["n"] or 0), int(agg["sum_dl"] or 0),
-                       streaming=True)
+                       int(agg["n"] or 0), sum_dl, streaming=True)
         toks.unpersist()
 
     return write_batch

@@ -170,13 +170,13 @@ def test_partial_builder_deferred_hash_matches_per_token():
         return out
 
     # deferred path (production): add_tokens -> pend -> flush
-    b_new = _PartialBuilder(50, list(range(4)), True)
+    b_new = _PartialBuilder(50, 4, True)
     for did, toks in docs:
         b_new.add_tokens(did, toks, len(toks))
     got = runs_of([b_new.flush()])
 
     # per-token reference: hash each token eagerly through add()
-    b_ref = _PartialBuilder(50, list(range(4)), True)
+    b_ref = _PartialBuilder(50, 4, True)
     for did, toks in docs:
         ids = np.fromiter(map(b_ref.tid_of, toks), np.int64, len(toks))
         b_ref.add(did, ids, np.arange(len(toks), dtype=np.int32),

@@ -1,7 +1,8 @@
 """The index's files: every posting writer goes through write_index,
 so every file it leaves is zstd-compressed and holds a fresh build's
 blocks; a resumable build reads its input once per part plus once for
-its stats, and sizes each part's phase B by the part."""
+its stats; every index part sizes its phase B by its own occurrences;
+and the file phase-B task k writes holds merge slot k."""
 
 import glob
 import os
@@ -133,30 +134,101 @@ def test_resumable_build_reads_input_once_per_part(spark, tokens, tmp_path):
 
 
 def test_resumable_parts_size_phase_b_by_their_own_occurrences(
-        spark, tokens, tmp_path, monkeypatch):
-    """Each part's phase B gets slots for its own occurrences: with
-    TARGET_PART_ROWS small enough that the occurrence count sets the
-    slot count, every part writes at most its own slot count, fewer
+        spark, corpus, tokens, tmp_path, monkeypatch):
+    """Each index part's phase B gets slots for its own occurrences:
+    with TARGET_PART_ROWS small enough that the occurrence count sets
+    the slot count, every build_resumable part, stream_build segment
+    and index_table_delta part writes at most its own slot count, fewer
     than a whole build's, and its blocks are the slice's build's."""
+    from pears_lite_spark import catalog
     from pears_lite_spark.index import build
-    from pears_lite_spark.index.checkpoint import build_resumable, manifests
+    from pears_lite_spark.index.build import read_stats
+    from pears_lite_spark.index.checkpoint import (build_resumable,
+                                                   index_table_delta,
+                                                   manifests)
+    from pears_lite_spark.streaming.ingest import stream_build
     sum_dl = tokens.agg(F.sum(F.size("tokens"))).first()[0]
     monkeypatch.setattr(build, "TARGET_PART_ROWS", sum_dl // 40)
     whole = build._n_partitions(spark, sum_dl)
     assert whole > int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # thirds of the corpus by doc_id = xxhash64(url)
+    third = [corpus.filter(F.pmod(F.xxhash64("url"), F.lit(3)) == i)
+             for i in range(3)]
+    third_toks = [tokens.filter(F.pmod("doc_id", F.lit(3)) == i)
+                  for i in range(3)]
     # one file per slot: no coalescing of small shuffle partitions
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     before = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        path = str(tmp_path / "idx")
-        stats = build_resumable(tokens, path, n_parts=3)
+        res = str(tmp_path / "idx")
+        stats = build_resumable(tokens, res, n_parts=3)
+        # one stream segment: a third of the corpus, one file
+        corpus_dir = str(tmp_path / "stream_corpus")
+        third[0].coalesce(1).write.parquet(corpus_dir)
+        stream = str(tmp_path / "stream_idx")
+        stream_build(spark, corpus_dir, stream, stats, tokenize_whitespace)
+        # one table delta: a third appended to a baseline third
+        table = str(tmp_path / "tbl")
+        catalog.create_table(third[1].select("url", "text", "lang"), table,
+                             key_col="url")
+        delta = str(tmp_path / "delta_idx")
+        index_table_delta(spark, table, delta, tokenize_whitespace)
+        catalog.append(third[2].select("url", "text", "lang"), table)
+        index_table_delta(spark, table, delta, tokenize_whitespace)
     finally:
         spark.conf.set(key, before)
-    for m in manifests(path):
-        own = build._n_partitions(spark, m["sum_dl"])
-        assert 0 < len(m["files"]) <= own < whole
-        part = tokens.filter(
-            F.pmod(F.xxhash64("doc_id"), F.lit(3)) == m["partition"])
-        _assert_written(spark, os.path.join(path, f"part={m['partition']}"),
-                        build_postings(part, stats=stats)[0])
+    part_of = F.pmod(F.xxhash64("doc_id"), F.lit(3))
+    for path, n_parts, slice_of in (
+            (res, 3, lambda m: tokens.filter(part_of == m["partition"])),
+            (stream, 1, lambda m: third_toks[0]),
+            (delta, 2, lambda m: third_toks[
+                1 if m["table_version_from"] is None else 2])):
+        ms = manifests(path)
+        assert len(ms) == n_parts, path
+        for m in ms:
+            own = build._n_partitions(spark, m["sum_dl"])
+            assert 0 < len(m["files"]) <= own < whole, (path, m)
+            _assert_written(
+                spark, os.path.join(path, f"part={m['partition']}"),
+                build_postings(slice_of(m), stats=read_stats(path))[0])
+
+
+def test_slot_k_is_written_by_phase_b_task_k(spark, corpus, tokens,
+                                             tmp_path):
+    """The build shuffle takes each partial row's merge slot as its
+    partition id: in a written fused build and in a written compaction,
+    every block of file part-<k> has _slot_of(term_id, doc_range, n)
+    == k, so each file holds one slot, no two files share one, and the
+    file count is the index's distinct slot count."""
+    from pears_lite_spark.index.build import (_n_partitions, _slot_of,
+                                              build_from_corpus, write_index)
+    from pears_lite_spark.index.checkpoint import (build_resumable,
+                                                   compact_index,
+                                                   read_resumable)
+    res = str(tmp_path / "resumable")
+    stats = build_resumable(tokens, res, n_parts=2)
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        fused, _ = build_from_corpus(corpus.select("url", "html"),
+                                     tokenizer="ws", n_partitions=12)
+        write_index(fused, str(tmp_path / "fused"))
+        write_index(compact_index(*read_resumable(spark, res)),
+                    str(tmp_path / "compacted"))
+    finally:
+        spark.conf.set(key, before)
+    n_compact = _n_partitions(
+        spark, int(stats.n_docs * max(stats.avgdl, 1.0)))
+    for name, n in (("fused", 12), ("compacted", n_compact)):
+        files = glob.glob(os.path.join(tmp_path, name, "*.parquet"))
+        all_slots = set()
+        for f in files:
+            t = pq.read_table(f, columns=["term_id", "doc_range"])
+            slots = set(_slot_of(t["term_id"].to_numpy(),
+                                 t["doc_range"].to_numpy(), n).tolist())
+            task = int(os.path.basename(f).split("-")[1])
+            assert slots == {task}, (name, f, sorted(slots))
+            all_slots |= slots
+        assert len(files) == len(all_slots) > 1, name

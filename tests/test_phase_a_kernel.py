@@ -8,7 +8,7 @@ import pyarrow as pa
 from pears_lite_spark.index import build, codec
 from pears_lite_spark.xxh64 import xxh64_signed
 
-SLOTS = list(range(4))
+SLOTS = 4
 SHIFT = 62  # doc_range = doc_id >> SHIFT: four doc ranges
 
 
@@ -118,7 +118,7 @@ def test_flush_boundaries_do_not_change_blocks(monkeypatch):
             # one stats emission per flush, one row per slot: 6 batches
             # -> 1 flush at the default threshold, ~one per doc at 100
             for rows in stats:
-                assert sorted(p for p, _, _ in rows) == SLOTS
+                assert sorted(p for p, _, _ in rows) == list(range(SLOTS))
                 assert len({(n, s) for _, n, s in rows}) == 1
             assert (len(frames) == 1) == (flush_rows == default)
             assert sum(rows[0][1] for rows in stats) == n_docs

@@ -667,23 +667,6 @@ def test_slot_of_keeps_groups_and_spreads_hot_terms():
         assert len(set(_slot_of(hot, np.arange(16), n_slots).tolist())) > 1
 
 
-def test_slot_values_are_least_spark_hash_preimages(spark):
-    """_slot_values recomputes Spark's hash on the driver: Spark's
-    pmod(hash(v), n) over the returned values is 0..n-1, and each value
-    is the least id of its slot."""
-    from pears_lite_spark.index.build import _slot_values
-    for n in (1, 4, 7, 64, 1000):
-        vals = _slot_values(n).tolist()
-        got = spark.createDataFrame([(v,) for v in vals], "v long").select(
-            F.pmod(F.hash("v"), F.lit(n)).alias("s")).collect()
-        assert [r["s"] for r in got] == list(range(n))
-        least = (spark.range(0, max(vals) + 1)
-                 .groupBy(F.pmod(F.hash("id"), F.lit(n)).alias("s"))
-                 .agg(F.min("id").alias("id")).collect())
-        assert sorted((r["s"], r["id"]) for r in least) == \
-            list(enumerate(vals))
-
-
 def test_repartitioned_write_roundtrip(spark, tokens, tmp_path):
     """write_index of postings in any partitioning, here a
     repartition(7), gives the same top-k as the phase-B-partitioned

@@ -390,31 +390,52 @@ def main(sf_dir: str):
           f"one task, and the offsets branch touches only per-bucket "
           f"totals: {'OK' if ok15 else 'NO'}\n")
 
-    # 19. slot preimages: Spark's hash recomputed on the driver, no job
-    from pears_lite_spark.index.build import _slot_values
-    ns = (8, 64, 1000)
-    slot_vals = {}
-    n_jobs = jobs_launched(
-        spark, lambda: slot_vals.update({n: _slot_values(n) for n in ns}),
-        "audit-slots")
-    hit = {n: sorted(r["s"] for r in spark.createDataFrame(
-        [(int(v),) for v in slot_vals[n]], "v long").select(
-            F.pmod(F.hash("v"), F.lit(n)).alias("s")).collect())
-        for n in ns}
-    print("## 19. Posting-slot preimages: computed on the driver, no "
-          "Spark job\n")
+    # 19. the build shuffle: each partial row's merge slot is its
+    # partition id, so slot k's rows are phase-B partition k's
+    from pears_lite_spark.index import build as build_mod, checkpoint
+    from pears_lite_spark.index.checkpoint import compact_index
+    phase_b, seen = build_mod._phase_b, []
+
+    def capture(partials, *args, **kw):
+        seen.append(partials)
+        return phase_b(partials, *args, **kw)
+
+    build_mod._phase_b = checkpoint._phase_b = capture
+    try:
+        builds = {"build_postings": build_postings(toks)[0],
+                  "build_from_corpus": build_from_corpus(corpus)[0],
+                  "compact_index": compact_index(*read_index(spark,
+                                                             idx_path))}
+    finally:
+        build_mod._phase_b = checkpoint._phase_b = phase_b
+    print("## 19. Build shuffle: the merge slot is the partition id\n")
     print("```")
-    for n in ns:
-        print(f"n={n}: Spark pmod(hash(v), n) over the {n} preimages hits "
-              f"{len(set(hit[n]))} distinct slots, max preimage "
-              f"{int(slot_vals[n].max())}")
-    print(f"Spark jobs for the {len(ns)} searches: {n_jobs}")
+    ok19 = True
+    for (name, df), partials in zip(builds.items(), seen):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        exch = [re.sub(r"#\d+|, \[plan_id=\d+\]", "", ln.split("+- ")[-1])
+                for ln in plan.splitlines()
+                if re.search(r"(^|\+- )Exchange ", ln.strip())]
+        m = re.search(r"direct_shuffle_partition_id\(p\), (\d+)\)",
+                      "".join(exch))
+        n = int(m.group(1)) if m else 0
+        rows = (partials.repartitionById(max(n, 1), "p")
+                .groupBy((F.spark_partition_id() == F.col("p")).alias("at_p"))
+                .agg(F.count("*").alias("rows"),
+                     F.countDistinct("p").alias("slots")).collect())
+        at_p = {r["at_p"]: (r["rows"], r["slots"]) for r in rows}
+        (home, slots), (away, _) = at_p.get(True, (0, 0)), at_p.get(False,
+                                                                  (0, 0))
+        print(f"{name}: {'; '.join(exch)}")
+        print(f"  partial rows in partition p: {home} over {slots} slots, "
+              f"elsewhere: {away}")
+        ok19 = (ok19 and len(exch) == 1 and n > 0 and home > 0 and away == 0
+                and "shufflepartitionidpassthrough" in exch[0])
     print("```\n")
-    ok19 = n_jobs == 0 and all(hit[n] == list(range(n)) for n in ns)
-    print(f"`_slot_values` runs Spark's hash (Murmur3_x86_32 of the "
-          f"int64 id, seed 42) in numpy and keeps the least id per "
-          f"slot, so `repartition(n, p)` sends slot k to partition k "
-          f"with no Spark job: {'OK' if ok19 else 'NO'}\n")
+    print(f"each build's one non-broadcast exchange is a "
+          f"`repartitionById` on the slot (shufflepartitionidpassthrough), "
+          f"and every partial row of slot k sits in partition k: "
+          f"{'OK' if ok19 else 'NO'}\n")
 
     # 21. resumable build + compaction: one commit per part whose
     # manifest comes from the part's files, stats refreshed from the
