@@ -1491,9 +1491,9 @@ def q_token_budget(spark, sf_dir):
 def q_min_window(spark, sf_dir):
     """Minimum proximity window over the AND-query terms: per doc
     containing all of them, the smallest token span covering every
-    term. Spark side = grouped two-pointer sweep (O(occ) per doc);
-    oracle = O(occ^3) pair-join SQL — two different algorithms, one
-    answer."""
+    term. Spark side = one running last-position window per term
+    (column algebra); oracle = O(occ^3) pair-join SQL — two different
+    algorithms, one answer."""
     from .search.parity import min_window_spans
     out = min_window_spans(_tokens(spark, sf_dir), AND_QUERY)
     return out.select("doc_id",

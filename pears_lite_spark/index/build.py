@@ -526,6 +526,18 @@ class _PartialBuilder:
             self.n_slots))
 
 
+def _reorder_positions(pos: np.ndarray, tf: np.ndarray,
+                       order: np.ndarray) -> np.ndarray:
+    """Positions flattened run-major (run i holds tf[i] of them),
+    re-laid for the runs taken in `order`: one gather."""
+    tf = tf.astype(np.int64, copy=False)
+    starts = np.cumsum(tf) - tf
+    sel = tf[order]
+    out_starts = np.cumsum(sel) - sel
+    return pos[np.repeat(starts[order] - out_starts, sel)
+               + np.arange(pos.size, dtype=np.int64)]
+
+
 def _slot_rows(t: np.ndarray, d: np.ndarray, tf: np.ndarray,
                dl: np.ndarray, pos: "np.ndarray | None", range_shift: int,
                n_slots: int) -> dict[str, object]:
@@ -544,14 +556,8 @@ def _slot_rows(t: np.ndarray, d: np.ndarray, tf: np.ndarray,
     tf2 = tf[order].astype(np.int32, copy=False)
     dl2 = dl[order].astype(np.int32, copy=False)
     if pos is not None:
-        tf64 = tf.astype(np.int64)
-        starts = np.cumsum(tf64) - tf64
-        sel_tf = tf64[order]
-        out_starts = np.cumsum(sel_tf) - sel_tf
-        gidx = (np.repeat(starts[order] - out_starts, sel_tf)
-                + np.arange(pos.size, dtype=np.int64))
-        p2 = pos[gidx].astype(np.int32)
-        pedge = np.append(out_starts, pos.size)
+        p2 = _reorder_positions(pos, tf, order).astype(np.int32)
+        pedge = np.concatenate(([0], np.cumsum(tf2, dtype=np.int64)))
     seg = np.flatnonzero(np.concatenate(([True], s2[1:] != s2[:-1])))
     seg_end = np.append(seg[1:], s2.size)
     rows = {"p": s2[seg].astype(np.int32),
@@ -669,17 +675,8 @@ def _merge_factory(avgdl: float | None, block_size: int,
         order = np.lexsort((d, t))
         t2, d2 = t[order], d[order]
         tf2, dl2 = tf[order], dl[order]
-        if with_positions:
-            pp = np.concatenate(Ps).astype(np.int64)
-            starts = np.zeros(tf.size, dtype=np.int64)
-            np.cumsum(tf[:-1], out=starts[1:])
-            out_starts = np.zeros(tf2.size, dtype=np.int64)
-            np.cumsum(tf2[:-1], out=out_starts[1:])
-            gidx = (np.repeat(starts[order] - out_starts, tf2)
-                    + np.arange(pp.size, dtype=np.int64))
-            p2 = pp[gidx]
-        else:
-            p2 = None
+        p2 = (_reorder_positions(np.concatenate(Ps).astype(np.int64), tf,
+                                 order) if with_positions else None)
         if t2.size > 1:
             dup = (t2[1:] == t2[:-1]) & (d2[1:] == d2[:-1])
             if dup.any():

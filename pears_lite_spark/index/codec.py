@@ -22,9 +22,10 @@ Indexes", SIGIR 2011):
 All encode/decode paths are numpy-vectorized (no per-element Python in
 the varint kernels). Every Spark-side reader of the block format goes
 through `decode_blocks` (a whole Arrow batch of blocks at once) and
-every reader of a binary Arrow column through `blob`; the per-block
-`encode_postings` / `decode_block_*` pair is the reference the tests,
-the benchmark and the phrase matcher use.
+every reader of a binary Arrow column through `blob`. The per-block
+`encode_postings` and its `decode_block_docs` / `decode_block_tfs`
+readers are the reference the tests and the benchmark use; the
+per-block positions reader lives with the tests (`tests/oracle.py`).
 """
 
 from __future__ import annotations
@@ -259,19 +260,3 @@ def decode_block_docs(docs: bytes, n: int) -> np.ndarray:
 
 def decode_block_tfs(tfs: bytes, n: int) -> np.ndarray:
     return varint_decode(tfs, n).astype(np.int64) + 1
-
-
-def decode_block_positions(pos: bytes, n: int) -> list[np.ndarray]:
-    """Decode the per-doc position streams of one block."""
-    vals = varint_decode(pos).astype(np.int64)
-    out: list[np.ndarray] = []
-    i = 0
-    for _ in range(n):
-        npos = int(vals[i])
-        p = vals[i + 1: i + 1 + npos].copy()
-        if npos:
-            p[1:] = p[1:]
-            np.cumsum(p, out=p)
-        out.append(p)
-        i += 1 + npos
-    return out

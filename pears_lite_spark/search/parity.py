@@ -301,41 +301,24 @@ def min_window_spans(tokens_df: DataFrame,
     feature the reference's adjacency score (C6) is a special case of.
 
     Shape: filter-early posexplode (only query-term occurrences
-    shuffle), then a per-doc grouped two-pointer sweep in an Arrow
-    batch (O(occurrences) per doc — the driver's oracle instead uses an
-    O(occ^3) pair-join SQL formulation, a structurally different
-    algorithm arriving at the same answer)."""
-    import pandas as pd
+    shuffle), then, per occurrence, each term's last position at or
+    before it (one running window per term over the doc's occurrences
+    in position order). The smallest cover ending at an occurrence
+    starts at the least of those; a doc's answer is the minimum over
+    its occurrences where every term has been seen. Column algebra
+    only, no Python; the driver's oracle instead uses an O(occ^3)
+    pair-join SQL formulation, a structurally different algorithm
+    arriving at the same answer."""
     need = sorted(set(query_terms))
-    n_need = len(need)
     occ = (tokens_df.select("doc_id",
                             F.posexplode("tokens").alias("pos", "term"))
            .filter(F.col("term").isin(need)))
-
-    def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pos")
-        terms = pdf["term"].to_numpy()
-        pos = pdf["pos"].to_numpy()
-        if len(set(terms)) < n_need:
-            return pd.DataFrame({"doc_id": [], "min_window": []})
-        best = None
-        counts: dict = {}
-        covered = 0
-        lo = 0
-        for hi in range(len(terms)):
-            counts[terms[hi]] = counts.get(terms[hi], 0) + 1
-            if counts[terms[hi]] == 1:
-                covered += 1
-            while covered == n_need:
-                w = int(pos[hi] - pos[lo] + 1)
-                if best is None or w < best:
-                    best = w
-                counts[terms[lo]] -= 1
-                if counts[terms[lo]] == 0:
-                    covered -= 1
-                lo += 1
-        return pd.DataFrame({"doc_id": [int(pdf["doc_id"].iloc[0])],
-                             "min_window": [best]})
-
-    return (occ.groupBy("doc_id")
-            .applyInPandas(sweep, "doc_id long, min_window int"))
+    w = (Window.partitionBy("doc_id").orderBy("pos")
+         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    seen = [f"last_{i}" for i in range(len(need))]
+    last = [F.last(F.when(F.col("term") == t, F.col("pos")), True).over(w)
+            .alias(c) for t, c in zip(need, seen)]
+    return (occ.select("doc_id", "pos", *last).dropna(subset=seen)
+            .groupBy("doc_id")
+            .agg(F.min(F.col("pos") - F.array_min(F.array(*seen)) + 1)
+                 .alias("min_window")))

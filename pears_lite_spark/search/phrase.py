@@ -3,59 +3,83 @@
 The reference's `posix()` loads the whole pickled positional index per
 query and intersects python dicts (`/root/reference/app/search/
 overlap_calculation.py:124-154`). Here the positions already live
-delta+varint-encoded inside the posting blocks, so phrase scoring is a
-pruned scan: filter the posting table to the query pieces' term_ids
-(partition pruning), group by doc_range (term-aligned, so every doc's
-pieces meet in one group), decode positions only for those terms, and
-apply the reference's subword-adjacency rule per candidate doc.
+delta+varint-encoded inside the posting blocks, so phrase scoring has
+the shape of `bm25.search_blocks`: a term_id IN filter prunes the scan
+to the query pieces' blocks (Parquet row-group statistics), the scan is
+repartitioned by doc_range (every doc's postings land in one
+partition), and one mapInArrow kernel decodes each batch with
+`codec.decode_blocks` and scores every candidate doc at once by the
+reference's subword-adjacency rule (`parity.phrase_adjacency_score`).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F
 
 from ..index import codec
 from ..xxh64 import xxh64_signed
-from .parity import group_subwords, phrase_adjacency_score
-
-_OUT = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("phrase_score", T.DoubleType()),
-])
+from .bm25 import _BLOCK_COLS
+from .parity import group_subwords
 
 
-def phrase_scores_from_index(postings: DataFrame, query_pieces: list[str],
-                             require_all: bool = True) -> DataFrame:
+def _phrase_factory(words: list[list[int]]):
+    """The phrase kernel for mapInArrow over blocks whose doc_ranges lie
+    wholly in one partition; `words` are the query words as their
+    pieces' term_ids.
+
+    The candidates are the docs that hold every distinct piece. A word
+    matches a doc iff, for one start s, each of its pieces i occurs at
+    s + i: one intersect per piece of the occurrence keys (doc, pos - i),
+    the doc ordinal scaled past every position so that no key aliases
+    across docs. The score is the matched fraction of words. One doc's
+    postings of one piece in several parts (a multi-part index) count
+    as one posting: their positions are unioned, as `search_blocks`
+    sums a doc's postings across parts."""
+    tids = np.unique([t for w in words for t in w]).astype(np.int64)
+    span = max(map(len, words), default=0)
+
+    def kernel(batches):
+        flat = []
+        for rb in batches:
+            if rb.column("positions").null_count:
+                raise ValueError("phrase scoring needs an index built "
+                                 "with positions")
+            flat.append(codec.decode_blocks(rb, positions=True))
+        if not flat:
+            return
+        tid, doc, tf, _, pos = (np.concatenate(c) for c in zip(*flat))
+        ud, ordn = np.unique(doc, return_inverse=True)
+        held = np.unique(ordn * tids.size + np.searchsorted(tids, tid))
+        cand = np.bincount(held // tids.size, minlength=ud.size) == tids.size
+        stride = int(pos.max(initial=0)) + span + 1
+        key = np.repeat(ordn * stride + span, tf) + pos
+        occ = np.repeat(tid, tf)
+        matched = np.zeros(ud.size)
+        for w in words:
+            starts = key[occ == w[0]]
+            for i, t in enumerate(w[1:], 1):
+                starts = np.intersect1d(starts, key[occ == t] - i)
+            matched[np.unique(starts // stride)] += 1
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(ud[cand]), pa.array(matched[cand] / len(words))],
+            names=["doc_id", "phrase_score"])
+
+    return kernel
+
+
+def phrase_scores_from_index(postings: DataFrame,
+                             query_pieces: list[str]) -> DataFrame:
     """(doc_id, phrase_score) for docs containing every query piece
     (the reference's candidate intersection, J1) scored by the C6
-    consecutive-positions rule."""
-    words = group_subwords(query_pieces)
-    pieces = sorted({p for w in words for p in w})
-    tid_to_piece = {xxh64_signed(p): p for p in pieces}
-    tids = sorted(tid_to_piece)
-    need_all = len(pieces) if require_all else 1
-
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        per_doc: dict[int, dict[str, np.ndarray]] = {}
-        for r in pdf.itertuples():
-            piece = tid_to_piece[r.term_id]
-            docs = codec.decode_block_docs(r.docs, r.n)
-            poss = codec.decode_block_positions(r.positions, r.n)
-            for d, p in zip(docs, poss):
-                per_doc.setdefault(int(d), {})[piece] = p
-        rows = []
-        for d, posmap in per_doc.items():
-            if len(posmap) < need_all:
-                continue
-            score = phrase_adjacency_score(
-                words, {k: list(v) for k, v in posmap.items()})
-            rows.append((d, score))
-        return pd.DataFrame(rows, columns=["doc_id", "phrase_score"])
-
-    scan = (postings.filter(F.col("term_id").isin(tids))
-            .select("term_id", "doc_range", "n", "docs", "positions"))
-    return (scan.groupBy("doc_range")
-            .applyInPandas(lambda key, pdf: score_group(pdf), schema=_OUT))
+    consecutive-positions rule. The index must hold positions: a
+    positionless one fails the scoring job with a ValueError."""
+    words = [[xxh64_signed(p) for p in w]
+             for w in group_subwords(query_pieces)]
+    tids = sorted({t for w in words for t in w})
+    return (postings.filter(F.col("term_id").isin(tids))
+            .repartition("doc_range").select(*_BLOCK_COLS, "positions")
+            .mapInArrow(_phrase_factory(words),
+                        "doc_id long, phrase_score double"))

@@ -154,7 +154,7 @@ def test_embedding_near_dup_exact_superset_of_lsh(spark):
 
 
 def test_min_window_spans_hand_cases(spark):
-    """Two-pointer cover sweep: exact smallest span, docs missing a
+    """Minimum cover window: exact smallest span, docs missing a
     term excluded, overlapping occurrences handled."""
     from pears_lite_spark.search.parity import min_window_spans
     docs = spark.createDataFrame(

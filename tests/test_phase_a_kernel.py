@@ -8,6 +8,8 @@ import pyarrow as pa
 from pears_lite_spark.index import build, codec
 from pears_lite_spark.xxh64 import xxh64_signed
 
+from .oracle import decoded_postings
+
 SLOTS = 4
 SHIFT = 62  # doc_range = doc_id >> SHIFT: four doc ranges
 
@@ -31,15 +33,10 @@ def _merged(frames, avgdl=10.0):
 def _postings(blocks, term):
     """{doc_id: (tf, dl, positions)} of one term's decoded blocks."""
     out = {}
-    for r in blocks[blocks["term_id"] == xxh64_signed(term)].itertuples():
-        docs = codec.decode_block_docs(r.docs, r.n)
-        tfs = codec.decode_block_tfs(r.tfs, r.n)
-        dls = codec.varint_decode(r.dls, r.n)
-        poss = codec.decode_block_positions(r.positions, r.n)
-        for d, tf, dl, p in zip(docs.tolist(), tfs.tolist(), dls.tolist(),
-                                poss):
-            assert d not in out, "one doc twice in a posting list"
-            out[d] = (tf, dl, np.asarray(p).tolist())
+    for _, d, tf, dl, p in decoded_postings(
+            blocks[blocks["term_id"] == xxh64_signed(term)]):
+        assert d not in out, "one doc twice in a posting list"
+        out[d] = (tf, dl, p)
     return out
 
 

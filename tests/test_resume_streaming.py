@@ -13,6 +13,8 @@ from pears_lite_spark.index.checkpoint import (build_resumable, compact_index,
                                                manifests, read_resumable)
 from pears_lite_spark.search.bm25 import search_blocks
 
+from .oracle import decoded_postings
+
 
 @pytest.fixture(scope="module")
 def tokens(spark):
@@ -341,8 +343,6 @@ def test_duplicate_doc_id_runs_merge_in_phase_b(spark):
     ONE posting run (tf summed, positions union-sorted) — otherwise
     WAND could emit a doc twice in top-k while the exhaustive scorer
     silently summed it (ADVICE r01)."""
-    import numpy as np
-    from pears_lite_spark.index import codec
     from pears_lite_spark.index.build import build_postings
     from pears_lite_spark.xxh64 import xxh64_signed
     d1 = spark.createDataFrame([(5, ["apple", "pear", "apple"])],
@@ -352,32 +352,21 @@ def test_duplicate_doc_id_runs_merge_in_phase_b(spark):
     toks = d1.union(d2)   # doc 5 spans two input partitions
     assert toks.rdd.getNumPartitions() >= 2
     postings, stats = build_postings(toks)
-    apple = xxh64_signed("apple")
-    rows = [r for r in postings.collect() if r["term_id"] == apple]
-    docs = np.concatenate([codec.decode_block_docs(bytes(r["docs"]), r["n"])
-                           for r in rows])
-    tfs = np.concatenate([codec.decode_block_tfs(bytes(r["tfs"]), r["n"])
-                          for r in rows])
-    assert sorted(docs.tolist()) == [5, 7]          # no duplicate runs
-    assert dict(zip(docs.tolist(), tfs.tolist()))[5] == 3  # 2 + 1 merged
+    got = decoded_postings(postings.filter(
+        F.col("term_id") == xxh64_signed("apple")).toPandas())
+    by_doc = {d: (tf, dl, p) for _, d, tf, dl, p in got}
+    assert sorted(d for _, d, *_ in got) == [5, 7]  # no duplicate runs
+    assert by_doc[5][0] == 3                        # 2 + 1 merged
     # fragment semantics (ADVICE r02): dl sums across merged runs so
     # the merged run scores as the concatenated doc (dl 3 + 2 = 5)
-    dls = np.concatenate([codec.varint_decode(bytes(r["dls"]), r["n"])
-                          for r in rows])
-    by_doc_dl = dict(zip(docs.tolist(), dls.tolist()))
-    assert by_doc_dl[5] == 5 and by_doc_dl[7] == 1
-    pos = {int(d): p for r in rows
-           for d, p in zip(codec.decode_block_docs(bytes(r["docs"]), r["n"]),
-                           codec.decode_block_positions(
-                               bytes(r["positions"]), r["n"]))}
-    assert pos[5].tolist() == [0, 0, 2]             # union, sorted
+    assert by_doc[5][1] == 5 and by_doc[7][1] == 1
+    assert by_doc[5][2] == [0, 0, 2]                # union, sorted
 
 
 def test_duplicate_doc_id_in_one_partition_merges_in_phase_b(spark):
     """Both copies of doc 5 in ONE input partition (so one phase-A
     flush) index exactly as when they span two partitions: one run,
     tf 3, dl 3 + 2 = 5, positions union-sorted."""
-    from pears_lite_spark.index import codec
     from pears_lite_spark.xxh64 import xxh64_signed
     toks = spark.createDataFrame(
         [(5, ["apple", "pear", "apple"]), (5, ["apple", "cherry"]),
@@ -385,15 +374,10 @@ def test_duplicate_doc_id_in_one_partition_merges_in_phase_b(spark):
     assert toks.rdd.getNumPartitions() == 1
     postings, _ = build_postings(toks)
     got = {}
-    for r in postings.filter(F.col("term_id") == xxh64_signed("apple")) \
-            .collect():
-        for d, tf, dl, p in zip(
-                codec.decode_block_docs(bytes(r["docs"]), r["n"]).tolist(),
-                codec.decode_block_tfs(bytes(r["tfs"]), r["n"]).tolist(),
-                codec.varint_decode(bytes(r["dls"]), r["n"]).tolist(),
-                codec.decode_block_positions(bytes(r["positions"]), r["n"])):
-            assert d not in got                      # no duplicate runs
-            got[d] = (tf, dl, list(p))
+    for _, d, tf, dl, p in decoded_postings(postings.filter(
+            F.col("term_id") == xxh64_signed("apple")).toPandas()):
+        assert d not in got                          # no duplicate runs
+        got[d] = (tf, dl, p)
     assert got == {5: (3, 5, [0, 0, 2]), 7: (1, 1, [0])}
 
 
@@ -692,8 +676,6 @@ def test_vocab_filter_build_matches_prefiltered_oracle(spark, tokens):
     its docs/tfs blocks equal a tokens-path build over pre-filtered
     tokens, while positions stay the original token offsets and dl the
     unfiltered document length."""
-    import numpy as np
-    from pears_lite_spark.index import codec
     from pears_lite_spark.xxh64 import xxh64_signed
     pdf = tokens.toPandas()
     vocab = sorted({t for ts in pdf["tokens"] for t in ts
@@ -719,11 +701,5 @@ def test_vocab_filter_build_matches_prefiltered_oracle(spark, tokens):
             if t in vocab_set:
                 exp.setdefault((xxh64_signed(t), int(d)),
                                (len(ts), []))[1].append(i)
-    seen = {}
-    for r in g.itertuples():
-        docs = codec.decode_block_docs(r.docs, r.n)
-        dls = codec.varint_decode(r.dls, r.n)
-        poss = codec.decode_block_positions(r.positions, r.n)
-        for d, dl, p in zip(docs.tolist(), dls.tolist(), poss):
-            seen[(int(r.term_id), d)] = (dl, np.asarray(p).tolist())
+    seen = {(t, d): (dl, p) for t, d, _, dl, p in decoded_postings(g)}
     assert seen == {k: (dl, p) for k, (dl, p) in exp.items()}

@@ -98,6 +98,70 @@ def test_phrase_scores_from_index_matches_oracle(spark, corpus_pdf,
         assert any(s == 1.0 for s in got.values()), phrase  # planted doc
 
 
+
+def _phrase_scores(postings, phrase):
+    from pears_lite_spark.search.phrase import phrase_scores_from_index
+    from pears_lite_spark.vocab import get_vocab
+    pieces = get_vocab().encode_as_pieces(phrase)
+    return {r["doc_id"]: r["phrase_score"] for r in
+            phrase_scores_from_index(postings, pieces).collect()}
+
+
+def test_phrase_plan_is_one_arrow_kernel_over_pruned_scan(spark, tmp_path,
+                                                          spm_tokens_df):
+    """Phrase scoring reads the index as search_blocks does: the term_id
+    IN filter reaches the Parquet scan and one mapInArrow kernel scores
+    the doc_range-partitioned blocks, with no grouped pandas UDF."""
+    import re
+    from pears_lite_spark.corpus import PHRASES
+    from pears_lite_spark.index.build import (build_postings, read_index,
+                                              write_index)
+    from pears_lite_spark.search.phrase import phrase_scores_from_index
+    from pears_lite_spark.vocab import get_vocab
+    postings, stats = build_postings(spm_tokens_df)
+    write_index(postings, str(tmp_path / "idx"), stats=stats)
+    postings, _ = read_index(spark, str(tmp_path / "idx"))
+    out = phrase_scores_from_index(
+        postings, get_vocab().encode_as_pieces(PHRASES[0]))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    pushed = re.findall(r"PushedFilters: \[[^\n]*", plan)
+    assert any("In(term_id," in p for p in pushed), plan
+
+
+def test_phrase_scores_multi_part_index_match_single_part(spark, tmp_path,
+                                                           spm_tokens_df):
+    """A 3-part resumable index scores every phrase as the single-part
+    build does: each doc_range's blocks from every part meet in one
+    kernel call."""
+    from pears_lite_spark.corpus import PHRASES
+    from pears_lite_spark.index.build import build_postings
+    from pears_lite_spark.index.checkpoint import (build_resumable,
+                                                   read_resumable)
+    one, _ = build_postings(spm_tokens_df)
+    build_resumable(spm_tokens_df, str(tmp_path / "res"), n_parts=3)
+    three, _ = read_resumable(spark, str(tmp_path / "res"))
+    assert three.select("part").distinct().count() == 3
+    for phrase in PHRASES[:3]:
+        want = _phrase_scores(one, phrase)
+        assert want, phrase
+        assert _phrase_scores(three, phrase) == want, phrase
+
+
+def test_phrase_scores_refuse_positionless_index(spark):
+    """An index built without positions cannot be phrase-scored: the
+    kernel refuses it by name instead of failing inside the decoder."""
+    from pears_lite_spark.index.build import build_postings
+    from pears_lite_spark.search.phrase import phrase_scores_from_index
+    toks = spark.createDataFrame(
+        [(1, ["▁a", "▁b"]), (2, ["▁b", "▁a"])],
+        "doc_id long, tokens array<string>")
+    postings, _ = build_postings(toks, with_positions=False)
+    with pytest.raises(Exception, match="ValueError: phrase scoring needs "
+                       "an index built with positions"):
+        phrase_scores_from_index(postings, ["▁a", "▁b"]).collect()
+
 def test_robots_gate_reference_quirk(spark):
     from pears_lite_spark.contract import ROBOTS_FIXTURES
     from pears_lite_spark.sources import robots_gate

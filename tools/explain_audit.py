@@ -473,6 +473,27 @@ def main(sf_dir: str):
           f"and compact_index decodes blocks into posting runs (one "
           f"mapInArrow) and merges them in the build's phase B, with no "
           f"grouped pandas UDF: {'OK' if ok21 else 'CHECK'}\n")
+
+    # 22. phrase scoring: the shape of search_blocks (§3) over the same
+    # index, its term_id IN filter pushed and one mapInArrow kernel
+    from pears_lite_spark.search.phrase import phrase_scores_from_index
+    t = explain(phrase_scores_from_index(read_index(spark, idx_path)[0],
+                                         ["spark", "join"]))
+    pushed = [ln for ln in grab(t, "PushedFilters") if "In(term_id," in ln]
+    n_arrow = len(re.findall(r"^\(\d+\) MapInArrow", t, re.M))
+    n_groups = len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas", t, re.M))
+    print("## 22. Phrase scoring: pruned index scan, one mapInArrow "
+          "kernel\n")
+    print("```")
+    print("\n".join(pushed[:1]))
+    print(f"MapInArrow count: {n_arrow}, FlatMapGroupsInPandas count: "
+          f"{n_groups}\n```\n")
+    ok22 = bool(pushed) and n_arrow == 1 and n_groups == 0
+    print(f"`phrase_scores_from_index` reads the index as `search_blocks` "
+          f"does: In(term_id, ...) reaches Parquet, and one mapInArrow "
+          f"kernel decodes each batch with `codec.decode_blocks` and "
+          f"scores every candidate doc at once, with no grouped pandas "
+          f"UDF: {'OK' if ok22 else 'CHECK'}\n")
     spark.stop()
 
 
