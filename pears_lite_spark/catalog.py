@@ -40,6 +40,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+import warnings
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -77,16 +78,22 @@ def history(path: str) -> list[dict]:
     return out
 
 
+def _replace(path: str, text: str) -> None:
+    """Write `path` atomically: a hidden tmp file, then os.replace."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.{uuid.uuid4().hex}")
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
 def _commit(path: str, snap: dict) -> None:
     """Write v{N}.json, then atomically flip the VERSION pointer."""
     md = _meta_dir(path)
     with open(os.path.join(md, f"v{snap['version']}.json"), "w",
               encoding="utf-8") as fh:
         json.dump(snap, fh, indent=1, sort_keys=True)
-    tmp = os.path.join(md, f".{_VERSION_FILE}.{uuid.uuid4().hex}")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(str(snap["version"]))
-    os.replace(tmp, os.path.join(md, _VERSION_FILE))
+    _replace(os.path.join(md, _VERSION_FILE), str(snap["version"]))
 
 
 def _write_data_files(df: DataFrame, path: str, snap_version: int,
@@ -414,6 +421,69 @@ def expire_snapshots(path: str, keep_last: int = 1) -> dict:
             "removed_snapshots": removed_meta}
 
 
+# --------------------------------------------------- incremental consumers
+
+_CURSOR = "_table_version.json"
+
+
+def pending_appends(spark: SparkSession, table_path: str, out_dir: str):
+    """The snapshot-table cursor of an incremental consumer (a table
+    delta index, an ANN index): `out_dir/_table_version.json` records
+    the table and the `version` the consumer has applied, plus `pending`
+    while a run is in flight. Returns None when `version` is the table's
+    current version, else (from_version, to_version, df, n_delete_commits):
+
+    - no cursor yet: a baseline, from_version None and df the snapshot
+      `to_version` (its deletes applied, so none are counted);
+    - a cursor: df is the rows appended in (from_version, to_version];
+    - `pending` set (a run died before `advance`): exactly the range of
+      that run again, so a replay rewrites what it may have committed
+      and the appends since wait for the next run.
+
+    Before returning it records `pending = to_version`; the consumer
+    commits its output, then calls `advance`. Delete commits in an
+    incremental range are not applied to what was consumed before it:
+    they are counted and warned about (compact + re-baseline honors
+    them). A non-empty `out_dir` without a cursor, or a cursor of
+    another table, is a ValueError: the consumer must start from an
+    empty directory."""
+    table, path = os.path.abspath(table_path), os.path.join(out_dir, _CURSOR)
+    if os.path.exists(path):
+        with open(path, encoding="utf-8") as fh:
+            cursor = json.load(fh)
+    elif os.path.isdir(out_dir) and os.listdir(out_dir):
+        raise ValueError(f"{out_dir} is not empty but has no table cursor "
+                         f"({_CURSOR}): start from an empty directory")
+    else:
+        cursor = {"table": table, "version": None}
+    if cursor["table"] != table:
+        raise ValueError(f"{out_dir} consumes table {cursor['table']}, "
+                         f"not {table}")
+    frm = cursor["version"]
+    to = cursor.get("pending") or current_version(table_path)
+    if to == frm:
+        return None
+    df = (scan(spark, table_path, version=to) if frm is None
+          else incremental_scan(spark, table_path, frm, to))
+    n_deletes = sum(_read_snapshot(table_path, v)["operation"] == "delete"
+                    for v in range((frm or to) + 1, to + 1))
+    if n_deletes:
+        warnings.warn(f"{n_deletes} delete commit(s) in table versions "
+                      f"({frm}, {to}] are NOT applied to {out_dir}: "
+                      "compact and re-baseline to honor them", stacklevel=2)
+    os.makedirs(out_dir, exist_ok=True)
+    _replace(path, json.dumps({"table": table, "version": frm,
+                               "pending": to}))
+    return frm, to, df, n_deletes
+
+
+def advance(out_dir: str, table_path: str, version: int) -> None:
+    """Record `version` as consumed (and no run in flight): call it only
+    once the consumer's output for it is durable."""
+    _replace(os.path.join(out_dir, _CURSOR), json.dumps(
+        {"table": os.path.abspath(table_path), "version": version}))
+
+
 # --------------------------------------------------- streaming sink
 
 def _streams_path(path: str) -> str:
@@ -456,10 +526,7 @@ def idempotent_batch_appender(path: str, stream_id: str):
     def _mark(batch_id: int) -> None:
         marks = _read_streams(path)
         marks[stream_id] = max(int(batch_id), marks.get(stream_id, -1))
-        tmp = _streams_path(path) + f".{uuid.uuid4().hex}"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(marks, fh)
-        os.replace(tmp, _streams_path(path))
+        _replace(_streams_path(path), json.dumps(marks))
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         marks = _read_streams(path)

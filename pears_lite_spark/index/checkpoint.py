@@ -8,10 +8,12 @@ full-index rewrite per doc — `/root/reference/app/indexer/posix.py:
 17-28`); this module adds the missing production story:
 
 - every index part — a resumable build's partition, a table delta
-  (`index_table_delta`), a streamed micro-batch (streaming/ingest.py) —
-  is committed by `commit_segment`: postings parquet under `part=<p>/`
-  first (written by build.write_index, like every other index file),
-  then `manifest_<p>.json`, one schema for every writer: the part's doc
+  (`index_table_delta`, which reads and advances its table version
+  through catalog's table cursor), a streamed micro-batch
+  (streaming/ingest.py) — is committed by `commit_segment`: postings
+  parquet under `part=<p>/` first (written by build.write_index, like
+  every other index file), then `manifest_<p>.json`, one schema for
+  every writer: the part's doc
   stats (n_docs, sum_dl), its blocks, postings, payload bytes and files
   as pyarrow reads them from the committed files (`segment_facts`, no
   Spark job), and the writer's lineage keys. A manifest is only
@@ -30,6 +32,9 @@ full-index rewrite per doc — `/root/reference/app/indexer/posix.py:
   produces byte-identical output (deterministic encoding);
 - `refresh_stats` re-derives a multi-part index's exact stats by
   summing its manifests;
+- `read_resumable` reads the `part=<p>/` dirs; a directory that also
+  holds a fused build's root-level files is refused, since those docs
+  would drop silently;
 - queries run directly on the union (the block scorer sums a doc's
   postings from every part in one per-doc accumulate); `compact_index`
   optionally merges parts into one canonical segment (an LSM/Lucene-
@@ -153,10 +158,15 @@ def build_resumable(tokens_df: DataFrame, path: str, n_parts: int = 8,
 
 def read_resumable(spark: SparkSession, path: str) -> tuple[DataFrame, CorpusStats]:
     """Read a (possibly multi-part) resumable index; `part` becomes a
-    column via partition discovery."""
+    column via partition discovery. A directory that also holds
+    root-level parquet files (a fused build's) is a ValueError: only
+    `part=<p>/` dirs are read, so those docs would drop silently."""
+    entries = sorted(os.listdir(path))
+    if any(e.endswith(".parquet") for e in entries):
+        raise ValueError(f"{path} holds both part=<p>/ segments and a "
+                         "fused index's root-level parquet files")
     df = spark.read.option("basePath", path).parquet(
-        *[os.path.join(path, d) for d in sorted(os.listdir(path))
-          if d.startswith("part=")])
+        *[os.path.join(path, d) for d in entries if d.startswith("part=")])
     return df, read_stats(path)
 
 
@@ -232,17 +242,21 @@ def compact_index(postings: DataFrame, stats: CorpusStats) -> DataFrame:
 def index_table_delta(spark: SparkSession, table_path: str,
                       index_path: str, tokenizer,
                       with_positions: bool = True) -> dict:
-    """Consume a snapshot table (catalog.py) incrementally: the index
-    records the table version it last indexed (`_table_version.json`),
-    and each run builds ONLY the rows appended since as a new segment
-    part (part=<to_version>, phase B sized by the delta's own
-    occurrences), committed by commit_segment with the consumed version
-    range as its manifest's lineage.
-    First run baselines on the full current snapshot. Already-current
-    is a no-op. A compact commit in the range surfaces
-    catalog.incremental_scan's re-baseline error — the operator
-    compacts the INDEX and starts a fresh baseline, the same contract
-    streaming checkpoints have.
+    """Consume a snapshot table (catalog.py) incrementally through the
+    table cursor (`catalog.pending_appends` / `catalog.advance`): each
+    run builds ONLY the rows appended since the version the index last
+    consumed as a new segment part (part=<to_version>, phase B sized by
+    the delta's own occurrences), committed by commit_segment with the
+    consumed version range as its manifest's lineage; the cursor
+    advances only after that commit.
+    The first run, into an empty directory, baselines on the current
+    snapshot; a non-empty directory without a cursor (a fused or
+    build_resumable index) is refused. Already-current is a no-op. A
+    run that died before the cursor advanced is replayed over exactly
+    its own range (its part is rewritten), whatever was appended since.
+    A compact commit in the range surfaces catalog.incremental_scan's
+    re-baseline error — the operator compacts the INDEX and starts a
+    fresh baseline, the same contract streaming checkpoints have.
 
     This is the north-star loop closed: Iceberg-style snapshot commits
     in, per-partition checkpointed segments out, resumable at the
@@ -253,38 +267,20 @@ def index_table_delta(spark: SparkSession, table_path: str,
     Deletes: an incremental index consumes APPENDS only — rows
     equality-deleted from the table after being indexed keep being
     served until the index is compacted against a fresh baseline. The
-    consumed range's delete-commit count is therefore surfaced in the
-    returned dict and the segment manifest (`n_delete_commits_in_range`)
-    so operators see when a takedown requires index compact +
-    re-baseline rather than discovering stale hits in production."""
+    consumed range's delete-commit count is therefore warned about and
+    surfaced in the returned dict and the segment manifest
+    (`n_delete_commits_in_range`; 0 for a baseline, whose snapshot scan
+    applies every delete before it) so operators see when a takedown
+    requires index compact + re-baseline rather than discovering stale
+    hits in production."""
     from .. import catalog
     from .build import with_doc_id
     cur = catalog.current_version(table_path)
-    state_path = os.path.join(index_path, "_table_version.json")
-    frm = None
-    if os.path.exists(state_path):
-        with open(state_path) as fh:
-            frm = json.load(fh)["version"]
-        if frm == cur:
-            return {"from_version": frm, "to_version": cur,
-                    "up_to_date": True, "n_docs_delta": 0}
-        df = catalog.incremental_scan(spark, table_path, frm, cur)
-    else:
-        df = catalog.scan(spark, table_path)
-    # deletes committed in the consumed range do NOT shrink the index —
-    # count and surface them (see docstring) instead of advancing past
-    # them silently
-    n_deletes = sum(
-        1 for s in catalog.history(table_path)
-        if s.get("operation") == "delete"
-        and (frm is None or s["version"] > frm) and s["version"] <= cur)
-    if n_deletes:
-        import warnings
-        warnings.warn(
-            f"index_table_delta: {n_deletes} delete commit(s) in table "
-            f"version range ({frm}, {cur}] are NOT applied to the index "
-            "— compact + re-baseline to honor them", stacklevel=2)
-    os.makedirs(index_path, exist_ok=True)
+    pending = catalog.pending_appends(spark, table_path, index_path)
+    if pending is None:
+        return {"from_version": cur, "to_version": cur,
+                "up_to_date": True, "n_docs_delta": 0}
+    frm, to, df, n_deletes = pending
     if "doc_id" not in df.columns:
         df = with_doc_id(df)
     toks = tokenizer(df.select("doc_id", "text")) \
@@ -303,18 +299,12 @@ def index_table_delta(spark: SparkSession, table_path: str,
         postings, _ = build_postings(
             toks, stats=stats, with_positions=with_positions,
             n_partitions=_n_partitions(spark, sum_dl))
-        commit_segment(postings, index_path, cur, n_delta, sum_dl,
+        commit_segment(postings, index_path, to, n_delta, sum_dl,
                        table=table_path, table_version_from=frm,
-                       table_version_to=cur,
+                       table_version_to=to,
                        n_delete_commits_in_range=n_deletes)
     toks.unpersist()
-    # state flips only AFTER the segment + manifest are durable, so a
-    # crash mid-build re-consumes the same delta (idempotent: the part
-    # dir is overwritten, the manifest rewritten)
-    tmp = state_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"table": table_path, "version": cur}, fh)
-    os.replace(tmp, state_path)
-    return {"from_version": frm, "to_version": cur,
+    catalog.advance(index_path, table_path, to)
+    return {"from_version": frm, "to_version": to,
             "up_to_date": False, "n_docs_delta": n_delta,
             "n_delete_commits_in_range": n_deletes}

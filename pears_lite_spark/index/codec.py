@@ -79,6 +79,8 @@ def varint_decode(buf: bytes | np.ndarray, count: int | None = None) -> np.ndarr
     """Decode a LEB128 byte stream into a uint64 array, vectorized."""
     b = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
     if b.size == 0:
+        if count:
+            raise ValueError(f"varint stream held 0 values, expected {count}")
         return np.empty(0, dtype=_U64)
     ends = (b & 0x80) == 0
     gid = np.zeros(b.size, dtype=np.int64)

@@ -178,79 +178,53 @@ def cmd_ann_index(args) -> int:
     and (lsh_table, lsh_bucket) as stored parquet partition keys — the
     serving path that partition-prunes instead of rescanning per
     query)."""
+    from . import catalog
     from .ann import (append_ann_index, ivf_topk_indexed,
                       lsh_topk_indexed, read_ann_meta, write_ann_index)
     spark = _spark("pears-ann")
     t0 = time.time()
     if args.mode == "delta":
-        # incremental maintenance off an embeddings snapshot table:
-        # baseline-build on first run, then append only the vectors
-        # committed since the version recorded in the index dir (the
-        # index-delta lineage pattern applied to the ANN artifact)
-        from . import catalog
-        from .ann import ANN_META
+        # incremental maintenance off an embeddings snapshot table
+        # through the table cursor: a baseline write, then only the
+        # vectors appended since the version the index last consumed
         cur = catalog.current_version(args.input)
-        state_p = os.path.join(args.output, "_table_version.json")
-        frm = None
-        if os.path.exists(state_p):
-            with open(state_p) as fh:
-                frm = json.load(fh)["version"]
-            if frm == cur:
-                _emit({"job": "ann-index", "mode": "delta",
-                       "from_version": frm, "to_version": cur,
-                       "up_to_date": True, "n_vectors_delta": 0,
-                       "seconds": round(time.time() - t0, 2)})
-                return 0
-            emb = catalog.incremental_scan(spark, args.input, frm, cur)
-        else:
-            if os.path.exists(os.path.join(args.output, ANN_META)):
-                # an index exists but carries no table-version state
-                # (e.g. first built with --mode build over raw parquet):
-                # a full-scan baseline here would append every vector a
-                # second time — refuse instead of silently duplicating
-                raise SystemExit(
-                    f"ann-index --mode delta: {args.output} already holds "
-                    "an ANN index but no _table_version.json baseline; "
-                    "rebuild with --mode build --input <snapshot-table> "
-                    "(which records the baseline) or remove the index")
-            emb = catalog.scan(spark, args.input)
+        pending = catalog.pending_appends(spark, args.input, args.output)
+        if pending is None:
+            _emit({"job": "ann-index", "mode": "delta",
+                   "from_version": cur, "to_version": cur,
+                   "up_to_date": True, "n_vectors_delta": 0,
+                   "seconds": round(time.time() - t0, 2)})
+            return 0
+        frm, to, emb, n_deletes = pending
         n_delta = emb.count()
-        if os.path.exists(os.path.join(args.output, ANN_META)):
-            if n_delta:
-                append_ann_index(emb, args.output)
-        else:
+        if frm is None:
             write_ann_index(emb, args.output, n_cells=args.n_cells,
                             n_planes=args.n_planes,
                             n_tables=args.n_tables)
-        tmp = state_p + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"table": args.input, "version": cur}, fh)
-        os.replace(tmp, state_p)
+        elif n_delta:
+            append_ann_index(emb, args.output)
+        catalog.advance(args.output, args.input, to)
         _emit({"job": "ann-index", "mode": "delta",
-               "from_version": frm, "to_version": cur,
+               "from_version": frm, "to_version": to,
                "up_to_date": False, "n_vectors_delta": int(n_delta),
+               "n_delete_commits_in_range": n_deletes,
                "seconds": round(time.time() - t0, 2)})
         return 0
     if args.mode == "build":
-        from . import catalog
-        emb = _read_corpus(spark, args.input)
+        # over a snapshot table, scan the version it then records, so a
+        # later --mode delta resumes from exactly what was indexed
+        version = (catalog.current_version(args.input)
+                   if catalog.is_table(args.input) else None)
+        emb = (catalog.scan(spark, args.input, version=version)
+               if version else spark.read.parquet(args.input))
         meta = write_ann_index(emb, args.output, n_cells=args.n_cells,
                                n_planes=args.n_planes,
                                n_tables=args.n_tables)
-        baselined = None
-        if catalog.is_table(args.input):
-            # record the consumed snapshot version so a later
-            # --mode delta run resumes from here instead of refusing
-            baselined = catalog.current_version(args.input)
-            state_p = os.path.join(args.output, "_table_version.json")
-            tmp = state_p + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"table": args.input, "version": baselined}, fh)
-            os.replace(tmp, state_p)
+        if version:
+            catalog.advance(args.output, args.input, version)
         _emit({"job": "ann-index", "mode": "build", "output": args.output,
                "n_cells": meta["n_cells"], "dim": meta["dim"],
-               "n_tables": meta["n_tables"],
-               "baselined_table_version": baselined,
+               "n_tables": meta["n_tables"], "to_version": version,
                "seconds": round(time.time() - t0, 2)})
     elif args.mode == "append":
         append_ann_index(_read_corpus(spark, args.input), args.output)
@@ -320,7 +294,7 @@ def cmd_table(args) -> int:
 def cmd_index_delta(args) -> int:
     """Incremental indexing off a snapshot table: index only the rows
     appended since the table version this index last consumed (lineage
-    in the index's _table_version.json + per-segment manifests)."""
+    in the index's table cursor + per-segment manifests)."""
     from .index.build import tokenize_spm, tokenize_whitespace
     from .index.checkpoint import index_table_delta
     spark = _spark("pears-index-delta")

@@ -519,6 +519,154 @@ def test_ann_delta_consumes_embedding_table(spark, capsys, tmp_path):
     assert top and top[0]["vec_id"] == 70
 
 
+def _vecs(spark, lo, hi):
+    """Unique 8-d embeddings vec_id lo..hi-1 (dim 0 carries i/1000)."""
+    return spark.createDataFrame(
+        [(i, [float((i * 7 + d) % 13) + (i / 1000.0 if d == 0 else 0.0)
+              for d in range(8)]) for i in range(lo, hi)],
+        "vec_id long, embedding array<float>")
+
+
+def _run_job(capsys, argv):
+    from pears_lite_spark import jobs
+    rc = jobs.main(argv)
+    out = capsys.readouterr().out.strip().splitlines()
+    assert rc == 0
+    return json.loads(out[-1])
+
+
+def test_index_delta_refuses_an_index_it_did_not_baseline(spark, docs_pdf,
+                                                         tmp_path):
+    """A table delta into a directory it did not baseline (here a
+    4-part build_resumable of the same table) is refused before it
+    writes anything, and so is a cursor of another table."""
+    from pears_lite_spark.index.build import tokenize_whitespace, with_doc_id
+    from pears_lite_spark.index.checkpoint import (build_resumable,
+                                                   index_table_delta,
+                                                   manifests, refresh_stats)
+    t = str(tmp_path / "tbl")
+    catalog.create_table(spark.createDataFrame(docs_pdf), t, key_col="url")
+    idx = str(tmp_path / "idx")
+    build_resumable(tokenize_whitespace(with_doc_id(catalog.scan(spark, t)))
+                    .select("doc_id", "tokens"), idx, n_parts=4)
+    before = sorted(os.listdir(idx))
+    with pytest.raises(ValueError, match="no table cursor"):
+        index_table_delta(spark, t, idx, tokenize_whitespace)
+    assert sorted(os.listdir(idx)) == before and len(manifests(idx)) == 4
+    assert refresh_stats(idx).n_docs == len(docs_pdf)
+    # a cursor names its table: another table's rows are refused
+    delta = str(tmp_path / "delta")
+    index_table_delta(spark, t, delta, tokenize_whitespace)
+    other = str(tmp_path / "other")
+    catalog.create_table(spark.createDataFrame(docs_pdf.iloc[:5]), other,
+                         key_col="url")
+    with pytest.raises(ValueError, match="consumes table"):
+        index_table_delta(spark, other, delta, tokenize_whitespace)
+
+
+def test_index_delta_crash_before_advance_replays_its_range(
+        spark, tmp_path, monkeypatch):
+    """A delta run that commits its segment and dies before the cursor
+    advances is replayed over exactly its own range, though a row was
+    appended in between: the index ends with one part per version and
+    as many docs as the table has live rows."""
+    from pears_lite_spark.corpus import gen_corpus
+    from pears_lite_spark.index.build import tokenize_whitespace
+    from pears_lite_spark.index.checkpoint import (index_table_delta,
+                                                   manifests, refresh_stats)
+    full = gen_corpus(30)[["url", "text", "lang"]]
+    rows = [spark.createDataFrame(full.iloc[i:i + 10]) for i in (0, 10, 20)]
+    t = str(tmp_path / "tbl")
+    idx = str(tmp_path / "idx")
+    catalog.create_table(rows[0], t, key_col="url")              # v1
+    index_table_delta(spark, t, idx, tokenize_whitespace)
+    catalog.append(rows[1], t)                                   # v2
+    advance, crashed = catalog.advance, []
+
+    def crash_once(*args):
+        if not crashed:
+            crashed.append(args)
+            raise RuntimeError("injected crash before advance")
+        advance(*args)
+    monkeypatch.setattr(catalog, "advance", crash_once)
+    with pytest.raises(RuntimeError, match="injected"):
+        index_table_delta(spark, t, idx, tokenize_whitespace)
+    catalog.append(rows[2], t)                                   # v3
+    runs = [index_table_delta(spark, t, idx, tokenize_whitespace)
+            for _ in range(3)]
+    assert [(r["from_version"], r["to_version"], r["up_to_date"])
+            for r in runs] == [(1, 2, False), (2, 3, False), (3, 3, True)]
+    assert [(m["partition"], m["n_docs"]) for m in manifests(idx)] == \
+        [(1, 10), (2, 10), (3, 10)]
+    assert refresh_stats(idx).n_docs == catalog.scan(spark, t).count() == 30
+
+
+def test_ann_delta_counts_delete_commits_in_range(spark, capsys, tmp_path):
+    """An ANN delta over a range holding a delete commit reports it
+    (`n_delete_commits_in_range`) and warns: the delete does not reach
+    the vectors indexed before the range."""
+    t = str(tmp_path / "etbl")
+    catalog.create_table(_vecs(spark, 0, 40), t, key_col="vec_id")
+    idx = str(tmp_path / "aidx")
+    base = ["ann-index", "--mode", "delta", "--input", t,
+            "--output", idx, "--n-cells", "4"]
+    assert _run_job(capsys, base)["n_delete_commits_in_range"] == 0
+    catalog.append(_vecs(spark, 40, 50), t)
+    catalog.delete_where(spark, t, "vec_id < 5")
+    with pytest.warns(UserWarning, match=r"1 delete commit\(s\)"):
+        r = _run_job(capsys, base)
+    assert (r["from_version"], r["to_version"]) == (1, 3)
+    assert r["n_delete_commits_in_range"] == 1 and r["n_vectors_delta"] == 10
+
+
+def test_ann_build_over_table_records_the_version_it_scanned(
+        spark, capsys, tmp_path, monkeypatch):
+    """`ann-index --mode build` over a table records the version it
+    scanned, not the one current after its write: vectors appended
+    while it builds are indexed by the next --mode delta, which then
+    continues from there."""
+    from pears_lite_spark import ann
+    t = str(tmp_path / "etbl")
+    catalog.create_table(_vecs(spark, 0, 60), t, key_col="vec_id")
+    idx = str(tmp_path / "aidx")
+    write = ann.write_ann_index
+
+    def append_during_write(emb, path, **kw):
+        catalog.append(_vecs(spark, 60, 80), t)
+        return write(emb, path, **kw)
+    monkeypatch.setattr(ann, "write_ann_index", append_during_write)
+    b = _run_job(capsys, ["ann-index", "--mode", "build", "--input", t,
+                          "--output", idx, "--n-cells", "4"])
+    monkeypatch.undo()
+    assert b["to_version"] == 1
+    base = ["ann-index", "--mode", "delta", "--input", t,
+            "--output", idx, "--n-cells", "4"]
+    r = _run_job(capsys, base)
+    assert (r["from_version"], r["to_version"], r["n_vectors_delta"]) == \
+        (1, 2, 20)
+    assert _run_job(capsys, base)["up_to_date"]
+    assert ann.ivf_topk_indexed(spark, idx, _vecs(spark, 70, 71).first()[1],
+                                k=1, nprobe=4).first()["vec_id"] == 70
+
+
+def test_ann_delta_into_an_index_without_cursor_is_refused(spark, capsys,
+                                                           tmp_path):
+    """`ann-index --mode delta` into a non-empty directory without a
+    table cursor (an index built over raw parquet) fails with the
+    cursor's message rather than appending every vector again."""
+    from pears_lite_spark import jobs
+    t = str(tmp_path / "etbl")
+    catalog.create_table(_vecs(spark, 0, 40), t, key_col="vec_id")
+    raw = str(tmp_path / "raw.parquet")
+    catalog.scan(spark, t).write.parquet(raw)
+    idx = str(tmp_path / "aidx")
+    _run_job(capsys, ["ann-index", "--mode", "build", "--input", raw,
+                      "--output", idx, "--n-cells", "4"])
+    with pytest.raises(ValueError, match="no table cursor"):
+        jobs.main(["ann-index", "--mode", "delta", "--input", t,
+                   "--output", idx, "--n-cells", "4"])
+
+
 def test_torn_commit_orphan_does_not_wedge_writes(spark, tmp_path):
     """A crash between data write and pointer flip leaves an orphan
     snap-{v} dir; the next commit of that version must clear it and

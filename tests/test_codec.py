@@ -22,6 +22,16 @@ def test_varint_edge_values():
                           edges)
 
 
+def test_varint_decode_checks_count_on_empty_buffer():
+    """An empty stream holds 0 values: asked for more, it raises as a
+    short non-empty stream does; asked for None or 0, it decodes to []."""
+    for buf in (b"", b"\x01"):
+        with pytest.raises(ValueError, match="expected 5"):
+            codec.varint_decode(buf, 5)
+    assert codec.varint_decode(b"").size == 0
+    assert codec.varint_decode(b"", 0).size == 0
+
+
 @given(st.integers(min_value=1, max_value=500), st.integers(0, 2**31))
 @settings(max_examples=25, deadline=None)
 def test_postings_roundtrip(n, seed):
@@ -79,6 +89,25 @@ def test_decode_blocks_matches_reference(seed):
     for g, w in zip(got, zip(*want[1:])):
         assert np.array_equal(g, np.concatenate(w))
     assert codec.decode_blocks(rb)[4] is None
+
+
+def test_decode_blocks_positions_of_positionless_blocks_raises():
+    """Blocks written without positions (null `positions`) decode their
+    postings, and asking them for positions is a ValueError, not an
+    IndexError from the count-slot mask."""
+    import pyarrow as pa
+    docs, tfs, dls = np.array([3, 9, 40]), np.array([1, 2, 1]), \
+        np.array([5, 8, 6])
+    b = codec.encode_postings(docs, tfs, dls, 6.0)[0]
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array([7]), pa.array([b.n]), pa.array([b.docs]),
+         pa.array([b.tfs]),
+         pa.array([codec.varint_encode(dls.astype(np.uint64))]),
+         pa.array([None], pa.binary())],
+        names=["term_id", "n", "docs", "tfs", "dls", "positions"])
+    assert np.array_equal(codec.decode_blocks(rb)[1], docs)
+    with pytest.raises(ValueError, match="held 0 values"):
+        codec.decode_blocks(rb, positions=True)
 
 
 def test_blockmax_upper_bounds_scores():

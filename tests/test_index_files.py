@@ -1,8 +1,9 @@
 """The index's files: every posting writer goes through write_index,
 so every file it leaves is zstd-compressed and holds a fresh build's
 blocks; a resumable build reads its input once per part plus once for
-its stats; every index part sizes its phase B by its own occurrences;
-and the file phase-B task k writes holds merge slot k."""
+its stats; a directory holding both a fused index and parts is refused;
+every index part sizes its phase B by its own occurrences; and the file
+phase-B task k writes holds merge slot k."""
 
 import glob
 import os
@@ -105,6 +106,22 @@ def test_every_posting_writer_writes_zstd(spark, capsys, corpus, tokens,
     index_table_delta(spark, table, idx, tokenize_whitespace)
     _assert_written(spark, os.path.join(idx, "part=1"),
                     build_postings(tokens, stats=read_stats(idx))[0])
+
+
+def test_segment_next_to_a_fused_index_is_refused(spark, tokens, tmp_path):
+    """read_resumable reads only the part=<p>/ dirs, so a segment
+    committed into a directory that holds a fused build's root-level
+    files would drop the fused docs: that directory is refused."""
+    from pears_lite_spark.index.build import write_index
+    from pears_lite_spark.index.checkpoint import (commit_segment,
+                                                   read_resumable)
+    path = str(tmp_path / "idx")
+    postings, stats = build_postings(tokens)
+    write_index(postings, path, stats=stats)
+    commit_segment(postings, path, 0, stats.n_docs,
+                   round(stats.n_docs * stats.avgdl))
+    with pytest.raises(ValueError, match="both part=<p>/ segments"):
+        read_resumable(spark, path)
 
 
 def test_resumable_build_reads_input_once_per_part(spark, tokens, tmp_path):
